@@ -11,11 +11,11 @@ Scale notes: each iteration is one join (ranks x edges, both keyed by
 the source node) and one dst-keyed aggregation — the classic two-
 shuffle PageRank step. Hub nodes concentrate the dst aggregation; AQE
 skew splitting handles that exchange. The fixed 3-iteration unroll
-keeps the demo deterministic and oracle-checkable; a production run
-loops to convergence and `persist()`s + `checkpoint()`s each ranks
-iteration to truncate lineage (noted, not needed at 3 unrolled steps).
-Doubles are only rounded at the very end (per-iteration rounding would
-compound; final drift is ~1e-12, far below the 1e-6 output grain).
+keeps the demo deterministic and oracle-checkable. Every loop that
+checkpoints per round (converged PageRank, BFS, LPA, star-CC, k-core,
+SCC) runs on :func:`hive_2_spark.core.fixpoint.fixpoint`. Doubles are
+only rounded at the very end (per-iteration rounding would compound;
+final drift is ~1e-12, far below the 1e-6 output grain).
 """
 
 from __future__ import annotations
@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
+from hive_2_spark.core.fixpoint import fixpoint
 
 _DAMPING = 0.85
 _ITERS = 3
@@ -110,6 +111,29 @@ def _node_label(col: str):
     ).otherwise(F.concat(F.lit("s"), (-F.col(col)).cast("string")))
 
 
+def _pagerank_step(
+    edges_w: DataFrame, ranks: DataFrame, broadcast_ranks: bool, restart
+) -> DataFrame:
+    """One power-iteration step: rank(v) = restart + d * sum_in(rank(u)
+    * w_u). ``restart`` is a Column over ``dst`` (the teleport term).
+
+    ranks is node-sized (orders of magnitude below the edge list) ->
+    broadcast it while it fits, so the cached edges never re-shuffle;
+    only the dst-keyed aggregation exchanges data. Past
+    _BROADCAST_NODE_CAP nodes, shuffle-join against the
+    src-pre-partitioned edges instead (see cap comment above)."""
+    rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
+    return (
+        edges_w.join(rank_side, "src")
+        .groupBy("dst")
+        .agg(F.sum(F.col("rank") * F.col("w")).alias("mass"))
+        .select(
+            F.col("dst").alias("src"),
+            (restart + F.lit(_DAMPING) * F.col("mass")).alias("rank"),
+        )
+    )
+
+
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 nodes by PageRank after 3 fixed iterations (d=0.85,
     rank0=1.0). Ties broken by node id on the ROUNDED rank so the
@@ -117,22 +141,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges_w, broadcast_ranks = _weighted_edges(spark, sf_dir)
     ranks = edges_w.select("src").distinct().withColumn("rank", F.lit(1.0))
     for _ in range(_ITERS):
-        # ranks is node-sized (orders of magnitude below the edge list)
-        # -> broadcast it while it fits, so the cached edges never
-        # re-shuffle; only the dst-keyed aggregation exchanges data.
-        # Past _BROADCAST_NODE_CAP nodes, shuffle-join against the
-        # src-pre-partitioned edges instead (see cap comment above).
-        rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
-        contrib = (
-            edges_w.join(rank_side, "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("mass"))
-        )
-        ranks = contrib.select(
-            F.col("dst").alias("src"),
-            (F.lit(1.0 - _DAMPING) + F.lit(_DAMPING) * F.col("mass")).alias(
-                "rank"
-            ),
+        ranks = _pagerank_step(
+            edges_w, ranks, broadcast_ranks, F.lit(1.0 - _DAMPING)
         )
     out = ranks.select(
         _node_label("src").alias("node"), F.round("rank", 6).alias("rank")
@@ -179,10 +189,9 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     RELATIVE max-norm, because hub ranks grow with the graph, so an
     absolute threshold would demand ever more rounds at larger scale
     while the contraction rate stays d=0.85) instead of a fixed
-    3-step unroll, ``localCheckpoint``-ing each round so round N reads
-    materialized ranks instead of replaying rounds 1..N−1 — the same
-    discipline as ``llm.advanced._cc_converge`` / ``cluster_kmeans_
-    converged``. Per-round cost is identical to the fixed key: one
+    3-step unroll, on :func:`~hive_2_spark.core.fixpoint.fixpoint`
+    (checkpoint per round, raise at the cap). Per-round cost is
+    identical to the fixed key — the same :func:`_pagerank_step`: one
     broadcast (size-gated) join against the cached weighted edges plus
     one dst-keyed aggregation; the convergence probe is a node-sized
     join + max — nothing proportional to the edge list.
@@ -210,45 +219,32 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "node string, rank double, rounds long"
         )
-    rounds = 0
-    for _ in range(_CONV_MAX_ROUNDS):
-        rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
-        new = (
-            edges_w.join(rank_side, "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("mass"))
-            .select(
-                F.col("dst").alias("src"),
-                (
-                    F.lit(1.0 - _DAMPING) + F.lit(_DAMPING) * F.col("mass")
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-        rounds += 1
+
+    def stopped(prev: DataFrame, new: DataFrame) -> bool:
         # node-sized probe over two already-materialized frames; one
         # pass yields both the max delta and the normalizing max rank.
         # Same broadcast gate as the main join: above the threshold the
         # rank frame must not be collected to the driver every round.
-        prev = ranks.withColumnRenamed("rank", "prev")
+        prev = prev.withColumnRenamed("rank", "prev")
         probe = (
-            new.join(
-                F.broadcast(prev) if broadcast_ranks else prev, "src"
-            )
+            new.join(F.broadcast(prev) if broadcast_ranks else prev, "src")
             .agg(
                 F.max(F.abs(F.col("rank") - F.col("prev"))).alias("d"),
                 F.max("rank").alias("m"),
             )
             .first()
         )
-        ranks = new
-        if probe["d"] is not None and _conv_stopped(probe["d"], probe["m"]):
-            break
-    else:
-        raise RuntimeError(
-            f"PageRank did not converge in {_CONV_MAX_ROUNDS} rounds "
-            f"(last delta {probe['d']}, max rank {probe['m']})"
-        )
+        return probe["d"] is not None and _conv_stopped(probe["d"], probe["m"])
+
+    ranks, rounds = fixpoint(
+        ranks,
+        lambda r: _pagerank_step(
+            edges_w, r, broadcast_ranks, F.lit(1.0 - _DAMPING)
+        ),
+        _CONV_MAX_ROUNDS,
+        done=stopped,
+        what="PageRank",
+    )
     out = ranks.select(
         _node_label("src").alias("node"), F.round("rank", 6).alias("rank")
     )
@@ -307,35 +303,31 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each round: expand every known node one hop (join the node-sized
     distance table against the cached edges — distance side broadcast,
     same size-gate rationale as PageRank's rank vector), then
-    min-merge. ``localCheckpoint`` per round truncates lineage so round
-    N rereads materialized distances. The fixed 3-round unroll mirrors
-    a depth-capped recursive-CTE oracle (DuckDB's UNION-recursive
-    dedups (node, dist) states, so neither side enumerates paths — on
-    this dense bipartite graph path counting would be combinatorial,
-    state counting is |nodes| x 4).
+    min-merge, checkpointed per round by ``fixpoint``. The fixed
+    3-round unroll mirrors a depth-capped recursive-CTE oracle
+    (DuckDB's UNION-recursive dedups (node, dist) states, so neither
+    side enumerates paths — on this dense bipartite graph path counting
+    would be combinatorial, state counting is |nodes| x 4).
     """
     edges = _edges(spark, sf_dir).localCheckpoint()
-    dist = spark.range(1).select(
+    source = spark.range(1).select(
         F.lit(_BFS_SOURCE).cast("bigint").alias("node"),
         F.lit(0).cast("bigint").alias("dist"),
     )
-    for _ in range(_BFS_ROUNDS):
+
+    def expand(dist: DataFrame) -> DataFrame:
         hop = (
             edges.join(
                 F.broadcast(dist), edges.src == dist.node, "inner"
             )
             .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
         )
-        dist = (
-            dist.unionAll(hop)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
+        return dist.unionAll(hop).groupBy("node").agg(
+            F.min("dist").alias("dist")
         )
-    label = F.when(
-        F.col("node") >= 0, F.concat(F.lit("c"), F.col("node").cast("string"))
-    ).otherwise(F.concat(F.lit("s"), (-F.col("node")).cast("string")))
-    return dist.select(label.alias("node"), "dist")
+
+    dist, _ = fixpoint(source, expand, _BFS_ROUNDS)
+    return dist.select(_node_label("node").alias("node"), "dist")
 
 
 _LPA_ROUNDS = 4
@@ -366,37 +358,45 @@ def graph_communities_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (community, n_docs) — one row per surviving label.
     """
-    from pyspark.sql.window import Window
-
     from hive_2_spark.llm.dedup import neardup_edges_sym
 
-    edges = neardup_edges_sym(spark, sf_dir).localCheckpoint()
+    labels = _lpa(neardup_edges_sym(spark, sf_dir).localCheckpoint())
+    return labels.groupBy(F.col("lbl").alias("community")).agg(
+        F.count(F.lit(1)).alias("n_docs")
+    )
+
+
+def _plurality(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """One semi-synchronous vote: every ``src`` adopts the MODE of its
+    ``dst`` neighbors' labels (count desc, label asc). (node, lbl) out;
+    a src with no labeled neighbor drops out."""
+    from pyspark.sql.window import Window
+
+    argmax_w = Window.partitionBy("node").orderBy(
+        F.col("c").desc(), F.col("lbl").asc()
+    )
+    votes = (
+        edges.join(labels.withColumnRenamed("node", "dst"), "dst")
+        .groupBy(F.col("src").alias("node"), "lbl")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    return (
+        votes.withColumn("rn", F.row_number().over(argmax_w))
+        .filter(F.col("rn") == 1)
+        .select("node", "lbl")
+    )
+
+
+def _lpa(edges: DataFrame) -> DataFrame:
+    """``_LPA_ROUNDS`` of label propagation over checkpointed symmetric
+    ``edges``, every node starting as its own label."""
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("lbl", F.col("node"))
         .localCheckpoint()
     )
-    argmax_w = Window.partitionBy("node").orderBy(
-        F.col("c").desc(), F.col("lbl").asc()
-    )
-    for _ in range(_LPA_ROUNDS):
-        votes = (
-            edges.join(
-                labels.withColumnRenamed("node", "dst"), "dst"
-            )
-            .groupBy(F.col("src").alias("node"), "lbl")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        labels = (
-            votes.withColumn("rn", F.row_number().over(argmax_w))
-            .filter(F.col("rn") == 1)
-            .select("node", "lbl")
-            .localCheckpoint()
-        )
-    return labels.groupBy(F.col("lbl").alias("community")).agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
+    return fixpoint(labels, lambda lb: _plurality(edges, lb), _LPA_ROUNDS)[0]
 
 
 _INC_DELTA_MOD = 7  # doc_id % 7 == 0 -> the "new arrivals" delta slice
@@ -408,8 +408,6 @@ def _inc_edges_and_base(spark: SparkSession, sf_dir: str):
     (streaming/communities.py), so the two can't drift. ``edges`` is
     the symmetrized near-dup pair set (checkpointed); ``base_labels``
     is the ``_LPA_ROUNDS`` LPA fixpoint over base-base edges."""
-    from pyspark.sql.window import Window
-
     from hive_2_spark.llm.dedup import neardup_edges_sym
 
     edges = neardup_edges_sym(spark, sf_dir).localCheckpoint()
@@ -417,28 +415,7 @@ def _inc_edges_and_base(spark: SparkSession, sf_dir: str):
     base_edges = edges.filter(
         ~is_delta(F.col("src")) & ~is_delta(F.col("dst"))
     ).localCheckpoint()
-    labels = (
-        base_edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint()
-    )
-    argmax_w = Window.partitionBy("node").orderBy(
-        F.col("c").desc(), F.col("lbl").asc()
-    )
-    for _ in range(_LPA_ROUNDS):
-        votes = (
-            base_edges.join(labels.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"), "lbl")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        labels = (
-            votes.withColumn("rn", F.row_number().over(argmax_w))
-            .filter(F.col("rn") == 1)
-            .select("node", "lbl")
-            .localCheckpoint()
-        )
-    return edges, labels
+    return edges, _lpa(base_edges)
 
 
 def graph_communities_incremental(
@@ -468,29 +445,17 @@ def graph_communities_incremental(
     Output: (community, n_docs, n_delta) — community census with how
     many members arrived in the delta.
     """
-    from pyspark.sql.window import Window
-
     edges, labels = _inc_edges_and_base(spark, sf_dir)
     is_delta = lambda c: c % _INC_DELTA_MOD == 0  # noqa: E731
-    argmax_w = Window.partitionBy("node").orderBy(
-        F.col("c").desc(), F.col("lbl").asc()
-    )
     # --- the incremental step: delta-sized, one vote round ---
     delta_nodes = (
         edges.filter(is_delta(F.col("src")))
         .select(F.col("src").alias("node"))
         .distinct()
     )
-    delta_votes = (
-        edges.filter(is_delta(F.col("src")) & ~is_delta(F.col("dst")))
-        .join(labels.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(F.col("src").alias("node"), "lbl")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    delta_assigned = (
-        delta_votes.withColumn("rn", F.row_number().over(argmax_w))
-        .filter(F.col("rn") == 1)
-        .select("node", "lbl")
+    delta_assigned = _plurality(
+        edges.filter(is_delta(F.col("src")) & ~is_delta(F.col("dst"))),
+        labels,
     )
     delta_labels = (
         delta_nodes.join(delta_assigned, "node", "left")
@@ -573,6 +538,11 @@ def _cc_small_star(e: DataFrame) -> DataFrame:
     return out.filter(F.col("u") != F.col("v")).distinct()
 
 
+def _cc_star_pair(e: DataFrame) -> DataFrame:
+    """One large-star + small-star round pair."""
+    return _cc_small_star(_cc_large_star(e))
+
+
 def graph_cc_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components by alternating LARGE-STAR / SMALL-STAR
     rounds — the O(log n)-round CC algorithm massive graphs need,
@@ -596,31 +566,22 @@ def graph_cc_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is edge-sized and monotonically shrinking toward one
     edge per non-root node; each round's join keys on the same column
     its groupBy just hash-partitioned (the exchange is reused, not
-    repeated); per-round localCheckpoint truncates the lineage exactly
-    like the PageRank/LPA loops.
+    repeated); the unroll runs on
+    :func:`~hive_2_spark.core.fixpoint.fixpoint`, whose per-round
+    checkpoint truncates the lineage.
 
     Output: (component, n_docs) — component = min doc_id, census row
     per component (singletons excluded: isolated docs never enter the
     pair graph).
     """
-    from hive_2_spark.llm.dedup import neardup_pair_index
-
-    pairs = neardup_pair_index(spark, sf_dir)
-    e = (
-        pairs.filter(F.col("a_id") != F.col("b_id"))
-        .select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-        .localCheckpoint()
-    )
+    e, forest = _cc_star_forest(spark, sf_dir)
     nodes = (
         e.select("u")
         .unionAll(e.select(F.col("v").alias("u")))
         .distinct()
         .localCheckpoint()
     )
-    cur = e
-    for _ in range(_CC_STAR_ROUNDS):
-        cur = _cc_small_star(_cc_large_star(cur)).localCheckpoint()
-    parents = cur.groupBy("u").agg(F.min("v").alias("p"))
+    parents = forest.groupBy("u").agg(F.min("v").alias("p"))
     comp = nodes.join(parents, "u", "left").select(
         F.coalesce("p", F.col("u")).alias("component")
     )
@@ -629,28 +590,36 @@ def graph_cc_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cc_star_forest(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(input edges, star forest after the ``_CC_STAR_ROUNDS`` unroll)
+    over the near-dup pair index, both checkpointed."""
+    from hive_2_spark.llm.dedup import neardup_pair_index
+
+    pairs = neardup_pair_index(spark, sf_dir)
+    e = (
+        pairs.filter(F.col("a_id") != F.col("b_id"))
+        .select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
+        .localCheckpoint()
+    )
+    return e, fixpoint(e, _cc_star_pair, _CC_STAR_ROUNDS)[0]
+
+
 def cc_star_converged(spark: SparkSession, sf_dir: str) -> bool:
     """Round-11 ADVICE guard: the fixed ``_CC_STAR_ROUNDS`` unroll is
     only CORRECT if the star forest it reaches is a fixed point of the
     large-star/small-star pair — otherwise the census (and its oracle,
     which replays the identical unroll) would hash-match while both
-    are wrong. Replays the key's exact edge pipeline, runs ONE extra
-    round pair, and reports whether the edge set is unchanged. Run on
-    every non-oracle fixture (tools/scale10.py 10x/100x legs call this
-    after timing the key; tests pin the oracle fixtures), so a corpus
-    whose near-dup components outgrow the unroll fails loudly instead
-    of silently censusing unconverged stars."""
-    from hive_2_spark.llm.dedup import neardup_pair_index
-
-    pairs = neardup_pair_index(spark, sf_dir)
-    cur = (
-        pairs.filter(F.col("a_id") != F.col("b_id"))
-        .select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-        .localCheckpoint()
-    )
-    for _ in range(_CC_STAR_ROUNDS):
-        cur = _cc_small_star(_cc_large_star(cur)).localCheckpoint()
-    nxt = _cc_small_star(_cc_large_star(cur)).localCheckpoint()
+    are wrong. Builds the key's forest (:func:`_cc_star_forest`), runs
+    ONE extra round pair, and reports whether the edge set is
+    unchanged. Run on every non-oracle fixture (tools/scale10.py
+    10x/100x legs call this after timing the key; tests pin the oracle
+    fixtures), so a corpus whose near-dup components outgrow the
+    unroll fails loudly instead of silently censusing unconverged
+    stars."""
+    _, cur = _cc_star_forest(spark, sf_dir)
+    nxt = _cc_star_pair(cur).localCheckpoint()
     return (
         nxt.exceptAll(cur).isEmpty() and cur.exceptAll(nxt).isEmpty()
     )
@@ -689,7 +658,9 @@ def graph_pagerank_personalized(
     if row["s"] is None:  # empty corpus
         return spark.createDataFrame([], "node string, rank double")
     seed = int(row["s"])
-    restart = F.lit(1.0 - _DAMPING)
+    restart = F.when(
+        F.col("dst") == F.lit(seed), F.lit(1.0 - _DAMPING)
+    ).otherwise(F.lit(0.0))
     ranks = edges_w.select("src").distinct().select(
         "src",
         F.when(F.col("src") == F.lit(seed), F.lit(1.0))
@@ -697,20 +668,7 @@ def graph_pagerank_personalized(
         .alias("rank"),
     )
     for _ in range(_ITERS):
-        rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
-        contrib = (
-            edges_w.join(rank_side, "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("mass"))
-        )
-        ranks = contrib.select(
-            F.col("dst").alias("src"),
-            (
-                F.when(F.col("dst") == F.lit(seed), restart)
-                .otherwise(F.lit(0.0))
-                + F.lit(_DAMPING) * F.col("mass")
-            ).alias("rank"),
-        )
+        ranks = _pagerank_step(edges_w, ranks, broadcast_ranks, restart)
     out = ranks.select(
         _node_label("src").alias("node"), F.round("rank", 6).alias("rank")
     )
@@ -870,8 +828,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     magnitude below the corpus), read from the shared persisted index;
     each round is one partial-agg degree count + two semi-shaped joins
     keyed on the column the groupBy just partitioned. Per-probe
-    localCheckpoint truncates lineage like the PageRank/LPA loops and
-    makes the convergence probe a scan of materialized rows.
+    localCheckpoint truncates lineage and makes the convergence probe a
+    scan of materialized rows; the careful path runs on
+    :func:`~hive_2_spark.core.fixpoint.fixpoint`.
 
     Output: (doc_id, core), one row per pair-graph node.
     """
@@ -892,7 +851,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .join(keep.select(F.col("src").alias("dst")), "dst")
                 .select("src", "dst")
             )
-        return cur.localCheckpoint()
+        return cur
 
     def _viol(cur: DataFrame, k: int) -> DataFrame:
         return (
@@ -930,7 +889,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = edges
     frames: dict[int, DataFrame] = {}
     for k in range(2, _KCORE_KMAX + 1):
-        cur = _peel(cur, k, _KCORE_BATCH)
+        cur = _peel(cur, k, _KCORE_BATCH).localCheckpoint()
         frames[k] = cur
     probe = None
     for k in frames:
@@ -943,23 +902,17 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _census(frames)
 
     # Careful path (some k needs > _KCORE_BATCH rounds): per-k probe
-    # loop up to the cap — the exact pre-round-14 control flow.
+    # every _KCORE_BATCH peel rounds, raising at the _KCORE_ROUNDS cap.
     cur = edges
     frames = {}
     for k in range(2, _KCORE_KMAX + 1):
-        converged = False
-        for _ in range(_KCORE_ROUNDS // _KCORE_BATCH):
-            cur = _peel(cur, k, _KCORE_BATCH)
-            if _viol(cur, k).count() == 0:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                f"k-core peel unconverged after {_KCORE_ROUNDS} rounds "
-                f"at k={k} — the oracle unrolls exactly _KCORE_ROUNDS "
-                "rounds, so looping further would hash-mismatch; raise "
-                "_KCORE_ROUNDS (both sides) for this graph"
-            )
+        cur, _ = fixpoint(
+            cur,
+            lambda c: _peel(c, k, _KCORE_BATCH),
+            _KCORE_ROUNDS // _KCORE_BATCH,
+            done=lambda _, nxt: _viol(nxt, k).count() == 0,
+            what=f"k-core peel at k={k} ({_KCORE_BATCH}-round steps)",
+        )
         frames[k] = cur
     return _census(frames)
 
@@ -1208,10 +1161,11 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     LINEAR in users precisely because the type dimension is bounded
     (the same bounded-domain argument as the cent-histogram
     aggregates). Every doubling round keys its self-join on the
-    column the previous round just hashed; per-round localCheckpoint
-    truncates lineage (a lazy self-join chain doubles the plan tree
-    per round). For an unbounded-component directed graph this becomes
-    the FW-BW peel; for this operator the bound is structural.
+    column the previous round just hashed; ``fixpoint``'s per-round
+    checkpoint truncates lineage (a lazy self-join chain doubles the
+    plan tree per round). For an unbounded-component directed graph
+    this becomes the FW-BW peel; for this operator the bound is
+    structural.
 
     Output: (component, n_nodes), component = min member node id.
     """
@@ -1267,9 +1221,7 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return r.unionByName(two_hop).distinct()
 
-    reach = edges
-    for _ in range(_SCC_DOUBLING):
-        reach = _double(reach).localCheckpoint()
+    reach, _ = fixpoint(edges, _double, _SCC_DOUBLING)
     # Fixpoint guard via COUNT equality: doubling is monotone (the
     # union keeps every existing pair), so |double(reach)| == |reach|
     # iff one more round adds no pair — same guard as the previous

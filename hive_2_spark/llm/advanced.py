@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
+from hive_2_spark.core.fixpoint import fixpoint
 from hive_2_spark.llm.similarity import _as_double, _dot, _norm
 
 
@@ -431,59 +432,57 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CC_MAX_ROUNDS = 50  # safety cap; raises rather than return unconverged labels
 
 
-def _cc_converge(
-    edges: DataFrame, max_rounds: int = _CC_MAX_ROUNDS, strict: bool = True
-) -> tuple[DataFrame, int, bool]:
-    """Min-label propagation to FIXPOINT over a bidirectional edge list.
-
-    Iterates label = min(label of self ∪ neighbors) until a round changes
-    no label — NOT a fixed unroll: a fixed k-round unroll silently
-    under-merges any component whose min-id node eccentricity exceeds k
-    (LSH candidate chains can be arbitrarily long). Each round
-    ``localCheckpoint``s the label frame, truncating lineage so round N
-    rereads materialized labels instead of replaying rounds 1..N-1 — the
-    same discipline as ``core.graph.pagerank`` — and the per-round
-    changed-count the stop condition needs is a cheap count over that
-    already-materialized frame. Converges in (min-node eccentricity)
-    rounds ≤ component diameter; with ``strict`` raises at the cap
-    instead of returning unconverged labels.
-
-    Returns (labels(node, label), rounds_used, converged).
-    """
-    labels = (
+def _cc_seed(edges: DataFrame) -> DataFrame:
+    """Initial CC labels: every node of ``edges`` labeled by itself."""
+    return (
         edges.select(F.col("a_id").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    for rnd in range(1, max_rounds + 1):
-        neigh = (
-            edges.join(labels, edges.b_id == labels.node, "inner")
-            .groupBy("a_id")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        nxt = (
-            labels.join(neigh, labels.node == neigh.a_id, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
-                (
-                    F.coalesce(F.col("nlabel"), F.col("label")) < F.col("label")
-                ).alias("changed"),
-            )
-            .localCheckpoint()
-        )
-        n_changed = nxt.filter(F.col("changed")).count()
-        labels = nxt.drop("changed")
-        if n_changed == 0:
-            return labels, rnd, True
-    if strict:
-        raise RuntimeError(
-            f"connected components did not converge in {max_rounds} rounds"
-        )
-    return labels, max_rounds, False
+
+
+def _cc_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """One min-label propagation round: label = min(label of self ∪
+    neighbors), plus a ``changed`` flag per node."""
+    neigh = (
+        edges.join(labels, edges.b_id == labels.node, "inner")
+        .groupBy("a_id")
+        .agg(F.min("label").alias("nlabel"))
+    )
+    nlabel = F.coalesce(F.col("nlabel"), F.col("label"))
+    return labels.join(neigh, labels.node == neigh.a_id, "left").select(
+        "node",
+        F.least(F.col("label"), nlabel).alias("label"),
+        (nlabel < F.col("label")).alias("changed"),
+    )
+
+
+def _cc_converge(
+    edges: DataFrame, max_rounds: int = _CC_MAX_ROUNDS
+) -> tuple[DataFrame, int]:
+    """Min-label propagation to FIXPOINT over a bidirectional edge list.
+
+    Iterates :func:`_cc_round` until a round changes no label — NOT a
+    fixed unroll: a fixed k-round unroll silently under-merges any
+    component whose min-id node eccentricity exceeds k (LSH candidate
+    chains can be arbitrarily long). Runs on
+    :func:`~hive_2_spark.core.fixpoint.fixpoint`: each round's labels
+    are checkpointed, and the changed-count stop condition is a cheap
+    count over that already-materialized frame. Converges in (min-node
+    eccentricity) rounds ≤ component diameter; raises at the cap
+    instead of returning unconverged labels.
+
+    Returns (labels(node, label), rounds_used).
+    """
+    labels, rounds = fixpoint(
+        _cc_seed(edges),
+        lambda lb: _cc_round(edges, lb),
+        max_rounds,
+        done=lambda _, nxt: nxt.filter(F.col("changed")).count() == 0,
+        what="connected components",
+    )
+    return labels.drop("changed"), rounds
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -501,7 +500,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.unionByName(
         pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
     ).localCheckpoint()
-    labels, _, _ = _cc_converge(edges)
+    labels, _ = _cc_converge(edges)
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster"))
 
 
@@ -593,7 +592,7 @@ def dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.unionByName(
         pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
     ).localCheckpoint()
-    labels, _, _ = _cc_converge(edges)
+    labels, _ = _cc_converge(edges)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster")
     )

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
+from hive_2_spark.core.fixpoint import fixpoint
 from hive_2_spark.llm.similarity import _as_double
 
 _SEED_MOD = 64  # seed ids are multiples of 64 ...
@@ -188,27 +189,28 @@ def kmeans_converged(
 
     The fixed-unroll ``cluster_kmeans`` exists for the SQL oracle; this
     is the production face — k-means on real data rarely settles in 2
-    rounds, and an unconverged model misplaces boundary vectors. Same
-    discipline as ``llm.advanced._cc_converge``: ``localCheckpoint``
-    each round's assignment so round N rereads materialized clusters
-    instead of replaying rounds 1..N-1, and the changed-count stop
-    condition is a cheap join over the two materialized frames. Raises
-    at the cap instead of silently returning an unconverged model.
+    rounds, and an unconverged model misplaces boundary vectors. Runs
+    on :func:`~hive_2_spark.core.fixpoint.fixpoint`: each round's
+    assignment is checkpointed, the changed-count stop condition is a
+    cheap join over the two materialized frames, and the cap raises
+    instead of silently returning an unconverged model.
     """
-    assign = _assign(e, cents).localCheckpoint()
-    for rounds in range(1, max_rounds + 1):
-        nxt = _assign(e, _recenter(assign)).localCheckpoint()
-        changed = (
-            assign.select("vec_id", F.col("cluster").alias("prev"))
+
+    def unchanged(prev: DataFrame, nxt: DataFrame) -> bool:
+        return (
+            prev.select("vec_id", F.col("cluster").alias("prev"))
             .join(nxt.select("vec_id", "cluster"), "vec_id")
             .filter(F.col("prev") != F.col("cluster"))
             .count()
+            == 0
         )
-        assign = nxt
-        if changed == 0:
-            return assign, rounds
-    raise RuntimeError(
-        f"k-means did not converge within {max_rounds} rounds"
+
+    return fixpoint(
+        _assign(e, cents).localCheckpoint(),
+        lambda a: _assign(e, _recenter(a)),
+        max_rounds,
+        done=unchanged,
+        what="k-means",
     )
 
 

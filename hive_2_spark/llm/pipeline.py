@@ -181,7 +181,7 @@ def dedup_clusters_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.unionByName(
         pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
     ).localCheckpoint()
-    labels, _, _ = _cc_converge(edges)
+    labels, _ = _cc_converge(edges)
     return labels.select(
         F.col("node").alias("vec_id"), F.col("label").alias("cluster")
     )

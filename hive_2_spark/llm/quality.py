@@ -290,12 +290,13 @@ def quality_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BOTH corpus totals WITHOUT re-scanning the text: n_u = SUM over
     # the (checkpointed, vocab-sized) unigram counts — identical to
     # sum(len) by construction — and, because split() never returns an
-    # empty array (size(ws) >= 1 for every row), n_b = sum(size-1)
-    # = n_u - n_docs exactly. n_docs is a column-pruned row count. This
-    # removes the third full text scan the previous shape paid.
+    # empty array (size(ws) >= 1 for every non-NULL text), n_b =
+    # sum(size-1) = n_u - n_docs exactly, where n_docs counts non-NULL
+    # texts only (a NULL text adds no words, so no bigram slot either).
+    # This removes the third full text scan the previous shape paid.
     tots = (
         uni.agg(F.sum("c").alias("su"))
-        .crossJoin(d.agg(F.count(F.lit(1)).alias("ndocs")))
+        .crossJoin(d.agg(F.count("text").alias("ndocs")))
         .select(
             F.col("su").cast("double").alias("n_u"),
             (F.col("su") - F.col("ndocs")).cast("double").alias("n_b"),

@@ -126,3 +126,48 @@ def test_unresolvable_commits_fail_open():
     # return False (keep the row) instead of raising
     assert bench_trend._is_driver_row({"commit": "zzzzzzz"}, REPO) is False
     assert bench_trend._is_driver_row({"commit": None}, REPO) is False
+
+
+def _git(repo: Path, *args: str) -> str:
+    import subprocess
+
+    return subprocess.run(
+        ["git", "-C", str(repo), "-c", "user.name=t", "-c", "user.email=t@t",
+         "-c", "commit.gpgsign=false", *args],
+        check=True, capture_output=True, text=True,
+    ).stdout.strip()
+
+
+def test_boundary_row_classified_by_adding_commit(tmp_path, capsys):
+    """A round-boundary commit appends a row TAGGED with the builder
+    commit it benchmarked: the row must still count as driver-authored,
+    because the commit that added its line is the boundary commit. An
+    uncommitted appended line can't be blamed and is kept (fail open)."""
+    _git(tmp_path, "init", "-q")
+    honest = [
+        _row("aaa", 0.1, {"q": 2.00}),
+        _row("bbb", 0.1, {"q": 2.10}),
+        _row("ccc", 0.1, {"q": 1.95}),
+    ]
+    p = _write(tmp_path, honest)
+    _git(tmp_path, "add", p.name)
+    _git(tmp_path, "commit", "-q", "-m", "Add the engine")
+    builder = _git(tmp_path, "rev-parse", "--short", "HEAD")
+
+    def append(row: dict) -> None:
+        with p.open("a") as f:
+            f.write(json.dumps(row) + "\n")
+
+    append(_row(builder, 0.1, {"q": 0.45}))  # capture-box artifact
+    _git(tmp_path, "commit", "-qam", "round 16: verdict/advice/correctness/bench")
+    append(_row("ddd", 0.1, {"q": 2.05}))  # honest run: 4.5x the drv row
+    _git(tmp_path, "commit", "-qam", "Tune the engine")
+
+    assert bench_trend.run(p, None, 0.6, 2.0) == 0
+    out = capsys.readouterr().out
+    assert "excluding" in out and builder in out and "prev=ccc" in out
+
+    # uncommitted line: no adding commit -> kept, and it is diffed
+    append(_row("eee", 0.1, {"q": 0.40}))
+    assert bench_trend.run(p, None, 0.6, 2.0) == 0
+    assert "cur=eee" in capsys.readouterr().out

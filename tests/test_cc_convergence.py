@@ -7,7 +7,8 @@ from __future__ import annotations
 
 import pytest
 
-from hive_2_spark.llm.advanced import _cc_converge
+from hive_2_spark.core.fixpoint import fixpoint
+from hive_2_spark.llm.advanced import _cc_converge, _cc_round, _cc_seed
 
 
 def _chain_edges(spark, n: int):
@@ -22,26 +23,29 @@ def _chain_edges(spark, n: int):
 def test_long_chain_converges_to_one_cluster(spark):
     """15-node path: min node 1 has eccentricity 14, so >6 rounds are
     REQUIRED — the old fixed-6 unroll could not have merged this."""
-    labels, rounds, converged = _cc_converge(_chain_edges(spark, 15))
-    assert converged and rounds > 6
+    labels, rounds = _cc_converge(_chain_edges(spark, 15))
+    assert rounds > 6
     got = {(r["node"], r["label"]) for r in labels.collect()}
     assert got == {(i, 1) for i in range(1, 16)}
 
 
 def test_fixed_six_rounds_under_merges_the_chain(spark):
-    """Re-run capped at 6 rounds (the old behavior): the tail of the
-    chain must still carry labels != 1 — the regression this guards."""
-    labels, rounds, converged = _cc_converge(
-        _chain_edges(spark, 15), max_rounds=6, strict=False
+    """Re-run as a fixed 6-round unroll (the old behavior): the tail of
+    the chain must still carry labels != 1 — the regression this
+    guards."""
+    edges = _chain_edges(spark, 15)
+    labels, rounds = fixpoint(
+        _cc_seed(edges), lambda lb: _cc_round(edges, lb), 6
     )
-    assert not converged and rounds == 6
+    assert rounds == 6
+    assert labels.filter("changed").count() > 0  # round 6 still moved
     tail_labels = {r["label"] for r in labels.collect()}
     assert tail_labels != {1}  # under-merged: >1 surviving label
 
 
 def test_strict_cap_raises_instead_of_returning_unconverged(spark):
     with pytest.raises(RuntimeError, match="did not converge"):
-        _cc_converge(_chain_edges(spark, 15), max_rounds=3, strict=True)
+        _cc_converge(_chain_edges(spark, 15), max_rounds=3)
 
 
 def test_random_graphs_match_union_find(spark):
@@ -80,9 +84,9 @@ def test_random_graphs_match_union_find(spark):
         edges = df.unionByName(
             df.selectExpr("b_id as a_id", "a_id as b_id")
         ).localCheckpoint()
-        labels, _, converged = _cc_converge(edges)
+        labels, _ = _cc_converge(edges)
         got = {r["node"]: r["label"] for r in labels.collect()}
-        assert converged and got == want, f"seed={seed}"
+        assert got == want, f"seed={seed}"
 
 
 def test_two_components_stay_separate(spark):
@@ -96,8 +100,7 @@ def test_two_components_stay_separate(spark):
         )
         .localCheckpoint()
     )
-    labels, _, converged = _cc_converge(a.unionByName(b).localCheckpoint())
-    assert converged
+    labels, _ = _cc_converge(a.unionByName(b).localCheckpoint())
     got = {r["node"]: r["label"] for r in labels.collect()}
     assert {got[i] for i in (1, 2, 3, 4)} == {1}
     assert {got[i] for i in (10, 11, 12)} == {10}

@@ -24,10 +24,13 @@ item 3): the per-round boundary bench runs on the driver's capture box,
 which measured 4-5x faster on text-heavy keys than any builder quiet-box
 run (commit 9c53780) — an artifact of that environment, not a code
 change. Leaving such rows in the trailing-median history biases medians
-and diffs. A row is driver-authored iff its commit's subject matches the
-round-boundary pattern ("round N: verdict/advice/correctness/bench");
-rows whose commit can't be resolved are kept (fail open — a missing git
-object must not silence the guard).
+and diffs. A row is driver-authored iff the commit that ADDED its line
+(``git blame --line-porcelain`` of the trend file) has a subject matching
+the round-boundary pattern ("round N: verdict/advice/correctness/bench").
+The row's own ``commit`` field is not used: a boundary commit tags its
+rows with the builder commit it benchmarked. Rows whose adding commit
+can't be resolved (untracked file, uncommitted line, no git) are kept
+(fail open — a missing git object must not silence the guard).
 
 Usage: python tools/bench_trend.py [--threshold 0.6] [--spike-factor 2.0]
                                    [--sf 0.1] [--trend-file PATH]
@@ -46,6 +49,8 @@ import sys
 from pathlib import Path
 
 _BOUNDARY_RE = re.compile(r"^round \d+: .*(verdict|correctness|bench)")
+# --line-porcelain header: "<sha> <orig line> <final line>[ <group size>]"
+_BLAME_HEADER_RE = re.compile(r"^([0-9a-f]{40}) \d+ (\d+)")
 
 
 def _arg(flag: str, default, cast):
@@ -57,10 +62,36 @@ def _arg(flag: str, default, cast):
 _SUBJECT_CACHE: dict[str, bool] = {}
 
 
+def _added_by(trend_path: Path) -> list:
+    """Per line of ``trend_path``, the sha of the commit that added it
+    (None for an uncommitted line); [] when git can't blame the file."""
+    try:
+        out = subprocess.run(
+            ["git", "-C", str(trend_path.resolve().parent), "blame",
+             "--line-porcelain", "--", trend_path.name],
+            capture_output=True, text=True, timeout=30,
+        )
+    except (OSError, subprocess.SubprocessError):
+        return []
+    if out.returncode != 0:
+        return []
+    shas: dict[int, str] = {}
+    for ln in out.stdout.splitlines():
+        m = _BLAME_HEADER_RE.match(ln)
+        if m:
+            shas[int(m.group(2))] = m.group(1)
+    uncommitted = "0" * 40  # blame's sha for a not-yet-committed line
+    return [
+        None if shas.get(i, uncommitted) == uncommitted else shas[i]
+        for i in range(1, max(shas, default=0) + 1)
+    ]
+
+
 def _is_driver_row(row: dict, repo: Path) -> bool:
-    """True iff the row's commit is a driver round-boundary artifact
+    """True iff the commit that added the row's line (``row["_added_by"]``,
+    set by :func:`run` from git blame) is a driver round-boundary
     commit (see module docstring). Unresolvable commits -> False."""
-    commit = row.get("commit")
+    commit = row.get("_added_by")
     if not commit:
         return False
     if commit in _SUBJECT_CACHE:
@@ -77,25 +108,25 @@ def _is_driver_row(row: dict, repo: Path) -> bool:
 
 
 def run(trend_path: Path, sf, threshold: float, spike_factor: float) -> int:
-    lines = [
-        json.loads(ln)
-        for ln in trend_path.read_text().splitlines()
-        if ln.strip()
-    ]
+    added_by = _added_by(trend_path)
+    lines = []
+    for i, ln in enumerate(trend_path.read_text().splitlines()):
+        if ln.strip():
+            r = json.loads(ln)
+            r["_added_by"] = added_by[i] if i < len(added_by) else None
+            lines.append(r)
     if sf is None and lines:
         sf = lines[-1]["sf"]  # default: the sf of the newest entry
     repo = trend_path.resolve().parent
-    driver_rows = {
-        r.get("commit") for r in lines if _is_driver_row(r, repo)
-    }
-    if driver_rows:
+    driver = [_is_driver_row(r, repo) for r in lines]
+    if any(driver):
+        tags = sorted({str(r.get("commit")) for r, d in zip(lines, driver) if d})
         print(
             "excluding driver-authored boundary rows from guard history "
-            f"(commits: {', '.join(sorted(map(str, driver_rows)))})"
+            f"({sum(driver)} rows, tagged commits: {', '.join(tags)})"
         )
     rows = [
-        r for r in lines
-        if r.get("sf") == sf and r.get("commit") not in driver_rows
+        r for r, d in zip(lines, driver) if r.get("sf") == sf and not d
     ]
     if len(rows) < 2:
         print(f"{len(rows)} sf={sf} entries in {trend_path.name} — nothing to diff")

@@ -2,12 +2,15 @@
 # public contract (entry / queries / oracle_sql) and hash-compares vs DuckDB
 # at sf0.01 (the real t2 scale).
 # Usage: python tools/driver_sim.py [--json OUT.json]  — the JSON report
-# mirrors the driver's CORRECTNESS_r{N}.json shape (per-key status).
+# mirrors the driver's CORRECTNESS_r{N}.json shape (per-key status and
+# wall_sec). A key that raises counts as BAD with its error recorded; the
+# sweep carries on with the next key.
 import json
 import secrets
 import subprocess
 import sys
 import time
+import traceback
 sys.path.insert(0, "/root/repo")
 _json_out = None
 if "--json" in sys.argv:
@@ -40,27 +43,45 @@ from hive_2_spark.parity import compare, duckdb_connect
 con = duckdb_connect("/root/testdata/sf0.01")
 bad = 0
 report = {}
-for key in sorted(q):
+
+
+def check(key: str) -> dict:
+    """One key's report entry; raises whatever the key raises."""
     if key not in o:
         # Mirror the driver's canonicalizer, not just count(): it collects
         # to pandas and sort_values over ALL columns, which crashes on
         # list/dict/ndarray cells (the CORRECTNESS_r03 media_features err).
         out = q[key](spark, "/root/testdata/sf0.01").toPandas()
-        n = len(out)
         try:
             out.sort_values(list(out.columns))
         except Exception as exc:  # unhashable column type etc.
-            bad += 1
-            report[key] = {"check": "rows_only", "rows": n, "ok": False,
-                           "problems": [f"canon: {type(exc).__name__}: {exc}"]}
-            print(key, "ROWS-ONLY CANON-FAIL:", exc); continue
-        report[key] = {"check": "rows_only", "rows": n, "ok": True}
-        print(key, "ROWS-ONLY count=", n); continue
+            return {"check": "rows_only", "rows": len(out), "ok": False,
+                    "problems": [f"canon: {type(exc).__name__}: {exc}"]}
+        return {"check": "rows_only", "rows": len(out), "ok": True}
     problems = compare(q[key](spark, "/root/testdata/sf0.01"), con, o[key])
-    status = "OK" if not problems else "MISMATCH: " + "; ".join(problems)
-    if problems: bad += 1
-    report[key] = {"check": "oracle_hash", "ok": not problems,
-                   "problems": problems}
+    return {"check": "oracle_hash", "ok": not problems, "problems": problems}
+
+
+for key in sorted(q):
+    # Each key is isolated: one raising key is reported BAD with its
+    # error and the sweep goes on to the next.
+    t = time.time()
+    try:
+        r = check(key)
+    except Exception as exc:
+        traceback.print_exc()
+        r = {"check": "oracle_hash" if key in o else "rows_only", "ok": False,
+             "error": f"{type(exc).__name__}: {exc}"}
+    r["wall_sec"] = round(time.time() - t, 2)
+    report[key] = r
+    bad += not r["ok"]
+    if "error" in r:
+        status = "ERROR: " + r["error"]
+    elif r["check"] == "rows_only":
+        status = (f"ROWS-ONLY count={r['rows']}" if r["ok"]
+                  else "ROWS-ONLY CANON-FAIL: " + r["problems"][0])
+    else:
+        status = "OK" if r["ok"] else "MISMATCH: " + "; ".join(r["problems"])
     print(f"{key}: {status}")
 print("BAD:", bad)
 if _json_out:
