@@ -83,8 +83,8 @@ def upsert_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Incoming = derived deterministically from supplier (keys overlap the
     low custkeys; keys+1M are new). Target-left-join-source + per-column
-    coalesce, then union of unmatched source rows — the exact plan
-    ParquetStore.upsert executes.
+    coalesce, then union of unmatched source rows. ParquetStore.upsert
+    computes the same rows with one full-outer join on the key.
     """
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal"

@@ -1,24 +1,30 @@
 """Parquet-backed table store: the write path (SURVEY.md §2A ops 16-19).
 
-The reference ships INSERT/UPDATE/DELETE statements to an RDBMS
+The reference ships one INSERT/UPDATE/DELETE statement per write
 (classes/hive/model.php:667-706, 775-811, 831-853; builders :1094-1255).
-Parquet has no in-place mutation, so updates/deletes/upserts are
-join-based merge-rewrites with an atomic directory swap:
+Here every mutation is ONE Spark write action plus at most one probe
+(the ``limit`` key probe, or a partitioned store's partition probe).
+Parquet has no in-place mutation, so update/delete/upsert rewrite the
+table and swap it in atomically:
 
     write new state -> <path>.swap-<token>
     rename <path>   -> <path>.bak-<token>
     rename swap     -> <path>
     remove bak
 
-Inserts append a new parquet part (no rewrite). Auto-id assignment =
-``max(existing) + row_number over new rows`` (model.php:685-700 read-back
-semantics) — single-writer per table, the same assumption the reference
-makes of its RDBMS session.
+update/delete flag each row with ``coalesce(cond, false)`` inside the
+rewrite and count the flags with ``DataFrame.observe`` in the same job;
+when nothing matched the swap directory is removed, not swapped in.
+upsert is one full-outer join on the key, ``coalesce(source, target)``
+per column. Inserts append a new part; Auto ids are ``max(existing) +
+row number`` (model.php:685-700) — single-writer per table, as the
+reference assumes of its RDBMS session. Driver-side rows enter Spark as
+one Arrow table (a ``LocalTableScan``, no Python worker); Arrow keeps a
+naive datetime as UTC wall-clock, as ``TimestampField.coerce`` does,
+where a Python-row frame shifted it by the process time zone.
 
-Scale notes: at 100 TB this store maps onto a table format (Delta/Iceberg
-MERGE + snapshot commit); the join-based merge plan used here is exactly
-the plan those formats execute — target left-join updates on the key,
-coalesce per column, union unmatched inserts. The swap is the commit.
+At 100 TB a table format (Delta/Iceberg) replaces the swap with a
+snapshot commit; the flag-and-rewrite plan is its copy-on-write MERGE.
 """
 
 from __future__ import annotations
@@ -26,19 +32,16 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from hive_2_spark.model.meta import ModelMeta
 
-# Largest victim-key set update() will inline as a driver-side IN-list
-# before switching to the distributed semi-join flag path. 1k keys is
-# well under Catalyst's expression-tree comfort zone and keeps the
-# collected driver payload trivial; past it, shipping the key frame
-# into a join is both safer and faster (r7-r9 verdict nit: was 10k).
-_ISIN_MAX_KEYS = 1000
+_HIT = "__hit"  # per-row "condition matched" flag inside a rewrite
 
 
 class ParquetStore:
@@ -104,10 +107,13 @@ class ParquetStore:
             w = out.write.mode(mode)
         w.parquet(path)
 
+    def _local_df(self, rows: list[dict[str, Any]]) -> DataFrame:
+        """Driver-side rows as one Arrow table: a ``LocalTableScan``."""
+        schema = to_arrow_schema(self.meta.struct_type())
+        return self.spark.createDataFrame(pa.Table.from_pylist(rows, schema=schema))
+
     def init_table(self, rows: list[dict[str, Any]] | None = None) -> None:
-        schema = self.meta.struct_type()
-        df = self.spark.createDataFrame(rows or [], schema=schema)
-        self._write(df, self.path, "overwrite")
+        self._write(self._local_df(rows or []), self.path, "overwrite")
 
     def check_unique(self, rows: list[dict[str, Any]]) -> None:
         """Uniqueness probe before insert (classes/hive/meta.php:97-117:
@@ -147,7 +153,6 @@ class ParquetStore:
         if enforce_unique:
             self.check_unique(rows)
         auto = self.meta.auto_field
-        schema = self.meta.struct_type()
         normalized = []
         for r in rows:
             rec = {}
@@ -166,8 +171,7 @@ class ParquetStore:
             for i, rec in enumerate(normalized):
                 rec[auto] = base + i + 1
                 ids[i] = rec[auto]
-        new_df = self.spark.createDataFrame(normalized, schema=schema)
-        self._write(new_df, self.path, "append")
+        self._write(self._local_df(normalized), self.path, "append")
         return ids
 
     def update(
@@ -180,129 +184,118 @@ class ParquetStore:
 
         Only the changed columns are touched (dirty-only SET,
         model.php:1200-1204). Returns affected row count (model.php:799-810).
+        ``limit`` selects rows by primary key: the first n matching rows
+        in key order, plus any matching row sharing one of their keys.
         """
         if not changes:
             return 0  # clean-update short-circuit (model.php:789-793)
-        current = self.df()
-        victims = current.filter(condition)
-        if limit is not None:
-            victims = victims.orderBy(self.meta.primary).limit(limit)
-        key = self.meta.primary
-        victim_keys = victims.select(key)
-        n = victim_keys.count()
-        if n == 0:
-            return 0
-        is_victim = F.col(key).isin(
-            [r[0] for r in victim_keys.collect()]
-        ) if n <= _ISIN_MAX_KEYS else None
-        if is_victim is None:
-            # Large victim set: semi-join flag instead of IN-list.
-            flagged = current.join(
-                victim_keys.withColumn("__hit", F.lit(True)), on=key, how="left"
-            )
-            is_victim = F.col("__hit").isNotNull()
-            current = flagged
-        updated = current
+        sets = {}
         for col_name, value in changes.items():
             field = self.meta.fields[col_name]
-            lit = F.lit(field.value(value)).cast(field.spark_type)
-            updated = updated.withColumn(
-                col_name, F.when(is_victim, lit).otherwise(F.col(col_name))
-            )
-        updated = updated.select(*self.meta.fields.keys())
-        partition_values = None
-        if self.partition_by and self.partition_by not in changes:
-            partition_values = [
-                r[0]
-                for r in victims.select(self.partition_by).distinct().collect()
-            ]
-        self._atomic_rewrite(updated, partition_values)
-        return n
+            sets[col_name] = F.lit(field.value(value)).cast(field.spark_type)
+        cols = [
+            F.when(F.col(_HIT), sets[c]).otherwise(F.col(c)).alias(c) if c in sets else c
+            for c in self.meta.fields
+        ]
+        return self._rewrite(
+            condition, limit, lambda flagged: flagged.select(*cols),
+            partition_scoped=self.partition_by not in changes,
+        )
 
     def delete(self, condition: Column, limit: int | None = None) -> int:
-        """DELETE WHERE cond [LIMIT n] as an anti-join rewrite
-        (model.php:831-853; builder :1232-1255)."""
-        current = self.df()
-        victims = current.filter(condition)
-        if limit is not None:
-            victims = victims.orderBy(self.meta.primary).limit(limit)
-        key = self.meta.primary
-        n = victims.count()
-        if n == 0:
-            return 0
-        survivors = current.join(victims.select(key), on=key, how="left_anti")
-        partition_values = None
-        if self.partition_by:
-            partition_values = [
-                r[0]
-                for r in victims.select(self.partition_by).distinct().collect()
-            ]
-        self._atomic_rewrite(survivors, partition_values)
-        return n
+        """DELETE WHERE cond [LIMIT n] as a rewrite of the other rows
+        (model.php:831-853; builder :1232-1255). ``limit`` selects rows
+        by primary key, as in :meth:`update`."""
+        return self._rewrite(
+            condition, limit, lambda flagged: flagged.filter(~F.col(_HIT))
+        )
 
     def upsert(self, rows: list[dict[str, Any]], key: str | None = None) -> int:
         """MERGE: update matching keys, insert the rest (save() semantics,
-        model.php:873-885, generalized to a row batch)."""
+        model.php:873-885, generalized to a row batch); a NULL source
+        value keeps the target's."""
         if not rows:
             return 0
         key = key or self.meta.primary
-        schema = self.meta.struct_type()
-        normalized = []
-        for r in rows:
-            rec = {}
-            for name, field in self.meta.fields.items():
-                rec[name] = field.value(r[name]) if name in r else None
-            normalized.append(rec)
-        incoming = self.spark.createDataFrame(normalized, schema=schema)
-        current = self.df()
-        cols = list(self.meta.fields.keys())
-        # target-left-join-source; per-column coalesce favors the source.
-        joined = current.alias("t").join(
-            incoming.alias("s"), on=F.col(f"t.{key}") == F.col(f"s.{key}"), how="left"
-        )
-        merged = joined.select(
-            *[
-                F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")).alias(c)
-                if c != key
-                else F.col(f"t.{key}").alias(key)
-                for c in cols
+        incoming = self._local_df(
+            [
+                {n: f.value(r[n]) if n in r else None for n, f in self.meta.fields.items()}
+                for r in rows
             ]
         )
-        inserts = incoming.join(current.select(key), on=key, how="left_anti")
-        self._atomic_rewrite(merged.unionByName(inserts))
+        on = F.col(f"t.{key}") == F.col(f"s.{key}")
+        merged = (
+            self.df().alias("t").join(incoming.alias("s"), on=on, how="full_outer")
+            .select(
+                *[F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")).alias(c) for c in self.meta.fields]
+            )
+        )
+        self._swap_in(self._write_swap(merged))
         return len(rows)
 
     # ------------------------------------------------------------ internals
-    def _atomic_rewrite(
-        self, df: DataFrame, partition_values: list[Any] | None = None
-    ) -> None:
-        """Swap in the new table state.
+    def _rewrite(
+        self,
+        condition: Column,
+        limit: int | None,
+        new_state: Callable[[DataFrame], DataFrame],
+        partition_scoped: bool = True,
+    ) -> int:
+        """Write ``new_state`` of the table flagged with ``_HIT`` and swap
+        it in; return the hits, counted by ``observe`` in the write job."""
+        current = self.df()
+        key = self.meta.primary
+        part = self.partition_by if partition_scoped else None
+        hit = F.coalesce(condition, F.lit(False))
+        partitions = None
+        if limit is not None:
+            probe = (
+                current.filter(hit).orderBy(key).limit(limit)
+                .select(key, *([part] if part else [])).collect()
+            )
+            if not probe:
+                return 0
+            hit = hit & F.col(key).isin(list({r[0] for r in probe}))
+            partitions = list({r[1] for r in probe}) if part else None
+        elif part:
+            partitions = [r[0] for r in current.filter(hit).select(part).distinct().collect()]
+            if not partitions:
+                return 0
+        if partitions is not None:
+            current = current.filter(F.col(part).isin(partitions))
+        hits = Observation()
+        flagged = current.withColumn(_HIT, hit).observe(
+            hits, F.count_if(F.col(_HIT)).alias("n")
+        )
+        swap = self._write_swap(new_state(flagged))
+        n = hits.get["n"]
+        if n:
+            self._swap_in(swap, partitions)
+        else:
+            shutil.rmtree(swap)
+        return n
 
-        With ``partition_values`` (and a partitioned store): only those
-        partitions are recomputed and swapped — every other partition's
-        files are left physically untouched. Otherwise: full-table swap.
-        """
-        token = uuid.uuid4().hex[:8]
-        swap = f"{self.path}.swap-{token}"
-        if self.partition_by and partition_values is not None:
-            affected = df.filter(F.col(self.partition_by).isin(partition_values))
-            self._write(affected, swap, "overwrite")
-            phys = self.meta.fields[self.partition_by].column or self.partition_by
-            for v in partition_values:
-                part = f"{phys}={v}"
-                src = os.path.join(swap, part)
-                dst = os.path.join(self.path, part)
-                bak = f"{dst}.bak-{token}"
-                if os.path.exists(dst):
-                    os.rename(dst, bak)
-                if os.path.exists(src):
-                    os.rename(src, dst)
-                if os.path.exists(bak):
-                    shutil.rmtree(bak)
-            shutil.rmtree(swap, ignore_errors=True)
-            return
-        bak = f"{self.path}.bak-{token}"
+    def _write_swap(self, df: DataFrame) -> str:
+        swap = f"{self.path}.swap-{uuid.uuid4().hex[:8]}"
         self._write(df, swap, "overwrite")
-        os.rename(self.path, bak)
-        os.rename(swap, self.path)
-        shutil.rmtree(bak)
+        return swap
+
+    def _swap_in(self, swap: str, partitions: list[Any] | None = None) -> None:
+        """Commit a swap directory. With ``partitions`` only those
+        partition directories are replaced; every other partition's
+        files stay physically untouched."""
+        token = swap.rsplit("-", 1)[1]
+        moves = [(swap, self.path)]
+        if partitions is not None:
+            phys = self.meta.fields[self.partition_by].column or self.partition_by
+            dirs = [f"{phys}={v}" for v in partitions]
+            moves = [(os.path.join(swap, d), os.path.join(self.path, d)) for d in dirs]
+        for src, dst in moves:
+            bak = f"{dst}.bak-{token}"
+            if os.path.exists(dst):
+                os.rename(dst, bak)
+            if os.path.exists(src):
+                os.rename(src, dst)
+            if os.path.exists(bak):
+                shutil.rmtree(bak)
+        shutil.rmtree(swap, ignore_errors=True)

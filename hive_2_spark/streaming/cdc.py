@@ -19,7 +19,7 @@ becomes ``MERGE INTO`` (gated Delta/Iceberg support: ``core/io.py``).
 
 Scale: per micro-batch cost is one key-shuffle over target ∪ batch.
 At 100 TB serving-table scale the full-union recompute is replaced by
-partition-scoped merge (`model/store.py::_atomic_rewrite` shows the
+partition-scoped merge (`model/store.py::_swap_in` shows the
 partition-pruned swap) or a storage-layer MERGE; the micro-batch side
 is always small, so broadcast of the batch keys prunes the target scan.
 """

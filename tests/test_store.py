@@ -3,13 +3,15 @@ atomic swap, plus relation join shapes over registered models."""
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from hive_2_spark.model import IntegerField, Model, ModelMeta, StringField, register_model
-from hive_2_spark.model.fields import AutoField, FloatField
+from hive_2_spark.model.fields import AutoField, BooleanField, FloatField, TimestampField
 from hive_2_spark.model.meta import clear_registry
 from hive_2_spark.model.relation import BelongsTo, HasMany, ManyToMany
 from hive_2_spark.model.store import ParquetStore
@@ -128,15 +130,8 @@ def test_clean_update_short_circuits(stores):
 
 @pytest.mark.parametrize("n_victims", [1000, 1001])
 def test_update_isin_semi_join_flip_boundary(spark, tmp_path, n_victims):
-    """update() inlines victim keys as a driver-side IN-list only up to
-    _ISIN_MAX_KEYS (= 1000, lowered from 10k per the r7-r9 verdict nit);
-    one past it must take the distributed semi-join flag path. Both
-    sides of the flip are exercised at the exact boundary, asserting
-    identical semantics AND that the large side's plan contains a join
-    instead of a giant In-list."""
-    from hive_2_spark.model import store as store_mod
-
-    assert store_mod._ISIN_MAX_KEYS == 1000
+    """update() is one Spark job whatever the victim count: 1000 and
+    1001 victims take the same path with identical semantics."""
     clear_registry()
     meta = ModelMeta(
         table="boundary_t",
@@ -148,12 +143,126 @@ def test_update_isin_semi_join_flip_boundary(spark, tmp_path, n_victims):
     st.init_table()
     total = n_victims + 50  # 50 non-victims prove the WHERE is honored
     st.insert([{"v": 0} for _ in range(total)])
-    n = st.update(F.col("id") <= n_victims, {"v": 7})
+    n, jobs = _jobs(spark, lambda: st.update(F.col("id") <= n_victims, {"v": 7}))
     assert n == n_victims
+    assert jobs == 1
     got = {r["id"]: r["v"] for r in st.df().collect()}
     assert len(got) == total
     assert all(v == 7 for k, v in got.items() if k <= n_victims)
     assert all(v == 0 for k, v in got.items() if k > n_victims)
+
+
+def _jobs(spark, fn):
+    """(fn(), Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    group = f"store-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _pairs(st):
+    return sorted((r["post_id"], r["tag_id"]) for r in st.df().collect())
+
+
+def test_non_unique_primary_hits_only_matching_rows(stores):
+    """post_tag's primary (post_id) repeats: a mutation touches the rows
+    its condition matches, not every row sharing their key."""
+    st = stores["post_tag"]
+    assert st.update(F.col("tag_id") == 2, {"tag_id": 5}) == 1
+    assert _pairs(st) == [(1, 1), (1, 5), (2, 1)]
+    assert st.delete(F.col("tag_id") == 5) == 1
+    assert _pairs(st) == [(1, 1), (2, 1)]
+    # limit selects by primary key: every matching row of the first key
+    st.insert([{"post_id": 1, "tag_id": 3}])
+    assert st.delete(F.col("tag_id") >= 1, limit=1) == 2
+    assert _pairs(st) == [(2, 1)]
+
+
+def test_update_and_delete_run_one_spark_job(spark, stores):
+    st = stores["post"]
+    n, jobs = _jobs(spark, lambda: st.update(F.col("author_id") == 1, {"score": 0.5}))
+    assert (n, jobs) == (2, 1)
+    n, jobs = _jobs(spark, lambda: st.delete(F.col("title") == "t3"))
+    assert (n, jobs) == (1, 1)
+    assert sorted(r["score"] for r in st.df().collect()) == [0.5, 0.5]
+
+
+def test_no_match_keeps_part_files(stores, tmp_path):
+    st = stores["post"]
+    before = sorted(os.listdir(st.path))
+    assert st.update(F.col("author_id") == 42, {"score": 0.0}) == 0
+    assert st.delete(F.col("title").isNull()) == 0
+    assert sorted(os.listdir(st.path)) == before
+    assert [p for p in os.listdir(tmp_path) if ".swap-" in p or ".bak-" in p] == []
+
+
+def _typed_meta(tmp_path, name):
+    return ModelMeta(
+        table=name,
+        db=str(tmp_path / f"{name}.parquet"),
+        fields={
+            "id": AutoField(),
+            "n": IntegerField(null=True),
+            "s": StringField(null=True),
+            "f": FloatField(null=True),
+            "b": BooleanField(),
+            "t": TimestampField(),
+        },
+    )
+
+
+_TYPED = [
+    {"n": 7, "s": "h\u00e9llo", "f": 2.5, "b": True,
+     "t": _dt.datetime(2021, 3, 4, 5, 6, 7, 123456)},
+    {"n": "12", "s": 3, "f": "0.25", "b": 1, "t": 1_600_000_000},
+    {"n": None, "s": None, "f": None, "b": None, "t": None},
+]
+
+
+def _typed_rows(st):
+    return sorted(
+        (tuple(r) for r in st.df().collect()), key=lambda r: (r[0] is None, r[0])
+    )
+
+
+def test_arrow_boundary_roundtrips_every_field_type(spark, tmp_path):
+    """Every field type, each also as None, reads back equal to its
+    coerced value through init_table, insert and upsert."""
+    st = ParquetStore(spark, _typed_meta(tmp_path, "typed"), str(tmp_path / "typed.parquet"))
+    fields = st.meta.fields
+
+    def coerced(i, row):
+        return (i,) + tuple(fields[c].value(row[c]) for c in ("n", "s", "f", "b", "t"))
+
+    seed = [dict(zip(fields, coerced(i, r))) for i, r in enumerate(_TYPED, start=1)]
+    seed.append({c: None for c in fields})
+    st.init_table(seed)
+    assert _typed_rows(st) == [tuple(r.values()) for r in seed]
+
+    st.init_table()
+    assert st.insert(_TYPED) == [1, 2, 3]
+    assert _typed_rows(st) == [coerced(i, r) for i, r in enumerate(_TYPED, start=1)]
+
+    batch = [dict(_TYPED[1], id=1), dict(_TYPED[2], id=99), dict(_TYPED[0], id=None)]
+    assert st.upsert(batch) == 3
+    assert _typed_rows(st) == [
+        coerced(1, _TYPED[1]),
+        coerced(2, _TYPED[1]),
+        coerced(3, _TYPED[2]),
+        coerced(99, _TYPED[2]),
+        coerced(None, _TYPED[0]),
+    ]
+
+
+def test_local_frames_scan_local_table(spark, tmp_path):
+    st = ParquetStore(spark, _typed_meta(tmp_path, "plan_t"), str(tmp_path / "plan_t.parquet"))
+    plan = st._local_df([{"id": 1, "n": 7}])._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
 
 
 def test_physical_column_aliasing_roundtrip(spark, tmp_path):

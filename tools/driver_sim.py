@@ -11,7 +11,9 @@ import subprocess
 import sys
 import time
 import traceback
-sys.path.insert(0, "/root/repo")
+from pathlib import Path
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 _json_out = None
 if "--json" in sys.argv:
     _json_out = sys.argv[sys.argv.index("--json") + 1]
@@ -20,7 +22,7 @@ if "--json" in sys.argv:
 # byte-identical (guards against stale-copy artifacts).
 _stamp = {
     "commit": subprocess.run(
-        ["git", "-C", "/root/repo", "rev-parse", "HEAD"],
+        ["git", "-C", str(REPO), "rev-parse", "HEAD"],
         capture_output=True, text=True).stdout.strip(),
     "timestamp_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     "nonce": secrets.token_hex(8),

@@ -1,4 +1,6 @@
-import sys; sys.path.insert(0, "/root/repo")
+import sys
+from pathlib import Path
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[16]")
          .config("spark.sql.session.timeZone", "UTC")
