@@ -11,14 +11,16 @@ Stdout contract: the round driver captures only the LAST 2000 chars of
 combined output and parses the final JSON line found there. Round 9's
 line (80 one-x timings + 80 x10 timings + 80 exponents) overflowed that
 window and came back ``parsed: null``. So stdout now carries ONLY the
-compact 1x map (separators without spaces, adaptively rounded to fit),
-printed as the process's very last act — after the trend append and
-after ``spark.stop()`` so no late stderr can land behind it. The full-
-precision timings plus the x10/exponent maps go to BENCH_TREND.jsonl.
+compact 1x map (separators without spaces, 2 decimals, the costliest
+keys that fit), printed as the process's very last act — after the trend
+append and after ``spark.stop()`` so no late stderr can land behind it.
+The full-precision timings plus the x10/exponent maps go to
+BENCH_TREND.jsonl.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -168,98 +170,41 @@ def _render_stdout_line(
     total: float, timings: dict[str, float], sf_val
 ) -> str:
     """Serialize the bench payload to ONE compact line <= the driver's
-    tail window, degrading timing precision adaptively: full 2-decimal
-    first; then 1 decimal for multi-second entries (sub-second keys keep
-    2); then 1 decimal everywhere. The length check runs on the ACTUAL
-    data, so the emitted line always fits regardless of key count —
-    full precision is preserved in BENCH_TREND.jsonl.
+    tail window. One rule: every value is rounded to 2 decimals, and the
+    costliest keys whose line fits are kept. When any key is dropped, the
+    line carries ``queries_omitted`` and ``omitted_hash`` (md5 of the
+    sorted dropped-key list), so a reader can check WHICH keys were
+    dropped against BENCH_TREND.jsonl, which always holds the full map.
     """
 
-    def tier_full(v: float) -> float:
-        return round(v, 2)
-
-    def tier_mixed(v: float) -> float:
-        return round(v, 1 if v >= 1 else 2)
-
-    def tier_coarse(v: float) -> float:
-        return round(v, 1)
-
-    def tier_int(v: float):
-        return int(round(v)) if v >= 1 else round(v, 1)
-
-    def render(
-        queries: dict, omitted: list | None, name_keys: bool = True
-    ) -> str:
+    def render(kept: set[str]) -> str:
         payload = {
             "metric": "headline_queries_total_sec",
             "value": round(total, 2),
             "unit": "sec",
-            "queries": queries,
+            "queries": {k: round(v, 2) for k, v in timings.items() if k in kept},
             "sf": sf_val,
         }
-        if omitted:
-            payload["queries_omitted"] = len(omitted)
-            if name_keys:
-                # name the dropped keys so the artifact is self-
-                # describing (round-10 verdict item 6)
-                payload["omitted_keys"] = sorted(omitted)
-            else:
-                # too many to name: a stable digest of the sorted key
-                # list instead (round-11 verdict item 4), so a reader
-                # can confirm WHICH keys were dropped against
-                # BENCH_TREND.jsonl without trusting the bare count
-                import hashlib
-
-                payload["omitted_hash"] = hashlib.md5(
-                    ",".join(sorted(omitted)).encode()
-                ).hexdigest()[:12]
+        dropped = sorted(k for k in timings if k not in kept)
+        if dropped:
+            payload["queries_omitted"] = len(dropped)
+            payload["omitted_hash"] = hashlib.md5(
+                ",".join(dropped).encode()
+            ).hexdigest()[:12]
         return json.dumps(payload, separators=(",", ":"))
 
-    line = ""
-    for fmt in (tier_full, tier_mixed, tier_coarse, tier_int):
-        line = render({k: fmt(v) for k, v in timings.items()}, None)
-        if len(line) <= _STDOUT_LINE_LIMIT:
-            return line
-    # Physical last resort (key names alone exceed the window — only
-    # reachable if the headline set roughly doubles): keep the most
-    # expensive keys that fit and say how many were dropped, rather
-    # than emit a line the driver cannot parse. Full map always lands
-    # in BENCH_TREND.jsonl regardless. Naming the dropped keys is
-    # OPPORTUNISTIC (round-10 verdict item 6): attach the name list if
-    # it fits as-is or after shedding at most 3 more cheap keys (each
-    # shed nets ~5+ chars); otherwise declare the bare count — never
-    # trade real coverage for the label.
-    by_cost = sorted(timings, key=timings.get, reverse=True)
-    # Preferred (round-10 verdict item 6): drop the d cheapest keys for
-    # the SMALLEST d that fits with the dropped keys NAMED — the line
-    # stays self-describing. Naming a key costs nearly as much line
-    # space as keeping its entry (the name dominates both), so this
-    # only engages when the trade is cheap (wide values, short names,
-    # small omissions); past d=6 coverage wins over the label.
-    for d in range(1, 7):
-        kept = {k: tier_int(timings[k]) for k in by_cost[:-d]}
-        line = render(kept, by_cost[-d:])
-        if len(line) <= _STDOUT_LINE_LIMIT:
-            return line
-    # Omission too large to name affordably: keep the most expensive
-    # keys that fit and declare the bare count.
-    kept = {}
-    for k in by_cost:
-        trial = dict(kept)
-        trial[k] = tier_int(timings[k])
-        dropped_n = len(timings) - len(trial)
-        if len(render(trial, ["x"] * dropped_n, name_keys=False)) \
-                > _STDOUT_LINE_LIMIT:
-            break
-        kept = trial
-    dropped = [q for q in timings if q not in kept]
-    return render(kept, dropped, name_keys=False)
+    kept = sorted(timings, key=timings.get, reverse=True)
+    line = render(set(kept))
+    while len(line) > _STDOUT_LINE_LIMIT:
+        kept.pop()  # the cheapest key still kept
+        line = render(set(kept))
+    return line
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entrymod
-    from hive_2_spark.session import get_spark
+    from hive_2_spark.session import cpu_count, get_spark
 
     spark = get_spark("hive_2_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -339,6 +284,7 @@ def main() -> None:
         "ts": round(time.time(), 1),
         "commit": commit,
         "sf": sf_val,
+        "cpus": cpu_count(),
         "total_sec": total,
         "queries": timings,
     }

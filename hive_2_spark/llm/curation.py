@@ -680,9 +680,7 @@ QUERIES = {
     "tfidf_top_terms": tfidf_top_terms,
     "sample_weighted_mix": sample_weighted_mix,
     "shuffle_train_order": shuffle_train_order,
-    # curriculum_order is defined here but registered via llm.pipeline:
-    # registry._FRONT pins the driver window explicitly, and keys not in
-    # _FRONT (like this one) enter the registry behind it.
+    "curriculum_order": curriculum_order,
     "sample_source_token_cap": sample_source_token_cap,
     "sample_temperature": sample_temperature,
     "curation_mixture_balance": curation_mixture_balance,
@@ -788,6 +786,38 @@ def _soft_dedup_sql() -> str:
         "SELECT doc_id, cluster, CAST(csize AS BIGINT) AS csize, "
         "CAST(1000000 // csize AS BIGINT) AS weight_e6 FROM m"
     )
+
+
+def _dk_curriculum() -> str:
+    """SQL twin of ``curriculum_order`` — quality expr imported from
+    ``llm.text`` so the two oracles can never drift apart."""
+    from hive_2_spark.llm.text import _DK_STOP_HITS
+
+    quality = (
+        "ROUND("
+        "(CASE WHEN n_chars BETWEEN 100 AND 1000 THEN 0.4 ELSE 0.0 END) + "
+        f"(CASE WHEN CAST({_DK_STOP_HITS} AS DOUBLE) / "
+        "GREATEST(len(regexp_split_to_array(TRIM(text), '\\s+')), 1) > 0.05 "
+        "THEN 0.3 ELSE 0.0 END) + "
+        "(CASE WHEN CAST(LENGTH(regexp_replace(text, '[^A-Za-z]', '', 'g')) "
+        "AS DOUBLE) / GREATEST(LENGTH(text), 1) > 0.6 "
+        "THEN 0.3 ELSE 0.0 END), 1)"
+    )
+    return f"""
+WITH q AS (
+  SELECT doc_id, {quality} AS quality FROM documents
+), keyed AS (
+  SELECT doc_id,
+         CAST(ROUND(quality * 10) AS INT) AS bucket,
+         md5('epoch0:' || CAST(doc_id AS VARCHAR)) AS sort_key
+  FROM q
+)
+SELECT doc_id, bucket,
+       substr(sort_key, 1, 1) AS shard,
+       CAST(ROW_NUMBER() OVER (PARTITION BY bucket, substr(sort_key, 1, 1)
+                               ORDER BY sort_key) AS BIGINT) AS pos
+FROM keyed
+"""
 
 
 ORACLES = {
@@ -1004,40 +1034,5 @@ SELECT doc_id,
                                ORDER BY sort_key) AS BIGINT) AS pos
 FROM keyed
 """,
+    "curriculum_order": _dk_curriculum(),
 }
-
-
-def _dk_curriculum() -> str:
-    """SQL twin of ``curriculum_order`` — quality expr imported from
-    ``llm.text`` so the two oracles can never drift apart."""
-    from hive_2_spark.llm.text import _DK_STOP_HITS
-
-    quality = (
-        "ROUND("
-        "(CASE WHEN n_chars BETWEEN 100 AND 1000 THEN 0.4 ELSE 0.0 END) + "
-        f"(CASE WHEN CAST({_DK_STOP_HITS} AS DOUBLE) / "
-        "GREATEST(len(regexp_split_to_array(TRIM(text), '\\s+')), 1) > 0.05 "
-        "THEN 0.3 ELSE 0.0 END) + "
-        "(CASE WHEN CAST(LENGTH(regexp_replace(text, '[^A-Za-z]', '', 'g')) "
-        "AS DOUBLE) / GREATEST(LENGTH(text), 1) > 0.6 "
-        "THEN 0.3 ELSE 0.0 END), 1)"
-    )
-    return f"""
-WITH q AS (
-  SELECT doc_id, {quality} AS quality FROM documents
-), keyed AS (
-  SELECT doc_id,
-         CAST(ROUND(quality * 10) AS INT) AS bucket,
-         md5('epoch0:' || CAST(doc_id AS VARCHAR)) AS sort_key
-  FROM q
-)
-SELECT doc_id, bucket,
-       substr(sort_key, 1, 1) AS shard,
-       CAST(ROW_NUMBER() OVER (PARTITION BY bucket, substr(sort_key, 1, 1)
-                               ORDER BY sort_key) AS BIGINT) AS pos
-FROM keyed
-"""
-
-
-# registered by llm.pipeline (see QUERIES comment above)
-CURRICULUM_ORACLE = _dk_curriculum()

@@ -187,17 +187,9 @@ def dedup_clusters_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from hive_2_spark.llm.curation import (  # noqa: E402 — see curation.QUERIES
-    CURRICULUM_ORACLE,
-    curriculum_order,
-)
-
 QUERIES = {
     "curation_funnel": curation_funnel,
     "dedup_clusters_semantic": dedup_clusters_semantic,
-    # defined in llm.curation; registered here to stay behind the frozen
-    # round-3 driver window (tests/test_registry_window.py)
-    "curriculum_order": curriculum_order,
 }
 
 
@@ -304,5 +296,4 @@ def _funnel_sql() -> str:
 ORACLES = {
     "curation_funnel": _funnel_sql(),
     "dedup_clusters_semantic": _semantic_clusters_sql(),
-    "curriculum_order": CURRICULUM_ORACLE,
 }

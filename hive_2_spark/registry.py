@@ -3,8 +3,8 @@
 Every operator module exposes ``QUERIES`` (name -> (spark, sf_dir) ->
 DataFrame) and ``ORACLES`` (name -> DuckDB SQL). This module merges them
 and asserts key discipline: an oracle without a query is an error; a query
-without an oracle is allowed (rows-only check) but must be listed in
-``ROWS_ONLY`` deliberately.
+without an oracle is allowed (rows-only check) but must be deliberate:
+``tests/test_engine.py`` pins the ``rows_only_keys()`` set.
 """
 
 from __future__ import annotations
@@ -15,13 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# Registry insertion order is the order the driver consumes keys in (the
-# per-round correctness window is the FIRST 50 keys). Rounds 1-3 windows
-# verified 150 keys (see CORRECTNESS_r0{1,2,3}.json). ``_FRONT`` below pins
-# the exact key order for the still-unverified tail — finer-grained than
-# module order, because families like multimodal mix driver-green keys with
-# the one key round 4 must re-prove (media_features). Module order only
-# decides the relative order of keys NOT in _FRONT.
 _MODULES: list[str] = [
     "hive_2_spark.llm.text",
     "hive_2_spark.llm.curation",
@@ -30,8 +23,6 @@ _MODULES: list[str] = [
     "hive_2_spark.llm.advanced",
     "hive_2_spark.llm.multimodal",
     "hive_2_spark.core.scalarfns",
-    "hive_2_spark.core.scalarfns2",
-    "hive_2_spark.core.scalarfns3",
     "hive_2_spark.llm.pipeline",
     "hive_2_spark.llm.urls",
     "hive_2_spark.llm.clustering",
@@ -48,10 +39,8 @@ _MODULES: list[str] = [
     "hive_2_spark.core.mv",
     "hive_2_spark.core.graph",
     "hive_2_spark.core.profile",
-    "hive_2_spark.core.analytics3",
     "hive_2_spark.core.basket",
     "hive_2_spark.core.setops",
-    "hive_2_spark.core.analytics2",
     "hive_2_spark.core.aggregates",
     "hive_2_spark.core.windows",
     "hive_2_spark.core.writes",
@@ -71,51 +60,6 @@ _MODULES: list[str] = [
     "hive_2_spark.core.joins",
 ]
 
-# Round-14 rotation (executes the plan recorded in NOTES.md at the end
-# of round 13, computed mechanically from the union of genuine driver
-# windows r1-r6, r9-r13 — the r7/r8 artifacts were byte-copies of r6).
-# Keys 1-50 are the driver window:
-# (a) any new round-14 operators — never driver-checked, always first;
-# (b) ALL 30 keys whose latest genuine driver hash-check is r5 (the
-#     mechanical recompute from CORRECTNESS_r{01..13}.json — one more
-#     than the NOTES.md name list, which missed emb_pca_power; the
-#     artifacts win);
-# (c) the front of the r6-stale tier in registry order — the
-#     DISPLACEABLE tail: new round-14 operators push these out.
-# Exactly 50 — asserted below so rotation accounting can't drift.
-_FRONT: list[str] = [
-    # --- (a) round-14 additions land HERE as they ship, each
-    #     displacing one key from the (c) tail ---
-    "dedup_index_maintain", "read_python_datasource_compacted",
-    "text_bpe_merges", "text_bpe_apply", "graph_scc",
-    "event_time_to_convert", "read_schema_evolution",
-    # --- (b) the 30 r5-era keys, registry order ---
-    "emb_pca_power", "emb_whiten", "pivot_wide", "unpivot_long",
-    "pivot_dynamic", "join_salted", "agg_salted", "zorder_layout",
-    "compact_small_files", "agg_histogram", "mv_join_incremental",
-    "profile_orders", "profile_documents",
-    "set_union_by_name", "set_union_all", "set_intersect",
-    "set_except", "set_intersect_all",
-    "agg_bitmap_distinct", "agg_incremental_merge",
-    "agg_weighted_median", "agg_weighted_quartiles",
-    "win_ntile", "win_distinct_rolling", "win_global_cumsum",
-    "win_global_rank",
-    "stream_doc_gate", "dedup_token_sort", "sim_cosine_lsh",
-    "event_rfm",
-    # --- (c) r6-stale tier front, registry order (displaceable) ---
-    "fingerprint_rolling", "token_pack_salted", "retrieval_ndcg",
-    "retrieval_rrf_fusion", "phrase_search_positional", "sim_pq_topk",
-    "media_scene_cut", "skew_report", "ts_drift_report",
-    "ts_downsample_lttb", "ts_crosscorr", "ts_changepoint",
-    "ts_holt",
-]
-assert len(_FRONT) == 50, f"driver window must be exactly 50, got {len(_FRONT)}"
-assert len(_FRONT) == len(set(_FRONT)), (
-    "duplicate keys in _FRONT: "
-    f"{sorted(k for k in _FRONT if _FRONT.count(k) > 1)}"
-)
-
-
 def _load() -> tuple[dict[str, QueryFn], dict[str, str]]:
     import importlib
 
@@ -133,12 +77,7 @@ def _load() -> tuple[dict[str, QueryFn], dict[str, str]]:
             raise ValueError(f"oracles without queries {missing} in {modname}")
         queries.update(q)
         oracles.update(o)
-    unknown = [k for k in _FRONT if k not in queries]
-    if unknown:
-        raise ValueError(f"_FRONT keys not in registry: {unknown}")
-    ordered = {k: queries[k] for k in _FRONT}
-    ordered.update((k, v) for k, v in queries.items() if k not in ordered)
-    return ordered, oracles
+    return queries, oracles
 
 
 def all_queries() -> dict[str, QueryFn]:

@@ -88,46 +88,12 @@ def test_many_keys_degrade_not_overflow() -> None:
         assert max(dropped) <= kept_min + 0.6
 
 
-def test_omitted_keys_named_when_they_fit(monkeypatch) -> None:
-    """Round-10 verdict item 6: a line that drops keys should NAME them
-    (`omitted_keys`) when that fits — opportunistically, shedding at
-    most 3 extra cheap keys — and fall back to the bare count when it
-    can't. Accounting must hold either way."""
-    # wide values + short names: the regime where naming d dropped keys
-    # is cheaper than keeping them (entry width - name width >> 0)
-    t = {f"k{i:02d}": 1.0e11 + i * 9.97e8 for i in range(40)}
-    named_at = []
-    for limit in (900, 840, 800, 700, 600, 400):
-        monkeypatch.setattr(bench, "_STDOUT_LINE_LIMIT", limit)
-        line = bench._render_stdout_line(sum(t.values()), t, 0.1)
-        assert len(line) <= limit
-        parsed = json.loads(line)
-        n_omitted = parsed.get("queries_omitted", 0)
-        assert len(parsed["queries"]) + n_omitted == 40
-        if "omitted_keys" in parsed:
-            assert len(parsed["omitted_keys"]) == n_omitted
-            assert parsed["omitted_keys"] == sorted(parsed["omitted_keys"])
-            assert set(parsed["omitted_keys"]).isdisjoint(parsed["queries"])
-            # the named drops are the cheapest keys
-            kept_min = min(parsed["queries"].values())
-            assert all(t[k] <= kept_min for k in parsed["omitted_keys"])
-            named_at.append(limit)
-    # the named path must engage somewhere in the sweep, and the bare
-    # count must still appear when naming is unaffordable
-    assert named_at, "named-omission path never engaged"
-    monkeypatch.setattr(bench, "_STDOUT_LINE_LIMIT", 400)
-    parsed = json.loads(bench._render_stdout_line(sum(t.values()), t, 0.1))
-    assert parsed.get("queries_omitted", 0) > 0
-    assert "omitted_keys" not in parsed
-
-
 def test_bare_count_branch_carries_omitted_digest(monkeypatch) -> None:
-    """Round-11 verdict item 4: when omitted keys can't be named
-    inline, the line must carry `omitted_hash` = md5 of the sorted
-    dropped-key list, so a reader can verify WHICH keys were dropped
-    against BENCH_TREND.jsonl's full map instead of trusting a bare
-    count. The digest must be reproducible from the kept/full key
-    sets alone."""
+    """When keys are dropped, the line must carry `omitted_hash` = md5
+    of the sorted dropped-key list, so a reader can verify WHICH keys
+    were dropped against BENCH_TREND.jsonl's full map instead of
+    trusting a bare count. The digest must be reproducible from the
+    kept/full key sets alone."""
     import hashlib
 
     t = {f"k{i:02d}": 1.0e11 + i * 9.97e8 for i in range(40)}
@@ -139,11 +105,6 @@ def test_bare_count_branch_carries_omitted_digest(monkeypatch) -> None:
     assert len(dropped) == parsed["queries_omitted"]
     expect = hashlib.md5(",".join(dropped).encode()).hexdigest()[:12]
     assert parsed["omitted_hash"] == expect
-    # the NAMED branch never carries the digest — one mechanism at a time
-    monkeypatch.setattr(bench, "_STDOUT_LINE_LIMIT", 840)
-    named = json.loads(bench._render_stdout_line(sum(t.values()), t, 0.1))
-    if "omitted_keys" in named:
-        assert "omitted_hash" not in named
 
 
 def test_precision_kept_when_it_fits() -> None:

@@ -78,6 +78,21 @@ def test_cross_sf_rows_are_ignored(tmp_path):
     assert bench_trend.run(_write(tmp_path, rows), None, 0.6, 2.0) == 0
 
 
+def test_rows_with_different_cpus_are_never_diffed(tmp_path, capsys):
+    # a 32-core and an 8-core run of the same commit differ only in
+    # cpus: the 20x spike between them is box width, not a regression
+    rows = [
+        _row("aaa", 0.1, {"q": 2.00}) | {"cpus": 32},
+        _row("aaa", 0.1, {"q": 40.0}) | {"cpus": 8},
+    ]
+    assert bench_trend.run(_write(tmp_path, rows), None, 0.6, 2.0) == 0
+    assert "nothing to diff" in capsys.readouterr().out
+    # a later 32-core row is diffed against the 32-core row only
+    rows.append(_row("bbb", 0.1, {"q": 2.10}) | {"cpus": 32})
+    assert bench_trend.run(_write(tmp_path, rows), None, 0.6, 2.0) == 0
+    assert "prev=aaa total=2.0s" in capsys.readouterr().out
+
+
 def test_new_key_not_flagged(tmp_path, capsys):
     rows = [
         _row("aaa", 0.1, {"q": 1.00}),

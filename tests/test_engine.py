@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from hive_2_spark import registry
 from hive_2_spark.engine import Engine
 from tests.conftest import SF_DIR
 
@@ -157,3 +158,16 @@ def test_observe_metrics_on_action(spark):
     got = obs.get
     assert got["n_rows"] == load_table(spark, SF_DIR, "orders").count()
     assert got["total"] > 0
+
+
+def test_rows_only_keys_are_deliberate():
+    """Every key without an oracle must be on the documented list —
+    a forgotten oracle shows up here, not as a silent weaker check."""
+    expected = {
+        "agg_approx", "agg_sketch_merge", "dedup_minhash_lsh",
+        "media_features", "media_phash_dedup",
+        # real RAWV container decode — the media_features barrier;
+        # planted-cut recall gated in tests/test_multimodal.py
+        "media_scene_cut",
+    }
+    assert registry.rows_only_keys() == expected

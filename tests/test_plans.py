@@ -249,7 +249,7 @@ def test_q8_dimensions_broadcast(spark):
     """The 7-way market-share star join must broadcast every dimension
     (part/supplier/customer/nation x2/region) — no SortMergeJoin against a
     broadcast-sized table, no CartesianProduct anywhere."""
-    from hive_2_spark.core.analytics2 import sql_q8_market_share
+    from hive_2_spark.core.analytics import sql_q8_market_share
 
     plan = plan_of(sql_q8_market_share(spark, SF_DIR))
     assert plan.count("BroadcastHashJoin") >= 4, plan
@@ -260,7 +260,7 @@ def test_q21_decorrelates_to_hash_joins(spark):
     """The double-correlated EXISTS/NOT-EXISTS self-join must compile to
     semi/anti hash joins on l_orderkey — never a nested loop over the
     fact table."""
-    from hive_2_spark.core.analytics3 import sql_q21_waiting_suppliers
+    from hive_2_spark.core.analytics import sql_q21_waiting_suppliers
 
     plan = plan_of(sql_q21_waiting_suppliers(spark, SF_DIR))
     assert "CartesianProduct" not in plan
@@ -271,7 +271,7 @@ def test_q21_decorrelates_to_hash_joins(spark):
 def test_q20_nested_in_becomes_semi_joins(spark):
     """Both IN levels (supplier IN agg-subquery, partkey IN part-subquery)
     must reduce to semi joins, with the aggregate run once."""
-    from hive_2_spark.core.analytics3 import sql_q20_volume_suppliers
+    from hive_2_spark.core.analytics import sql_q20_volume_suppliers
 
     plan = plan_of(sql_q20_volume_suppliers(spark, SF_DIR))
     assert plan.count("LeftSemi") >= 2

@@ -41,7 +41,7 @@ BRIEF_EXTRAS = [
     "dedup_embedding", "sim_cosine_lsh", "sim_ivf_topk",
     "lang_id", "quality_score", "token_count", "fingerprint",
     "media_features", "media_stats",
-    # TPC-H remainder adapted to the driver schema (core/analytics2.py)
+    # TPC-H remainder adapted to the driver schema (core/analytics.py)
     "sql_q6_forecast_revenue", "sql_q8_market_share",
     "sql_q9_profit_by_nation", "sql_q11_revenue_concentration",
     "sql_q13_order_distribution", "sql_q15_top_supplier",

@@ -15,9 +15,12 @@ the exit code instead of eyeballing:
    happens, instead of a judge finding it next round. Medians need >=2
    prior entries for a key; newer keys are skipped (printed as "new").
 
-Entries are compared only within the same sf: the trend log also
-carries sf0.01 smoke rows, and diffing a sf0.01 run against a sf0.1
-run would flag everything.
+Entries are compared only within the same (sf, cpus) group, the group
+of the newest same-sf entry: the trend log also carries sf0.01 smoke
+rows, and diffing a sf0.01 run against a sf0.1 run would flag
+everything. Likewise a 32-core and an 8-core run of the same commit
+differ by up to 20x on single keys. Rows written before bench.py
+recorded ``cpus`` form their own group.
 
 Driver-authored rows are EXCLUDED from both checks (round-10 verdict
 item 3): the per-round boundary bench runs on the driver's capture box,
@@ -128,14 +131,20 @@ def run(trend_path: Path, sf, threshold: float, spike_factor: float) -> int:
     rows = [
         r for r, d in zip(lines, driver) if r.get("sf") == sf and not d
     ]
+    cpus = rows[-1].get("cpus") if rows else None
+    rows = [r for r in rows if r.get("cpus") == cpus]
     if len(rows) < 2:
-        print(f"{len(rows)} sf={sf} entries in {trend_path.name} — nothing to diff")
+        print(
+            f"{len(rows)} sf={sf} cpus={cpus} entries in {trend_path.name}"
+            " — nothing to diff"
+        )
         return 0
 
     prev, cur = rows[-2], rows[-1]
     history = rows[:-1][-3:]  # up to 3 prior entries for the median guard
     print(
-        f"sf={sf}  prev={prev.get('commit')} total={prev['total_sec']}s  ->  "
+        f"sf={sf} cpus={cpus}  "
+        f"prev={prev.get('commit')} total={prev['total_sec']}s  ->  "
         f"cur={cur.get('commit')} total={cur['total_sec']}s  "
         f"(median guard over {len(history)} prior)"
     )
