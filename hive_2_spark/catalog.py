@@ -2,8 +2,9 @@
 
 Mirrors the reference's Meta registry (``classes/hive/meta.php:70-86``,
 ``classes/hive/model.php:48-80`` — lazy one-time schema init + singleton
-cache): here the "schema" is the parquet footer and the cache is a
-per-(session, sf_dir) dict of DataFrames.
+cache): here the "schema" is the parquet footer. No DataFrame cache is
+kept: every ``load_table`` call builds a fresh, lazy DataFrame and reads
+the footer again.
 
 At 100 TB each of these would be a partitioned parquet/iceberg table in a
 real metastore; ``spark.read.parquet`` on a directory transparently scales

@@ -1,12 +1,14 @@
 """Incremental aggregate maintenance (materialized-view pattern).
 
-A summary table (per-key sums/counts) is kept in a ParquetStore-style
-directory and folded forward as new fact batches arrive: the delta batch
-is partially aggregated, then merged into the summary with a key-join +
-re-aggregation of ONLY the touched keys' rows. Equivalent to full
-recomputation (asserted by tests/test_incremental.py) but processes
-O(delta) instead of O(history) — the warehouse pattern behind streaming
-upsert sinks and nightly rollup maintenance.
+A summary table (per-key sums/counts) is kept in a parquet directory
+and folded forward as new fact batches arrive: the delta batch is
+partially aggregated, then merged into the summary with a key-join +
+re-aggregation of ONLY the touched keys' rows. Each new summary is
+committed with the store's crash-safe swap (``model/store.py``
+``commit``/``recover``). Equivalent to full recomputation (asserted by
+tests/test_incremental.py) but processes O(delta) instead of
+O(history) — the warehouse pattern behind streaming upsert sinks and
+nightly rollup maintenance.
 
 Mergeable stats only (sum/count/min/max — and avg derived at read time
 from sum/count). Non-mergeable stats (exact distinct, median) need a
@@ -15,12 +17,10 @@ sketch (HLL/KLL) carried in the summary instead.
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from hive_2_spark.model.store import commit, new_swap, recover
 
 
 class IncrementalAggregate:
@@ -46,9 +46,13 @@ class IncrementalAggregate:
         )
 
     def init(self, facts: DataFrame) -> None:
-        self._swap(self._agg(facts))
+        recover(self.path)
+        swap = new_swap(self.path)
+        self._agg(facts).write.parquet(swap)
+        commit(self.path, swap)
 
     def current(self) -> DataFrame:
+        recover(self.path)
         return self.spark.read.schema(self._schema).parquet(self.path)
 
     def fold(self, delta_facts: DataFrame) -> None:
@@ -66,22 +70,12 @@ class IncrementalAggregate:
                 F.max("max_v").alias("max_v"),
             )
         )
-        self._swap(merged)
+        swap = new_swap(self.path)
+        merged.write.parquet(swap)
+        commit(self.path, swap)
 
     def read(self) -> DataFrame:
         """Summary with derived avg (sum/count at read time)."""
         return self.current().withColumn(
             "avg_v", F.col("sum_v") / F.col("n")
         )
-
-    def _swap(self, df: DataFrame) -> None:
-        token = uuid.uuid4().hex[:8]
-        swap = f"{self.path}.swap-{token}"
-        df.write.mode("overwrite").parquet(swap)
-        if os.path.exists(self.path):
-            bak = f"{self.path}.bak-{token}"
-            os.rename(self.path, bak)
-            os.rename(swap, self.path)
-            shutil.rmtree(bak)
-        else:
-            os.rename(swap, self.path)

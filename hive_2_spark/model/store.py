@@ -1,16 +1,34 @@
 """Parquet-backed table store: the write path (SURVEY.md §2A ops 16-19).
 
 The reference ships one INSERT/UPDATE/DELETE statement per write
-(classes/hive/model.php:667-706, 775-811, 831-853; builders :1094-1255).
-Here every mutation is ONE Spark write action plus at most one probe
-(the ``limit`` key probe, or a partitioned store's partition probe).
-Parquet has no in-place mutation, so update/delete/upsert rewrite the
-table and swap it in atomically:
+(classes/hive/model.php:667-706, 775-811, 831-853; builders :1094-1255)
+and the RDBMS makes each one atomic. Here every mutation is ONE Spark
+write action plus at most one probe (the ``limit`` key probe, or a
+partitioned store's partition probe). Parquet has no in-place mutation,
+so update/delete/upsert write the new state beside the table and
+:func:`commit` swaps it in; this module's swap is the engine's only
+directory commit (``core/incremental.py`` uses it too):
 
-    write new state -> <path>.swap-<token>
-    rename <path>   -> <path>.bak-<token>
-    rename swap     -> <path>
+    write new state  -> <path>.swap-<token>
+    flat:        rename <path> -> <path>.bak-<token>
+                 rename swap   -> <path>                  (commit point)
+    partitioned: mkdir <path>.bak-<token>
+                 per partition dir d: rename <path>/d -> bak/d,
+                                      rename swap/d   -> <path>/d
+                 remove swap                              (commit point)
     remove bak
+
+Backups live only in the sibling ``.bak-<token>``, never inside the
+table, so a reader never sees one as a partition value. The commit
+point is the moment ``.swap-<token>`` disappears. :func:`recover` runs
+first at every entry point that reads or writes the table (``df``,
+``insert``, ``init_table``, the rewrites) and applies one rule:
+
+- ``.bak-<token>`` with its ``.swap-<token>``: an unfinished commit.
+  Every backed-up directory is put back, then both are removed.
+- ``.bak-<token>`` alone: a finished commit. It is removed.
+- ``.swap-<token>`` alone: a write that never reached the commit. It is
+  removed.
 
 update/delete flag each row with ``coalesce(cond, false)`` inside the
 rewrite and count the flags with ``DataFrame.observe`` in the same job;
@@ -18,8 +36,9 @@ when nothing matched the swap directory is removed, not swapped in.
 upsert is one full-outer join on the key, ``coalesce(source, target)``
 per column. Inserts append a new part; Auto ids are ``max(existing) +
 row number`` (model.php:685-700) — single-writer per table, as the
-reference assumes of its RDBMS session. Driver-side rows enter Spark as
-one Arrow table (a ``LocalTableScan``, no Python worker); Arrow keeps a
+reference assumes of its RDBMS session; recovery assumes the same of
+readers (one process per table). Driver-side rows enter Spark as one
+Arrow table (a ``LocalTableScan``, no Python worker); Arrow keeps a
 naive datetime as UTC wall-clock, as ``TimestampField.coerce`` does,
 where a Python-row frame shifted it by the process time zone.
 
@@ -42,6 +61,56 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from hive_2_spark.model.meta import ModelMeta
 
 _HIT = "__hit"  # per-row "condition matched" flag inside a rewrite
+
+
+def new_swap(path: str) -> str:
+    """A fresh swap directory name for a rewrite of ``path``."""
+    return f"{path}.swap-{uuid.uuid4().hex[:8]}"
+
+
+def commit(path: str, swap: str, dirs: list[str] | None = None) -> None:
+    """Swap ``swap`` in as ``path``; with ``dirs`` only those partition
+    directories of ``path`` are replaced and every other one stays
+    physically untouched. Crash-safe through :func:`recover`."""
+    bak = f"{path}.bak-{swap.rsplit('-', 1)[1]}"
+    if dirs is None:
+        if os.path.exists(path):
+            os.rename(path, bak)
+        os.rename(swap, path)
+    else:
+        os.mkdir(bak)
+        for d in dirs:
+            if os.path.exists(os.path.join(path, d)):
+                os.rename(os.path.join(path, d), os.path.join(bak, d))
+            if os.path.exists(os.path.join(swap, d)):
+                os.rename(os.path.join(swap, d), os.path.join(path, d))
+        shutil.rmtree(swap)
+    shutil.rmtree(bak, ignore_errors=True)
+
+
+def recover(path: str) -> None:
+    """Apply the recovery rule (module docstring) to the leftovers of
+    crashed commits of ``path``."""
+    parent, name = os.path.split(path)
+    try:
+        entries = os.listdir(parent or ".")
+    except FileNotFoundError:
+        return
+    tokens = {
+        e.rsplit("-", 1)[1] for e in entries
+        if e.startswith((f"{name}.bak-", f"{name}.swap-"))
+    }
+    for token in tokens:
+        bak, swap = f"{path}.bak-{token}", f"{path}.swap-{token}"
+        if os.path.exists(bak) and os.path.exists(swap):
+            if os.path.exists(path):  # partitioned: bak holds old partitions
+                for d in os.listdir(bak):
+                    shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+                    os.rename(os.path.join(bak, d), os.path.join(path, d))
+            else:  # flat: bak is the old table
+                os.rename(bak, path)
+        shutil.rmtree(swap, ignore_errors=True)
+        shutil.rmtree(bak, ignore_errors=True)
 
 
 class ParquetStore:
@@ -82,6 +151,7 @@ class ParquetStore:
         Explicit schema: robust to empty (partition-less) tables and
         skips footer-based inference.
         """
+        recover(self.path)
         raw = self.spark.read.schema(self._read_schema()).parquet(self.path)
         cols = [
             F.col(phys).alias(logical)
@@ -113,6 +183,7 @@ class ParquetStore:
         return self.spark.createDataFrame(pa.Table.from_pylist(rows, schema=schema))
 
     def init_table(self, rows: list[dict[str, Any]] | None = None) -> None:
+        recover(self.path)
         self._write(self._local_df(rows or []), self.path, "overwrite")
 
     def check_unique(self, rows: list[dict[str, Any]]) -> None:
@@ -150,6 +221,7 @@ class ParquetStore:
         (model.php:667-706; Auto skip in builder :1109)."""
         if not rows:
             return []
+        recover(self.path)
         if enforce_unique:
             self.check_unique(rows)
         auto = self.meta.auto_field
@@ -230,7 +302,9 @@ class ParquetStore:
                 *[F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")).alias(c) for c in self.meta.fields]
             )
         )
-        self._swap_in(self._write_swap(merged))
+        swap = new_swap(self.path)
+        self._write(merged, swap, "overwrite")
+        commit(self.path, swap)
         return len(rows)
 
     # ------------------------------------------------------------ internals
@@ -267,35 +341,14 @@ class ParquetStore:
         flagged = current.withColumn(_HIT, hit).observe(
             hits, F.count_if(F.col(_HIT)).alias("n")
         )
-        swap = self._write_swap(new_state(flagged))
+        swap = new_swap(self.path)
+        self._write(new_state(flagged), swap, "overwrite")
         n = hits.get["n"]
-        if n:
-            self._swap_in(swap, partitions)
-        else:
+        if not n:
             shutil.rmtree(swap)
+        elif partitions is None:
+            commit(self.path, swap)
+        else:
+            phys = self.meta.fields[part].column or part
+            commit(self.path, swap, [f"{phys}={v}" for v in partitions])
         return n
-
-    def _write_swap(self, df: DataFrame) -> str:
-        swap = f"{self.path}.swap-{uuid.uuid4().hex[:8]}"
-        self._write(df, swap, "overwrite")
-        return swap
-
-    def _swap_in(self, swap: str, partitions: list[Any] | None = None) -> None:
-        """Commit a swap directory. With ``partitions`` only those
-        partition directories are replaced; every other partition's
-        files stay physically untouched."""
-        token = swap.rsplit("-", 1)[1]
-        moves = [(swap, self.path)]
-        if partitions is not None:
-            phys = self.meta.fields[self.partition_by].column or self.partition_by
-            dirs = [f"{phys}={v}" for v in partitions]
-            moves = [(os.path.join(swap, d), os.path.join(self.path, d)) for d in dirs]
-        for src, dst in moves:
-            bak = f"{dst}.bak-{token}"
-            if os.path.exists(dst):
-                os.rename(dst, bak)
-            if os.path.exists(src):
-                os.rename(src, dst)
-            if os.path.exists(bak):
-                shutil.rmtree(bak)
-        shutil.rmtree(swap, ignore_errors=True)

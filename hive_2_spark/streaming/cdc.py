@@ -1,5 +1,5 @@
-"""Streaming upsert (merge) sink: foreachBatch CDC-apply to a keyed
-parquet target.
+"""Streaming upsert (merge) sink: foreachBatch CDC-apply to a keyed,
+versioned parquet target.
 
 Completes the streaming surface's sink story: windows/joins/stateful
 cover transformations, ``test_foreach_batch_parquet_sink`` covers the
@@ -10,17 +10,24 @@ is `save()` upsert semantics, `classes/hive/model.php:873-885`).
 
 The batch face (`stream_upsert_state`, oracle-checked) defines the
 target semantics: one row per user with the latest event by (ts,
-event_id). The streaming face applies each micro-batch with a
-read-merge-swap against the target directory — idempotent under batch
-replay (the merge recomputes per-key argmax, so re-applying a batch is
-a no-op), which together with checkpointing gives effective
-exactly-once. On a lakehouse runtime the same ``foreachBatch`` body
-becomes ``MERGE INTO`` (gated Delta/Iceberg support: ``core/io.py``).
+event_id). The streaming face (:func:`run_upsert_stream_versioned`)
+merges each micro-batch into the last published snapshot and publishes
+the result as a new version behind an atomic MANIFEST flip — idempotent
+under batch replay (the merge recomputes per-key argmax, so re-applying
+a batch is a no-op), which together with checkpointing gives effective
+exactly-once. The commit point is the rename of a tmp file over
+MANIFEST; the recovery rule, applied at the start of every batch, is
+that a version dir newer than MANIFEST was never published and is
+removed, so the retried batch merges against the last published
+snapshot. Readers never see a missing target and older snapshots stay
+readable for time travel. No directory is ever swapped, so this sink
+needs none of ``model/store.py``'s swap. On a lakehouse runtime the
+same ``foreachBatch`` body becomes ``MERGE INTO`` (gated Delta/Iceberg
+support: ``core/io.py``).
 
 Scale: per micro-batch cost is one key-shuffle over target ∪ batch.
-At 100 TB serving-table scale the full-union recompute is replaced by
-partition-scoped merge (`model/store.py::_swap_in` shows the
-partition-pruned swap) or a storage-layer MERGE; the micro-batch side
+At 100 TB serving-table scale the full-union recompute is replaced by a
+partition-scoped merge or a storage-layer MERGE; the micro-batch side
 is always small, so broadcast of the batch keys prunes the target scan.
 """
 
@@ -70,83 +77,9 @@ def latest_state_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _latest_per_user(load_table(spark, sf_dir, "events"))
 
 
-def _recover_target(target_dir: str) -> None:
-    """Adopt a leftover ``.bak`` when a prior swap crashed mid-rename.
-
-    The swap sequence (rename target->bak, rename swap->target, rmtree
-    bak) has one non-atomic window: a failure between the two renames
-    leaves no target but a complete ``.bak``. Without adoption, the
-    retried micro-batch would take the no-target branch and rebuild the
-    serving table from the batch alone — silently discarding all prior
-    keyed state. Single-writer assumption (one streaming query per
-    target), same as the swap itself."""
-    bak = f"{target_dir}.bak"
-    if not os.path.isdir(target_dir) and os.path.isdir(bak):
-        os.rename(bak, target_dir)
-
-
-def run_upsert_stream(
-    spark: SparkSession, sf_dir: str, target_dir: str, checkpoint_dir: str
-) -> None:
-    """Drive the events stream to completion (availableNow), merging
-    each micro-batch into ``target_dir`` as latest-state-per-key."""
-    from hive_2_spark.streaming.windows import _read_stream_events
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        _recover_target(target_dir)
-        batch_latest = _latest_per_user(batch_df)
-        if os.path.isdir(target_dir):
-            merged_src = sp.read.parquet(target_dir).select(
-                "user_id",
-                F.col("last_ts").alias("ts"),
-                F.col("last_type").alias("event_type"),
-                F.col("last_value").alias("value"),
-                F.col("last_event_id").alias("event_id"),
-            )
-            both = merged_src.unionByName(
-                batch_latest.select(
-                    "user_id",
-                    F.col("last_ts").alias("ts"),
-                    F.col("last_type").alias("event_type"),
-                    F.col("last_value").alias("value"),
-                    F.col("last_event_id").alias("event_id"),
-                )
-            )
-            merged = _latest_per_user(both)
-        else:
-            merged = batch_latest
-        # swap-dir rename: never overwrite the directory being read.
-        # Crash-safety: the only window where `target` is missing is
-        # between the two renames, and then `.bak` holds the full prior
-        # state — `_recover_target` (run at every batch start) adopts it,
-        # so a retried micro-batch merges against prior state instead of
-        # silently rebuilding the serving table from the batch alone.
-        swap = f"{target_dir}.swap-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(swap)
-        if os.path.isdir(target_dir):
-            bak = f"{target_dir}.bak"
-            if os.path.isdir(bak):  # crash after a completed prior swap
-                shutil.rmtree(bak)
-            os.rename(target_dir, bak)
-            os.rename(swap, target_dir)
-            shutil.rmtree(bak)
-        else:
-            os.rename(swap, target_dir)
-
-    q = (
-        _read_stream_events(spark, sf_dir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 # ------------------------------------------------------------------
-# Versioned-directory sink: removes the swap scheme's brief no-target
-# window entirely. Layout:
+# Versioned-directory sink: a target directory is never replaced, so
+# readers have no no-target window. Layout:
 #
 #   root/
 #     v000001/    complete parquet snapshot
@@ -253,13 +186,13 @@ def run_upsert_stream_versioned(
     spark: SparkSession, sf_dir: str, root: str, checkpoint_dir: str,
     keep_back: int = 1,
 ) -> None:
-    """Same merge semantics as :func:`run_upsert_stream`, published via
-    the versioned-manifest layout: a reader that resolves MANIFEST and
-    finishes its scan within ``keep_back`` publish generations never
-    hits ENOENT (size ``keep_back`` to the slowest expected reader),
-    and crash recovery needs no `.bak` adoption — an unflipped snapshot
-    is simply garbage-collected and the retried batch re-merges against
-    the last PUBLISHED version. Single-writer, like the swap sink."""
+    """Drive the events stream to completion (availableNow), merging
+    each micro-batch into the last published snapshot under ``root`` as
+    latest-state-per-key: a reader that resolves MANIFEST and finishes
+    its scan within ``keep_back`` publish generations never hits ENOENT
+    (size ``keep_back`` to the slowest expected reader), and an
+    unflipped snapshot is simply garbage-collected, so the retried batch
+    re-merges against the last PUBLISHED version. Single-writer."""
     from hive_2_spark.streaming.windows import _read_stream_events
 
     os.makedirs(root, exist_ok=True)
@@ -267,28 +200,17 @@ def run_upsert_stream_versioned(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
         _prune_versions(root, keep_back)  # drop unpublished crash orphans
-        batch_latest = _latest_per_user(batch_df)
+        events = batch_df.select("user_id", "ts", "event_type", "value", "event_id")
         cur = current_version_path(root)
-        if cur is not None:
-            merged_src = sp.read.parquet(cur).select(
+        if cur is not None:  # the argmax is associative: merge raw events
+            events = sp.read.parquet(cur).select(
                 "user_id",
                 F.col("last_ts").alias("ts"),
                 F.col("last_type").alias("event_type"),
                 F.col("last_value").alias("value"),
                 F.col("last_event_id").alias("event_id"),
-            )
-            both = merged_src.unionByName(
-                batch_latest.select(
-                    "user_id",
-                    F.col("last_ts").alias("ts"),
-                    F.col("last_type").alias("event_type"),
-                    F.col("last_value").alias("value"),
-                    F.col("last_event_id").alias("event_id"),
-                )
-            )
-            merged = _latest_per_user(both)
-        else:
-            merged = batch_latest
+            ).unionByName(events)
+        merged = _latest_per_user(events)
         nxt = _next_version_name(root)
         merged.write.mode("overwrite").parquet(os.path.join(root, nxt))
         _flip_manifest(root, nxt)

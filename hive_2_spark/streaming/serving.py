@@ -92,11 +92,11 @@ def stream_anomaly_monitor_builder(
     each micro-batch is flagged through a stream-static broadcast join
     and rolled up in complete mode. Same scale shape as the cluster
     monitor: per-batch cost is a map pass + a |types|-row aggregate."""
-    from hive_2_spark.catalog import table_path
+    from hive_2_spark.catalog import load_table
     from hive_2_spark.core.timeseries import _MAD_CUT, _MAD_K
     from hive_2_spark.streaming.windows import _read_stream_events
 
-    e_static = spark.read.parquet(table_path(sf_dir, "events"))
+    e_static = load_table(spark, sf_dir, "events")
     med = e_static.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("med")
     )

@@ -23,8 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from hive_2_spark.catalog import load_table, table_path
+from hive_2_spark.catalog import _normalize_ts, load_table
 from hive_2_spark.core.events import sessionized
+from hive_2_spark.streaming._source import read_stream_table
 
 GAP_SECONDS = 30 * 60  # session gap: 30 minutes (streaming session_window)
 
@@ -131,16 +132,9 @@ def _read_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     so it is exposed through a symlinked temp dir (no testdata mutation).
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(table_path(sf_dir, "events"))
-    from hive_2_spark.streaming._source import read_stream_table
-
     stream = read_stream_table(spark, sf_dir, "events", "events")
     # same ts normalization as the batch path (nanos-long vs naive-micros)
-    from hive_2_spark.catalog import _normalize_ts
-
-    return stream.withColumn(
-        "ts", _normalize_ts(static.schema["ts"].dataType, F)
-    )
+    return stream.withColumn("ts", _normalize_ts(stream.schema["ts"].dataType, F))
 
 
 def stream_tumbling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:

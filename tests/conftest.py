@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -25,3 +26,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def crash_after_renames(monkeypatch, n):
+    """Make every ``os.rename`` after the first ``n`` raise, as a crash
+    of the process at that point would leave the directories."""
+    real, done = os.rename, []
+
+    def rename(src, dst):
+        if len(done) == n:
+            raise OSError("simulated crash")
+        done.append(src)
+        real(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)

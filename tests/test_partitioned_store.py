@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from hive_2_spark.model import AutoField, FloatField, ModelMeta, StringField, register_model
 from hive_2_spark.model.meta import clear_registry
 from hive_2_spark.model.store import ParquetStore
+from tests.conftest import crash_after_renames
 
 
 def _files(root: str, sub: str) -> dict[str, float]:
@@ -85,3 +86,29 @@ def test_partition_column_update_falls_back_to_full_rewrite(pstore):
     rows = {r["id"]: r["status"] for r in pstore.df().collect()}
     assert rows == {1: "open", 2: "open", 3: "archived", 4: "archived"}
     assert os.path.isdir(os.path.join(pstore.path, "status=archived"))
+
+
+def _state(st):
+    return sorted((r["id"], r["status"], r["amount"]) for r in st.df().collect())
+
+
+def test_crash_between_renames_never_reads_backup_partition(pstore, monkeypatch):
+    before = _state(pstore)
+    crash_after_renames(monkeypatch, 1)
+    with pytest.raises(OSError, match="simulated crash"):
+        pstore.update(F.col("status") == "closed", {"amount": 99.0})
+    monkeypatch.undo()
+    assert _state(pstore) == before
+    assert {r["status"] for r in pstore.df().collect()} == {"open", "closed"}
+    assert not [d for d in os.listdir(pstore.path) if ".bak-" in d]
+
+
+def test_crash_after_first_partition_keeps_every_partition_old(pstore, monkeypatch):
+    before = _state(pstore)
+    crash_after_renames(monkeypatch, 2)  # one partition backed up and moved in
+    with pytest.raises(OSError, match="simulated crash"):
+        pstore.update(F.col("amount") >= 2.0, {"amount": 99.0})
+    monkeypatch.undo()
+    assert _state(pstore) == before
+    assert pstore.update(F.col("amount") >= 2.0, {"amount": 99.0}) == 3
+    assert [a for _, _, a in _state(pstore)] == [1.0, 99.0, 99.0, 99.0]

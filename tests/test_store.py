@@ -1,11 +1,14 @@
 """ParquetStore merge-rewrite machinery: insert/update/delete/upsert with
-atomic swap, plus relation join shapes over registered models."""
+the crash-safe directory swap, plus relation join shapes over registered
+models."""
 
 from __future__ import annotations
 
 import datetime as _dt
 import os
+import shutil
 import uuid
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,7 +17,8 @@ from hive_2_spark.model import IntegerField, Model, ModelMeta, StringField, regi
 from hive_2_spark.model.fields import AutoField, BooleanField, FloatField, TimestampField
 from hive_2_spark.model.meta import clear_registry
 from hive_2_spark.model.relation import BelongsTo, HasMany, ManyToMany
-from hive_2_spark.model.store import ParquetStore
+from hive_2_spark.model.store import ParquetStore, commit, new_swap, recover
+from tests.conftest import crash_after_renames
 
 
 @pytest.fixture()
@@ -114,14 +118,86 @@ def test_upsert_updates_and_inserts(stores):
     assert rows == {1: "ada-2", 2: "bob", 99: "zed"}
 
 
+def _debris(tmp_path):
+    return [p for p in os.listdir(tmp_path) if ".swap-" in p or ".bak-" in p]
+
+
 def test_atomic_swap_leaves_no_debris(stores, tmp_path):
     stores["post"].update(F.col("author_id") == 2, {"score": 0.0})
-    debris = [
-        p
-        for p in os.listdir(tmp_path)
-        if ".swap-" in p or ".bak-" in p
-    ]
-    assert debris == []
+    assert _debris(tmp_path) == []
+
+
+def test_flat_store_crash_between_renames_keeps_old_rows(stores, tmp_path, monkeypatch):
+    st = stores["post"]
+    before = sorted(tuple(r) for r in st.df().collect())
+    crash_after_renames(monkeypatch, 1)
+    with pytest.raises(OSError, match="simulated crash"):
+        st.update(F.col("author_id") == 1, {"score": 9.5})
+    monkeypatch.undo()
+    assert not os.path.exists(st.path)  # the table sits in its backup
+    assert sorted(tuple(r) for r in st.df().collect()) == before
+    assert st.insert([{"author_id": 3, "title": "t4", "score": 4.0}]) == [4]
+    assert sorted(r["title"] for r in st.df().collect()) == ["t1", "t2", "t3", "t4"]
+    assert _debris(tmp_path) == []
+
+
+def test_commit_recovers_from_mid_swap_crash(spark, tmp_path):
+    """A crash between the swap's two renames leaves no table, a complete
+    ``.bak-`` and its ``.swap-``. ``recover`` puts the backup back, so the
+    next rewrite merges against the prior state instead of losing it."""
+    path = str(tmp_path / "state")
+    spark.createDataFrame([(100,)], "user_id long").write.parquet(path)
+    os.rename(path, f"{path}.bak-deadbeef")
+    spark.createDataFrame([(999,)], "user_id long").write.parquet(f"{path}.swap-deadbeef")
+    recover(path)
+    assert {r[0] for r in spark.read.parquet(path).collect()} == {100}
+    swap = new_swap(path)
+    batch = spark.createDataFrame([(200,)], "user_id long")
+    spark.read.parquet(path).unionByName(batch).write.parquet(swap)
+    commit(path, swap)
+    assert {r[0] for r in spark.read.parquet(path).collect()} == {100, 200}
+    assert _debris(tmp_path) == []
+
+
+def test_finished_commit_backup_is_removed(stores, tmp_path):
+    """A backup without its swap belongs to a commit that finished: the
+    table keeps the new state and the backup is removed."""
+    st = stores["post"]
+    old = str(tmp_path / "post_old")
+    shutil.copytree(st.path, old)
+    st.update(F.col("author_id") == 1, {"score": 9.5})
+    os.rename(old, f"{st.path}.bak-deadbeef")
+    rows = {r["title"]: r["score"] for r in st.df().collect()}
+    assert rows == {"t1": 9.5, "t2": 9.5, "t3": 3.0}
+    assert _debris(tmp_path) == []
+
+
+def test_incremental_fold_after_crash(spark, tmp_path, monkeypatch):
+    from hive_2_spark.core.incremental import IncrementalAggregate
+
+    agg = IncrementalAggregate(spark, str(tmp_path / "summary"), "k", "v")
+    agg.init(spark.createDataFrame([(1, 1.0), (2, 2.0)], "k long, v double"))
+    delta = spark.createDataFrame([(1, 3.0), (3, 5.0)], "k long, v double")
+    crash_after_renames(monkeypatch, 1)
+    with pytest.raises(OSError, match="simulated crash"):
+        agg.fold(delta)
+    monkeypatch.undo()
+    agg.fold(delta)
+    got = {r["k"]: (r["sum_v"], r["n"]) for r in agg.current().collect()}
+    assert got == {1: (4.0, 2), 2: (2.0, 1), 3: (5.0, 1)}
+    assert _debris(tmp_path) == []
+
+
+def test_directory_swap_lives_only_in_store():
+    """The store's swap is the engine's only directory commit: no other
+    module names its swap or backup directories."""
+    pkg = Path(__file__).resolve().parent.parent / "hive_2_spark"
+    users = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if any(tag in p.read_text() for tag in (".swap-", ".bak-"))
+    )
+    assert users == [os.path.join("model", "store.py")]
 
 
 def test_clean_update_short_circuits(stores):
@@ -198,7 +274,7 @@ def test_no_match_keeps_part_files(stores, tmp_path):
     assert st.update(F.col("author_id") == 42, {"score": 0.0}) == 0
     assert st.delete(F.col("title").isNull()) == 0
     assert sorted(os.listdir(st.path)) == before
-    assert [p for p in os.listdir(tmp_path) if ".swap-" in p or ".bak-" in p] == []
+    assert _debris(tmp_path) == []
 
 
 def _typed_meta(tmp_path, name):

@@ -256,74 +256,6 @@ def test_foreach_batch_parquet_sink(spark, tmp_path):
     assert spark.read.parquet(out).count() == before
 
 
-def test_stream_upsert_sink_matches_batch_state(spark, tmp_path):
-    """foreachBatch CDC-apply: after draining the stream, the keyed
-    target must equal the batch latest-state face exactly; re-running
-    against the same checkpoint must not change it (idempotent merge)."""
-    from hive_2_spark.streaming import cdc as scdc
-
-    target, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
-    scdc.run_upsert_stream(spark, SF_DIR, target, ckpt)
-    got = sorted(tuple(r) for r in spark.read.parquet(target).collect())
-    want = sorted(
-        tuple(r) for r in scdc.latest_state_batch(spark, SF_DIR).collect()
-    )
-    assert len(got) > 0
-    assert got == want
-    scdc.run_upsert_stream(spark, SF_DIR, target, ckpt)
-    assert sorted(tuple(r) for r in spark.read.parquet(target).collect()) == want
-
-
-def test_stream_upsert_recovers_from_mid_swap_crash(spark, tmp_path):
-    """A crash between the swap's two renames leaves no target dir and a
-    complete .bak. The next micro-batch must ADOPT the .bak and merge
-    against it — not rebuild the serving table from the batch alone,
-    which would silently discard all prior keyed state."""
-    import datetime
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from hive_2_spark.streaming import cdc as scdc
-
-    def write_events(d, rows):
-        os.makedirs(d)
-        pq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                    "user_id": pa.array([r[2] for r in rows], pa.int64()),
-                    "event_type": [r[3] for r in rows],
-                    "value": pa.array([r[4] for r in rows]),
-                    "props": ["{}"] * len(rows),
-                }
-            ),
-            os.path.join(d, "events.parquet"),
-        )
-        return d
-
-    t0 = datetime.datetime(2024, 3, 1, 12, 0, 0)
-    dir_a = write_events(
-        str(tmp_path / "crashrec_a"), [(1, t0, 100, "view", 1.0)]
-    )
-    dir_b = write_events(
-        str(tmp_path / "crashrec_b"),
-        [(2, t0 + datetime.timedelta(minutes=1), 200, "click", 2.0)],
-    )
-    target = str(tmp_path / "state")
-    scdc.run_upsert_stream(spark, dir_a, target, str(tmp_path / "ckpt_a"))
-    assert {r["user_id"] for r in spark.read.parquet(target).collect()} == {100}
-    # simulate the crash window: target renamed away, swap never landed
-    os.rename(target, f"{target}.bak")
-    # next run sees ONLY dir_b's events — without .bak adoption user 100
-    # would vanish from the serving table
-    scdc.run_upsert_stream(spark, dir_b, target, str(tmp_path / "ckpt_b"))
-    got = {r["user_id"] for r in spark.read.parquet(target).collect()}
-    assert got == {100, 200}
-    assert not os.path.isdir(f"{target}.bak")
-
-
 def test_stream_static_join(spark):
     from hive_2_spark.streaming import joins as sj
 
