@@ -15,6 +15,21 @@ pages, kafka ranges, object-store listings) returns one partition per
 independently fetchable unit and the cluster fans out. The row path IS
 Python (that is the point of the API); everything after the scan is
 JVM codegen, and the aggregation here reduces each partition map-side.
+
+The JSONL sink (`hive2_jsonl_sink`) keeps a version log, one
+`_MANIFEST-V<v>` entry per batch commit:
+
+- one claim: :func:`_publish_cas` publishes every entry by ``os.link``,
+  so a taken version is never replaced (an unset version claims the
+  next one, an explicit one raises when taken);
+- one replay: :func:`_replay` is the only reader. The newest checkpoint
+  replaces every entry below it, and a read that needs a replaced
+  entry raises. Snapshots, change sets, the tail stream, compaction's
+  expiry and GC, and the claim's next-version scan all go through it;
+- two writes replace by tmp + rename on purpose (:func:`_publish`): the
+  stream writer's per-epoch `_MANIFEST-<batchId>`, because a replayed
+  epoch must replace its earlier attempt, and the compaction
+  checkpoint, which replaces the entry it compacts through.
 """
 
 from __future__ import annotations
@@ -272,10 +287,16 @@ def _register_sink(spark: SparkSession) -> None:
     two-phase commit. Each task streams its partition to a staging
     `*.jsonl.tmp` file and returns a WriterCommitMessage (path, rows);
     the DRIVER's `commit` publishes the staged files with one atomic
-    rename each and writes a `_MANIFEST` naming exactly the committed
-    files; `abort` deletes the orphans. Readers trust ONLY the
-    manifest, so a killed job is invisible (same discipline as Spark's
-    own file-sink `_spark_metadata`).
+    rename each, then one manifest naming exactly the committed files;
+    `abort` deletes the orphans. Readers trust ONLY the manifests, so a
+    killed job is invisible (same discipline as Spark's own file-sink
+    `_spark_metadata`).
+
+    A batch commit appends one entry `_MANIFEST-V<v>` to the target's
+    version log, always through the one claim (:func:`_publish_cas`),
+    and every reader replays the log through :func:`_replay`. The sink
+    is append-only: ``mode("overwrite")`` raises, and
+    :func:`compact_and_expire` is the way to replace history.
 
     Scale notes: staging + target must be SHARED storage on a real
     cluster (object store / DFS — here /tmp on local[32]); the commit
@@ -302,10 +323,12 @@ import json as _json  # noqa: E402
 import os as _os  # noqa: E402
 import uuid as _uuid  # noqa: E402
 from dataclasses import dataclass as _dataclass  # noqa: E402
+from functools import reduce as _reduce  # noqa: E402
 
 from pyspark.sql.datasource import (  # noqa: E402
     DataSourceStreamWriter as _DSStreamWriter,
     DataSourceWriter as _DSWriter,
+    SimpleDataSourceStreamReader as _SimpleStreamReader,
     WriterCommitMessage as _WriterCommitMessage,
 )
 
@@ -353,10 +376,13 @@ def _rename_staged(target: str, messages) -> tuple[list[str], int]:
 
 
 def _publish(target: str, messages, manifest_name: str, extra: dict) -> None:
-    """Driver-side half: one atomic rename per staged file, then the
-    manifest itself staged + renamed — a crash anywhere leaves either
-    the previous manifest or the new one, never a truncated in-between
-    (round-11 ADVICE closed the batch path, which wrote it directly)."""
+    """Publish by tmp + rename, which REPLACES a manifest of the same
+    name. Only two writes want that: the stream writer's per-epoch
+    `_MANIFEST-<batchId>` (a replayed epoch replaces its earlier
+    attempt) and the compaction checkpoint (it replaces the log entry
+    it compacts through). Staged files are renamed first; a crash
+    anywhere leaves the old manifest or the new one, never a truncated
+    in-between."""
     files, total = _rename_staged(target, messages)
     manifest = {"files": sorted(files), "rows": total, **extra}
     mpath = _os.path.join(target, manifest_name)
@@ -365,35 +391,49 @@ def _publish(target: str, messages, manifest_name: str, extra: dict) -> None:
     _os.rename(mpath + ".tmp", mpath)
 
 
-def _publish_cas(target: str, messages) -> int:
-    """Multi-writer commit (round-11 verdict item 3): claim the NEXT
-    log version by compare-and-swap on the manifest NAME. The manifest
-    body is fully written to a private tmp first, then ``os.link``
-    tries to bind it to `_MANIFEST-V<v>` — link fails with EEXIST if
-    any other writer claimed v between our scan and our claim, in
-    which case we rescan and retry with the new max+1. Readers only
-    ever see a manifest name once its bytes are complete (link makes
-    the full file appear atomically — the same guarantee the
-    rename-based single-writer path gives), and two writers can never
-    both win the same version. This is the Delta/Iceberg commit-log
-    CAS expressed over a filesystem with atomic link semantics; an
-    object store implements the same contract with put-if-absent."""
+def _publish_cas(
+    target: str, messages, version: int | None = None, checkpoint: bool = False
+) -> int:
+    """The one claim on the version log: publish the staged files as
+    entry `_MANIFEST-V<v>` and return v. The entry body is written to a
+    private tmp first, then ``os.link`` binds it to its name: the full
+    file appears atomically, and link fails with EEXIST when the name
+    is taken, so a published entry is never replaced.
+
+    - ``version`` None claims the next version, max + 1 of the replayed
+      log. A writer that loses the race for v rescans and retries.
+    - ``version`` N claims exactly N and raises FileExistsError when N
+      is taken. The staged files are renamed but no entry names them,
+      so no reader sees them (compaction GCs them).
+
+    ``checkpoint`` is compaction's entry and the one exception: it
+    REPLACES `V<version>` through :func:`_publish`, and :func:`_replay`
+    then drops every entry below it. This is the Delta/Iceberg
+    commit-log CAS over a filesystem with atomic link; an object store
+    implements the same contract with put-if-absent."""
+    if checkpoint:
+        _publish(
+            target, messages, f"_MANIFEST-V{version}",
+            {"version": version, "checkpoint": True},
+        )
+        return version
     files, total = _rename_staged(target, messages)
     tmp = _os.path.join(target, f"caschk-{_uuid.uuid4().hex}.tmp")
     try:
         while True:
-            existing = [
-                int(n[len("_MANIFEST-V"):])
-                for n in _os.listdir(target)
-                if n.startswith("_MANIFEST-V") and not n.endswith(".tmp")
-            ]
-            v = max(existing, default=-1) + 1
+            v = version
+            if v is None:
+                v = max((e for e, _ in _replay(target)[0]), default=-1) + 1
             manifest = {"files": sorted(files), "rows": total, "version": v}
             with open(tmp, "w") as f:
                 _json.dump(manifest, f)
             try:
                 _os.link(tmp, _os.path.join(target, f"_MANIFEST-V{v}"))
             except FileExistsError:
+                if version is not None:
+                    raise FileExistsError(
+                        f"version {v} is already committed in {target}"
+                    ) from None
                 continue  # lost the race for v — rescan, claim max+1
             return v
     finally:
@@ -401,6 +441,56 @@ def _publish_cas(target: str, messages) -> int:
             _os.remove(tmp)
         except OSError:
             pass
+
+
+def _replay(
+    target: str, as_of: int | None = None, since: int | None = None
+) -> tuple[list[tuple[int, list[str]]], list[str]]:
+    """The one reader of the version log. Returns the entries in
+    (since, as_of] (None = unbounded) as ``(version, absolute file
+    paths)`` in version order, and the paths of the manifests the
+    newest checkpoint replaced.
+
+    The checkpoint rule: a checkpoint entry (``"checkpoint": true``,
+    written by :func:`compact_and_expire`) REPLACES every entry below
+    it (the Delta `_last_checkpoint` discipline), so those entries are
+    never served, even while their deletion lags the checkpoint
+    commit. A request that needs one raises ValueError: ``as_of`` below
+    the checkpoint is an expired version, and ``since`` below it would
+    report the compaction's rewrites as changes."""
+    try:
+        names = _os.listdir(target)
+    except FileNotFoundError:
+        return [], []  # nothing committed yet
+    log: dict[int, dict] = {}
+    for name in names:
+        if not name.startswith("_MANIFEST-V") or name.endswith(".tmp"):
+            continue
+        try:
+            with open(_os.path.join(target, name)) as f:
+                log[int(name[len("_MANIFEST-V"):])] = _json.load(f)
+        except FileNotFoundError:
+            continue  # expired between the listing and the read
+    base = max((v for v, body in log.items() if body.get("checkpoint")), default=-1)
+    if as_of is not None and as_of < base:
+        raise ValueError(
+            f"version {as_of} expired: log compacted through version {base}"
+        )
+    if since is not None and since < base:
+        raise ValueError(
+            f"changes since version {since} unavailable: log compacted "
+            f"through version {base} (the compaction rewrote those files "
+            "— a diff across it would report rewrites as changes)"
+        )
+    entries = [
+        (v, [_os.path.join(target, b) for b in log[v]["files"]])
+        for v in sorted(log)
+        if v >= base
+        and (as_of is None or v <= as_of)
+        and (since is None or v > since)
+    ]
+    replaced = [_os.path.join(target, f"_MANIFEST-V{v}") for v in log if v < base]
+    return entries, replaced
 
 
 def _clean_staged(messages) -> None:
@@ -414,34 +504,30 @@ def _clean_staged(messages) -> None:
 
 
 class JsonlWriter(_DSWriter):
-    """Batch sink. With the ``version`` option set, the commit publishes
-    `_MANIFEST-V<version>` instead of `_MANIFEST` — an append-style
-    VERSION LOG (each manifest lists only its own commit's files, like
-    the stream writer's per-epoch manifests), which is what snapshot
-    reads and time travel consume (:func:`versioned_manifest_files`).
-    ``version`` may be a caller-assigned integer (single writer) or
-    ``"auto"``: the commit then CASes the next log entry — see
-    :func:`_publish_cas` — so concurrent writers each land a distinct
-    version (the Delta/Iceberg commit-log discipline)."""
+    """Batch sink: each commit claims one version-log entry through
+    :func:`_publish_cas`. Without the ``version`` option it claims the
+    next version, so concurrent writers each land a distinct one (the
+    Delta/Iceberg commit-log discipline); ``version`` N claims exactly
+    N and the commit raises FileExistsError when N is taken. Each entry
+    lists only its own commit's files, which is what snapshot reads and
+    time travel consume (:func:`versioned_manifest_files`). Overwrite
+    is rejected: the log only appends."""
 
     def __init__(self, options, overwrite):
+        if overwrite:
+            raise ValueError(
+                f"{_SINK_FORMAT} is append-only: mode('overwrite') is not "
+                "supported (compact_and_expire replaces history)"
+            )
         self.target = options["path"]
-        self.version = options.get("version")
-        self.overwrite = overwrite
+        version = options.get("version")
+        self.version = None if version is None else int(version)
 
     def write(self, iterator):
         return _stage_partition(self.target, iterator)
 
     def commit(self, messages):
-        if self.version is None:
-            _publish(self.target, messages, "_MANIFEST", {})
-        elif self.version == "auto":
-            _publish_cas(self.target, messages)
-        else:
-            v = int(self.version)
-            _publish(
-                self.target, messages, f"_MANIFEST-V{v}", {"version": v}
-            )
+        _publish_cas(self.target, messages, self.version)
 
     def abort(self, messages):
         _clean_staged(messages)
@@ -474,31 +560,14 @@ class JsonlStreamWriter(_DSStreamWriter):
 
 def stream_sink_manifest_files(target: str) -> list[str]:
     """Absolute paths of files committed by ANY epoch's manifest."""
-    import json as _json
-    import os
-
     files: list[str] = []
-    for name in sorted(os.listdir(target)):
+    for name in sorted(_os.listdir(target)):
         if name.startswith("_MANIFEST-") and not name.endswith(".tmp"):
-            with open(os.path.join(target, name)) as f:
+            with open(_os.path.join(target, name)) as f:
                 files.extend(
-                    os.path.join(target, b) for b in _json.load(f)["files"]
+                    _os.path.join(target, b) for b in _json.load(f)["files"]
                 )
     return files
-
-
-def _read_version_log(target: str) -> dict[int, dict]:
-    """version -> manifest body for every committed `_MANIFEST-V<v>`."""
-    import json as _json
-    import os
-
-    log: dict[int, dict] = {}
-    for name in os.listdir(target):
-        if not name.startswith("_MANIFEST-V") or name.endswith(".tmp"):
-            continue
-        with open(os.path.join(target, name)) as f:
-            log[int(name[len("_MANIFEST-V"):])] = _json.load(f)
-    return log
 
 
 def versioned_manifest_files(
@@ -506,69 +575,34 @@ def versioned_manifest_files(
 ) -> list[str]:
     """Absolute paths of the files visible in the snapshot AS OF
     version ``as_of`` (inclusive; None = latest): the union of every
-    `_MANIFEST-V<v>` with v <= as_of. With ``since`` set, only
-    manifests with v > since are read — the CHANGES BETWEEN face
-    (snapshot diff = the files committed in (since, as_of]), which is
-    metadata-only because each log entry names exactly its own
-    commit's files. Snapshot isolation falls out of the log structure
-    — files staged by uncommitted or later writes are simply not named
-    by any manifest in range.
-
-    After :func:`compact_and_expire` the log contains a CHECKPOINT
-    manifest (``"checkpoint": true``) whose file list REPLACES every
-    version below it (the Delta `_last_checkpoint` discipline). A
-    snapshot at or above the latest checkpoint reads checkpoint files
-    + later manifests; a request BELOW it raises — the version is
-    expired, and raising is load-bearing for crash safety: old
-    manifests may linger between the checkpoint commit and their
-    deletion, and serving (or unioning) them would double-count the
-    compacted rows."""
-    import os
-
-    log = _read_version_log(target)
-    ckpts = [v for v, body in log.items() if body.get("checkpoint")]
-    base = max(ckpts, default=None)
-    if base is not None:
-        if as_of is not None and as_of < base:
-            raise ValueError(
-                f"version {as_of} expired: log compacted through "
-                f"version {base}"
-            )
-        if since is not None and since < base:
-            raise ValueError(
-                f"changes since version {since} unavailable: log "
-                f"compacted through version {base} (the compaction "
-                "rewrote those files — a diff across it would report "
-                "rewrites as changes)"
-            )
-    files: list[str] = []
-    for v in sorted(log):
-        if as_of is not None and v > as_of:
-            continue
-        if since is not None and v <= since:
-            continue
-        if base is not None and v < base:
-            continue  # replaced by the checkpoint (expiry may lag)
-        files.extend(os.path.join(target, b) for b in log[v]["files"])
-    return files
+    log entry with v <= as_of. With ``since`` set, only entries with
+    v > since are read — the CHANGES BETWEEN face (snapshot diff = the
+    files committed in (since, as_of]), which is metadata-only because
+    each log entry names exactly its own commit's files. Snapshot
+    isolation falls out of the log structure — files staged by
+    uncommitted or later writes are simply not named by any entry in
+    range. Entries replaced by a checkpoint are never read, and a
+    request below the checkpoint raises (:func:`_replay`)."""
+    entries, _ = _replay(target, as_of, since)
+    return [p for _, files in entries for p in files]
 
 
 def compact_and_expire(target: str, upto: int) -> dict:
     """OPTIMIZE + VACUUM for the versioned sink log (verdict-r13
     frontier #2): merge every data file visible at version ``upto``
-    into ONE sorted file committed as a CHECKPOINT manifest at
-    ``upto``, expire the manifests below it, and GC data files no
-    surviving manifest references.
+    into ONE sorted file committed as a CHECKPOINT entry at ``upto``,
+    expire the entries below it, and GC data files no surviving entry
+    references.
 
     Crash-safe ordering — each step leaves a readable log:
     (1) the compacted data file is fully written then atomically
-    renamed into place; (2) `_MANIFEST-V<upto>` is atomically REPLACED
-    by the checkpoint body (readers below the checkpoint raise from
-    this instant, so lingering older manifests can never double-count);
-    (3) manifests < upto are deleted; (4) committed ``*.jsonl`` files
-    referenced by no surviving manifest are removed (staged ``*.tmp``
-    files are left for their writers). A crash after (2) just leaves
-    garbage that a re-run of (3)/(4) collects.
+    renamed into place; (2) log entry ``upto`` is atomically REPLACED
+    by the checkpoint (readers below the checkpoint raise from this
+    instant, so lingering older entries can never double-count);
+    (3) the entries the checkpoint replaced are deleted; (4) committed
+    ``*.jsonl`` files referenced by no surviving entry are removed
+    (staged ``*.tmp`` files are left for their writers). A crash after
+    (2) just leaves garbage that a re-run of (3)/(4) collects.
 
     At 100 TB the compacted file would be rewritten partitioned (one
     file per shuffle partition of the merged scan); the LOG discipline
@@ -577,49 +611,33 @@ def compact_and_expire(target: str, upto: int) -> dict:
 
     Returns {"version", "files_in", "files_gc", "manifests_expired",
     "rows"} for the caller's audit trail."""
-    import json as _json
-    import os
-
     in_files = versioned_manifest_files(target, as_of=upto)
     lines: list[str] = []
     for p in sorted(in_files):
         with open(p) as f:
             lines.extend(ln for ln in f.read().splitlines() if ln)
     lines.sort()  # deterministic layout independent of commit order
-    cname = f"compact-v{upto}-{_uuid.uuid4().hex}.jsonl"
-    cpath = _os.path.join(target, cname)
-    with open(cpath + ".tmp", "w") as f:
+    staged = _os.path.join(
+        target, f"compact-v{upto}-{_uuid.uuid4().hex}.jsonl.tmp"
+    )
+    with open(staged, "w") as f:
         f.write("".join(ln + "\n" for ln in lines))
-    _os.rename(cpath + ".tmp", cpath)
+    _publish_cas(target, [_Staged(staged, len(lines))], upto, checkpoint=True)
 
-    body = {
-        "files": [cname], "rows": len(lines), "version": upto,
-        "checkpoint": True,
-    }
-    mpath = _os.path.join(target, f"_MANIFEST-V{upto}")
-    with open(mpath + ".tmp", "w") as f:
-        _json.dump(body, f)
-    _os.rename(mpath + ".tmp", mpath)  # atomic replace: checkpoint live
-
-    expired = 0
-    for name in os.listdir(target):
-        if not name.startswith("_MANIFEST-V") or name.endswith(".tmp"):
-            continue
-        if int(name[len("_MANIFEST-V"):]) < upto:
-            _os.remove(_os.path.join(target, name))
-            expired += 1
-
+    _, replaced = _replay(target)
+    for p in replaced:
+        _os.remove(p)
     referenced = {
         _os.path.basename(p) for p in versioned_manifest_files(target)
     }
     gc = 0
-    for name in os.listdir(target):
+    for name in _os.listdir(target):
         if name.endswith(".jsonl") and name not in referenced:
             _os.remove(_os.path.join(target, name))
             gc += 1
     return {
         "version": upto, "files_in": len(in_files), "files_gc": gc,
-        "manifests_expired": expired, "rows": len(lines),
+        "manifests_expired": len(replaced), "rows": len(lines),
     }
 
 
@@ -648,21 +666,11 @@ def _fresh_run_dir(spark: SparkSession, base_name: str) -> str:
     return run
 
 
-def sink_manifest_files(target: str) -> list[str]:
-    """Absolute paths of the files the sink's manifest committed."""
-    import json as _json
-    import os
-
-    with open(os.path.join(target, "_MANIFEST")) as f:
-        manifest = _json.load(f)
-    return [os.path.join(target, name) for name in manifest["files"]]
-
-
 def roundtrip_python_datasource(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Query key: push documents through the custom Python WRITER
-    (two-phase commit), read back ONLY the manifest-committed JSONL,
+    (two-phase commit), read back ONLY the log-committed JSONL,
     and aggregate — proves write/commit/read end-to-end. The oracle is
     the same aggregate straight off the source table: equality holds
     iff the sink wrote exactly the input, no dupes, no losses."""
@@ -677,13 +685,43 @@ def roundtrip_python_datasource(
         "append"
     ).save()
     back = spark.read.schema("doc_id bigint, lang string, n_chars int").json(
-        sink_manifest_files(target)
+        versioned_manifest_files(target)
     )
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("doc_id").cast("bigint").alias("sum_ids"),
         F.sum("n_chars").cast("bigint").alias("sum_chars"),
     )
+
+
+def _snapshot_aggs(
+    spark: SparkSession, snaps: list[tuple[dict[str, int], list[str]]]
+) -> DataFrame:
+    """(labels..., n_docs, sum_ids, sum_chars): one row per ``(labels,
+    files)`` pair of ``snaps``, unioned in order — the aggregate every
+    versioned-sink key reports over a set of committed files (no files
+    gives the zero row)."""
+    schema = "doc_id bigint, lang string, n_chars bigint"
+    rows = []
+    for labels, files in snaps:
+        back = (
+            spark.read.schema(schema).json(files)
+            if files
+            else spark.createDataFrame([], schema)
+        )
+        rows.append(
+            back.agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                F.coalesce(F.sum("doc_id"), F.lit(0)).cast("bigint")
+                .alias("sum_ids"),
+                F.coalesce(F.sum("n_chars"), F.lit(0)).cast("bigint")
+                .alias("sum_chars"),
+            ).select(
+                *[F.lit(v).cast("bigint").alias(k) for k, v in labels.items()],
+                "*",
+            )
+        )
+    return _reduce(DataFrame.unionByName, rows)
 
 
 _TT_VERSIONS = 3  # committed log versions in the time-travel key
@@ -693,11 +731,11 @@ def _commit_versions(d, target: str, n_versions: int) -> None:
     """Commit ``n_versions`` deterministic document slices as explicit
     log versions, submitting the independent write jobs from a small
     thread pool (guide §2.6: overlap independent jobs). Safe because
-    explicit versions publish disjoint ``_MANIFEST-V{v}`` files and
-    every task stages to its own uuid file; determinism is untouched —
-    WHICH rows land in which version is fixed by the modulo slice, not
-    by completion order (unlike the ``version="auto"`` CAS face, which
-    stays sequential)."""
+    explicit versions claim disjoint log entries and every task stages
+    to its own uuid file; determinism is untouched — WHICH rows land in
+    which version is fixed by the modulo slice, not by completion order
+    (unlike commits without a version, which claim the next one and
+    stay sequential)."""
     from concurrent.futures import ThreadPoolExecutor
 
     spark = d.sparkSession
@@ -730,7 +768,7 @@ def read_python_datasource_timetravel(
     of the lakehouse commit-log discipline (rows 103/105 cover
     write/commit and pushdown): three deterministic document slices
     (doc_id % 3 == v) are committed as log versions 0..2, then each
-    snapshot 'AS OF version v' is read back as the union of manifests
+    snapshot 'AS OF version v' is read back as the union of entries
     <= v and aggregated. Hash equality with the oracle's cumulative
     slices proves BOTH directions of isolation: every committed file
     is visible from its version on, and no file is visible before its
@@ -738,10 +776,10 @@ def read_python_datasource_timetravel(
 
     Scale: a snapshot resolution is metadata-sized (read <= V small
     manifests on the driver — Delta/Iceberg log replay); the data scan
-    reads only the named files. The version counter is caller-assigned
-    here (single writer); concurrent writers use ``version="auto"``,
-    which CASes the next log entry (:func:`_publish_cas`, exercised
-    end-to-end by ``read_python_datasource_changes``).
+    reads only the named files. The versions are caller-assigned here;
+    a commit without a version claims the next log entry
+    (:func:`_publish_cas`, exercised end-to-end by
+    ``read_python_datasource_changes``).
 
     Output: (version, n_docs, sum_ids, sum_chars), one row per
     snapshot, cumulative by construction.
@@ -754,33 +792,15 @@ def read_python_datasource_timetravel(
         "doc_id", "lang", "n_chars"
     )
     # The V commits are independent jobs (explicit versions -> disjoint
-    # `_MANIFEST-V{v}` files, per-task uuid staging): submit them from a
-    # small thread pool so each job's straggler tail back-fills with the
+    # log entries, per-task uuid staging): submit them from a small
+    # thread pool so each job's straggler tail back-fills with the
     # next job's tasks (guide §2.6) instead of serializing V full
     # scan+write jobs. All commits complete before any snapshot read.
     _commit_versions(d, target, _TT_VERSIONS)
-    schema = "doc_id bigint, lang string, n_chars bigint"
-    snaps = []
-    for v in range(_TT_VERSIONS):
-        files = versioned_manifest_files(target, as_of=v)
-        back = (
-            spark.read.schema(schema).json(files)
-            if files
-            else spark.createDataFrame([], schema)
-        )
-        snaps.append(
-            back.agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                F.coalesce(F.sum("doc_id"), F.lit(0)).cast("bigint")
-                .alias("sum_ids"),
-                F.coalesce(F.sum("n_chars"), F.lit(0)).cast("bigint")
-                .alias("sum_chars"),
-            ).select(F.lit(v).cast("bigint").alias("version"), "*")
-        )
-    out = snaps[0]
-    for s in snaps[1:]:
-        out = out.unionByName(s)
-    return out
+    return _snapshot_aggs(spark, [
+        ({"version": v}, versioned_manifest_files(target, as_of=v))
+        for v in range(_TT_VERSIONS)
+    ])
 
 
 _CP_VERSIONS = 5  # committed log versions in the compaction key
@@ -795,7 +815,7 @@ def read_python_datasource_compacted(
     travel: row 113; changes/tail: row 115): five deterministic
     document slices (doc_id % 5 == v) commit as log versions 0..4,
     then :func:`compact_and_expire` merges every file visible at
-    version 2 into ONE checkpoint-committed file, expires manifests
+    version 2 into ONE checkpoint-committed file, expires entries
     0-1, and GCs the orphaned data files. The key reads the SURVIVING
     snapshots (2, 3, 4) back through the checkpoint-aware log replay
     and aggregates.
@@ -803,11 +823,11 @@ def read_python_datasource_compacted(
     Hash equality with the oracle's cumulative slices proves the
     time-travel contract SURVIVES compaction: the checkpoint file
     holds exactly the rows versions 0-2 committed (no loss, no dupes
-    from lingering pre-compaction manifests), and later versions
+    from lingering pre-compaction entries), and later versions
     stack on it unchanged. The expiry (reads below the checkpoint
     RAISE), GC (no unreferenced data file remains), and
-    crash-ordering (a lingering old manifest cannot double-count)
-    faces are pinned in tests/test_round14_newops.py.
+    crash-ordering (a lingering old entry cannot double-count)
+    faces are pinned in tests/test_pysource.py.
 
     Scale: compaction here rewrites file CONTENT single-threaded
     because the fixture sink is driver-local JSONL; at 100 TB the
@@ -828,103 +848,72 @@ def read_python_datasource_compacted(
     # concurrent independent commit jobs — see _commit_versions
     _commit_versions(d, target, _CP_VERSIONS)
     compact_and_expire(target, _CP_UPTO)
-    schema = "doc_id bigint, lang string, n_chars bigint"
-    snaps = []
-    for v in range(_CP_UPTO, _CP_VERSIONS):
-        files = versioned_manifest_files(target, as_of=v)
-        back = (
-            spark.read.schema(schema).json(files)
-            if files
-            else spark.createDataFrame([], schema)
-        )
-        snaps.append(
-            back.agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                F.coalesce(F.sum("doc_id"), F.lit(0)).cast("bigint")
-                .alias("sum_ids"),
-                F.coalesce(F.sum("n_chars"), F.lit(0)).cast("bigint")
-                .alias("sum_chars"),
-            ).select(F.lit(v).cast("bigint").alias("version"), "*")
-        )
-    out = snaps[0]
-    for s in snaps[1:]:
-        out = out.unionByName(s)
-    return out
+    return _snapshot_aggs(spark, [
+        ({"version": v}, versioned_manifest_files(target, as_of=v))
+        for v in range(_CP_UPTO, _CP_VERSIONS)
+    ])
 
 
 _TAIL_FORMAT = "hive2_logtail"
 
 
-def _register_log_tail(spark: SparkSession) -> None:
+class LogTailStreamReader(_SimpleStreamReader):
     """Streaming TAIL of the versioned sink log — the fourth face of
     the commit-log family (CAS write -> snapshot AS OF -> CHANGES
-    BETWEEN -> tail): a Structured Streaming source whose offset is
-    the highest committed version already emitted, so each micro-batch
-    is exactly the rows of the manifests in (start.v, end.v] — how a
-    downstream incremental consumer follows a lakehouse table without
-    polling data files. Offsets are version numbers, so checkpoint
-    recovery replays a half-processed range bit-identically
-    (readBetweenOffsets re-reads the SAME manifests — the log is
-    append-only and a version's file list never changes after its CAS
-    publish). The demo schema is the timetravel table's; production
-    parameterizes it per table."""
-    import json as _j
-    import os as _o
+    BETWEEN -> tail): the offset is the highest committed version
+    already emitted, so each micro-batch is exactly the rows of the
+    log entries in (start.v, end.v], replayed by :func:`_replay` — how
+    a downstream incremental consumer follows a lakehouse table without
+    polling data files. From the initial offset the first batch is the
+    snapshot as of the newest version: checkpoint rows carry the
+    checkpoint's version, later rows their own. A tail resumed below
+    the newest checkpoint raises (the compacted entries are gone), so
+    no compacted row is ever emitted twice. Offsets are version
+    numbers, so checkpoint recovery replays a half-processed range
+    bit-identically. The schema is the timetravel table's; production
+    parameterizes it per table.
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        SimpleDataSourceStreamReader,
-    )
+    Defined at module level (not a closure) so tests can drive
+    read/readBetweenOffsets directly."""
 
-    class LogTailStreamReader(SimpleDataSourceStreamReader):
-        def __init__(self, options):
-            self.target = options["path"]
+    def __init__(self, options):
+        self.target = options["path"]
 
-        def initialOffset(self):
-            return {"v": -1}
+    def initialOffset(self):
+        return {"v": -1}
 
-        def _committed(self):
-            try:
-                names = _o.listdir(self.target)
-            except FileNotFoundError:
-                return []
-            return sorted(
-                int(n[len("_MANIFEST-V"):])
-                for n in names
-                if n.startswith("_MANIFEST-V") and not n.endswith(".tmp")
-            )
+    def _rows(self, lo, hi=None):
+        """(rows of the entries in (lo, hi], newest version among them
+        or lo); a LIST — the runner pickles the prefetched batch for
+        replay."""
+        entries, _ = _replay(
+            self.target, as_of=hi, since=None if lo < 0 else lo
+        )
+        rows = []
+        for v, files in entries:
+            for path in sorted(files):
+                with open(path) as fh:
+                    for ln in fh:
+                        d = _json.loads(ln)
+                        rows.append((v, d["doc_id"], d["lang"], d["n_chars"]))
+        return rows, entries[-1][0] if entries else lo
 
-        def _rows(self, lo, hi):
-            # a LIST (the runner pickles the prefetched batch for replay)
-            out = []
-            for v in self._committed():
-                if not (lo < v <= hi):
-                    continue
-                with open(_o.path.join(self.target, f"_MANIFEST-V{v}")) as f:
-                    files = _j.load(f)["files"]
-                for name in sorted(files):
-                    with open(_o.path.join(self.target, name)) as fh:
-                        for ln in fh:
-                            d = _j.loads(ln)
-                            out.append(
-                                (v, d["doc_id"], d["lang"], d["n_chars"])
-                            )
-            return out
+    def read(self, start):
+        rows, hi = self._rows(start["v"])
+        if hi <= start["v"]:
+            # the no-advance branch must be an ITERATOR: the runner
+            # probes it with next() to verify emptiness (a list raises
+            # TypeError inside latestOffset)
+            return iter([]), start
+        return rows, {"v": hi}
 
-        def read(self, start):
-            lo = start["v"]
-            committed = self._committed()
-            hi = committed[-1] if committed else lo
-            if hi <= lo:
-                # the no-advance branch must be an ITERATOR: the
-                # runner probes it with next() to verify emptiness
-                # (a list raises TypeError inside latestOffset)
-                return iter([]), {"v": lo}
-            return self._rows(lo, hi), {"v": hi}
+    def readBetweenOffsets(self, start, end):
+        # iterator, not list — executor-side recovery replay path
+        return iter(self._rows(start["v"], end["v"])[0])
 
-        def readBetweenOffsets(self, start, end):
-            # iterator, not list — executor-side recovery replay path
-            return iter(self._rows(start["v"], end["v"]))
+
+def _register_log_tail(spark: SparkSession) -> None:
+    from pyspark.sql.datasource import DataSource
 
     class LogTailDataSource(DataSource):
         @classmethod
@@ -955,10 +944,10 @@ def read_python_datasource_changes(
     time travel (pairs with ``cdc_changes``, which diffs row images;
     this diffs COMMITS): for every version pair since < as_of, read
     exactly the files committed in (since, as_of] and aggregate them.
-    The three slices are committed with ``version="auto"``, so the
-    multi-writer CAS path (:func:`_publish_cas`) is exercised inside a
-    hash-checked key: sequential autos must land versions 0, 1, 2, and
-    the per-pair aggregates only match the oracle if every commit
+    The three slices are committed without a version, so the claim of
+    the next log entry (:func:`_publish_cas`) is exercised inside a
+    hash-checked key: sequential commits must land versions 0, 1, 2,
+    and the per-pair aggregates only match the oracle if every commit
     claimed exactly the version the log order implies.
 
     Scale: resolving a change set is metadata-only — each log entry
@@ -982,37 +971,17 @@ def read_python_datasource_changes(
             d.filter(F.col("doc_id") % _TT_VERSIONS == v)
             .write.format(_SINK_FORMAT)
             .option("path", target)
-            .option("version", "auto")
             .mode("append")
             .save()
         )
-    schema = "doc_id bigint, lang string, n_chars bigint"
-    outs = []
-    for lo in range(_TT_VERSIONS):
-        for hi in range(lo + 1, _TT_VERSIONS):
-            files = versioned_manifest_files(target, as_of=hi, since=lo)
-            back = (
-                spark.read.schema(schema).json(files)
-                if files
-                else spark.createDataFrame([], schema)
-            )
-            outs.append(
-                back.agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                    F.coalesce(F.sum("doc_id"), F.lit(0)).cast("bigint")
-                    .alias("sum_ids"),
-                    F.coalesce(F.sum("n_chars"), F.lit(0)).cast("bigint")
-                    .alias("sum_chars"),
-                ).select(
-                    F.lit(lo).cast("bigint").alias("since_v"),
-                    F.lit(hi).cast("bigint").alias("as_of_v"),
-                    "*",
-                )
-            )
-    out = outs[0]
-    for s in outs[1:]:
-        out = out.unionByName(s)
-    return out
+    return _snapshot_aggs(spark, [
+        (
+            {"since_v": lo, "as_of_v": hi},
+            versioned_manifest_files(target, as_of=hi, since=lo),
+        )
+        for lo in range(_TT_VERSIONS)
+        for hi in range(lo + 1, _TT_VERSIONS)
+    ])
 
 
 QUERIES = {

@@ -322,21 +322,26 @@ class ParquetStore:
         part = self.partition_by if partition_scoped else None
         hit = F.coalesce(condition, F.lit(False))
         partitions = None
+        # partition values as the strings Spark names directories by
+        pvalue = F.col(part).cast("string") if part else None
         if limit is not None:
             probe = (
                 current.filter(hit).orderBy(key).limit(limit)
-                .select(key, *([part] if part else [])).collect()
+                .select(key, *([pvalue] if part else [])).collect()
             )
             if not probe:
                 return 0
             hit = hit & F.col(key).isin(list({r[0] for r in probe}))
             partitions = list({r[1] for r in probe}) if part else None
         elif part:
-            partitions = [r[0] for r in current.filter(hit).select(part).distinct().collect()]
+            partitions = [r[0] for r in current.filter(hit).select(pvalue).distinct().collect()]
             if not partitions:
                 return 0
         if partitions is not None:
-            current = current.filter(F.col(part).isin(partitions))
+            inside = pvalue.isin([v for v in partitions if v is not None])
+            current = current.filter(
+                inside | pvalue.isNull() if None in partitions else inside
+            )
         hits = Observation()
         flagged = current.withColumn(_HIT, hit).observe(
             hits, F.count_if(F.col(_HIT)).alias("n")
@@ -350,5 +355,8 @@ class ParquetStore:
             commit(self.path, swap)
         else:
             phys = self.meta.fields[part].column or part
-            commit(self.path, swap, [f"{phys}={v}" for v in partitions])
+            # Spark's own naming: escaped value, NULL -> default partition
+            catalog = self.spark._jvm.org.apache.spark.sql.catalyst.catalog
+            dirs = [catalog.ExternalCatalogUtils.getPartitionPathString(phys, v) for v in partitions]
+            commit(self.path, swap, dirs)
         return n

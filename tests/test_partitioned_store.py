@@ -9,7 +9,14 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from hive_2_spark.model import AutoField, FloatField, ModelMeta, StringField, register_model
+from hive_2_spark.model import (
+    AutoField,
+    BooleanField,
+    FloatField,
+    ModelMeta,
+    StringField,
+    register_model,
+)
 from hive_2_spark.model.meta import clear_registry
 from hive_2_spark.model.store import ParquetStore
 from tests.conftest import crash_after_renames
@@ -112,3 +119,52 @@ def test_crash_after_first_partition_keeps_every_partition_old(pstore, monkeypat
     assert _state(pstore) == before
     assert pstore.update(F.col("amount") >= 2.0, {"amount": 99.0}) == 3
     assert [a for _, _, a in _state(pstore)] == [1.0, 99.0, 99.0, 99.0]
+
+
+def test_rewrites_name_partitions_as_spark_does(spark, tmp_path):
+    """A partition-scoped rewrite must find the directories Spark wrote:
+    NULL lives in ``__HIVE_DEFAULT_PARTITION__``, ``a:b`` in ``a%3Ab``
+    and ``True`` in ``true``; a NULL partition is rewritten too."""
+    clear_registry()
+    meta = ModelMeta(
+        table="tagged",
+        db=str(tmp_path / "tagged.parquet"),
+        fields={
+            "id": AutoField(),
+            "tag": StringField(null=True),
+            "flag": BooleanField(),
+            "amount": FloatField(),
+        },
+    )
+    register_model("tagged", meta)
+    by_tag = ParquetStore(spark, meta, meta.db, partition_by="tag")
+    by_tag.init_table()
+    by_tag.insert(
+        [
+            {"tag": None, "flag": True, "amount": 1.0},
+            {"tag": "a:b", "flag": False, "amount": 2.0},
+            {"tag": "x", "flag": True, "amount": 3.0},
+        ]
+    )
+    assert sorted(d for d in os.listdir(by_tag.path) if "=" in d) == [
+        "tag=__HIVE_DEFAULT_PARTITION__", "tag=a%3Ab", "tag=x",
+    ]
+    assert by_tag.update(F.col("tag").isNull(), {"amount": 10.0}) == 1
+    assert by_tag.update(F.col("tag") == "a:b", {"amount": 20.0}) == 1
+    assert by_tag.delete(F.col("amount") == 3.0, limit=1) == 1
+    assert {r["tag"]: r["amount"] for r in by_tag.df().collect()} == {
+        None: 10.0, "a:b": 20.0,
+    }
+
+    by_flag = ParquetStore(
+        spark, meta, str(tmp_path / "flagged.parquet"), partition_by="flag"
+    )
+    by_flag.init_table()
+    by_flag.insert(
+        [{"flag": True, "amount": 1.0}, {"flag": False, "amount": 2.0}]
+    )
+    assert by_flag.update(F.col("flag"), {"amount": 5.0}) == 1
+    assert sorted((r["flag"], r["amount"]) for r in by_flag.df().collect()) == [
+        (False, 2.0), (True, 5.0),
+    ]
+    assert not [d for d in os.listdir(tmp_path) if ".swap-" in d or ".bak-" in d]

@@ -2,9 +2,9 @@
 (`read_python_datasource_pushdown`) and incremental community
 maintenance (`graph_communities_incremental`). The oracles prove the
 aggregates; these pin the mechanics — planning-time partition pruning,
-the pushFilters accept/reject contract, the two-phase-commit fixes from
-round-11 ADVICE, and a pure-Python ground-truth replay of the
-incremental labeling (independent of both engines)."""
+the pushFilters accept/reject contract, and a pure-Python
+ground-truth replay of the incremental labeling (independent of both
+engines). The sink's version-log tests live in tests/test_pysource.py."""
 
 from __future__ import annotations
 
@@ -92,48 +92,6 @@ def test_pushdown_e2e_plan_and_values(spark):
         assert got[part].n_rows == len(ids)
         assert got[part].min_id == min(ids)
         assert got[part].max_id == max(ids)
-
-
-def test_batch_sink_manifest_is_staged_then_renamed(tmp_path):
-    """Round-11 ADVICE: batch commit must publish _MANIFEST via
-    tmp+rename (crash mid-write leaves no truncated manifest) and abort
-    must survive None commit messages from unfinished tasks."""
-    import json
-    import os
-
-    from hive_2_spark.core.pysource import JsonlWriter, _Staged
-
-    target = str(tmp_path / "sink")
-    w = JsonlWriter({"path": target}, overwrite=False)
-
-    class _Row:
-        def __init__(self, i):
-            self.i = i
-
-        def asDict(self):
-            return {"i": self.i}
-
-    msgs = [w.write(iter([_Row(1), _Row(2)])), w.write(iter([_Row(3)]))]
-    w.commit(msgs)
-    names = sorted(os.listdir(target))
-    assert "_MANIFEST" in names
-    assert not any(n.endswith(".tmp") for n in names)  # all renamed
-    manifest = json.load(open(os.path.join(target, "_MANIFEST")))
-    assert manifest["rows"] == 3
-    assert sorted(manifest["files"]) == [
-        n for n in names if n.endswith(".jsonl")
-    ]
-
-    # abort with a None entry (unfinished task) must not raise and must
-    # still clean the finished task's staged file
-    staged = w.write(iter([_Row(9)]))
-    assert os.path.exists(staged.path)
-    w.abort([None, staged, None])
-    assert not os.path.exists(staged.path)
-    # double-abort (file already gone) is also safe
-    w.abort([staged])
-    # and a stale path that never existed
-    w.abort([_Staged(path=str(tmp_path / "ghost.jsonl.tmp"), rows=0)])
 
 
 def _replay_incremental(pairs, mod, rounds):
@@ -470,262 +428,6 @@ def test_pattern_within_planted_chains(spark):
     assert got[2] == (1, 0)
     assert got[3] == (1, 0)
     assert got[4] == (1, 1)
-
-
-def test_versioned_sink_time_travel_isolation(spark, tmp_path):
-    """Snapshot semantics come from the manifest log alone: a later
-    version's files and a staged-but-uncommitted tmp file are on disk
-    but invisible to an earlier as_of; the latest snapshot unions all
-    committed versions and nothing else."""
-    import json
-    import os
-
-    from hive_2_spark.core.pysource import (
-        _SINK_FORMAT,
-        _register_sink,
-        versioned_manifest_files,
-    )
-
-    _register_sink(spark)
-    target = str(tmp_path / "tt")
-    for v, ids in ((0, [1, 2]), (1, [3])):
-        spark.createDataFrame(
-            [(i,) for i in ids], "doc_id bigint"
-        ).coalesce(1).write.format(_SINK_FORMAT).option(
-            "path", target
-        ).option("version", str(v)).mode("append").save()
-    # plant an orphan staged file (a crashed writer's leftovers)
-    with open(os.path.join(target, "stage-orphan.jsonl.tmp"), "w") as f:
-        f.write(json.dumps({"doc_id": 999}) + "\n")
-
-    def ids_at(as_of):
-        files = versioned_manifest_files(target, as_of=as_of)
-        if not files:
-            return set()
-        return {
-            r.doc_id
-            for r in spark.read.schema("doc_id bigint").json(files).collect()
-        }
-
-    assert ids_at(0) == {1, 2}        # v1's file exists but is invisible
-    assert ids_at(1) == {1, 2, 3}
-    assert ids_at(None) == {1, 2, 3}  # latest
-    # the orphan tmp never appears in any snapshot
-    assert not any(
-        p.endswith(".tmp") for p in versioned_manifest_files(target)
-    )
-    # each log entry records its version (the commit-log audit field)
-    with open(os.path.join(target, "_MANIFEST-V1")) as f:
-        assert json.load(f)["version"] == 1
-
-
-def test_versioned_sink_auto_cas_sequential(spark, tmp_path):
-    """version="auto" claims max+1: sequential commits land V0, V1,
-    and a pre-existing foreign V7 pushes the next auto claim to V8."""
-    import json
-    import os
-
-    from hive_2_spark.core.pysource import (
-        _SINK_FORMAT,
-        _register_sink,
-        versioned_manifest_files,
-    )
-
-    _register_sink(spark)
-    target = str(tmp_path / "cas")
-    for ids in ([1, 2], [3]):
-        spark.createDataFrame(
-            [(i,) for i in ids], "doc_id bigint"
-        ).coalesce(1).write.format(_SINK_FORMAT).option(
-            "path", target
-        ).option("version", "auto").mode("append").save()
-    assert os.path.exists(os.path.join(target, "_MANIFEST-V0"))
-    assert os.path.exists(os.path.join(target, "_MANIFEST-V1"))
-    with open(os.path.join(target, "_MANIFEST-V1")) as f:
-        assert json.load(f)["version"] == 1
-    # a foreign writer's later entry moves the next claim past it
-    with open(os.path.join(target, "_MANIFEST-V7"), "w") as f:
-        json.dump({"files": [], "rows": 0, "version": 7}, f)
-    spark.createDataFrame([(4,)], "doc_id bigint").coalesce(1).write.format(
-        _SINK_FORMAT
-    ).option("path", target).option("version", "auto").mode("append").save()
-    assert os.path.exists(os.path.join(target, "_MANIFEST-V8"))
-    got = {
-        r.doc_id
-        for r in spark.read.schema("doc_id bigint")
-        .json(versioned_manifest_files(target))
-        .collect()
-    }
-    assert got == {1, 2, 3, 4}
-    # no stray CAS scratch files survive a commit
-    assert not [n for n in os.listdir(target) if n.startswith("caschk-")]
-
-
-def test_versioned_sink_auto_cas_contention(tmp_path):
-    """Two writers racing the SAME next version must land distinct
-    versions with no lost commit: drive _publish_cas directly from two
-    threads gated on a barrier (the racy window is scan -> link)."""
-    import json
-    import os
-    import threading
-
-    from hive_2_spark.core.pysource import _Staged, _publish_cas
-
-    target = str(tmp_path / "race")
-    os.makedirs(target)
-    results: list[int] = []
-    errors: list[BaseException] = []
-    barrier = threading.Barrier(2)
-
-    def writer(tag: str):
-        try:
-            staged = os.path.join(target, f"stage-{tag}.jsonl.tmp")
-            with open(staged, "w") as f:
-                f.write(json.dumps({"doc_id": tag}) + "\n")
-            barrier.wait()
-            results.append(
-                _publish_cas(target, [_Staged(path=staged, rows=1)])
-            )
-        except BaseException as exc:  # pragma: no cover - surfaced below
-            errors.append(exc)
-
-    threads = [
-        threading.Thread(target=writer, args=(t,)) for t in ("a", "b")
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errors
-    assert sorted(results) == [0, 1]  # both committed, distinct versions
-    names = set()
-    for v in (0, 1):
-        with open(os.path.join(target, f"_MANIFEST-V{v}")) as f:
-            m = json.load(f)
-            assert m["version"] == v and m["rows"] == 1
-            names.update(m["files"])
-    assert len(names) == 2  # each commit published its own file
-
-
-def test_log_tail_stream_follows_cas_commits(spark, tmp_path):
-    """The streaming TAIL face of the version log: a micro-batch
-    stream over the manifest log must deliver exactly the committed
-    rows (version-attributed, exactly-once), and a NEW version CAS'd
-    while the stream runs must arrive as a later batch — the
-    incremental-consumer contract the CHANGES BETWEEN key resolves in
-    batch."""
-    import json
-    import os
-    import time
-
-    from hive_2_spark.core.pysource import (
-        _SINK_FORMAT,
-        _register_sink,
-        tail_versions_stream,
-    )
-
-    _register_sink(spark)
-    target = str(tmp_path / "tail")
-
-    def commit(ids):
-        spark.createDataFrame(
-            [(i, "en", i * 10) for i in ids],
-            "doc_id bigint, lang string, n_chars bigint",
-        ).coalesce(1).write.format(_SINK_FORMAT).option(
-            "path", target
-        ).option("version", "auto").mode("append").save()
-
-    commit([1, 2])
-    commit([3])
-
-    q = (
-        tail_versions_stream(spark, target)
-        .writeStream.format("memory")
-        .queryName("t_logtail")
-        .outputMode("append")
-        .option(
-            "checkpointLocation", str(tmp_path / "ckpt")
-        )
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    try:
-        def rows_now():
-            return {
-                (r.version, r.doc_id, r.lang, r.n_chars)
-                for r in spark.sql("SELECT * FROM t_logtail").collect()
-            }
-
-        def wait_for(n, deadline_s=120):
-            deadline = time.time() + deadline_s
-            while time.time() < deadline:
-                if q.exception() is not None:
-                    raise AssertionError(f"query died: {q.exception()}")
-                got = rows_now()
-                if len(got) >= n:
-                    return got
-                time.sleep(0.3)
-            raise AssertionError(f"timed out at {len(rows_now())}/{n} rows")
-
-        got = wait_for(3)
-        assert got == {
-            (0, 1, "en", 10), (0, 2, "en", 20), (1, 3, "en", 30)
-        }
-        # a version committed while the stream runs arrives incrementally
-        commit([4, 5])
-        got = wait_for(5)
-        assert got == {
-            (0, 1, "en", 10), (0, 2, "en", 20), (1, 3, "en", 30),
-            (2, 4, "en", 40), (2, 5, "en", 50),
-        }
-        # exactly-once: no duplicate (version, doc) pairs ever
-        all_rows = spark.sql(
-            "SELECT COUNT(*) AS n, COUNT(DISTINCT version || ':' || doc_id)"
-            " AS d FROM t_logtail"
-        ).collect()[0]
-        assert all_rows.n == all_rows.d == 5
-    finally:
-        q.stop()
-    # the log itself shows three CAS-claimed versions
-    names = sorted(
-        n for n in os.listdir(target) if n.startswith("_MANIFEST-V")
-    )
-    assert names == ["_MANIFEST-V0", "_MANIFEST-V1", "_MANIFEST-V2"]
-    for i, n in enumerate(names):
-        assert json.load(open(os.path.join(target, n)))["version"] == i
-
-
-def test_changes_between_reads_only_the_range(spark, tmp_path):
-    """versioned_manifest_files(since=lo, as_of=hi) must name exactly
-    the files committed in (lo, hi] — the snapshot-diff contract."""
-    from hive_2_spark.core.pysource import (
-        _SINK_FORMAT,
-        _register_sink,
-        versioned_manifest_files,
-    )
-
-    _register_sink(spark)
-    target = str(tmp_path / "chg")
-    for ids in ([1], [2, 3], [4]):
-        spark.createDataFrame(
-            [(i,) for i in ids], "doc_id bigint"
-        ).coalesce(1).write.format(_SINK_FORMAT).option(
-            "path", target
-        ).option("version", "auto").mode("append").save()
-
-    def ids_between(lo, hi):
-        files = versioned_manifest_files(target, as_of=hi, since=lo)
-        if not files:
-            return set()
-        return {
-            r.doc_id
-            for r in spark.read.schema("doc_id bigint").json(files).collect()
-        }
-
-    assert ids_between(0, 1) == {2, 3}
-    assert ids_between(0, 2) == {2, 3, 4}
-    assert ids_between(1, 2) == {4}
-    assert ids_between(2, 2) == set()  # empty range — no manifests read
 
 
 def test_cc_largestar_agrees_with_fixpoint_cc(spark):

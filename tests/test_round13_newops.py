@@ -357,78 +357,6 @@ def test_iqr_anomaly_planted_fences(spark, tmp_path):
     assert c["n_low"] == 1 and c["n_high"] == 1
 
 
-def test_versioned_sink_cas_race_cross_process(tmp_path):
-    """Two OS PROCESSES (separate interpreters — the shape an
-    object-store multi-writer actually hits, unlike the in-process
-    thread race in test_round11_ops) CAS-committing concurrently into
-    one log dir: every claimed version distinct, the log dense with no
-    lost commit, and CHANGES BETWEEN readable across the interleaving
-    with exactly-once file visibility."""
-    import json
-    import os
-    import subprocess
-    import sys
-
-    from hive_2_spark.core.pysource import versioned_manifest_files
-
-    target = str(tmp_path / "race")
-    os.makedirs(target)
-    script = r"""
-import json, os, sys, time
-sys.path.insert(0, "/root/repo")
-from hive_2_spark.core.pysource import _Staged, _publish_cas
-target, tag, n = sys.argv[1], sys.argv[2], int(sys.argv[3])
-while not os.path.exists(os.path.join(target, "_GO")):
-    time.sleep(0.002)
-got = []
-for i in range(n):
-    staged = os.path.join(target, f"stage-{tag}-{i}.jsonl.tmp")
-    with open(staged, "w") as f:
-        f.write(json.dumps({"doc_id": f"{tag}-{i}"}) + "\n")
-    got.append(_publish_cas(target, [_Staged(path=staged, rows=1)]))
-print(json.dumps(got))
-"""
-    n = 8
-    procs = [
-        subprocess.Popen(
-            [sys.executable, "-c", script, target, tag, str(n)],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-            text=True,
-        )
-        for tag in ("a", "b")
-    ]
-    # both writers are parked on the barrier file — release together
-    open(os.path.join(target, "_GO"), "w").close()
-    outs = []
-    for p in procs:
-        out, err = p.communicate(timeout=120)
-        assert p.returncode == 0, err
-        outs.append(json.loads(out.strip().splitlines()[-1]))
-    va, vb = outs
-    assert len(va) == len(vb) == n
-    # distinct versions, dense log, no lost commit across processes
-    assert sorted(va + vb) == list(range(2 * n))
-    # CHANGES BETWEEN across the interleaving: each half-open range
-    # names exactly its own commits' files, once each
-    mid = n  # split the log anywhere; (since, as_of] semantics
-    lo = versioned_manifest_files(target, as_of=mid - 1)
-    hi = versioned_manifest_files(target, as_of=2 * n - 1, since=mid - 1)
-    assert len(lo) == mid and len(hi) == n
-    assert set(lo) | set(hi) == set(
-        versioned_manifest_files(target, as_of=2 * n - 1)
-    )
-    assert not set(lo) & set(hi)
-    # every committed row readable exactly once across the whole log
-    docs = []
-    for path in versioned_manifest_files(target):
-        with open(path) as f:
-            docs.extend(json.loads(line)["doc_id"] for line in f)
-    assert sorted(docs) == sorted(
-        f"{t}-{i}" for t in ("a", "b") for i in range(n)
-    )
-
-
 def test_pattern_alternation_planted_sequences(spark):
     """Pin the alternation semantics on planted symbol streams: the
     greedy {1,3} backtracks but never skips a non-(c|s) symbol, scans

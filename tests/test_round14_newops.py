@@ -117,126 +117,6 @@ def test_maintain_planted_verdicts(maintain_result):
 
 
 # ---------------------------------------------------------------------------
-# Versioned-sink log compaction + retention (OPTIMIZE/VACUUM face)
-
-
-@pytest.fixture()
-def versioned_log(spark, tmp_path):
-    """A fresh 4-version sink log over a tiny deterministic frame."""
-    from hive_2_spark.core.pysource import _SINK_FORMAT, _register_sink
-
-    _register_sink(spark)
-    target = str(tmp_path / "log")
-    d = spark.range(40).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") * 7).alias("payload"),
-    )
-    for v in range(4):
-        (
-            d.filter(F.col("doc_id") % 4 == v)
-            .write.format(_SINK_FORMAT)
-            .option("path", target)
-            .option("version", str(v))
-            .mode("append")
-            .save()
-        )
-    return target
-
-
-def _snapshot_rows(spark, target, as_of):
-    from hive_2_spark.core.pysource import versioned_manifest_files
-
-    files = versioned_manifest_files(target, as_of=as_of)
-    schema = "doc_id bigint, payload bigint"
-    if not files:
-        return []
-    return sorted(
-        (r["doc_id"], r["payload"])
-        for r in spark.read.schema(schema).json(files).collect()
-    )
-
-
-def test_compaction_preserves_surviving_snapshots(spark, versioned_log):
-    """Snapshots at versions >= the compaction point must be
-    row-identical before and after compact_and_expire."""
-    from hive_2_spark.core.pysource import compact_and_expire
-
-    before = {v: _snapshot_rows(spark, versioned_log, v) for v in (2, 3)}
-    stats = compact_and_expire(versioned_log, 2)
-    assert stats["version"] == 2
-    assert stats["rows"] == 30  # versions 0-2 committed 30 of 40 rows
-    assert stats["manifests_expired"] == 2
-    after = {v: _snapshot_rows(spark, versioned_log, v) for v in (2, 3)}
-    assert before == after
-    assert _snapshot_rows(spark, versioned_log, None) == _snapshot_rows(
-        spark, versioned_log, 3
-    )
-
-
-def test_compaction_expired_versions_raise(versioned_log):
-    """Reads (and change feeds) below the checkpoint fail loudly."""
-    from hive_2_spark.core.pysource import (
-        compact_and_expire,
-        versioned_manifest_files,
-    )
-
-    compact_and_expire(versioned_log, 2)
-    for v in (0, 1):
-        with pytest.raises(ValueError, match="expired"):
-            versioned_manifest_files(versioned_log, as_of=v)
-    with pytest.raises(ValueError, match="compacted"):
-        versioned_manifest_files(versioned_log, as_of=3, since=1)
-    # diffs entirely above the checkpoint still answer
-    assert versioned_manifest_files(versioned_log, as_of=3, since=2)
-
-
-def test_compaction_gc_and_single_file_checkpoint(spark, versioned_log):
-    """After compaction: the checkpoint snapshot is served by exactly
-    ONE file, and no unreferenced committed data file remains."""
-    import os
-
-    from hive_2_spark.core.pysource import (
-        compact_and_expire,
-        versioned_manifest_files,
-    )
-
-    stats = compact_and_expire(versioned_log, 2)
-    assert stats["files_gc"] == stats["files_in"]
-    ckpt_files = versioned_manifest_files(versioned_log, as_of=2)
-    assert len(ckpt_files) == 1
-    on_disk = {
-        n for n in os.listdir(versioned_log) if n.endswith(".jsonl")
-    }
-    referenced = {
-        os.path.basename(p)
-        for p in versioned_manifest_files(versioned_log)
-    }
-    assert on_disk == referenced
-
-
-def test_compaction_lingering_manifest_cannot_double_count(
-    spark, versioned_log
-):
-    """Crash ordering: if expiry/GC never ran (a manifest below the
-    checkpoint lingers), the reader must IGNORE it — the checkpoint
-    replaces the prefix, so rows are not double-counted."""
-    import json
-    import os
-
-    from hive_2_spark.core.pysource import compact_and_expire
-
-    want = _snapshot_rows(spark, versioned_log, 3)
-    compact_and_expire(versioned_log, 2)
-    # resurrect a pre-compaction manifest naming a live data file
-    ghost_data = "ghost.jsonl"
-    with open(os.path.join(versioned_log, ghost_data), "w") as f:
-        f.write(json.dumps({"doc_id": 0, "payload": 0}) + "\n")
-    with open(os.path.join(versioned_log, "_MANIFEST-V0"), "w") as f:
-        json.dump({"files": [ghost_data], "rows": 1, "version": 0}, f)
-    assert _snapshot_rows(spark, versioned_log, 3) == want
-
-
-# ---------------------------------------------------------------------------
 # BPE merge-pair learning
 
 
