@@ -1,10 +1,17 @@
-"""Table catalog: load the driver's parquet tables and register views.
+"""Table catalog: load the driver's parquet tables and bind them for SQL.
 
 Mirrors the reference's Meta registry (``classes/hive/meta.php:70-86``,
 ``classes/hive/model.php:48-80`` — lazy one-time schema init + singleton
 cache): here the "schema" is the parquet footer. No DataFrame cache is
 kept: every ``load_table`` call builds a fresh, lazy DataFrame and reads
 the footer again.
+
+Binding rule: every SQL text runs through :func:`sql`, which binds to
+the caller's ``sf_dir`` exactly the tables the text names as whole words
+(case-insensitive), then plans it. Temp views are session-global, so a
+view bound once would serve whichever directory was bound last; binding
+per call makes each plan read its own. A table reference is always such
+a word; a name only in a comment binds an unused view, which is harmless.
 
 At 100 TB each of these would be a partitioned parquet/iceberg table in a
 real metastore; ``spark.read.parquet`` on a directory transparently scales
@@ -14,6 +21,7 @@ real metastore; ``spark.read.parquet`` on a directory transparently scales
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,31 +38,15 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, prefer_managed: bool = False
-) -> DataFrame:
-    """Resolve a table to a DataFrame.
-
-    With ``prefer_managed=True`` the session catalog is consulted first:
-    if the table was materialized as a managed warehouse table
-    (``core.metastore.create_managed``) the catalog copy serves the scan;
-    otherwise the driver's parquet files do. Models can thereby be backed
-    by managed tables without any change at the call site.
-    """
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Resolve a driver table in ``sf_dir`` to a lazy DataFrame."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    if prefer_managed:
-        from hive_2_spark.core.metastore import DB
-
-        if spark.catalog.tableExists(f"{DB}.{name}"):
-            return spark.table(f"{DB}.{name}")
     if name == "events":
         return _load_events(spark, sf_dir)
     return spark.read.parquet(table_path(sf_dir, name))
@@ -100,12 +92,14 @@ def _normalize_ts(dtype, F):
     return F.col("ts")  # already TimestampType
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every driver table as a DataFrame (lazy — no IO until action)."""
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
+def register_views(spark: SparkSession, sf_dir: str, names: list[str]) -> None:
+    """Bind each named table in ``sf_dir`` as a session temp view."""
+    for t in names:
+        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
-    """Register all tables as temp views (for the SQL API surface)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(prefix + t)
+def sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """Plan ``text`` over ``sf_dir``'s tables (see the binding rule above)."""
+    words = set(re.findall(r"\w+", text.lower()))
+    register_views(spark, sf_dir, [t for t in TABLES if t in words])
+    return spark.sql(text)

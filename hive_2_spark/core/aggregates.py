@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_2_spark import catalog
 from hive_2_spark.catalog import load_table
 
 
@@ -63,11 +64,9 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via SQL (the general form of rollup/cube)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("_gs_orders")
-    return spark.sql(
-        """
+    return catalog.sql(spark, sf_dir, """
         SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
-        FROM _gs_orders
+        FROM orders
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
         """
     )

@@ -55,12 +55,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hive_2_spark.catalog import register_views
-
-
-def _sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(sql)
+from hive_2_spark import catalog
 
 
 _Q3 = """
@@ -218,53 +213,53 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10
 
 def sql_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery: cheapest line per small part."""
-    return _sql(spark, sf_dir, _Q2ISH)
+    return catalog.sql(spark, sf_dir, _Q2ISH)
 
 
 def sql_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS with an inequality on the outer column."""
-    return _sql(spark, sf_dir, _Q4ISH)
+    return catalog.sql(spark, sf_dir, _Q4ISH)
 
 
 def sql_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional-aggregate ratio (single-row result)."""
-    return _sql(spark, sf_dir, _Q14ISH)
+    return catalog.sql(spark, sf_dir, _Q14ISH)
 
 
 def sql_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Disjunctive multi-predicate join filter (OR across brand/size/qty
     bands) — the optimizer must keep the equi-key and treat the
     disjunction as a residual."""
-    return _sql(spark, sf_dir, _Q19ISH)
+    return catalog.sql(spark, sf_dir, _Q19ISH)
 
 
 def agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTER-clause conditional aggregation + BOOL_OR/BOOL_AND."""
-    return _sql(spark, sf_dir, _FILTERED_AGG)
+    return catalog.sql(spark, sf_dir, _FILTERED_AGG)
 
 
 def sql_q7_binat_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q7)
+    return catalog.sql(spark, sf_dir, _Q7)
 
 
 def sql_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q18)
+    return catalog.sql(spark, sf_dir, _Q18)
 
 
 def sql_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q3)
+    return catalog.sql(spark, sf_dir, _Q3)
 
 
 def sql_q5_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q5)
+    return catalog.sql(spark, sf_dir, _Q5)
 
 
 def sql_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q10)
+    return catalog.sql(spark, sf_dir, _Q10)
 
 
 def sql_q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q12)
+    return catalog.sql(spark, sf_dir, _Q12)
 
 
 _RECURSIVE_CTE = """
@@ -301,21 +296,21 @@ GROUP BY ALL
 def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL: every non-aggregate select item becomes a group key
     — identical syntax in Spark 4 and DuckDB."""
-    return _sql(spark, sf_dir, _GROUP_BY_ALL)
+    return catalog.sql(spark, sf_dir, _GROUP_BY_ALL)
 
 
 def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE (Spark 4.x): generated threshold series joined
     against the fact table. The recursion happens at PLAN time on 10
     rows; the fact side stays a single scan."""
-    return _sql(spark, sf_dir, _RECURSIVE_CTE)
+    return catalog.sql(spark, sf_dir, _RECURSIVE_CTE)
 
 
 def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery with ORDER BY + LIMIT — per-customer
     top-2 orders. Catalyst decorrelates this into a ranked window over
     one shuffle, not N point queries."""
-    return _sql(spark, sf_dir, _LATERAL_TOPK)
+    return catalog.sql(spark, sf_dir, _LATERAL_TOPK)
 
 
 # Q6: the classic "would revenue have changed" filter-aggregate. The whole
@@ -449,31 +444,31 @@ GROUP BY c_nationkey
 
 
 def sql_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q6)
+    return catalog.sql(spark, sf_dir, _Q6)
 
 
 def sql_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q8)
+    return catalog.sql(spark, sf_dir, _Q8)
 
 
 def sql_q11_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q11)
+    return catalog.sql(spark, sf_dir, _Q11)
 
 
 def sql_q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q13)
+    return catalog.sql(spark, sf_dir, _Q13)
 
 
 def sql_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q15)
+    return catalog.sql(spark, sf_dir, _Q15)
 
 
 def sql_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q17)
+    return catalog.sql(spark, sf_dir, _Q17)
 
 
 def sql_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q22)
+    return catalog.sql(spark, sf_dir, _Q22)
 
 
 # Q9-shaped: profit per (supplier nation, order year) for one part family.
@@ -565,19 +560,19 @@ LIMIT 100
 
 
 def sql_q9_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q9)
+    return catalog.sql(spark, sf_dir, _Q9)
 
 
 def sql_q16_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q16)
+    return catalog.sql(spark, sf_dir, _Q16)
 
 
 def sql_q20_volume_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q20)
+    return catalog.sql(spark, sf_dir, _Q20)
 
 
 def sql_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _Q21)
+    return catalog.sql(spark, sf_dir, _Q21)
 
 
 QUERIES = {

@@ -35,7 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from hive_2_spark.catalog import load_table, register_views
+from hive_2_spark import catalog
+from hive_2_spark.catalog import load_table
 
 GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
 WEEK_US = 7 * 24 * 3600 * 1_000_000
@@ -120,8 +121,7 @@ FROM stage
 
 
 def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(_FUNNEL)
+    return catalog.sql(spark, sf_dir, _FUNNEL)
 
 
 # Windowed funnel: conversion only counts if it happens INSIDE the time
@@ -158,8 +158,7 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM v) AS n_view,
 
 
 def event_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(_FUNNEL_WINDOWED)
+    return catalog.sql(spark, sf_dir, _FUNNEL_WINDOWED)
 
 
 def event_retention(spark: SparkSession, sf_dir: str) -> DataFrame:

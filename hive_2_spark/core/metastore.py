@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_2_spark import catalog
 from hive_2_spark.catalog import load_table
 
 DB = "hive2_managed"
@@ -126,24 +127,19 @@ def create_partitioned_ddl(spark: SparkSession, sf_dir: str) -> None:
     """Pure-SQL DDL path: partitioned managed table via CTAS, extended
     with INSERT INTO ... SELECT. Drop+recreate keeps the key idempotent
     (the in-memory session catalog cannot REPLACE TABLE)."""
-    from hive_2_spark.catalog import register_views
-
     ensure_database(spark, DB)
-    register_views(spark, sf_dir)
     spark.sql(f"DROP TABLE IF EXISTS {DB}.orders_part")
     _clear_orphaned_location(spark, "orders_part", DB)
     # partition column last: v1 tables store partition columns at the
     # schema tail, and INSERT INTO matches by position
-    spark.sql(
-        f"""
+    catalog.sql(spark, sf_dir, f"""
         CREATE TABLE {DB}.orders_part
         USING parquet PARTITIONED BY (o_orderstatus)
         AS SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus
            FROM orders WHERE o_orderstatus = 'F'
         """
     )
-    spark.sql(
-        f"""
+    catalog.sql(spark, sf_dir, f"""
         INSERT INTO {DB}.orders_part
         SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus
         FROM orders WHERE o_orderstatus = 'O'

@@ -323,7 +323,7 @@ import json as _json  # noqa: E402
 import os as _os  # noqa: E402
 import uuid as _uuid  # noqa: E402
 from dataclasses import dataclass as _dataclass  # noqa: E402
-from functools import reduce as _reduce  # noqa: E402
+from functools import partial as _partial, reduce as _reduce  # noqa: E402
 
 from pyspark.sql.datasource import (  # noqa: E402
     DataSourceStreamWriter as _DSStreamWriter,
@@ -729,36 +729,30 @@ _TT_VERSIONS = 3  # committed log versions in the time-travel key
 
 def _commit_versions(d, target: str, n_versions: int) -> None:
     """Commit ``n_versions`` deterministic document slices as explicit
-    log versions, submitting the independent write jobs from a small
-    thread pool (guide §2.6: overlap independent jobs). Safe because
-    explicit versions claim disjoint log entries and every task stages
-    to its own uuid file; determinism is untouched — WHICH rows land in
-    which version is fixed by the modulo slice, not by completion order
+    log versions, submitting the independent write jobs concurrently
+    (guide §2.6: overlap independent jobs). Safe because explicit
+    versions claim disjoint log entries and every task stages to its
+    own uuid file; determinism is untouched — WHICH rows land in which
+    version is fixed by the modulo slice, not by completion order
     (unlike commits without a version, which claim the next one and
-    stay sequential)."""
-    from concurrent.futures import ThreadPoolExecutor
+    stay sequential). The registered sink resolves through the pinned
+    active session (``session.run_concurrently``)."""
+    from hive_2_spark.session import run_concurrently
 
-    spark = d.sparkSession
-
-    def _commit(v: int) -> None:
-        # Python data source lookup resolves through the JVM's
-        # thread-local ACTIVE session; a fresh pool thread has none, so
-        # the registered sink is invisible (DATA_SOURCE_NOT_FOUND)
-        # until the session is pinned to this thread explicitly.
-        spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
-            spark._jsparkSession
-        )
+    def _commit(v: int, part) -> None:
         (
-            d.filter(F.col("doc_id") % n_versions == v)
-            .write.format(_SINK_FORMAT)
+            part.write.format(_SINK_FORMAT)
             .option("path", target)
             .option("version", str(v))
             .mode("append")
             .save()
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(pool.map(_commit, range(n_versions)))
+    jobs = [
+        (d.filter(F.col("doc_id") % n_versions == v), _partial(_commit, v))
+        for v in range(n_versions)
+    ]
+    run_concurrently(d.sparkSession, jobs)
 
 
 def read_python_datasource_timetravel(

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hive_2_spark import catalog
 from hive_2_spark.catalog import load_table
 
 
@@ -93,9 +94,8 @@ def udf_sql_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda b: "high" if b is not None and b >= 5000.0 else "low",
         T.StringType(),
     )
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("_udf_customer")
-    return spark.sql(
-        "SELECT c_custkey, bal_band(c_acctbal) AS band FROM _udf_customer"
+    return catalog.sql(
+        spark, sf_dir, "SELECT c_custkey, bal_band(c_acctbal) AS band FROM customer"
     )
 
 
@@ -119,10 +119,11 @@ def udf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield (w, len(w))
 
     spark.udtf.register("split_words", SplitWords)
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("_udtf_part")
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         "SELECT p.p_partkey, s.word, s.wlen "
-        "FROM _udtf_part p, LATERAL split_words(p.p_name) s"
+        "FROM part p, LATERAL split_words(p.p_name) s",
     )
 
 

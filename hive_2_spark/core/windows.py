@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from hive_2_spark import catalog
 from hive_2_spark.catalog import load_table
 
 
@@ -138,15 +139,13 @@ def win_range_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar-interval RANGE frame: orders in the trailing 30 days per
     customer (time-windowed running count — SQL form, since the
     DataFrame API's rangeBetween is numeric-only)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("_wrt_orders")
-    return spark.sql(
-        """
+    return catalog.sql(spark, sf_dir, """
         SELECT o_custkey, o_orderkey,
                COUNT(*) OVER (
                  PARTITION BY o_custkey ORDER BY o_orderdate
                  RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW
                ) AS n_last_30d
-        FROM _wrt_orders
+        FROM orders
         """
     )
 

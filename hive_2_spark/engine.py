@@ -7,7 +7,7 @@ Ties the layers together behind one object:
 
     eng = Engine(spark, "/root/testdata/sf0.1")
     eng.table("orders")                  # typed DataFrame
-    eng.sql("SELECT ... FROM lineitem")  # SQL over registered views
+    eng.sql("SELECT ... FROM lineitem")  # SQL over this engine's tables
     eng.query("pricing_summary")         # any registered operator
     eng.model("user")                    # Layer-A Active-Record factory
     eng.validator([...])                 # rule engine
@@ -16,6 +16,10 @@ Ties the layers together behind one object:
 The reference's `Hive::factory()` / `Hive::meta()` entry points
 (/root/reference/classes/hive.php:3-30) map to ``model()`` / the meta
 registry; everything else is the Layer-B surface.
+
+``sql`` binds the tables its text names to this engine's ``data_dir`` at
+every call (``catalog.sql``): temp views are session-global, so views
+bound once per Engine would serve every Engine the last-bound directory.
 """
 
 from __future__ import annotations
@@ -30,25 +34,25 @@ from hive_2_spark.model.store import ParquetStore
 from hive_2_spark.model.validate import Rule, Validator
 
 
+def formatted_plan(df: DataFrame) -> str:
+    """``df.explain("formatted")`` as a string."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
 class Engine:
     def __init__(self, spark: SparkSession, data_dir: str) -> None:
         self.spark = spark
         self.data_dir = data_dir
-        self._views_registered = False
 
     # ------------------------------------------------------------ tables
     def table(self, name: str) -> DataFrame:
         return catalog.load_table(self.spark, self.data_dir, name)
 
-    def tables(self) -> dict[str, DataFrame]:
-        return catalog.load_tables(self.spark, self.data_dir)
-
     # --------------------------------------------------------------- SQL
     def sql(self, query: str) -> DataFrame:
-        if not self._views_registered:
-            catalog.register_views(self.spark, self.data_dir)
-            self._views_registered = True
-        return self.spark.sql(query)
+        return catalog.sql(self.spark, self.data_dir, query)
 
     # --------------------------------------------------- operator registry
     def query(self, key: str) -> DataFrame:
@@ -61,10 +65,7 @@ class Engine:
     def explain(self, key: str) -> str:
         """Formatted physical plan of a registered operator — the
         plan-inspection surface (`.explain("formatted")` equivalent)."""
-        df = self.query(key)
-        return df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        return formatted_plan(self.query(key))
 
     # ---------------------------------------------------- join strategies
     @staticmethod

@@ -22,6 +22,8 @@ and an exact twin (doc_id + 20_000_000).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -815,20 +817,14 @@ _IDX_BUCKETS = 8
 
 def _write_bucketed_tables(spark, items, mode: str) -> None:
     """Write the (name, frame, bucket-keys) index tables CONCURRENTLY
-    from a small thread pool (guide §2.6: the three writes are
-    independent jobs over the same already-checkpointed normalized
-    frame, so each job's straggler tail back-fills with the next
-    job's tasks instead of serializing three write jobs). The active
-    session is pinned per thread so session-state lookups resolve."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    (guide §2.6: the three writes are independent jobs over the same
+    already-checkpointed normalized frame, so each job's straggler tail
+    back-fills with the next job's tasks instead of serializing three
+    write jobs)."""
     from hive_2_spark.core.metastore import DB
+    from hive_2_spark.session import run_concurrently
 
-    def _one(item) -> None:
-        name, df, keys = item
-        spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
-            spark._jsparkSession
-        )
+    def _save(name, keys, df) -> None:
         (
             df.write.bucketBy(_IDX_BUCKETS, *keys)
             .sortBy(*keys)
@@ -836,8 +832,9 @@ def _write_bucketed_tables(spark, items, mode: str) -> None:
             .saveAsTable(f"{DB}.{name}")
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(pool.map(_one, items))
+    run_concurrently(
+        spark, [(df, partial(_save, name, keys)) for name, df, keys in items]
+    )
 
 
 def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,6 +17,7 @@ hold on a real multi-executor cluster:
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
 
@@ -46,3 +47,23 @@ def get_spark(app_name: str = "hive_2_spark") -> SparkSession:
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         .getOrCreate()
     )
+
+
+def run_concurrently(spark: SparkSession, jobs: list) -> None:
+    """Run independent ``(frame, action)`` jobs, ``action(frame)``, from a
+    3-thread pool so one job's straggler tail back-fills with the next
+    job's tasks. Each pool thread pins ``spark`` as the JVM's active
+    session (a fresh thread has none, so a registered Python data source
+    or the session catalog would not resolve there), and every frame must
+    belong to ``spark``: one pool never spans sessions."""
+    js = spark._jsparkSession
+    if not all(df.sparkSession._jsparkSession.equals(js) for df, _ in jobs):
+        raise ValueError("every job's frame must belong to the pinned session")
+    pin = spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession
+
+    def _run(job) -> None:
+        pin(js)
+        job[1](job[0])
+
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        list(pool.map(_run, jobs))

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
+from hive_2_spark.engine import formatted_plan
 from tests.conftest import SF_DIR
 
 
@@ -37,9 +38,7 @@ def test_catalog_bucketed_join_key_has_no_shuffle(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         df = catalog_bucketed_join(spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = formatted_plan(df)
         # the only exchange allowed is the one for the final groupBy
         join_part = plan.split("HashAggregate")[0]
         assert "SortMergeJoin" in plan
@@ -60,9 +59,7 @@ def test_bucketed_join_has_no_shuffle(bucketed):
             F.col("l_orderkey") == F.col("o_orderkey"),
             "inner",
         )
-        plan = j._sc._jvm.PythonSQLUtils.explainString(
-            j._jdf.queryExecution(), "formatted"
-        )
+        plan = formatted_plan(j)
         assert "SortMergeJoin" in plan
         assert "Exchange" not in plan  # bucket layout replaces the shuffle
         # sanity: same result as the plain join

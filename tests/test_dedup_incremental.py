@@ -56,7 +56,7 @@ def test_indexed_classify_matches_adhoc_and_skips_corpus_shuffle(spark):
         dedup_incremental,
         dedup_incremental_indexed,
     )
-    from tests.test_plans import plan_of
+    from hive_2_spark.engine import formatted_plan as plan_of
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hive_2_spark import registry
-from hive_2_spark.engine import Engine
+from hive_2_spark.engine import Engine, formatted_plan
 from tests.conftest import SF_DIR
 
 
@@ -59,19 +59,13 @@ def test_engine_model_roundtrip(spark, tmp_path):
     assert eng.store("note").df().count() == 1
 
 
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def test_engine_broadcast_forces_broadcast_join(spark):
     eng = Engine(spark, SF_DIR)
     j = eng.table("orders").join(
         Engine.broadcast(eng.table("customer")),
         F.col("o_custkey") == F.col("c_custkey"),
     )
-    assert "BroadcastHashJoin" in _plan(j)
+    assert "BroadcastHashJoin" in formatted_plan(j)
 
 
 def test_engine_join_hint_merge_forces_sort_merge(spark):
@@ -80,7 +74,7 @@ def test_engine_join_hint_merge_forces_sort_merge(spark):
         Engine.join_hint(eng.table("customer"), "merge"),
         F.col("o_custkey") == F.col("c_custkey"),
     )
-    assert "SortMergeJoin" in _plan(j)
+    assert "SortMergeJoin" in formatted_plan(j)
 
 
 def test_engine_join_hint_rejects_unknown():

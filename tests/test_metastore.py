@@ -1,6 +1,6 @@
 """Managed-table lifecycle: create -> list -> read via spark.table ->
-model backed by the catalog copy -> drop. The warehouse dir is real
-(files on disk), the catalog API is the standard spark.catalog surface.
+drop. The warehouse dir is real (files on disk), the catalog API is the
+standard spark.catalog surface.
 """
 
 from __future__ import annotations
@@ -16,6 +16,7 @@ from hive_2_spark.core.metastore import (
     list_managed,
     warehouse_location,
 )
+from hive_2_spark.engine import formatted_plan
 from tests.conftest import SF_DIR
 
 
@@ -50,21 +51,6 @@ def test_ctas_face(spark):
     drop_managed(spark, "region_uc")
 
 
-def test_model_served_from_managed_table(spark):
-    """load_table(prefer_managed=True) must switch the scan to the
-    catalog copy when one exists, and fall back to files when not."""
-    create_managed(spark, SF_DIR, "region")
-    via_catalog = load_table(spark, SF_DIR, "region", prefer_managed=True)
-    plan = via_catalog._jdf.queryExecution().toString()
-    assert f"{DB}.region" in plan or "region" in plan
-    assert sorted(map(tuple, via_catalog.collect())) == sorted(
-        map(tuple, load_table(spark, SF_DIR, "region").collect())
-    )
-    drop_managed(spark, "region")
-    fallback = load_table(spark, SF_DIR, "region", prefer_managed=True)
-    assert fallback.count() == 5
-
-
 def test_partitioned_ddl_prunes_partitions(spark):
     """CTAS + INSERT INTO a partitioned managed table; a status-filtered
     read must hit ONE partition directory (PartitionFilters in the scan),
@@ -72,9 +58,7 @@ def test_partitioned_ddl_prunes_partitions(spark):
     from hive_2_spark.core.metastore import catalog_partitioned_ddl
 
     df = catalog_partitioned_ddl(spark, SF_DIR)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(df)
     assert "PartitionFilters" in plan and "o_orderstatus" in plan
     # partition directories on disk: exactly F and O
     loc = os.path.join(warehouse_location(), f"{DB}.db", "orders_part")
@@ -116,9 +100,7 @@ def test_dpp_join_prunes_at_runtime(spark):
     from hive_2_spark.core.metastore import catalog_dpp_join
 
     df = catalog_dpp_join(spark, SF_DIR)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    ).lower()
+    plan = formatted_plan(df).lower()
     assert "dynamicpruning" in plan
     rows = df.collect()
     assert [r["o_orderstatus"] for r in rows] == ["F"]

@@ -18,10 +18,9 @@ def con():
 
 
 def _mk(spark, sql):
-    from hive_2_spark.catalog import register_views
+    from hive_2_spark import catalog
 
-    register_views(spark, SF_DIR)
-    return spark.sql(sql)
+    return catalog.sql(spark, SF_DIR, sql)
 
 
 def test_clean_match_passes(spark, con):

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 
 from hive_2_spark import registry
+from hive_2_spark.engine import formatted_plan
 from tests.conftest import SF_DIR
 
 # queries whose semantics legitimately require the flagged construct
@@ -88,15 +89,9 @@ PYTHON_OK = {
 _QUERIES = registry.all_queries()
 
 
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 @pytest.mark.parametrize("key", sorted(_QUERIES))
 def test_no_plan_antipatterns(spark, key):
-    plan = _plan(_QUERIES[key](spark, SF_DIR))
+    plan = formatted_plan(_QUERIES[key](spark, SF_DIR))
     if key not in CARTESIAN_OK:
         assert "CartesianProduct" not in plan, f"{key}: unexpected cartesian"
         assert "BroadcastNestedLoopJoin" not in plan, f"{key}: nested loop join"

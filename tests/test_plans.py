@@ -13,14 +13,9 @@ from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
 from hive_2_spark.core import joins, relational
+from hive_2_spark.engine import formatted_plan as plan_of
 from hive_2_spark.flagship import pricing_summary
 from tests.conftest import SF_DIR
-
-
-def plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def test_filter_pushes_down_to_parquet(spark):

@@ -19,6 +19,7 @@ from pyspark.sql.datasource import (
 )
 
 from hive_2_spark.core.pysource import SynthPushdownReader
+from hive_2_spark.engine import formatted_plan
 from tests.conftest import SF_DIR
 
 
@@ -74,9 +75,7 @@ def test_pushdown_e2e_plan_and_values(spark):
     )
 
     df = read_python_datasource_pushdown(spark, SF_DIR)
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(df)
     assert "PushedFilters: [GreaterThanOrEqual(part,5)]" in plan
     assert "Filter" in plan  # residual score predicate stays Spark-side
 

@@ -18,6 +18,7 @@ sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 from hive_2_spark.session import get_spark  # noqa: E402
 from hive_2_spark import registry  # noqa: E402
+from hive_2_spark.engine import formatted_plan  # noqa: E402
 
 spark = get_spark("hive_2_spark_plans")
 spark.sparkContext.setLogLevel("ERROR")
@@ -30,9 +31,7 @@ out_dir.mkdir(parents=True, exist_ok=True)
 qmap = registry.all_queries()
 for key in keys:
     df = qmap[key](spark, sf_dir)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(df)
     (out_dir / f"{key}_{suffix}.txt").write_text(plan)
     print(key, "->", f"{out_dir.relative_to(REPO)}/{key}_{suffix}.txt",
           len(plan), "chars")
