@@ -103,3 +103,21 @@ def sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
     words = set(re.findall(r"\w+", text.lower()))
     register_views(spark, sf_dir, [t for t in TABLES if t in words])
     return spark.sql(text)
+
+
+def sql_keys(texts: dict[str, str], module: str) -> dict:
+    """One query function per ``{key: text}`` entry for keys whose SQL
+    text runs unchanged on Spark and in the DuckDB oracle:
+    ``f(spark, sf_dir)`` plans the text through :func:`sql`. Each
+    function is named after its key and reports ``module`` (the module
+    that declares the text) as its ``__module__``."""
+
+    def build(key: str, text: str):
+        def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return sql(spark, sf_dir, text)
+
+        query.__name__ = query.__qualname__ = key
+        query.__module__ = module
+        return query
+
+    return {key: build(key, text) for key, text in texts.items()}

@@ -53,8 +53,6 @@ nested loops.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 from hive_2_spark import catalog
 
 
@@ -211,57 +209,6 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10
 """
 
 
-def sql_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar subquery: cheapest line per small part."""
-    return catalog.sql(spark, sf_dir, _Q2ISH)
-
-
-def sql_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated EXISTS with an inequality on the outer column."""
-    return catalog.sql(spark, sf_dir, _Q4ISH)
-
-
-def sql_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional-aggregate ratio (single-row result)."""
-    return catalog.sql(spark, sf_dir, _Q14ISH)
-
-
-def sql_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Disjunctive multi-predicate join filter (OR across brand/size/qty
-    bands) — the optimizer must keep the equi-key and treat the
-    disjunction as a residual."""
-    return catalog.sql(spark, sf_dir, _Q19ISH)
-
-
-def agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FILTER-clause conditional aggregation + BOOL_OR/BOOL_AND."""
-    return catalog.sql(spark, sf_dir, _FILTERED_AGG)
-
-
-def sql_q7_binat_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q7)
-
-
-def sql_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q18)
-
-
-def sql_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q3)
-
-
-def sql_q5_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q5)
-
-
-def sql_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q10)
-
-
-def sql_q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q12)
-
-
 _RECURSIVE_CTE = """
 WITH RECURSIVE thresholds(n) AS (
   SELECT 5 UNION ALL SELECT n + 5 FROM thresholds WHERE n < 50
@@ -291,26 +238,6 @@ SELECT o_orderstatus, o_orderpriority,
 FROM orders
 GROUP BY ALL
 """
-
-
-def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY ALL: every non-aggregate select item becomes a group key
-    — identical syntax in Spark 4 and DuckDB."""
-    return catalog.sql(spark, sf_dir, _GROUP_BY_ALL)
-
-
-def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recursive CTE (Spark 4.x): generated threshold series joined
-    against the fact table. The recursion happens at PLAN time on 10
-    rows; the fact side stays a single scan."""
-    return catalog.sql(spark, sf_dir, _RECURSIVE_CTE)
-
-
-def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated LATERAL subquery with ORDER BY + LIMIT — per-customer
-    top-2 orders. Catalyst decorrelates this into a ranked window over
-    one shuffle, not N point queries."""
-    return catalog.sql(spark, sf_dir, _LATERAL_TOPK)
 
 
 # Q6: the classic "would revenue have changed" filter-aggregate. The whole
@@ -443,34 +370,6 @@ GROUP BY c_nationkey
 """
 
 
-def sql_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q6)
-
-
-def sql_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q8)
-
-
-def sql_q11_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q11)
-
-
-def sql_q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q13)
-
-
-def sql_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q15)
-
-
-def sql_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q17)
-
-
-def sql_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q22)
-
-
 # Q9-shaped: profit per (supplier nation, order year) for one part family.
 # ps_supplycost does not exist; unit cost is modeled as 60% of the part's
 # retail price — the measure still spans lineitem x part columns, which is
@@ -559,58 +458,31 @@ LIMIT 100
 """
 
 
-def sql_q9_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q9)
-
-
-def sql_q16_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q16)
-
-
-def sql_q20_volume_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q20)
-
-
-def sql_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _Q21)
-
-
-QUERIES = {
-    "agg_filtered": agg_filtered,
-    "sql_recursive_cte": sql_recursive_cte,
-    "sql_lateral_topk": sql_lateral_topk,
-    "sql_group_by_all": sql_group_by_all,
-    "sql_q2_min_cost_supplier": sql_q2_min_cost_supplier,
-    "sql_q4_order_priority": sql_q4_order_priority,
-    "sql_q14_promo_share": sql_q14_promo_share,
-    "sql_q19_disjunctive": sql_q19_disjunctive,
-    "sql_q3_shipping_priority": sql_q3_shipping_priority,
-    "sql_q5_nation_volume": sql_q5_nation_volume,
-    "sql_q7_binat_volume": sql_q7_binat_volume,
-    "sql_q10_returned_items": sql_q10_returned_items,
-    "sql_q12_priority_lines": sql_q12_priority_lines,
-    "sql_q18_large_orders": sql_q18_large_orders,
-    "sql_q6_forecast_revenue": sql_q6_forecast_revenue,
-    "sql_q8_market_share": sql_q8_market_share,
-    "sql_q11_revenue_concentration": sql_q11_revenue_concentration,
-    "sql_q13_order_distribution": sql_q13_order_distribution,
-    "sql_q15_top_supplier": sql_q15_top_supplier,
-    "sql_q17_small_qty_revenue": sql_q17_small_qty_revenue,
-    "sql_q22_idle_customers": sql_q22_idle_customers,
-    "sql_q9_profit_by_nation": sql_q9_profit_by_nation,
-    "sql_q16_supplier_diversity": sql_q16_supplier_diversity,
-    "sql_q20_volume_suppliers": sql_q20_volume_suppliers,
-    "sql_q21_waiting_suppliers": sql_q21_waiting_suppliers,
-}
-
+# One SQL text per key: Spark plans it through ``catalog.sql`` (QUERIES)
+# and the DuckDB oracle runs the same string (ORACLES).
 ORACLES = {
+    # FILTER-clause conditional aggregation + BOOL_OR/BOOL_AND.
     "agg_filtered": _FILTERED_AGG,
+    # Recursive CTE (Spark 4.x): generated threshold series joined
+    # against the fact table. The recursion happens at PLAN time on 10
+    # rows; the fact side stays a single scan.
     "sql_recursive_cte": _RECURSIVE_CTE,
+    # Correlated LATERAL subquery with ORDER BY + LIMIT — per-customer
+    # top-2 orders. Catalyst decorrelates this into a ranked window over
+    # one shuffle, not N point queries.
     "sql_lateral_topk": _LATERAL_TOPK,
+    # GROUP BY ALL: every non-aggregate select item becomes a group key
+    # — identical syntax in Spark 4 and DuckDB.
     "sql_group_by_all": _GROUP_BY_ALL,
+    # Correlated scalar subquery: cheapest line per small part.
     "sql_q2_min_cost_supplier": _Q2ISH,
+    # Correlated EXISTS with an inequality on the outer column.
     "sql_q4_order_priority": _Q4ISH,
+    # Conditional-aggregate ratio (single-row result).
     "sql_q14_promo_share": _Q14ISH,
+    # Disjunctive multi-predicate join filter (OR across brand/size/qty
+    # bands) — the optimizer must keep the equi-key and treat the
+    # disjunction as a residual.
     "sql_q19_disjunctive": _Q19ISH,
     "sql_q3_shipping_priority": _Q3,
     "sql_q5_nation_volume": _Q5,
@@ -630,3 +502,5 @@ ORACLES = {
     "sql_q20_volume_suppliers": _Q20,
     "sql_q21_waiting_suppliers": _Q21,
 }
+
+QUERIES = catalog.sql_keys(ORACLES, __name__)

@@ -64,6 +64,26 @@ def sessionized(e: DataFrame, gap_us: int = GAP_US) -> DataFrame:
     ).drop("new_s")
 
 
+# DuckDB twin of ``sessionized`` for every session oracle: the CTE
+# ``numbered`` holds each event with its exact-microsecond ``us`` and
+# per-user ``session_id``.
+_DK_SESSIONS = f"""flagged AS (
+  SELECT user_id, event_id, ts, event_type, value, epoch_us(ts) AS us,
+         CASE WHEN lag(epoch_us(ts)) OVER
+                     (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+                OR epoch_us(ts) - lag(epoch_us(ts)) OVER
+                     (PARTITION BY user_id ORDER BY ts, event_id)
+                   > {GAP_US}
+              THEN 1 ELSE 0 END AS new_s
+  FROM events
+), numbered AS (
+  SELECT user_id, event_id, ts, event_type, value, us,
+         SUM(new_s) OVER
+           (PARTITION BY user_id ORDER BY ts, event_id) AS session_id
+  FROM flagged
+)"""
+
+
 def event_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-level rollup: (user_id, session_id) -> count/start/duration."""
     e = sessionized(load_table(spark, sf_dir, "events"))
@@ -74,22 +94,8 @@ def event_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SESSIONIZE_ORACLE = """
-WITH flagged AS (
-  SELECT user_id, event_id, ts, epoch_us(ts) AS us,
-         CASE WHEN lag(epoch_us(ts)) OVER
-                     (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                OR epoch_us(ts) - lag(epoch_us(ts)) OVER
-                     (PARTITION BY user_id ORDER BY ts, event_id)
-                   > 1800000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-), numbered AS (
-  SELECT user_id, ts, us,
-         SUM(new_s) OVER
-           (PARTITION BY user_id ORDER BY ts, event_id) AS session_id
-  FROM flagged
-)
+_SESSIONIZE_ORACLE = f"""
+WITH {_DK_SESSIONS}
 SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
        CAST(COUNT(*) AS BIGINT) AS n_events,
        MIN(ts) AS session_start,
@@ -118,10 +124,6 @@ SELECT CAST(COUNT(t_view) AS BIGINT) AS n_view,
          AS n_full_funnel
 FROM stage
 """
-
-
-def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _FUNNEL)
 
 
 # Windowed funnel: conversion only counts if it happens INSIDE the time
@@ -157,8 +159,11 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM v) AS n_view,
 """
 
 
-def event_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(spark, sf_dir, _FUNNEL_WINDOWED)
+# The funnel keys' SQL texts, run unchanged by Spark and DuckDB.
+_SQL_TEXTS = {
+    "event_funnel": _FUNNEL,
+    "event_funnel_windowed": _FUNNEL_WINDOWED,
+}
 
 
 def event_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -276,22 +281,8 @@ def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TRANSITIONS_ORACLE = """
-WITH flagged AS (
-  SELECT user_id, event_id, ts, event_type, epoch_us(ts) AS us,
-         CASE WHEN lag(epoch_us(ts)) OVER
-                     (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                OR epoch_us(ts) - lag(epoch_us(ts)) OVER
-                     (PARTITION BY user_id ORDER BY ts, event_id)
-                   > 1800000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-), numbered AS (
-  SELECT user_id, event_id, ts, event_type,
-         SUM(new_s) OVER
-           (PARTITION BY user_id ORDER BY ts, event_id) AS session_id
-  FROM flagged
-), paired AS (
+_TRANSITIONS_ORACLE = f"""
+WITH {_DK_SESSIONS}, paired AS (
   SELECT lag(event_type) OVER
            (PARTITION BY user_id, session_id ORDER BY ts, event_id) AS src_type,
          event_type AS dst_type
@@ -367,22 +358,8 @@ def event_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PATHS_ORACLE = """
-WITH flagged AS (
-  SELECT user_id, event_id, ts, event_type,
-         CASE WHEN lag(epoch_us(ts)) OVER
-                     (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                OR epoch_us(ts) - lag(epoch_us(ts)) OVER
-                     (PARTITION BY user_id ORDER BY ts, event_id)
-                   > 1800000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-), numbered AS (
-  SELECT user_id, event_id, ts, event_type,
-         SUM(new_s) OVER
-           (PARTITION BY user_id ORDER BY ts, event_id) AS session_id
-  FROM flagged
-), tri AS (
+_PATHS_ORACLE = f"""
+WITH {_DK_SESSIONS}, tri AS (
   SELECT event_type AS e1,
          lead(event_type, 1) OVER w AS e2,
          lead(event_type, 2) OVER w AS e3
@@ -641,21 +618,7 @@ def event_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CONCURRENCY_ORACLE = f"""
-WITH flagged AS (
-  SELECT user_id, event_id, epoch_us(ts) AS us,
-         CASE WHEN lag(epoch_us(ts)) OVER
-                     (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                OR epoch_us(ts) - lag(epoch_us(ts)) OVER
-                     (PARTITION BY user_id ORDER BY ts, event_id)
-                   > {GAP_US}
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-), numbered AS (
-  SELECT user_id, us,
-         SUM(new_s) OVER
-           (PARTITION BY user_id ORDER BY us, event_id) AS session_id
-  FROM flagged
-), sess AS (
+WITH {_DK_SESSIONS}, sess AS (
   SELECT user_id, session_id, MIN(us) AS s, MAX(us) AS t
   FROM numbered GROUP BY 1, 2
 ), bounds AS (
@@ -1279,8 +1242,7 @@ QUERIES = {
     "event_audience_overlap": event_audience_overlap,
     "event_attribution_decay": event_attribution_decay,
     "event_sessionize": event_sessionize,
-    "event_funnel": event_funnel,
-    "event_funnel_windowed": event_funnel_windowed,
+    **catalog.sql_keys(_SQL_TEXTS, __name__),
     "event_retention": event_retention,
     "event_transitions": event_transitions,
     "event_paths": event_paths,
@@ -1432,21 +1394,7 @@ def _markov_stationary_sql() -> str:
         for k in range(1, _MKV_ROUNDS + 1)
     )
     return f"""
-WITH flagged AS (
-  SELECT user_id, event_id, ts, event_type, epoch_us(ts) AS us,
-         CASE WHEN lag(epoch_us(ts)) OVER
-                     (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                OR epoch_us(ts) - lag(epoch_us(ts)) OVER
-                     (PARTITION BY user_id ORDER BY ts, event_id)
-                   > 1800000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-), numbered AS (
-  SELECT user_id, event_id, ts, event_type,
-         SUM(new_s) OVER
-           (PARTITION BY user_id ORDER BY ts, event_id) AS session_id
-  FROM flagged
-), paired AS (
+WITH {_DK_SESSIONS}, paired AS (
   SELECT lag(event_type) OVER
            (PARTITION BY user_id, session_id ORDER BY ts, event_id)
            AS src_type,
@@ -1513,8 +1461,7 @@ SELECT user_id,
 FROM per_user, anchor
 """,
     "event_sessionize": _SESSIONIZE_ORACLE,
-    "event_funnel": _FUNNEL,
-    "event_funnel_windowed": _FUNNEL_WINDOWED,
+    **_SQL_TEXTS,
     "event_retention": _RETENTION_ORACLE,
     "event_transitions": _TRANSITIONS_ORACLE,
     "event_paths": _PATHS_ORACLE,

@@ -63,6 +63,19 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fwd.unionAll(rev)
 
 
+# DuckDB twin of ``_edges``: the oracle CTEs ``pairs`` (cnode, snode)
+# and ``edges`` (src, dst).
+_DK_TRADE_EDGES = """pairs AS (
+  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS cnode,
+                  CAST(-l_suppkey AS BIGINT) AS snode
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+), edges AS (
+  SELECT cnode AS src, snode AS dst FROM pairs
+  UNION ALL
+  SELECT snode AS src, cnode AS dst FROM pairs
+)"""
+
+
 def _weighted_edges(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, bool]:
@@ -103,6 +116,16 @@ def _weighted_edges(
     if not broadcast_ranks:
         edges_w = edges_w.repartition("src").localCheckpoint()
     return edges_w, broadcast_ranks
+
+
+# DuckDB twin of ``_weighted_edges``: ``_DK_TRADE_EDGES`` plus the
+# out-degrees ``deg`` (src, deg) and ``edges_w`` (src, dst, w = 1/deg).
+_DK_WEIGHTED_EDGES = f"""{_DK_TRADE_EDGES}, deg AS (
+  SELECT src, COUNT(*) AS deg FROM edges GROUP BY src
+), edges_w AS MATERIALIZED (
+  SELECT e.src, e.dst, CAST(1.0 AS DOUBLE) / deg.deg AS w
+  FROM edges e JOIN deg ON e.src = deg.src
+)"""
 
 
 def _node_label(col: str):
@@ -397,6 +420,36 @@ def _lpa(edges: DataFrame) -> DataFrame:
         .localCheckpoint()
     )
     return fixpoint(labels, lambda lb: _plurality(edges, lb), _LPA_ROUNDS)[0]
+
+
+def _dk_plurality(out: str, edges: str, labels: str) -> str:
+    """DuckDB twin of ``_plurality``: the CTE ``out`` (node, lbl) after
+    one vote of the (src, dst) CTE ``edges`` over the CTE ``labels``.
+    ``out`` is MATERIALIZED: the next round's vote reads it."""
+    return f"""{out}_v AS (
+  SELECT e.src AS node, l.lbl, COUNT(*) AS c
+  FROM {edges} e JOIN {labels} l ON e.dst = l.node GROUP BY 1, 2
+), {out} AS MATERIALIZED (
+  SELECT node, lbl FROM (
+    SELECT node, lbl,
+           ROW_NUMBER() OVER (PARTITION BY node
+                              ORDER BY c DESC, lbl ASC) AS rn
+    FROM {out}_v
+  ) WHERE rn = 1
+)"""
+
+
+def _dk_lpa(edges: str) -> str:
+    """DuckDB twin of ``_lpa``: the CTEs ``l0`` .. ``l<_LPA_ROUNDS>``
+    (node, lbl), every round unrolled."""
+    rounds = [
+        _dk_plurality(f"l{k}", edges, f"l{k - 1}")
+        for k in range(1, _LPA_ROUNDS + 1)
+    ]
+    return (
+        f"l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lbl "
+        f"FROM {edges}), " + ", ".join(rounds)
+    )
 
 
 _INC_DELTA_MOD = 7  # doc_id % 7 == 0 -> the "new arrivals" delta slice
@@ -1298,20 +1351,7 @@ def _pagerank_sql() -> str:
         for k in range(1, _ITERS + 1)
     )
     return f"""
-WITH pairs AS (
-  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS cnode,
-                  CAST(-l_suppkey AS BIGINT) AS snode
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-), edges AS (
-  SELECT cnode AS src, snode AS dst FROM pairs
-  UNION ALL
-  SELECT snode AS src, cnode AS dst FROM pairs
-), deg AS (
-  SELECT src, COUNT(*) AS deg FROM edges GROUP BY src
-), edges_w AS (
-  SELECT e.src, e.dst, CAST(1.0 AS DOUBLE) / deg.deg AS w
-  FROM edges e JOIN deg ON e.src = deg.src
-), r0 AS (
+WITH {_DK_WEIGHTED_EDGES}, r0 AS (
   SELECT src AS node, CAST(1.0 AS DOUBLE) AS rank FROM deg
 ), {iters}
 SELECT node, rank FROM (
@@ -1366,20 +1406,7 @@ def _pagerank_converged_sql() -> str:
         f"SELECT {k} AS iter, node, rank FROM r{k}" for k in ks
     )
     return f"""
-WITH pairs AS (
-  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS cnode,
-                  CAST(-l_suppkey AS BIGINT) AS snode
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-), edges AS (
-  SELECT cnode AS src, snode AS dst FROM pairs
-  UNION ALL
-  SELECT snode AS src, cnode AS dst FROM pairs
-), deg AS (
-  SELECT src, COUNT(*) AS deg FROM edges GROUP BY src
-), edges_w AS MATERIALIZED (
-  SELECT e.src, e.dst, CAST(1.0 AS DOUBLE) / deg.deg AS w
-  FROM edges e JOIN deg ON e.src = deg.src
-), r0 AS MATERIALIZED (
+WITH {_DK_WEIGHTED_EDGES}, r0 AS MATERIALIZED (
   SELECT src AS node, CAST(1.0 AS DOUBLE) AS rank FROM deg
 ), {iters},
 stop AS (
@@ -1397,29 +1424,20 @@ SELECT node, rank, rounds FROM (
 
 
 def _triangles_sql() -> str:
-    from hive_2_spark.llm.dedup import ORACLES as _DEDUP_ORACLES
+    from hive_2_spark.llm.dedup import _dk_neardup_pairs
 
-    pairs = _DEDUP_ORACLES["dedup_ngram_jaccard"]
     return (
-        f"WITH e AS (SELECT DISTINCT a_id, b_id FROM ({pairs})), "
+        f"WITH {_dk_neardup_pairs()}, "
         "t AS (SELECT e1.a_id AS x, e1.b_id AS y, e2.b_id AS z "
-        "FROM e e1 JOIN e e2 ON e1.b_id = e2.a_id "
-        "JOIN e e3 ON e3.a_id = e1.a_id AND e3.b_id = e2.b_id) "
+        "FROM p e1 JOIN p e2 ON e1.b_id = e2.a_id "
+        "JOIN p e3 ON e3.a_id = e1.a_id AND e3.b_id = e2.b_id) "
         "SELECT doc_id, COUNT(*) AS n_triangles FROM "
         "(SELECT unnest([x, y, z]) AS doc_id FROM t) GROUP BY doc_id"
     )
 
 
 _BFS_SQL = f"""
-WITH RECURSIVE pairs AS (
-  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS cnode,
-                  CAST(-l_suppkey AS BIGINT) AS snode
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-), edges AS (
-  SELECT cnode AS src, snode AS dst FROM pairs
-  UNION ALL
-  SELECT snode AS src, cnode AS dst FROM pairs
-), bfs AS (
+WITH RECURSIVE {_DK_TRADE_EDGES}, bfs AS (
   SELECT CAST({_BFS_SOURCE} AS BIGINT) AS node, CAST(0 AS BIGINT) AS dist
   UNION
   SELECT e.dst, bfs.dist + 1
@@ -1433,39 +1451,13 @@ FROM bfs GROUP BY 1
 """
 
 def _communities_lpa_sql() -> str:
-    """Unrolls every LPA round: per-round neighbor-label votes + the
-    same (count desc, label asc) argmax via ROW_NUMBER. MATERIALIZED
-    l{k} CTEs — each is read by round k+1's vote join."""
-    from hive_2_spark.llm.dedup import ORACLES as _DEDUP_ORACLES
+    """Unrolls every LPA round over the near-dup edges, then the
+    community census."""
+    from hive_2_spark.llm.dedup import _dk_neardup_edges_sym
 
-    pairs = _DEDUP_ORACLES["dedup_ngram_jaccard"]
-    rounds = []
-    for k in range(1, _LPA_ROUNDS + 1):
-        p = k - 1
-        rounds.append(
-            f"""v{k} AS (
-  SELECT e.src AS node, l{p}.lbl, COUNT(*) AS c
-  FROM e JOIN l{p} ON e.dst = l{p}.node GROUP BY 1, 2
-), l{k} AS MATERIALIZED (
-  SELECT node, lbl FROM (
-    SELECT node, lbl,
-           ROW_NUMBER() OVER (PARTITION BY node
-                              ORDER BY c DESC, lbl ASC) AS rn
-    FROM v{k}
-  ) WHERE rn = 1
-)"""
-        )
     return f"""
-WITH p AS (SELECT DISTINCT a_id, b_id FROM ({pairs})),
-e AS (
-  SELECT a_id AS src, b_id AS dst FROM p
-  UNION ALL
-  SELECT b_id AS src, a_id AS dst FROM p
-),
-l0 AS MATERIALIZED (
-  SELECT DISTINCT src AS node, src AS lbl FROM e
-),
-{",".join(rounds)}
+WITH {_dk_neardup_edges_sym()},
+{_dk_lpa("e")}
 SELECT lbl AS community, COUNT(*) AS n_docs
 FROM l{_LPA_ROUNDS} GROUP BY lbl
 """
@@ -1475,55 +1467,19 @@ def _communities_incremental_sql() -> str:
     """Replays the base-restricted LPA unroll over base-base edges, then
     the single delta vote round, the isolated-base singletons, and the
     census — the full incremental pipeline is hash-checked."""
-    from hive_2_spark.llm.dedup import ORACLES as _DEDUP_ORACLES
+    from hive_2_spark.llm.dedup import _dk_neardup_edges_sym
 
-    pairs = _DEDUP_ORACLES["dedup_ngram_jaccard"]
     m = _INC_DELTA_MOD
-    rounds = []
-    for k in range(1, _LPA_ROUNDS + 1):
-        p = k - 1
-        rounds.append(
-            f"""v{k} AS (
-  SELECT be.src AS node, l{p}.lbl, COUNT(*) AS c
-  FROM be JOIN l{p} ON be.dst = l{p}.node GROUP BY 1, 2
-), l{k} AS MATERIALIZED (
-  SELECT node, lbl FROM (
-    SELECT node, lbl,
-           ROW_NUMBER() OVER (PARTITION BY node
-                              ORDER BY c DESC, lbl ASC) AS rn
-    FROM v{k}
-  ) WHERE rn = 1
-)"""
-        )
     kf = _LPA_ROUNDS
     return f"""
-WITH p AS (SELECT DISTINCT a_id, b_id FROM ({pairs})),
-e AS (
-  SELECT a_id AS src, b_id AS dst FROM p
-  UNION ALL
-  SELECT b_id AS src, a_id AS dst FROM p
-),
+WITH {_dk_neardup_edges_sym()},
 be AS MATERIALIZED (
   SELECT src, dst FROM e WHERE src % {m} != 0 AND dst % {m} != 0
 ),
-l0 AS MATERIALIZED (
-  SELECT DISTINCT src AS node, src AS lbl FROM be
-),
-{",".join(rounds)},
+{_dk_lpa("be")},
 delta_nodes AS (SELECT DISTINCT src AS node FROM e WHERE src % {m} = 0),
-dv AS (
-  SELECT e.src AS node, l{kf}.lbl, COUNT(*) AS c
-  FROM e JOIN l{kf} ON e.dst = l{kf}.node
-  WHERE e.src % {m} = 0 AND e.dst % {m} != 0 GROUP BY 1, 2
-),
-da AS (
-  SELECT node, lbl FROM (
-    SELECT node, lbl,
-           ROW_NUMBER() OVER (PARTITION BY node
-                              ORDER BY c DESC, lbl ASC) AS rn
-    FROM dv
-  ) WHERE rn = 1
-),
+de AS (SELECT src, dst FROM e WHERE src % {m} = 0 AND dst % {m} != 0),
+{_dk_plurality("da", "de", f"l{kf}")},
 dl AS (
   SELECT dn.node, COALESCE(da.lbl, dn.node) AS lbl, 1 AS is_delta
   FROM delta_nodes dn LEFT JOIN da USING (node)
@@ -1564,20 +1520,7 @@ def _pagerank_personalized_sql() -> str:
         for k in range(1, _ITERS + 1)
     )
     return f"""
-WITH pairs AS (
-  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS cnode,
-                  CAST(-l_suppkey AS BIGINT) AS snode
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-), edges AS (
-  SELECT cnode AS src, snode AS dst FROM pairs
-  UNION ALL
-  SELECT snode AS src, cnode AS dst FROM pairs
-), deg AS (
-  SELECT src, COUNT(*) AS deg FROM edges GROUP BY src
-), edges_w AS (
-  SELECT e.src, e.dst, CAST(1.0 AS DOUBLE) / deg.deg AS w
-  FROM edges e JOIN deg ON e.src = deg.src
-), seed AS (
+WITH {_DK_WEIGHTED_EDGES}, seed AS (
   SELECT MIN(src) AS s FROM deg WHERE src >= 0
 ), pr0 AS (
   SELECT src AS node,
@@ -1610,11 +1553,8 @@ h{k} AS (SELECT e.c, SUM(a{k}.av) AS hv FROM e JOIN a{k} USING (s)
         )
     r = _HITS_ROUNDS
     return f"""
-WITH e AS (
-  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS c,
-         CAST(-l_suppkey AS BIGINT) AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
+WITH {_DK_TRADE_EDGES},
+e AS (SELECT cnode AS c, snode AS s FROM pairs),
 a1 AS (SELECT s, CAST(COUNT(*) AS HUGEINT) AS av FROM e GROUP BY s),
 h1 AS (SELECT e.c, SUM(a1.av) AS hv FROM e JOIN a1 USING (s)
        GROUP BY e.c){"".join(rounds)},
@@ -1640,9 +1580,8 @@ def _kcore_sql() -> str:
     both-endpoint edge restriction), then core(v) = MAX k over the
     surviving node sets. MATERIALIZED per-round edge CTEs — each is
     read by the next round's degree count AND the next k's peel."""
-    from hive_2_spark.llm.dedup import ORACLES as _DEDUP_ORACLES
+    from hive_2_spark.llm.dedup import _dk_neardup_edges_sym
 
-    pairs = _DEDUP_ORACLES["dedup_ngram_jaccard"]
     ctes = []
     prev = "e0"
     core_sel = ["SELECT DISTINCT src AS doc_id, 1 AS core FROM e0"]
@@ -1663,12 +1602,8 @@ def _kcore_sql() -> str:
             f"SELECT DISTINCT src AS doc_id, {k} AS core FROM {prev}"
         )
     return f"""
-WITH p AS (SELECT DISTINCT a_id, b_id FROM ({pairs})),
-e0 AS MATERIALIZED (
-  SELECT a_id AS src, b_id AS dst FROM p
-  UNION ALL
-  SELECT b_id AS src, a_id AS dst FROM p
-),
+WITH {_dk_neardup_edges_sym()},
+e0 AS MATERIALIZED (SELECT src, dst FROM e),
 {",".join(ctes)},
 cores AS ({" UNION ALL ".join(core_sel)})
 SELECT doc_id, CAST(MAX(core) AS BIGINT) AS core
@@ -1679,9 +1614,8 @@ FROM cores GROUP BY doc_id
 def _cc_largestar_sql() -> str:
     """Unrolls every large-star/small-star pair, then the parent census
     — the same exact-integer round functions as the Spark side."""
-    from hive_2_spark.llm.dedup import ORACLES as _DEDUP_ORACLES
+    from hive_2_spark.llm.dedup import _dk_neardup_pairs
 
-    pairs = _DEDUP_ORACLES["dedup_ngram_jaccard"]
     rounds = []
     for k in range(1, _CC_STAR_ROUNDS + 1):
         p = k - 1
@@ -1706,7 +1640,7 @@ def _cc_largestar_sql() -> str:
         )
     kf = _CC_STAR_ROUNDS
     return f"""
-WITH p AS (SELECT DISTINCT a_id, b_id FROM ({pairs})),
+WITH {_dk_neardup_pairs()},
 e0 AS MATERIALIZED (
   SELECT a_id AS u, b_id AS v FROM p WHERE a_id <> b_id
 ),
@@ -1722,39 +1656,32 @@ GROUP BY 1
 """
 
 
-def _random_walks_sql() -> str:
-    """Replays every hop: the same (src, dst-asc) adjacency numbering
-    and the same md5(start:k:cur) % deg + 1 next-step rule."""
+def _dk_uniform_step(k: int) -> str:
+    """Walk step ``k`` of ``graph_random_walks``: the CTE ``w<k>``
+    (start, prev, cur), each walk moved to neighbor number
+    md5(start:k:cur) % deg + 1."""
     from hive_2_spark.core.aggregates import _dk_hex_int
 
-    from hive_2_spark.llm.dedup import ORACLES as _DEDUP_ORACLES
-
-    pairs = _DEDUP_ORACLES["dedup_ngram_jaccard"]
-    steps = []
-    for k in range(1, _WALK_STEPS + 1):
-        h = _dk_hex_int(
-            "md5(CAST(w.start AS VARCHAR) || "
-            f"':{k}:' || CAST(w.cur AS VARCHAR))",
-            12,
-        )
-        steps.append(
-            f"""w{k} AS MATERIALIZED (
-  SELECT w.start, nb.dst AS cur
+    h = _dk_hex_int(
+        "md5(CAST(w.start AS VARCHAR) || "
+        f"':{k}:' || CAST(w.cur AS VARCHAR))",
+        12,
+    )
+    return f"""w{k} AS MATERIALIZED (
+  SELECT w.start, w.cur AS prev, nb.dst AS cur
   FROM w{k - 1} w
   JOIN deg ON w.cur = deg.src
   JOIN nb ON nb.src = w.cur AND nb.idx = ({h}) % deg.d + 1
 )"""
-        )
-    union = " UNION ALL ".join(
-        f"SELECT cur FROM w{k}" for k in range(_WALK_STEPS + 1)
-    )
-    return f"""
-WITH p AS (SELECT DISTINCT a_id, b_id FROM ({pairs})),
-e AS (
-  SELECT a_id AS src, b_id AS dst FROM p
-  UNION ALL
-  SELECT b_id AS src, a_id AS dst FROM p
-),
+
+
+def _dk_walks_start() -> str:
+    """Both walk oracles' start: the near-dup edges ``e``, their
+    (src, dst-asc) adjacency numbering ``nb``, the degrees ``deg``, the
+    zero-step walks ``w0`` and the uniform first step ``w1``."""
+    from hive_2_spark.llm.dedup import _dk_neardup_edges_sym
+
+    return f"""{_dk_neardup_edges_sym()},
 nb AS MATERIALIZED (
   SELECT src, dst,
          ROW_NUMBER() OVER (PARTITION BY src ORDER BY dst ASC) AS idx
@@ -1762,11 +1689,29 @@ nb AS MATERIALIZED (
 ),
 deg AS MATERIALIZED (SELECT src, COUNT(*) AS d FROM e GROUP BY src),
 w0 AS (SELECT src AS start, src AS cur FROM deg),
-{",".join(steps)},
-allv AS ({union})
+{_dk_uniform_step(1)}"""
+
+
+def _dk_walk_census(steps: int) -> str:
+    """The visit census over the walk steps ``w0`` .. ``w<steps>``."""
+    union = " UNION ALL ".join(
+        f"SELECT cur FROM w{k}" for k in range(steps + 1)
+    )
+    return f"""allv AS ({union})
 SELECT cur AS node, COUNT(*) AS n_visits
 FROM allv GROUP BY cur
 """
+
+
+def _random_walks_sql() -> str:
+    """Replays every hop: the same (src, dst-asc) adjacency numbering
+    and the same md5(start:k:cur) % deg + 1 next-step rule."""
+    steps = "".join(
+        f",\n{_dk_uniform_step(k)}" for k in range(2, _WALK_STEPS + 1)
+    )
+    return f"""
+WITH {_dk_walks_start()}{steps},
+{_dk_walk_census(_WALK_STEPS)}"""
 
 
 def _node2vec_sql() -> str:
@@ -1775,13 +1720,6 @@ def _node2vec_sql() -> str:
     same first-cum-exceeding-the-draw pick."""
     from hive_2_spark.core.aggregates import _dk_hex_int
 
-    from hive_2_spark.llm.dedup import ORACLES as _DEDUP_ORACLES
-
-    pairs = _DEDUP_ORACLES["dedup_ngram_jaccard"]
-    h1 = _dk_hex_int(
-        "md5(CAST(w.start AS VARCHAR) || ':1:' || CAST(w.cur AS VARCHAR))",
-        12,
-    )
     steps = []
     for k in range(2, _N2V_STEPS + 1):
         hk = _dk_hex_int(
@@ -1807,34 +1745,10 @@ def _node2vec_sql() -> str:
   ) WHERE draw >= cum - wt AND draw < cum
 )"""
         )
-    union = " UNION ALL ".join(
-        f"SELECT cur FROM w{k}" for k in range(_N2V_STEPS + 1)
-    )
     return f"""
-WITH p AS (SELECT DISTINCT a_id, b_id FROM ({pairs})),
-e AS (
-  SELECT a_id AS src, b_id AS dst FROM p
-  UNION ALL
-  SELECT b_id AS src, a_id AS dst FROM p
-),
-nb AS MATERIALIZED (
-  SELECT src, dst,
-         ROW_NUMBER() OVER (PARTITION BY src ORDER BY dst ASC) AS idx
-  FROM e
-),
-deg AS MATERIALIZED (SELECT src, COUNT(*) AS d FROM e GROUP BY src),
-w0 AS (SELECT src AS start, src AS cur FROM deg),
-w1 AS MATERIALIZED (
-  SELECT w.start, w.cur AS prev, nb.dst AS cur
-  FROM w0 w
-  JOIN deg ON w.cur = deg.src
-  JOIN nb ON nb.src = w.cur AND nb.idx = ({h1}) % deg.d + 1
-),
+WITH {_dk_walks_start()},
 {",".join(steps)},
-allv AS ({union})
-SELECT cur AS node, COUNT(*) AS n_visits
-FROM allv GROUP BY cur
-"""
+{_dk_walk_census(_N2V_STEPS)}"""
 
 
 # SCC oracle: the SPEC, not the algorithm — mutual reachability via a

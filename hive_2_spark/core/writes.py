@@ -170,7 +170,8 @@ ORACLES = {
     ),
     "delete_rows": (
         "SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders "
-        "WHERE NOT (o_orderstatus = 'F' AND o_totalprice < 50000.0)"
+        "WHERE NOT COALESCE(o_orderstatus = 'F' "
+        "AND o_totalprice < 50000.0, FALSE)"
     ),
     "upsert_rows": (
         "SELECT c.c_custkey, "

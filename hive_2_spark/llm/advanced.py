@@ -32,6 +32,13 @@ from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
 from hive_2_spark.core.fixpoint import fixpoint
+from hive_2_spark.llm.dedup import ORACLES as _DEDUP_ORACLES
+from hive_2_spark.llm.dedup import (
+    _DK_CORPUS,
+    _DK_NORM,
+    _dk_neardup_pairs,
+    _dk_pairs,
+)
 from hive_2_spark.llm.similarity import _as_double, _dot, _norm
 
 
@@ -485,6 +492,19 @@ def _cc_converge(
     return labels.drop("changed"), rounds
 
 
+# DuckDB twin of ``_cc_converge``: exact connected components of the
+# pair CTE ``p`` (a_id, b_id) by recursive reachability; ``cl`` labels
+# every paired node with its component's min id. The query opens with
+# WITH RECURSIVE.
+_DK_COMPONENTS = (
+    "edges AS (SELECT a_id, b_id FROM p UNION SELECT b_id, a_id FROM p), "
+    "nodes AS (SELECT DISTINCT a_id AS node FROM edges), "
+    "reach AS (SELECT node, node AS r FROM nodes "
+    "UNION SELECT e.a_id, r.r FROM edges e JOIN reach r ON e.b_id = r.node), "
+    "cl AS (SELECT node AS doc_id, MIN(r) AS cluster FROM reach GROUP BY node)"
+)
+
+
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over near-dup pairs: min-label propagation.
 
@@ -648,29 +668,6 @@ def _dk_cos(a: str, b: str) -> str:
     )
 
 
-# Mirrors llm.dedup.dedup_ngram_jaccard's content-derived blocking:
-# (lang, md5 of first 32 normalized chars) with the 100-doc block cap.
-_DK_PAIRS = (
-    "WITH RECURSIVE c0 AS (SELECT doc_id, lang, "
-    "TRIM(regexp_replace(regexp_replace(lower(text), "
-    "'[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g')) AS norm "
-    "FROM (SELECT doc_id, text, lang FROM documents "
-    "      UNION ALL SELECT doc_id + 20000000, text, lang FROM documents "
-    "      WHERE doc_id % 10 = 0 "
-    "      UNION ALL SELECT doc_id + 10000000, text || ' suffix', lang "
-    "      FROM documents WHERE doc_id % 10 = 0)), "
-    "c1 AS (SELECT doc_id, lang, md5(substr(norm, 1, 32)) AS blk, "
-    "list_distinct(string_split(norm, ' ')) AS words FROM c0), "
-    "c AS (SELECT *, COUNT(*) OVER (PARTITION BY blk, lang) AS blk_n FROM c1), "
-    "p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id "
-    "FROM c a JOIN c b ON a.blk = b.blk AND a.lang = b.lang "
-    "AND a.doc_id < b.doc_id "
-    "WHERE a.blk_n <= 100 AND b.blk_n <= 100 "
-    "AND CAST(len(list_intersect(a.words, b.words)) AS DOUBLE) / "
-    "len(list_distinct(list_concat(a.words, b.words))) >= 0.8)"
-)
-
-
 def _dk_plane(p: int) -> str:
     """DuckDB mirror of _plane(p) — every step forced to DOUBLE so the
     IEEE ops (int->double exact, correctly-rounded / and -) are
@@ -795,9 +792,7 @@ SELECT q_id, vec_id, adc, CAST(rk AS BIGINT) AS rk FROM (
 """,
     "dedup_levenshtein": (
         "WITH c0 AS (SELECT doc_id, lang, "
-        "TRIM(regexp_replace(regexp_replace(lower(text), "
-        "'[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g')) AS norm "
-        "FROM documents), "
+        f"{_DK_NORM.format(c='text')} AS norm FROM documents), "
         "u AS (SELECT doc_id, lang, norm FROM c0 "
         "      UNION ALL SELECT doc_id + 40000000, lang, norm || ' zq x' "
         "      FROM c0 WHERE doc_id % 15 = 0), "
@@ -834,13 +829,8 @@ SELECT q_id, vec_id, adc, CAST(rk AS BIGINT) AS rk FROM (
         f"WHERE ROUND({_DK_EMB_COS}, 6) >= 0.95"
     ),
     "dedup_clusters": (
-        f"{_DK_PAIRS}, "
-        "edges AS (SELECT a_id, b_id FROM p UNION SELECT b_id, a_id FROM p), "
-        "nodes AS (SELECT DISTINCT a_id AS node FROM edges), "
-        "reach AS (SELECT node, node AS r FROM nodes "
-        "          UNION SELECT e.a_id, r.r FROM edges e JOIN reach r "
-        "          ON e.b_id = r.node) "
-        "SELECT node AS doc_id, MIN(r) AS cluster FROM reach GROUP BY node"
+        f"WITH RECURSIVE {_dk_neardup_pairs()}, "
+        f"{_DK_COMPONENTS} SELECT doc_id, cluster FROM cl"
     ),
     "sample_stratified": (
         "SELECT doc_id, lang, n_chars FROM ("
@@ -848,23 +838,10 @@ SELECT q_id, vec_id, adc, CAST(rk AS BIGINT) AS rk FROM (
         "ROW_NUMBER() OVER (PARTITION BY lang ORDER BY doc_id ASC) AS rn "
         "FROM documents) t WHERE (rn - 1) % 10 = 0"
     ),
-    # "dedup_clusters_lsh" is assigned after the dict literal (module
-    # tail) — its SQL nests dedup's portable-LSH pair oracle as a CTE.
     "dedup_keep_best": (
-        f"{_DK_PAIRS}, "
-        "edges AS (SELECT a_id, b_id FROM p UNION SELECT b_id, a_id FROM p), "
-        "nodes AS (SELECT DISTINCT a_id AS node FROM edges), "
-        "reach AS (SELECT node, node AS r FROM nodes "
-        "          UNION SELECT e.a_id, r.r FROM edges e JOIN reach r "
-        "          ON e.b_id = r.node), "
-        "cl AS (SELECT node AS doc_id, MIN(r) AS cluster FROM reach "
-        "       GROUP BY node), "
-        "corpus AS (SELECT doc_id, length(text) AS len FROM ("
-        "  SELECT doc_id, text FROM documents "
-        "  UNION ALL SELECT doc_id + 20000000, text FROM documents "
-        "  WHERE doc_id % 10 = 0 "
-        "  UNION ALL SELECT doc_id + 10000000, text || ' suffix' "
-        "  FROM documents WHERE doc_id % 10 = 0)), "
+        f"WITH RECURSIVE {_dk_neardup_pairs()}, "
+        f"{_DK_COMPONENTS}, "
+        f"corpus AS (SELECT doc_id, length(text) AS len FROM ({_DK_CORPUS})), "
         "m AS (SELECT cl.cluster, cl.doc_id, corpus.len "
         "      FROM cl JOIN corpus USING (doc_id)), "
         "kept AS (SELECT cluster, doc_id AS kept_doc_id FROM ("
@@ -875,22 +852,10 @@ SELECT q_id, vec_id, adc, CAST(rk AS BIGINT) AS rk FROM (
         "FROM kept JOIN (SELECT cluster, COUNT(*) AS n_members FROM m "
         "                GROUP BY cluster) cnt USING (cluster)"
     ),
+    # exact components over dedup_minhash_portable's own pair oracle
+    "dedup_clusters_lsh": (
+        "WITH RECURSIVE "
+        f"{_dk_pairs(_DEDUP_ORACLES['dedup_minhash_portable'])}, "
+        f"{_DK_COMPONENTS} SELECT doc_id, cluster FROM cl"
+    ),
 }
-
-
-def _lsh_clusters_sql() -> str:
-    from hive_2_spark.llm import dedup as _D
-
-    pairs_sql = _D.ORACLES["dedup_minhash_portable"]
-    return (
-        f"WITH RECURSIVE p AS ({pairs_sql}), "
-        "edges AS (SELECT a_id, b_id FROM p UNION SELECT b_id, a_id FROM p), "
-        "nodes AS (SELECT DISTINCT a_id AS node FROM edges), "
-        "reach AS (SELECT node, node AS r FROM nodes "
-        "          UNION SELECT e.a_id, r.r FROM edges e JOIN reach r "
-        "          ON e.b_id = r.node) "
-        "SELECT node AS doc_id, MIN(r) AS cluster FROM reach GROUP BY node"
-    )
-
-
-ORACLES["dedup_clusters_lsh"] = _lsh_clusters_sql()

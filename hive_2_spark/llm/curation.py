@@ -727,27 +727,16 @@ def _split_leakage_sql() -> str:
 
 
 def _family_split_sql() -> str:
-    """Nests the same fixpoint-CC recursive CTE as the soft-dedup
-    oracle (imported pair SQL, not re-derived), fills singleton
-    families from the corpus-with-planted-twins definition, then
-    applies the identical md5 bucket to the FAMILY id."""
-    from hive_2_spark.llm.advanced import _DK_PAIRS
+    """The components of the near-dup pairs (the dedup_clusters
+    oracle's CTEs), singleton families filled from the corpus, then the
+    identical md5 bucket applied to the FAMILY id."""
+    from hive_2_spark.llm.advanced import _DK_COMPONENTS
+    from hive_2_spark.llm.dedup import _DK_CORPUS, _dk_neardup_pairs
 
     b = _SPLIT_SQL_BUCKET.format(c="family")
     return (
-        f"{_DK_PAIRS}, "
-        "edges AS (SELECT a_id, b_id FROM p UNION SELECT b_id, a_id FROM p), "
-        "nodes AS (SELECT DISTINCT a_id AS node FROM edges), "
-        "reach AS (SELECT node, node AS r FROM nodes "
-        "          UNION SELECT e.a_id, r.r FROM edges e JOIN reach r "
-        "          ON e.b_id = r.node), "
-        "cl AS (SELECT node AS doc_id, MIN(r) AS cluster FROM reach "
-        "       GROUP BY node), "
-        "corpus AS (SELECT doc_id FROM documents "
-        "  UNION ALL SELECT doc_id + 20000000 FROM documents "
-        "  WHERE doc_id % 10 = 0 "
-        "  UNION ALL SELECT doc_id + 10000000 FROM documents "
-        "  WHERE doc_id % 10 = 0), "
+        f"WITH RECURSIVE {_dk_neardup_pairs()}, {_DK_COMPONENTS}, "
+        f"corpus AS (SELECT doc_id FROM ({_DK_CORPUS})), "
         "fam AS (SELECT c.doc_id, COALESCE(cl.cluster, c.doc_id) AS family "
         "        FROM corpus c LEFT JOIN cl ON c.doc_id = cl.doc_id) "
         f"SELECT doc_id, family, {b} AS bucket, "
@@ -757,25 +746,14 @@ def _family_split_sql() -> str:
 
 
 def _soft_dedup_sql() -> str:
-    """Nests the fixpoint-CC recursive CTE (imported from the advanced
-    module — same pair SQL, not re-derived) and fills singletons from
-    the same corpus-with-planted-twins definition."""
-    from hive_2_spark.llm.advanced import _DK_PAIRS
+    """The components of the near-dup pairs (the dedup_clusters
+    oracle's CTEs), singletons filled from the corpus."""
+    from hive_2_spark.llm.advanced import _DK_COMPONENTS
+    from hive_2_spark.llm.dedup import _DK_CORPUS, _dk_neardup_pairs
 
     return (
-        f"{_DK_PAIRS}, "
-        "edges AS (SELECT a_id, b_id FROM p UNION SELECT b_id, a_id FROM p), "
-        "nodes AS (SELECT DISTINCT a_id AS node FROM edges), "
-        "reach AS (SELECT node, node AS r FROM nodes "
-        "          UNION SELECT e.a_id, r.r FROM edges e JOIN reach r "
-        "          ON e.b_id = r.node), "
-        "cl AS (SELECT node AS doc_id, MIN(r) AS cluster FROM reach "
-        "       GROUP BY node), "
-        "corpus AS (SELECT doc_id FROM documents "
-        "  UNION ALL SELECT doc_id + 20000000 FROM documents "
-        "  WHERE doc_id % 10 = 0 "
-        "  UNION ALL SELECT doc_id + 10000000 FROM documents "
-        "  WHERE doc_id % 10 = 0), "
+        f"WITH RECURSIVE {_dk_neardup_pairs()}, {_DK_COMPONENTS}, "
+        f"corpus AS (SELECT doc_id FROM ({_DK_CORPUS})), "
         "sz AS (SELECT cluster, COUNT(*) AS csize FROM cl GROUP BY cluster), "
         "m AS (SELECT cl.doc_id, cl.cluster, sz.csize "
         "      FROM cl JOIN sz USING (cluster) "

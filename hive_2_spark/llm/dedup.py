@@ -35,6 +35,12 @@ _NORM = lambda c: F.trim(  # noqa: E731 — shared normalizer expression
     )
 )
 
+# DuckDB twin of ``_NORM`` for every oracle; ``{c}`` is the text column.
+_DK_NORM = (
+    "TRIM(regexp_replace(regexp_replace(lower({c}), '[^a-z0-9\\s]', '', 'g'), "
+    "'\\s+', ' ', 'g'))"
+)
+
 
 def corpus_with_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents + synthesized exact and near duplicates (deterministic)."""
@@ -49,6 +55,16 @@ def corpus_with_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
     )
     return d.unionByName(exact).unionByName(near)
+
+
+# DuckDB twin of ``corpus_with_dups``: (doc_id, text, lang) rows.
+_DK_CORPUS = (
+    "SELECT doc_id, text, lang FROM documents "
+    "UNION ALL SELECT doc_id + 20000000, text, lang FROM documents "
+    "WHERE doc_id % 10 = 0 "
+    "UNION ALL SELECT doc_id + 10000000, text || ' suffix', lang "
+    "FROM documents WHERE doc_id % 10 = 0"
+)
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -268,6 +284,28 @@ def neardup_edges_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a_id").alias("src"), F.col("b_id").alias("dst")
     ).unionAll(
         pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst"))
+    )
+
+
+def _dk_pairs(pairs_sql: str) -> str:
+    """The oracle CTE ``p`` (a_id, b_id): the distinct pairs of the
+    pair query ``pairs_sql``."""
+    return f"p AS (SELECT DISTINCT a_id, b_id FROM ({pairs_sql}))"
+
+
+def _dk_neardup_pairs() -> str:
+    """DuckDB twin of :func:`neardup_pair_index`: the CTE ``p`` over
+    both legs of the ``dedup_ngram_jaccard`` oracle."""
+    return _dk_pairs(ORACLES["dedup_ngram_jaccard"])
+
+
+def _dk_neardup_edges_sym() -> str:
+    """DuckDB twin of :func:`neardup_edges_sym`: ``p`` and the CTE
+    ``e`` (src, dst), ``p`` in both directions."""
+    return (
+        _dk_neardup_pairs()
+        + ", e AS (SELECT a_id AS src, b_id AS dst FROM p "
+        "UNION ALL SELECT b_id AS src, a_id AS dst FROM p)"
     )
 
 
@@ -1417,19 +1455,6 @@ QUERIES = {
     "dedup_containment": dedup_containment,
     "dedup_substring_windows": dedup_substring_windows,
 }
-
-_DK_NORM = (
-    "TRIM(regexp_replace(regexp_replace(lower({c}), '[^a-z0-9\\s]', '', 'g'), "
-    "'\\s+', ' ', 'g'))"
-)
-
-_DK_CORPUS = (
-    "SELECT doc_id, text, lang FROM documents "
-    "UNION ALL SELECT doc_id + 20000000, text, lang FROM documents "
-    "WHERE doc_id % 10 = 0 "
-    "UNION ALL SELECT doc_id + 10000000, text || ' suffix', lang FROM documents "
-    "WHERE doc_id % 10 = 0"
-)
 
 def _dk_sig8(src: str, key: str) -> str:
     """8-slot portable MinHash signature CTE body over 3-gram shingles

@@ -36,9 +36,20 @@ from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
 from hive_2_spark.llm.advanced import ORACLES as _ADV_ORACLES
-from hive_2_spark.llm.advanced import _cc_converge, _DK_PAIRS, dedup_clusters
+from hive_2_spark.llm.advanced import (
+    _DK_COMPONENTS,
+    _cc_converge,
+    dedup_clusters,
+)
 from hive_2_spark.llm.curation import _GRAM_N
-from hive_2_spark.llm.dedup import _NORM, corpus_with_dups
+from hive_2_spark.llm.dedup import (
+    _DK_CORPUS,
+    _DK_NORM,
+    _NORM,
+    _dk_neardup_pairs,
+    _dk_pairs,
+    corpus_with_dups,
+)
 from hive_2_spark.llm.text import quality_score
 
 # twin ids are seed + 10M/20M (llm/dedup.corpus_with_dups); seed_id
@@ -194,23 +205,10 @@ QUERIES = {
 
 
 def _semantic_clusters_sql() -> str:
-    """Exact-CC recursive CTE over dedup_embedding's own pair oracle
-    (string-composed so the two stay in lockstep)."""
-    emb = _ADV_ORACLES["dedup_embedding"]
-    assert emb.startswith("WITH ") and emb.count("SELECT DISTINCT") == 1
-    head, tail = emb.split("SELECT DISTINCT", 1)
+    """Exact components over dedup_embedding's own pair oracle."""
     return (
-        "WITH RECURSIVE "
-        + head[len("WITH ") :].rstrip()
-        + ", p AS (SELECT DISTINCT "
-        + tail.strip()
-        + "), edges AS (SELECT a_id, b_id FROM p "
-        "UNION SELECT b_id, a_id FROM p), "
-        "nodes AS (SELECT DISTINCT a_id AS node FROM edges), "
-        "reach AS (SELECT node, node AS r FROM nodes "
-        "UNION SELECT e.a_id, r.r FROM edges e JOIN reach r "
-        "ON e.b_id = r.node) "
-        "SELECT node AS vec_id, MIN(r) AS cluster FROM reach GROUP BY node"
+        f"WITH RECURSIVE {_dk_pairs(_ADV_ORACLES['dedup_embedding'])}, "
+        f"{_DK_COMPONENTS} SELECT doc_id AS vec_id, cluster FROM cl"
     )
 
 
@@ -239,34 +237,18 @@ _DK_GRAMS = (
 
 
 def _funnel_sql() -> str:
-    # _DK_PAIRS already opens WITH RECURSIVE and defines the
-    # corpus (c0) + blocked-jaccard pair CTEs (p) this funnel reuses;
-    # corpus rows (doc_id, text, lang) come from its inner UNION ALL.
-    corpus = (
-        "SELECT doc_id, text, lang FROM documents "
-        "UNION ALL SELECT doc_id + 20000000, text, lang FROM documents "
-        "WHERE doc_id % 10 = 0 "
-        "UNION ALL SELECT doc_id + 10000000, text || ' suffix', lang "
-        "FROM documents WHERE doc_id % 10 = 0"
-    )
+    # the corpus, near-dup components and normalizer are the dedup
+    # family's own oracle definitions
     return (
-        f"{_DK_PAIRS}, "
-        f"corpus AS ({corpus}), "
-        "edges AS (SELECT a_id, b_id FROM p UNION SELECT b_id, a_id FROM p), "
-        "nodes AS (SELECT DISTINCT a_id AS node FROM edges), "
-        "reach AS (SELECT node, node AS r FROM nodes "
-        "UNION SELECT e.a_id, r.r FROM edges e JOIN reach r "
-        "ON e.b_id = r.node), "
-        "nd_losers AS (SELECT node AS doc_id FROM reach GROUP BY node "
-        "HAVING node != MIN(r)), "
+        f"WITH RECURSIVE {_dk_neardup_pairs()}, {_DK_COMPONENTS}, "
+        f"corpus AS ({_DK_CORPUS}), "
+        "nd_losers AS (SELECT doc_id FROM cl WHERE doc_id != cluster), "
         f"qk AS (SELECT doc_id FROM documents WHERE {_DK_QKEEP}), "
         "s2 AS (SELECT * FROM corpus WHERE lang = 'en'), "
         f"s3 AS (SELECT * FROM s2 WHERE doc_id % {_TWIN_MOD} IN "
         "(SELECT doc_id FROM qk)), "
-        "exact_keep AS (SELECT MIN(doc_id) AS doc_id FROM "
-        "(SELECT doc_id, md5(TRIM(regexp_replace(regexp_replace(lower(text), "
-        "'[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS fp FROM corpus) "
-        "GROUP BY fp), "
+        "exact_keep AS (SELECT MIN(doc_id) AS doc_id FROM corpus "
+        f"GROUP BY md5({_DK_NORM.format(c='text')})), "
         "s4 AS (SELECT * FROM s3 WHERE doc_id IN "
         "(SELECT doc_id FROM exact_keep)), "
         "s5 AS (SELECT * FROM s4 WHERE doc_id NOT IN "

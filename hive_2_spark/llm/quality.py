@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
 from hive_2_spark.llm.curation import _shingles
+from hive_2_spark.llm.dedup import _DK_NORM
 
 # Gopher-style thresholds: docs whose single most frequent word exceeds
 # 20% of tokens, or with >40% duplicated bigrams, are flagged.
@@ -461,9 +462,7 @@ ORACLES = {
     # w ASC) on both sides so the rk=10/rk=100 picks are deterministic
     "quality_vocab_zipf": f"""
 WITH toks AS (
-  SELECT lang, unnest(string_split(trim(regexp_replace(regexp_replace(
-           lower(text), '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g')), ' '))
-         AS w
+  SELECT lang, unnest(string_split({_DK_NORM.format(c='text')}, ' ')) AS w
   FROM documents
 ), tf AS (
   SELECT lang, w, COUNT(*) AS c FROM toks WHERE w <> '' GROUP BY lang, w

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
+from hive_2_spark.llm.dedup import _DK_NORM
 
 # stopword marker sets per language for the n-gram/stopword heuristic
 LANG_MARKERS = {
@@ -650,11 +651,6 @@ def _dk_argmax_lang() -> str:
 
 _DK_BEST, _DK_BEST_SCORE = _dk_argmax_lang()
 
-_DK_BPE_NORM = (
-    "TRIM(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', "
-    "'', 'g'), '\\s+', ' ', 'g'))"
-)
-
 
 def _dk_bpe_parts() -> str:
     """Shared WITH-clause replaying the ``_BPE_MERGES`` greedy rounds:
@@ -669,7 +665,8 @@ def _dk_bpe_parts() -> str:
         "'  ' || array_to_string(list_transform("
         "range(1, len(word) + 1), i -> substr(word, i, 1)), '  ') || "
         "'  ' AS s, CAST(COUNT(*) AS BIGINT) AS freq FROM "
-        f"(SELECT unnest(string_split({_DK_BPE_NORM}, ' ')) AS word "
+        "(SELECT unnest(string_split("
+        f"{_DK_NORM.format(c='text')}, ' ')) AS word "
         "FROM documents) WHERE word <> '' GROUP BY word)"
     ]
     for r in range(1, _BPE_MERGES + 1):
@@ -714,7 +711,7 @@ def _dk_bpe_apply_oracle() -> str:
         "CAST(len(string_split(trim(s), '  ')) AS BIGINT) AS ntw, "
         f"CAST(len(word) AS BIGINT) AS lw FROM v{_BPE_MERGES}), "
         "dtoks AS (SELECT doc_id, "
-        f"unnest(string_split({_DK_BPE_NORM}, ' ')) AS word "
+        f"unnest(string_split({_DK_NORM.format(c='text')}, ' ')) AS word "
         "FROM documents) "
         "SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words, "
         "CAST(SUM(ntw) AS BIGINT) AS n_tokens, "
@@ -876,16 +873,14 @@ GROUP BY 1, 2
         f"CAST({_DK_BEST_SCORE} AS INT) AS marker_hits FROM documents"
     ),
     "fingerprint": (
-        "SELECT doc_id, md5(TRIM(regexp_replace(regexp_replace(lower(text), "
-        "'[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS fp FROM documents"
+        f"SELECT doc_id, md5({_DK_NORM.format(c='text')}) AS fp FROM documents"
     ),
     # Exact replay of the Rabin-Karp fold: per-word hash = first 15 hex
     # chars of md5 as int, pre-modded so DuckDB's init-less list_reduce
     # (acc starts at element 1) equals Spark's acc=0 left fold.
     "fingerprint_rolling": (
         "SELECT doc_id, list_reduce(list_transform("
-        "string_split(TRIM(regexp_replace(regexp_replace(lower(text), "
-        "'[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g')), ' '), "
+        f"string_split({_DK_NORM.format(c='text')}, ' '), "
         "w -> CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) "
         "% 1000000007), "
         "(acc, x) -> (acc * 31 + x) % 1000000007) AS rfp FROM documents"

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import _normalize_ts, load_table
-from hive_2_spark.core.events import sessionized
+from hive_2_spark.core.events import _DK_SESSIONS, sessionized
 from hive_2_spark.streaming._source import read_stream_table
 
 GAP_SECONDS = 30 * 60  # session gap: 30 minutes (streaming session_window)
@@ -65,9 +65,9 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity) per user — batch form
     via the lag/cumulative-sum island pattern (identical SQL semantics to
     streaming ``session_window``). The gap constant, ordering, and
-    flag/cumsum core are shared with ``core.events.sessionize`` — only the
-    rollup columns differ (exact-microsecond comparison, matching the
-    oracle's fractional ``epoch()`` diff)."""
+    flag/cumsum core are shared with ``core.events.sessionize``, and the
+    oracle composes their DuckDB twin ``_DK_SESSIONS`` — only the rollup
+    columns differ."""
     e = sessionized(load_table(spark, sf_dir, "events"))
     return e.groupBy("user_id", F.col("session_id").alias("sess_id")).agg(
         F.min("ts").alias("session_start"),
@@ -245,19 +245,11 @@ ORACLES = {
         "FROM events) t GROUP BY 1"
     ),
     "stream_session": (
-        "WITH g AS (SELECT user_id, event_id, ts, value, "
-        "  LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts "
-        "  FROM events), "
-        "m AS (SELECT *, CASE WHEN prev_ts IS NULL OR "
-        "  epoch(ts) - epoch(prev_ts) > 1800 THEN 1 ELSE 0 END AS new_sess "
-        "  FROM g), "
-        "s AS (SELECT *, CAST(SUM(new_sess) OVER (PARTITION BY user_id "
-        "  ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_id "
-        "  FROM m) "
-        "SELECT user_id, sess_id, MIN(ts) AS session_start, "
-        "MAX(ts) AS session_end, COUNT(*) AS n_events, "
-        "ROUND(SUM(value), 2) AS sum_value "
-        "FROM s GROUP BY user_id, sess_id"
+        f"WITH {_DK_SESSIONS} "
+        "SELECT user_id, CAST(session_id AS BIGINT) AS sess_id, "
+        "MIN(ts) AS session_start, MAX(ts) AS session_end, "
+        "COUNT(*) AS n_events, ROUND(SUM(value), 2) AS sum_value "
+        "FROM numbered GROUP BY user_id, session_id"
     ),
     "stream_dedup": (
         "SELECT user_id, event_type, event_id, ts FROM ("

@@ -8,7 +8,7 @@ import ast
 from pathlib import Path
 
 from hive_2_spark import catalog
-from hive_2_spark.core.analytics import sql_q3_shipping_priority
+from hive_2_spark.core.analytics import QUERIES
 from hive_2_spark.engine import Engine
 from tests.conftest import SF_DIR, SF_DIR_MID
 
@@ -28,7 +28,7 @@ def test_engines_on_one_session_count_their_own_tables(spark):
     small, mid = Engine(spark, SF_DIR), Engine(spark, SF_DIR_MID)
     count = "SELECT COUNT(*) AS n FROM lineitem"
     assert small.sql(count).first().n == 6000
-    sql_q3_shipping_priority(spark, SF_DIR_MID)
+    QUERIES["sql_q3_shipping_priority"](spark, SF_DIR_MID)
     assert small.sql(count).first().n == 6000
     assert mid.sql(count).first().n == 60000
     assert small.sql(count).first().n == 6000
@@ -43,7 +43,7 @@ def test_q3_binds_only_the_tables_it_names(spark, monkeypatch):
         return real(*args)
 
     monkeypatch.setattr(catalog, "load_table", spy)
-    sql_q3_shipping_priority(spark, SF_DIR)
+    QUERIES["sql_q3_shipping_priority"](spark, SF_DIR)
     assert sorted(seen) == ["customer", "lineitem", "orders"]
 
 

@@ -12,8 +12,10 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from hive_2_spark import registry
 from hive_2_spark.llm.dedup import _BLOCK_CAP, dedup_ngram_jaccard
 from hive_2_spark.llm.dedup import ORACLES as DEDUP_ORACLES
+from hive_2_spark.parity import compare
 
 # doc_ids avoid % 10 == 0 so corpus_with_dups synthesizes no extra twins
 _PREFIX = "lorem ipsum boilerplate header common banner"  # >32 norm chars
@@ -59,14 +61,38 @@ def test_megablock_pair_found_via_minhash_leg(spark, mega_dir):
     assert [(r["a_id"], r["b_id"], r["jac"]) for r in rows] == [(11, 211, 1.0)]
 
 
-def test_megablock_oracle_agrees(spark, mega_dir):
-    """The combined two-leg DuckDB oracle must produce the same pair set
-    on the planted fixture (not just on the driver corpus, where the
-    mega leg is empty)."""
+@pytest.fixture(scope="module")
+def mega_con(mega_dir):
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM read_parquet("
         f"'{os.path.join(mega_dir, 'documents.parquet')}')"
     )
-    got = con.execute(DEDUP_ORACLES["dedup_ngram_jaccard"]).fetchall()
+    yield con
+    con.close()
+
+
+def test_megablock_oracle_agrees(mega_con):
+    """The combined two-leg DuckDB oracle must produce the same pair set
+    on the planted fixture (not just on the sf fixtures, where the
+    mega leg is empty)."""
+    got = mega_con.execute(DEDUP_ORACLES["dedup_ngram_jaccard"]).fetchall()
     assert got == [(11, 211, 1.0)]
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "dedup_clusters",
+        "dedup_keep_best",
+        "curation_soft_dedup_weights",
+        "curation_split_by_family",
+    ],
+)
+def test_megablock_pair_consumers_match_their_oracles(
+    spark, mega_dir, mega_con, key
+):
+    """Keys built on the near-dup pairs see the mega-block pair on both
+    engines: each oracle composes the full dedup_ngram_jaccard oracle."""
+    got = registry.all_queries()[key](spark, mega_dir)
+    assert compare(got, mega_con, registry.all_oracles()[key]) == []

@@ -31,8 +31,11 @@ def test_oracle_parity(spark, con, key):
 
 @pytest.mark.parametrize("key", sorted(set(_QUERIES) - set(_ORACLES)))
 def test_rows_only_runs(spark, key):
-    df = _QUERIES[key](spark, SF_DIR)
-    assert df.count() >= 0
+    """Checked as `tools/driver_sim.py` checks a key without an oracle:
+    collected to pandas and sorted over every column, which raises on
+    cells that do not order (lists, dicts, arrays)."""
+    out = _QUERIES[key](spark, SF_DIR).toPandas()
+    out.sort_values(list(out.columns))
 
 
 def test_entry_smoke(spark):

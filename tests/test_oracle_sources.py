@@ -1,0 +1,58 @@
+"""Each relation the DuckDB oracles share has one SQL definition, held
+next to its Spark twin; every other oracle composes it. A second copy
+can drift from the first without any fixture showing it."""
+
+from __future__ import annotations
+
+from pathlib import Path
+
+import pytest
+
+PKG = Path(__file__).resolve().parent.parent / "hive_2_spark"
+
+# a phrase of each shared definition -> the module that holds it
+_DEFINITIONS = {
+    # ``_DK_NORM`` beside ``_NORM``
+    "regexp_replace(lower(": "llm/dedup.py",
+    # ``_DK_CORPUS`` beside ``corpus_with_dups``
+    "text || ' suffix', lang": "llm/dedup.py",
+    # ``_dk_pairs``: the pair import
+    "SELECT DISTINCT a_id, b_id FROM (": "llm/dedup.py",
+    # ``_dk_neardup_edges_sym`` beside ``neardup_edges_sym``
+    "SELECT b_id AS src, a_id AS dst FROM p": "llm/dedup.py",
+    # ``_DK_COMPONENTS`` beside ``_cc_converge``
+    "JOIN reach r ON": "llm/advanced.py",
+    # ``_DK_SESSIONS`` beside ``sessionized``
+    "SUM(new_s) OVER": "core/events.py",
+    # ``_DK_TRADE_EDGES`` beside ``_edges``
+    "CAST(-l_suppkey AS BIGINT)": "core/graph.py",
+    # ``_DK_WEIGHTED_EDGES`` beside ``_weighted_edges``
+    "CAST(1.0 AS DOUBLE) / deg.deg": "core/graph.py",
+    # ``_dk_plurality`` beside ``_plurality``
+    "ORDER BY c DESC, lbl ASC": "core/graph.py",
+    # ``_dk_walks_start``
+    "PARTITION BY src ORDER BY dst ASC": "core/graph.py",
+}
+
+
+def _sources() -> dict[str, str]:
+    return {
+        str(p.relative_to(PKG)): p.read_text()
+        for p in sorted(PKG.rglob("*.py"))
+    }
+
+
+@pytest.mark.parametrize("phrase", sorted(_DEFINITIONS))
+def test_shared_oracle_relation_defined_once(phrase):
+    hits = {
+        name: text.count(phrase)
+        for name, text in _sources().items()
+        if phrase in text
+    }
+    assert hits == {_DEFINITIONS[phrase]: 1}
+
+
+def test_no_second_neardup_pair_sql():
+    """The near-dup pair copy that lacked the mega-block leg is gone:
+    its users compose the dedup_ngram_jaccard oracle."""
+    assert not [n for n, t in _sources().items() if "_DK_PAIRS" in t]

@@ -233,9 +233,9 @@ def test_sessionize_single_exchange(spark):
 def test_funnel_one_wide_shuffle(spark):
     """Funnel = one hash shuffle on user_id; the final global aggregate
     exchanges only one pre-aggregated row per partition."""
-    from hive_2_spark.core.events import event_funnel
+    from hive_2_spark.core.events import QUERIES
 
-    plan = plan_of(event_funnel(spark, SF_DIR))
+    plan = plan_of(QUERIES["event_funnel"](spark, SF_DIR))
     assert plan.count("hashpartitioning(user_id") == 1, plan
     assert "SinglePartition" in plan
 
@@ -244,9 +244,9 @@ def test_q8_dimensions_broadcast(spark):
     """The 7-way market-share star join must broadcast every dimension
     (part/supplier/customer/nation x2/region) — no SortMergeJoin against a
     broadcast-sized table, no CartesianProduct anywhere."""
-    from hive_2_spark.core.analytics import sql_q8_market_share
+    from hive_2_spark.core.analytics import QUERIES
 
-    plan = plan_of(sql_q8_market_share(spark, SF_DIR))
+    plan = plan_of(QUERIES["sql_q8_market_share"](spark, SF_DIR))
     assert plan.count("BroadcastHashJoin") >= 4, plan
     assert "CartesianProduct" not in plan
 
@@ -255,9 +255,9 @@ def test_q21_decorrelates_to_hash_joins(spark):
     """The double-correlated EXISTS/NOT-EXISTS self-join must compile to
     semi/anti hash joins on l_orderkey — never a nested loop over the
     fact table."""
-    from hive_2_spark.core.analytics import sql_q21_waiting_suppliers
+    from hive_2_spark.core.analytics import QUERIES
 
-    plan = plan_of(sql_q21_waiting_suppliers(spark, SF_DIR))
+    plan = plan_of(QUERIES["sql_q21_waiting_suppliers"](spark, SF_DIR))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "LeftSemi" in plan and "LeftAnti" in plan
@@ -266,9 +266,9 @@ def test_q21_decorrelates_to_hash_joins(spark):
 def test_q20_nested_in_becomes_semi_joins(spark):
     """Both IN levels (supplier IN agg-subquery, partkey IN part-subquery)
     must reduce to semi joins, with the aggregate run once."""
-    from hive_2_spark.core.analytics import sql_q20_volume_suppliers
+    from hive_2_spark.core.analytics import QUERIES
 
-    plan = plan_of(sql_q20_volume_suppliers(spark, SF_DIR))
+    plan = plan_of(QUERIES["sql_q20_volume_suppliers"](spark, SF_DIR))
     assert plan.count("LeftSemi") >= 2
     assert "CartesianProduct" not in plan
 

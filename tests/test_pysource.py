@@ -869,3 +869,52 @@ def test_version_log_names_only_in_claim_and_replay():
 
     visit(tree, "<module>")
     assert owners == {"_publish_cas", "_replay"}
+
+
+_OTHER_CWD_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.session.timeZone", "UTC")
+         .config("spark.ui.enabled", "false").getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
+from hive_2_spark import registry
+for key, build in sorted(registry.all_queries().items()):
+    if "python_datasource" in key:
+        print(key, build(spark, {sf!r}).count(), flush=True)
+spark.stop()
+"""
+
+
+def test_python_datasource_keys_run_from_another_directory(tmp_path):
+    """A Spark application that puts this repository on sys.path but
+    runs from another directory: its Python workers cannot import this
+    package, so every source and sink class must reach them without an
+    import by module name."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         _OTHER_CWD_SCRIPT.format(repo=repo, sf=SF_DIR)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    ran = [line.split()[0] for line in proc.stdout.splitlines()]
+    assert ran == [
+        "read_python_datasource",
+        "read_python_datasource_changes",
+        "read_python_datasource_compacted",
+        "read_python_datasource_pushdown",
+        "read_python_datasource_timetravel",
+        "roundtrip_python_datasource",
+    ], proc.stdout
