@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from hive_2_spark.catalog import load_table
 from hive_2_spark.llm.advanced import ivf_centroids, ivf_invert
 from hive_2_spark.llm.dedup import classify_against_corpus
-from hive_2_spark.llm.similarity import _as_double
+from hive_2_spark.llm.similarity import load_embeddings
 from hive_2_spark.streaming._source import read_stream_table
 from hive_2_spark.streaming.ingest import _gate
 
@@ -86,18 +86,13 @@ def synth_delta(docs: DataFrame) -> DataFrame:
     return fresh.unionByName(exact).unionByName(near)
 
 
-def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings")
-    return e.select("vec_id", _as_double(F.col("embedding")).alias("vec"))
-
-
 def build_initial_state(spark: SparkSession, sf_dir: str, workdir: str):
     """Materialize the existing corpus + its IVF inverted index; return
-    the fixed (c_ids, cmat, cn) centroid model (index refreshes assign
+    the fixed (c_ids, cmat) centroid model (index refreshes assign
     against a FIXED model; periodic retrains are a separate batch job)."""
     corpus = corpus_docs(spark, sf_dir)
     corpus.write.mode("overwrite").parquet(os.path.join(workdir, "corpus"))
-    vecs = _vectors(spark, sf_dir).join(
+    vecs = load_embeddings(spark, sf_dir).join(
         corpus.select(F.col("doc_id").alias("vec_id")), "vec_id"
     )
     cents = ivf_centroids(vecs)
@@ -131,7 +126,7 @@ def apply_update(
     novel_docs = kept.join(novel, "doc_id")
     novel_docs.write.mode("append").parquet(corpus_dir)
 
-    new_vecs = _vectors(spark, sf_dir).join(
+    new_vecs = load_embeddings(spark, sf_dir).join(
         novel.select(F.col("doc_id").alias("vec_id")), "vec_id"
     )
     ivf_invert(new_vecs, *cents).write.mode("append").parquet(inv_dir)

@@ -26,12 +26,11 @@ from pyspark.sql import functions as F
 
 from hive_2_spark.llm.clustering import (
     _seeds,
-    _vectors,
     cluster_mix_report,
     kmeans_converged,
 )
 from hive_2_spark.llm.insights import emb_whiten
-from hive_2_spark.llm.similarity import emb_quantize_int8
+from hive_2_spark.llm.similarity import emb_quantize_int8, load_embeddings
 from hive_2_spark.llm.advanced import dedup_embedding
 from hive_2_spark.session import get_spark
 
@@ -48,7 +47,7 @@ def main() -> None:
     print("vectors dominated by the top direction:", heavy.count())
 
     # 2. fixpoint clustering + mixing report
-    e = _vectors(spark, sf_dir)
+    e = load_embeddings(spark, sf_dir)
     assign, rounds = kmeans_converged(e, _seeds(e))
     print(f"k-means converged in {rounds} rounds")
     mix = cluster_mix_report(spark, sf_dir)

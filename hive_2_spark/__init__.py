@@ -20,4 +20,14 @@ Everything is DataFrame/Catalyst-first; Python UDFs only where built-ins
 genuinely cannot express the semantics (and then Arrow-vectorized).
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+# Spark's Python workers unpickle this package's UDF kernels, data
+# sources and sinks. Pickled by value, they need no import of the
+# package, so they run whatever the workers' working directory and
+# sys.path are.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

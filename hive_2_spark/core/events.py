@@ -1383,7 +1383,9 @@ def _markov_stationary_sql() -> str:
     """Replays every power-iteration round over the same session-
     scoped transition counts (the transitions oracle's CTE chain),
     with the identical uniform start, n/rs double probabilities,
-    final normalization, and 6-decimal rounding."""
+    final normalization, and 6-decimal rounding. ``t`` is MATERIALIZED:
+    every round reads it, and inlined it recomputes the session windows
+    once per round."""
     rounds = "".join(
         f""", pi{k} AS (
   SELECT t.dst_type AS event_type,
@@ -1403,7 +1405,7 @@ WITH {_DK_SESSIONS}, paired AS (
 ), c AS (
   SELECT src_type, dst_type, CAST(COUNT(*) AS BIGINT) AS n
   FROM paired WHERE src_type IS NOT NULL GROUP BY src_type, dst_type
-), t AS (
+), t AS MATERIALIZED (
   SELECT src_type, dst_type, n,
          SUM(n) OVER (PARTITION BY src_type) AS rs
   FROM c

@@ -34,16 +34,8 @@ The JSONL sink (`hive2_jsonl_sink`) keeps a version log, one
 
 from __future__ import annotations
 
-import sys
-
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-# Spark's Python workers unpickle this module's source, reader and
-# writer classes. Pickled by value, they need no import of this package,
-# so they run whatever the workers' working directory and sys.path are.
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 _FORMAT = "hive2_synth"
 _PARTS = 4

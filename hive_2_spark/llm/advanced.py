@@ -26,7 +26,6 @@ clusters, stratified sampling (SURVEY.md §2B op 44 extensions).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -36,10 +35,30 @@ from hive_2_spark.llm.dedup import ORACLES as _DEDUP_ORACLES
 from hive_2_spark.llm.dedup import (
     _DK_CORPUS,
     _DK_NORM,
+    _NORM,
     _dk_neardup_pairs,
     _dk_pairs,
+    corpus_with_dups,
+    dedup_minhash_portable,
+    neardup_pair_index,
 )
-from hive_2_spark.llm.similarity import _as_double, _dot, _norm
+from hive_2_spark.llm.similarity import (
+    _DK_EMB,
+    _DK_QUERIES,
+    TOP_K,
+    _batch_udf,
+    _collect_queries,
+    _cosines,
+    _dk_cos,
+    _dot,
+    _fold_dot,
+    _fold_sq,
+    _matrix,
+    _norm,
+    _round6_half_away,
+    _top_per_query,
+    load_embeddings,
+)
 
 
 # Deterministic hyperplanes for sign-LSH banding: plane p, component i =
@@ -62,9 +81,7 @@ def embeddings_with_twins(spark: SparkSession, sf_dir: str) -> DataFrame:
     at cos ~0.995 — above the 0.95 near-dup bar. Slicing + zip_with is
     exact identical arithmetic on both engines.
     """
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("vec")
-    )
+    e = load_embeddings(spark, sf_dir)
     seeds = e.filter(F.col("vec_id") % 25 == 0)
     shifted = F.concat(F.slice(F.col("vec"), 2, 63), F.slice(F.col("vec"), 1, 1))
     twins = seeds.select(
@@ -147,15 +164,12 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVF_SEED_CAP = 50 * 32
 
 
-def _round6_half_away(a: np.ndarray) -> np.ndarray:
-    """ROUND(x, 6) with half-away-from-zero ties — the DuckDB/Spark SQL
-    ROUND rule (np.round is half-even, which would disagree exactly on
-    the .5e-6 boundaries)."""
-    return np.copysign(np.floor(np.abs(a) * 1e6 + 0.5) / 1e6, a)
+def _ivf_seeds():
+    return (F.col("vec_id") % 50 == 0) & (F.col("vec_id") < _IVF_SEED_CAP)
 
 
 def _nearest_centroid_rows(
-    x: np.ndarray, cmat: np.ndarray, cn: np.ndarray, c_ids: np.ndarray
+    x: np.ndarray, cmat: np.ndarray, c_ids: np.ndarray
 ) -> np.ndarray:
     """Nearest centroid per row of ``x`` under rounded-to-6 cosine —
     the ONE inversion rule shared by sim_ivf_topk's scoring kernel and
@@ -163,32 +177,20 @@ def _nearest_centroid_rows(
     differently than a full rebuild would). argmax returns the FIRST
     max; c_ids ascend, so ties break to the lowest centroid id — the
     oracle's ROW_NUMBER order."""
-    from hive_2_spark.llm.similarity import _fold_dot, _fold_sq
-
-    nx = np.sqrt(_fold_sq(x))
-    ccos = _round6_half_away(_fold_dot(x, cmat) / (nx[:, None] * cn[None, :]))
-    return c_ids[ccos.argmax(axis=1)]
+    return c_ids[_round6_half_away(_cosines(x, cmat)).argmax(axis=1)]
 
 
 def ivf_centroids(e: DataFrame):
     """Deterministic id-seeded IVF centroids from a (vec_id, vec)
-    frame: (c_ids asc, cmat, cn) or None if no seeds. MODEL-sized
+    frame: (c_ids asc, cmat) or None if no seeds. MODEL-sized
     (≤ _IVF_SEED_CAP/50 rows) — safe to collect."""
-    from hive_2_spark.llm.similarity import _fold_sq
-
     crows = sorted(
-        e.filter(
-            (F.col("vec_id") % 50 == 0) & (F.col("vec_id") < _IVF_SEED_CAP)
-        )
-        .select("vec_id", "vec")
-        .collect(),
+        e.filter(_ivf_seeds()).select("vec_id", "vec").collect(),
         key=lambda r: r.vec_id,
     )
     if not crows:
         return None
-    c_ids = np.array([r.vec_id for r in crows], dtype=np.int64)
-    cmat = np.array([list(r.vec) for r in crows], dtype=np.float64)
-    return c_ids, cmat, np.sqrt(_fold_sq(cmat))
+    return np.array([r.vec_id for r in crows], dtype=np.int64), _matrix(crows)
 
 
 _PQ_SUB = 8      # subspaces (64-dim -> 8 slices of 8)
@@ -219,30 +221,15 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     distances, so generic top-k recall is uninformative; production PQ
     shortlists then exactly re-ranks); THIS key's oracle proves the
     pipeline (encode, LUT, ADC rank) is computed exactly as specified.
+    Queries and codebook seeds ride one collect.
     """
-    from hive_2_spark.llm.similarity import (
-        _collect_queries,
-        _fold_dot,
-        _fold_sq,
-    )
-
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "vec", _as_double(F.col("embedding"))
-    )
-    qq = _collect_queries(e)
-    if qq is None:
+    e = load_embeddings(spark, sf_dir)
+    model = _collect_queries(e, _ivf_seeds())
+    if model is None:
         return spark.createDataFrame(
             [], "q_id long, vec_id long, adc double, rk long"
         )
-    qmat, _qn = qq
-    cents = ivf_centroids(e)
-    if cents is None:  # corpus has rows but none match the seed predicate
-        raise ValueError(
-            "sim_pq_topk: no PQ codebook seeds (vec_id % 50 == 0 below "
-            f"{_IVF_SEED_CAP}) in a non-empty corpus — widen the seed "
-            "predicate or train real centroids"
-        )
-    c_ids, cmat, _cn = cents
+    qmat, _c_ids, cmat = model
     # codebooks[s]: (32, 8) slice s of each seed vector
     books = [
         cmat[:, s * _PQ_DIMS : (s + 1) * _PQ_DIMS] for s in range(_PQ_SUB)
@@ -269,41 +256,32 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for q in range(qmat.shape[0])
         ]
     )  # (n_q, 8, 32)
-    n_q = qmat.shape[0]
 
-    @F.pandas_udf("adc_all array<double>")
-    def encode_score(vec: pd.Series) -> pd.DataFrame:
-        if len(vec) == 0:
-            return pd.DataFrame({"adc_all": pd.Series([], dtype=object)})
-        x = np.vstack(vec.to_numpy()).astype(np.float64)
-        adc = np.zeros((x.shape[0], n_q), dtype=np.float64)
+    @_batch_udf("array<double>")
+    def adc_all(x):
+        adc = np.zeros((x.shape[0], qmat.shape[0]), dtype=np.float64)
         for s in range(_PQ_SUB):
             d2 = _sub_d2(x[:, s * _PQ_DIMS : (s + 1) * _PQ_DIMS], s)
             codes = d2.argmin(axis=1)  # first min = lowest codeword id
             # gather the rounded per-subspace term for every query
             adc += lut[:, s, :][:, codes].T
-        return pd.DataFrame({"adc_all": list(adc)})
+        return adc
 
-    scored = e.withColumn("s", encode_score("vec")).select(
-        "vec_id", F.col("s.adc_all").alias("adc_all")
-    )
-    pairs = scored.select(
-        "vec_id", F.posexplode("adc_all").alias("q_id", "adc_raw")
+    pairs = e.select(
+        "vec_id", F.posexplode(adc_all("vec")).alias("q_id", "adc_raw")
     ).filter(F.col("vec_id") != F.col("q_id"))
-    w = W.partitionBy("q_id").orderBy(F.col("adc").asc(), F.col("vec_id").asc())
-    return (
+    adc = F.floor(F.col("adc_raw") * 10000.0 + 0.5) / 10000.0
+    return _top_per_query(
         pairs.select(
-            F.col("q_id").cast("long").alias("q_id"),
-            "vec_id",
-            (F.floor(F.col("adc_raw") * 10000.0 + 0.5) / 10000.0).alias("adc"),
-        )
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 5)
-        .select("q_id", "vec_id", "adc", "rk")
-    )
+            F.col("q_id").cast("long").alias("q_id"), "vec_id", adc.alias("adc")
+        ),
+        TOP_K,
+        "adc",
+        ascending=True,
+    ).select("q_id", "vec_id", "adc", "rk")
 
 
-def ivf_invert(e: DataFrame, c_ids, cmat, cn) -> DataFrame:
+def ivf_invert(e: DataFrame, c_ids, cmat) -> DataFrame:
     """(vec_id, c_id) nearest-centroid inverted list for a (vec_id,
     vec) frame against FIXED centroids — the index-refresh primitive:
     run it over just a delta and union with the existing inverted list;
@@ -311,12 +289,9 @@ def ivf_invert(e: DataFrame, c_ids, cmat, cn) -> DataFrame:
     full rebuild over corpus+delta (tested in
     tests/test_corpus_update_pipeline.py)."""
 
-    @F.pandas_udf("bigint")
-    def nearest(vec: pd.Series) -> pd.Series:
-        if len(vec) == 0:
-            return pd.Series([], dtype="int64")
-        x = np.vstack(vec.to_numpy()).astype(np.float64)
-        return pd.Series(_nearest_centroid_rows(x, cmat, cn, c_ids))
+    @_batch_udf("bigint")
+    def nearest(x):
+        return _nearest_centroid_rows(x, cmat, c_ids)
 
     return e.select("vec_id", nearest("vec").alias("c_id"))
 
@@ -331,69 +306,24 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank are all deterministic, so DuckDB replays the whole search
     (fold-order dot products — identical bits, identical rank order).
     """
-    from hive_2_spark.llm.similarity import N_QUERIES, _fold_dot, _fold_sq
-
     n_probe = 3
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "vec", _as_double(F.col("embedding"))
-    )
+    e = load_embeddings(spark, sf_dir)
     # Index + query state are MODEL-sized (32 x 64 and 3 x 64 doubles);
-    # both ride to the driver once and back into ONE Arrow kernel pass —
-    # the k-means/similarity pattern. The previous shape scored every
-    # corpus row against all centroids through interpreted JVM HOF folds
-    # over an n x 32 crossJoin plus a rank window (the measured-15x
-    # trap); now the corpus pays one mapInArrow-style scan and only
-    # (vec_id, c_id, 3 cosines) reaches the probe join. Queries and
-    # centroid seeds ride ONE collect (disjunctive filter, split
-    # driver-side) — the same rows `_collect_queries` + `ivf_centroids`
-    # fetched with two scan jobs, same validation and errors.
-    seed_pred = (F.col("vec_id") % 50 == 0) & (
-        F.col("vec_id") < _IVF_SEED_CAP
-    )
-    both = (
-        e.filter((F.col("vec_id") < N_QUERIES) | seed_pred)
-        .select("vec_id", "vec")
-        .collect()
-    )
-    qrows = sorted(
-        (r for r in both if r.vec_id < N_QUERIES), key=lambda r: r.vec_id
-    )
-    if not qrows and e.isEmpty():  # empty corpus -> empty result
+    # both ride to the driver in one collect and back into ONE Arrow
+    # kernel pass — the k-means/similarity pattern. The corpus pays one
+    # scan and only (vec_id, c_id, 3 cosines) reaches the probe join.
+    model = _collect_queries(e, _ivf_seeds())
+    if model is None:  # empty corpus -> empty result
         return spark.createDataFrame(
             [], "q_id long, vec_id long, cos double, rk long"
         )
-    if [r.vec_id for r in qrows] != list(range(N_QUERIES)):
-        raise ValueError(
-            f"query set must be vec_ids 0..{N_QUERIES - 1}, got "
-            f"{[r.vec_id for r in qrows]}"
-        )
-    qmat = np.array([list(r.vec) for r in qrows], dtype=np.float64)
-    qn = np.sqrt(_fold_sq(qmat))
-    crows = sorted(
-        (
-            r
-            for r in both
-            if r.vec_id % 50 == 0 and r.vec_id < _IVF_SEED_CAP
-        ),
-        key=lambda r: r.vec_id,
-    )
-    if not crows:  # corpus has rows but none match the seed predicate
-        raise ValueError(
-            "sim_ivf_topk: no IVF seeds (vec_id % 50 == 0 below "
-            f"{_IVF_SEED_CAP}) in a non-empty corpus — widen the seed "
-            "predicate or train real centroids"
-        )
-    c_ids = np.array([r.vec_id for r in crows], dtype=np.int64)
-    cmat = np.array([list(r.vec) for r in crows], dtype=np.float64)
-    cn = np.sqrt(_fold_sq(cmat))
+    qmat, c_ids, cmat = model
 
     # probe selection: 3 queries x 32 centroids, exact driver-side math
     # with the same fold order and the oracle's (cos desc, c_id asc)
     # order. Rounded to 6 before ranking (like the oracle) so the order
     # is robust to either engine changing its summation order.
-    qcos = _round6_half_away(
-        _fold_dot(qmat, cmat) / (qn[:, None] * cn[None, :])
-    )
+    qcos = _round6_half_away(_cosines(qmat, cmat))
     probe_pairs = [
         (int(q_id), int(c_ids[j]))
         for q_id in range(qmat.shape[0])
@@ -403,22 +333,14 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     probes = spark.createDataFrame(probe_pairs, "q_id long, c_id long")
 
-    @F.pandas_udf("c_id bigint, cos_all array<double>")
-    def score(vec: pd.Series) -> pd.DataFrame:
-        if len(vec) == 0:
-            return pd.DataFrame(
-                {
-                    "c_id": pd.Series([], dtype="int64"),
-                    "cos_all": pd.Series([], dtype=object),
-                }
-            )
-        x = np.vstack(vec.to_numpy()).astype(np.float64)
-        nx = np.sqrt(_fold_sq(x))
+    @_batch_udf({"c_id": "bigint", "cos_all": "array<double>"})
+    def score(x):
         # rounded-to-6 inversion shared with ivf_invert (matches the
         # oracle's ROUND(...) rank)
-        nearest = _nearest_centroid_rows(x, cmat, cn, c_ids)
-        qcos_rows = _fold_dot(x, qmat) / (nx[:, None] * qn[None, :])
-        return pd.DataFrame({"c_id": nearest, "cos_all": list(qcos_rows)})
+        return {
+            "c_id": _nearest_centroid_rows(x, cmat, c_ids),
+            "cos_all": _cosines(x, qmat),
+        }
 
     inverted = e.withColumn("s", score("vec")).select(
         "vec_id", F.col("s.c_id").alias("c_id"), F.col("s.cos_all").alias("cos_all")
@@ -427,12 +349,8 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id") != F.col("q_id")
     )
     cos = F.element_at(F.col("cos_all"), (F.col("q_id") + 1).cast("int"))
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        cands.withColumn("cos", F.round(cos, 6))
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 5)
-        .select("q_id", "vec_id", "cos", "rk")
+    return _top_per_query(cands.withColumn("cos", F.round(cos, 6)), TOP_K).select(
+        "q_id", "vec_id", "cos", "rk"
     )
 
 
@@ -514,8 +432,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each node labeled with its component's min doc_id) for ANY chain
     length — matching the recursive-CTE oracle by construction.
     """
-    from hive_2_spark.llm.dedup import neardup_pair_index
-
     pairs = neardup_pair_index(spark, sf_dir)
     edges = pairs.unionByName(
         pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
@@ -551,8 +467,6 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant. Twins are synthesized by appending ' zq x' to every 15th
     doc's normalized text (edit distance exactly 5).
     """
-    from hive_2_spark.llm.dedup import _NORM
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     base = d.select("doc_id", "lang", _NORM(F.col("text")).alias("norm"))
     twins = base.filter(F.col("doc_id") % 15 == 0).select(
@@ -565,8 +479,6 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("blk", F.md5(F.substring("norm", 1, 32)))
         .withColumn("head", F.substring("norm", 1, _LEV_PREFIX))
     )
-    from pyspark.sql import Window as W
-
     c = c.withColumn(
         "blk_n", F.count(F.lit(1)).over(W.partitionBy("blk", "lang"))
     ).filter(F.col("blk_n") <= _LEV_BLOCK_CAP)
@@ -606,8 +518,6 @@ def dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached pairs instead of re-running the signature pipeline; the loop
     runs to FIXPOINT (``_cc_converge``) so LSH chains longer than any
     fixed unroll still agree with the exact-CC recursive-CTE oracle."""
-    from hive_2_spark.llm.dedup import dedup_minhash_portable
-
     pairs = dedup_minhash_portable(spark, sf_dir).localCheckpoint()
     edges = pairs.unionByName(
         pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
@@ -624,8 +534,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composes `dedup_clusters` with a per-cluster argmax; the join and
     window are cluster-keyed (clusters are tiny by construction, so no
     skew). Output: cluster, kept_doc_id, n_members."""
-    from hive_2_spark.llm.dedup import corpus_with_dups
-
     clusters = dedup_clusters(spark, sf_dir)
     corpus = corpus_with_dups(spark, sf_dir).select(
         "doc_id", F.length("text").alias("len")
@@ -658,15 +566,6 @@ QUERIES = {
     "dedup_clusters_lsh": dedup_clusters_lsh,
 }
 
-_DK_VEC = "list_transform({c}, x -> CAST(x AS DOUBLE))"
-
-
-def _dk_cos(a: str, b: str) -> str:
-    return (
-        f"list_dot_product({a}, {b}) / "
-        f"(SQRT(list_dot_product({a}, {a})) * SQRT(list_dot_product({b}, {b})))"
-    )
-
 
 def _dk_plane(p: int) -> str:
     """DuckDB mirror of _plane(p) — every step forced to DOUBLE so the
@@ -684,10 +583,10 @@ _DK_BITS = " + ".join(
     for p in range(_N_PLANES)
 )
 
-_DK_EMB_COS = (
-    "list_dot_product(a.a_vec, b.b_vec) / "
-    "(SQRT(list_dot_product(a.a_vec, a.a_vec)) * "
-    "SQRT(list_dot_product(b.b_vec, b.b_vec)))"
+# DuckDB twin of ``_ivf_seeds``: the IVF centroids and PQ codebook seeds
+_DK_IVF_SEEDS = (
+    "cents AS (SELECT vec_id AS c_id, vec AS c_vec FROM e "
+    f"WHERE vec_id % 50 = 0 AND vec_id < {_IVF_SEED_CAP})"
 )
 
 ORACLES = {
@@ -700,38 +599,29 @@ ORACLES = {
     # pairwise change there would otherwise flip near-tie ranks);
     # rounding-induced ties break identically by id on both engines.
     "sim_ivf_topk": f"""
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE))
-           AS vec FROM embeddings),
-cents AS (SELECT vec_id AS c_id, vec AS c_vec FROM e
-          WHERE vec_id % 50 = 0 AND vec_id < {_IVF_SEED_CAP}),
+WITH {_DK_EMB},
+{_DK_IVF_SEEDS},
 inv AS (
   SELECT vec_id, vec, c_id FROM (
     SELECT e.vec_id, e.vec, c.c_id,
            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-             ROUND(list_dot_product(e.vec, c.c_vec) /
-               (SQRT(list_dot_product(e.vec, e.vec)) *
-                SQRT(list_dot_product(c.c_vec, c.c_vec))), 6) DESC,
+             ROUND({_dk_cos('e.vec', 'c.c_vec')}, 6) DESC,
              c.c_id ASC) AS c_rk
     FROM e CROSS JOIN cents c
   ) WHERE c_rk <= 1
 ),
-q AS (SELECT vec_id AS q_id, vec AS q_vec FROM e WHERE vec_id < 3),
+{_DK_QUERIES},
 probes AS (
   SELECT q_id, q_vec, c_id FROM (
     SELECT q.q_id, q.q_vec, c.c_id,
            ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
-             ROUND(list_dot_product(q.q_vec, c.c_vec) /
-               (SQRT(list_dot_product(q.q_vec, q.q_vec)) *
-                SQRT(list_dot_product(c.c_vec, c.c_vec))), 6) DESC,
+             ROUND({_dk_cos('q.q_vec', 'c.c_vec')}, 6) DESC,
              c.c_id ASC) AS c_rk
     FROM q CROSS JOIN cents c
   ) WHERE c_rk <= 3
 ),
 cands AS (
-  SELECT p.q_id, i.vec_id,
-         ROUND(list_dot_product(i.vec, p.q_vec) /
-           (SQRT(list_dot_product(i.vec, i.vec)) *
-            SQRT(list_dot_product(p.q_vec, p.q_vec))), 6) AS cos
+  SELECT p.q_id, i.vec_id, ROUND({_dk_cos('i.vec', 'p.q_vec')}, 6) AS cos
   FROM inv i JOIN probes p USING (c_id)
   WHERE i.vec_id != p.q_id
 )
@@ -747,10 +637,8 @@ SELECT q_id, vec_id, cos, CAST(rk AS BIGINT) AS rk FROM (
     # sum (list_reduce over s-ordered list == numpy's ascending
     # accumulation), floor-round to 4 for the rank.
     "sim_pq_topk": f"""
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE))
-           AS vec FROM embeddings),
-seeds AS (SELECT vec_id AS c_id, vec AS c_vec FROM e
-          WHERE vec_id % 50 = 0 AND vec_id < {_IVF_SEED_CAP}),
+WITH {_DK_EMB},
+{_DK_IVF_SEEDS},
 sub AS (
   SELECT e.vec_id, s.s, sd.c_id,
          ROUND(
@@ -764,7 +652,7 @@ sub AS (
                list_slice(sd.c_vec, s.s * 8 + 1, s.s * 8 + 8)), 6) AS d2
   FROM e
   CROSS JOIN (SELECT unnest(range(0, {_PQ_SUB})) AS s) s
-  CROSS JOIN seeds sd
+  CROSS JOIN cents sd
 ),
 codes AS (
   SELECT vec_id, s, c_id FROM (
@@ -807,14 +695,13 @@ SELECT q_id, vec_id, adc, CAST(rk AS BIGINT) AS rk FROM (
         "WHERE a.blk_n <= 100 AND levenshtein(a.head, b.head) <= 5"
     ),
     "dedup_embedding": (
-        "WITH base AS (SELECT vec_id, label, "
-        f"{_DK_VEC.format(c='embedding')} AS vec FROM embeddings), "
+        f"WITH {_DK_EMB}, "
         "tw AS (SELECT vec_id + 1000000 AS vec_id, label, "
         "list_transform(list_zip(vec, list_concat(vec[2:], vec[1:1])), "
         "s -> s[1] + 0.1::DOUBLE * s[2]) AS vec "
-        "FROM base WHERE vec_id % 25 = 0), "
-        "e AS (SELECT * FROM base UNION ALL SELECT * FROM tw), "
-        f"bitted AS (SELECT vec_id, label, vec, {_DK_BITS} AS bits FROM e), "
+        "FROM e WHERE vec_id % 25 = 0), "
+        "u AS (SELECT * FROM e UNION ALL SELECT * FROM tw), "
+        f"bitted AS (SELECT vec_id, label, vec, {_DK_BITS} AS bits FROM u), "
         "banded AS (SELECT vec_id, label, vec, g.band_id, "
         f"(bits >> (g.band_id * {_BAND_BITS})) & {(1 << _BAND_BITS) - 1} "
         "AS band_val FROM bitted "
@@ -823,10 +710,11 @@ SELECT q_id, vec_id, adc, CAST(rk AS BIGINT) AS rk FROM (
         "FROM banded), "
         "b AS (SELECT label, band_id, band_val, vec_id AS b_id, vec AS b_vec "
         "FROM banded) "
-        f"SELECT DISTINCT a.label, a_id, b_id, ROUND({_DK_EMB_COS}, 6) AS cos "
+        "SELECT DISTINCT a.label, a_id, b_id, "
+        f"ROUND({_dk_cos('a.a_vec', 'b.b_vec')}, 6) AS cos "
         "FROM a JOIN b ON a.label = b.label AND a.band_id = b.band_id "
         "AND a.band_val = b.band_val AND a_id < b_id "
-        f"WHERE ROUND({_DK_EMB_COS}, 6) >= 0.95"
+        f"WHERE ROUND({_dk_cos('a.a_vec', 'b.b_vec')}, 6) >= 0.95"
     ),
     "dedup_clusters": (
         f"WITH RECURSIVE {_dk_neardup_pairs()}, "

@@ -31,13 +31,11 @@ distances, far inside the final ROUND(4).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from hive_2_spark.catalog import load_table
 from hive_2_spark.core.fixpoint import fixpoint
-from hive_2_spark.llm.similarity import _as_double
+from hive_2_spark.llm.similarity import _DK_VEC, _batch_udf, load_embeddings
 
 _SEED_MOD = 64  # seed ids are multiples of 64 ...
 _SEED_CAP = _SEED_MOD * 8  # ... below 512 -> EXACTLY k=8 at ANY scale
@@ -58,12 +56,6 @@ def _seeds(e: DataFrame) -> DataFrame:
     return e.filter(
         (F.col("vec_id") % _SEED_MOD == 0) & (F.col("vec_id") < _SEED_CAP)
     ).select(F.col("vec_id").alias("c_id"), F.col("vec").alias("c_vec"))
-
-
-def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("vec")
-    )
 
 
 def _assign(e: DataFrame, cents: DataFrame) -> DataFrame:
@@ -98,7 +90,7 @@ def _assign(e: DataFrame, cents: DataFrame) -> DataFrame:
     rows = sorted(cents.collect(), key=lambda r: r.c_id)
     if not rows and not e.isEmpty():
         # Empty corpus + empty model is a legitimate empty result (the
-        # UDF's zero-length early-return covers it). A NON-empty corpus
+        # batch wrapper never calls the kernel on it). A NON-empty corpus
         # whose vec_ids all miss the seed predicate would otherwise
         # surface as an opaque Arrow length-mismatch deep in the task —
         # raise the descriptive error here instead.
@@ -111,16 +103,8 @@ def _assign(e: DataFrame, cents: DataFrame) -> DataFrame:
     c_ids = np.array([r.c_id for r in rows], dtype=np.int64)
     cmat = np.array([list(r.c_vec) for r in rows], dtype=np.float64)
 
-    @F.pandas_udf("cluster bigint, d2 double")
-    def nearest(vec: pd.Series) -> pd.DataFrame:
-        if len(vec) == 0 or len(c_ids) == 0:
-            return pd.DataFrame(
-                {
-                    "cluster": pd.Series([], dtype="int64"),
-                    "d2": pd.Series([], dtype="float64"),
-                }
-            )
-        x = np.vstack(vec.to_numpy()).astype(np.float64)
+    @_batch_udf({"cluster": "bigint", "d2": "double"})
+    def nearest(x):
         # ||x-c||^2 = ||x||^2 + ||c||^2 - 2<x,c> via matmul: peak memory
         # is the n x k result, NOT an n x k x dim difference tensor —
         # the tensor form allocates batch*k*dim doubles and crashes
@@ -135,12 +119,7 @@ def _assign(e: DataFrame, cents: DataFrame) -> DataFrame:
             0.0,
         )
         idx = d2.argmin(axis=1)
-        return pd.DataFrame(
-            {
-                "cluster": c_ids[idx],
-                "d2": d2[np.arange(len(idx)), idx],
-            }
-        )
+        return {"cluster": c_ids[idx], "d2": d2[np.arange(len(idx)), idx]}
 
     return e.withColumn("best", nearest("vec")).select(
         "vec_id",
@@ -164,7 +143,7 @@ def _recenter(assign: DataFrame) -> DataFrame:
 
 
 def _final_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _vectors(spark, sf_dir)
+    e = load_embeddings(spark, sf_dir)
     cents = _seeds(e)
     assign = _assign(e, cents)
     for _ in range(_ITERATIONS - 1):
@@ -222,7 +201,7 @@ def cluster_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the data-dependent round count is replayed, not assumed.
     Fixpoint accuracy on planted blobs is additionally gated in
     tests/test_clustering.py."""
-    e = _vectors(spark, sf_dir)
+    e = load_embeddings(spark, sf_dir)
     assign, _rounds = kmeans_converged(e, _seeds(e))
     return assign.select(
         "vec_id", F.col("cluster").cast("bigint").alias("cluster")
@@ -263,7 +242,7 @@ QUERIES = {
 # are unnamed; list_sum matches the Spark-side aggregate fold order.
 _KMEANS_CTE = (
     "v AS (SELECT vec_id, label, "
-    "  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec "
+    f"  {_DK_VEC.format(c='embedding')} AS vec "
     "  FROM embeddings), "
     "c0 AS (SELECT vec_id AS c_id, vec AS c_vec FROM v "
     f"  WHERE vec_id % {_SEED_MOD} = 0 AND vec_id < {_SEED_CAP}), "
@@ -329,7 +308,7 @@ def _kmeans_converged_sql() -> str:
     )
     return (
         "WITH v AS MATERIALIZED (SELECT vec_id, "
-        "  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec "
+        f"  {_DK_VEC.format(c='embedding')} AS vec "
         "  FROM embeddings), "
         "c0 AS (SELECT vec_id AS c_id, vec AS c_vec FROM v "
         f"  WHERE vec_id % {_SEED_MOD} = 0 AND vec_id < {_SEED_CAP}), "

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
-from hive_2_spark.llm.similarity import _as_double
+from hive_2_spark.llm.similarity import _DK_EMB, _dot, load_embeddings
 
 _POWER_STEPS = 2
 
@@ -64,9 +64,7 @@ def quality_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _direction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row frame holding the power-iterated unit direction."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("vec")
-    )
+    e = load_embeddings(spark, sf_dir)
     v = e.filter(F.col("vec_id") == 0).select(F.col("vec").alias("v"))
 
     def _unit(col):
@@ -82,12 +80,7 @@ def _direction(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = v.select(_unit(F.col("v")).alias("v"))
     for _ in range(_POWER_STEPS):
         scored = e.crossJoin(F.broadcast(v)).select(
-            F.aggregate(
-                F.zip_with(F.col("vec"), F.col("v"), lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("s"),
-            "vec",
+            _dot(F.col("vec"), F.col("v")).alias("s"), "vec"
         )
         sums = (
             scored.select(F.posexplode("vec").alias("dim", "elem"), "s")
@@ -134,18 +127,8 @@ def emb_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel pattern of ``llm.clustering._assign``). No materialized
     64-wide output column, so the report stays hash-stable scalars.
     """
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("vec")
-    )
+    e = load_embeddings(spark, sf_dir)
     v = _direction(spark, sf_dir)
-
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     proj = _dot(F.col("vec"), F.col("v"))
     self_dot = _dot(F.col("vec"), F.col("vec"))
     return (
@@ -169,9 +152,7 @@ QUERIES = {
 }
 
 _POWER_CTE = (
-    "e AS (SELECT vec_id, "
-    "  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec "
-    "  FROM embeddings), "
+    f"{_DK_EMB}, "
     "v0r AS (SELECT vec AS v FROM e WHERE vec_id = 0), "
     "v0 AS (SELECT list_transform(v, x -> x / sqrt(list_sum("
     "  list_transform(v, y -> y * y)))) AS v FROM v0r), "

@@ -1,25 +1,28 @@
-"""Similarity search over the `embeddings` table (SURVEY.md §2B op 44).
+"""Similarity search over the `embeddings` table (SURVEY.md §2B op 44),
+and the one home of the pieces every vector key shares.
 
-- ``sim_cosine_topk``: brute-force cosine top-k — the correctness
-  baseline. The query set is model state (3 x 64 doubles) closed over
-  by an Arrow/NumPy Pandas-UDF kernel that scores each batch against
-  all queries at once — the k-means kernel pattern; interpreted
-  ``aggregate``/``zip_with`` HOFs measured ~15x slower per fold at
-  scale. Top-k per query via window over (q_id, vec_id, cos) triples.
-- ``sim_cosine_lsh``: the scale path — random-hyperplane (sign-LSH)
-  bucketing: 12 deterministic hyperplanes -> 12-bit bucket; candidates
-  share a bucket, exact cosine re-ranks inside the bucket. Plane dots
-  and query cosines come from the same one-pass Arrow kernel; at
-  100 TB the bucket join replaces the full cross product and carries
-  no vectors. Oracle-checked since round 4: DuckDB replays the
-  sin() hyperplanes (see the tolerance note in ORACLES).
-- ``sim_pairwise_label``: average intra- vs inter-label cosine on a
-  sampled pair set (oracle-checkable demo of vector math at set scale).
+Keys: ``sim_cosine_topk`` (exact brute-force top-5, the baseline),
+``sim_cosine_lsh`` (sign-LSH buckets), ``sim_mrl_topk`` (prefix
+coarse-to-fine), ``retrieval_mmr`` (diversified top-5),
+``sim_maxsim_topk`` (multi-vector late interaction),
+``sim_pairwise_label`` (intra- vs inter-label cosine),
+``emb_normalize`` and ``emb_quantize_int8`` (embedding prep).
 
-All float math is promoted to double BEFORE any arithmetic, and the
-accumulation order (array order) is identical in Spark and DuckDB, so
-dot products are bit-exact across engines; only values derived from
-them with division are rounded.
+Shared pieces, imported by ``llm.advanced``, ``llm.clustering``,
+``llm.insights`` and ``streaming.serving``:
+
+- ``load_embeddings`` / ``_vectors``: (vec_id, label, vec) with the
+  float vector promoted to double BEFORE any arithmetic;
+- ``_fold_dot``, ``_fold_sq``, ``_cosines``, ``_round6_half_away``: the
+  NumPy kernels, accumulated in array order so every value is
+  bit-identical to the JVM fold and the DuckDB oracle;
+- ``_batch_udf``: the Arrow batch wrapper (empty batch, ndarray <->
+  pandas), so each kernel body is only its NumPy math;
+- ``_query_pairs``: rounded cosines of every row against the query set;
+- ``_top_per_query``: the per-query rank cut;
+- ``_collect_queries``: the model-row collect and its validation;
+- ``_DK_VEC``, ``_dk_cos``, ``_DK_EMB``, ``_DK_QUERIES``: their DuckDB
+  twins, composed by every vector oracle.
 """
 
 from __future__ import annotations
@@ -28,7 +31,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
@@ -37,8 +40,17 @@ TOP_K = 5
 N_QUERIES = 3  # vec_id 0..2 serve as the query set
 
 
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
+def _vectors(t: DataFrame) -> DataFrame:
+    """(vec_id, label, vec) of an embeddings frame, batch or stream."""
+    return t.select(
+        "vec_id",
+        "label",
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("vec"),
+    )
+
+
+def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _vectors(load_table(spark, sf_dir, "embeddings"))
 
 
 def _fold_dot(X: np.ndarray, Q: np.ndarray) -> np.ndarray:
@@ -62,27 +74,129 @@ def _fold_sq(X: np.ndarray) -> np.ndarray:
     return acc
 
 
-def _collect_queries(e: DataFrame) -> tuple[np.ndarray, np.ndarray] | None:
-    """Collect the N_QUERIES query vectors (model-state-sized, like the
-    k-means centroids) and their fold-order norms; row i == q_id i.
+def _cosines(X: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """(n, m) cosines between the rows of X and of Q, fold order."""
+    nx, nq = np.sqrt(_fold_sq(X)), np.sqrt(_fold_sq(Q))
+    return _fold_dot(X, Q) / (nx[:, None] * nq[None, :])
+
+
+def _round6_half_away(a: np.ndarray) -> np.ndarray:
+    """ROUND(x, 6) with half-away-from-zero ties — the DuckDB/Spark SQL
+    ROUND rule (np.round is half-even, which would disagree exactly on
+    the .5e-6 boundaries)."""
+    return np.copysign(np.floor(np.abs(a) * 1e6 + 0.5) / 1e6, a)
+
+
+def _matrix(rows) -> np.ndarray:
+    return np.array([list(r.vec) for r in rows], dtype=np.float64)
+
+
+def _batch_udf(returns: str | dict[str, str]):
+    """Decorator: a scalar Arrow UDF over a vector column whose kernel
+    is NumPy only. The kernel gets each batch as an (n, dim) float64
+    matrix and returns an array, or for a struct (``returns`` a
+    {field: type} dict) a dict of arrays; a 2-D array becomes one
+    array<double> per row. Empty batches never reach the kernel."""
+
+    def cells(a):  # a 2-D result is one array<double> per row
+        return list(a) if np.ndim(a) == 2 else a
+
+    def wrap(kernel):
+        def run(vec: pd.Series):
+            return kernel(np.vstack(vec.to_numpy()).astype(np.float64))
+
+        if isinstance(returns, dict):
+            def udf(vec: pd.Series) -> pd.DataFrame:
+                if len(vec) == 0:
+                    return pd.DataFrame(dict.fromkeys(returns, []))
+                return pd.DataFrame({k: cells(a) for k, a in run(vec).items()})
+
+            ddl = ", ".join(f"{k} {t}" for k, t in returns.items())
+        else:
+            def udf(vec: pd.Series) -> pd.Series:
+                return pd.Series(cells(run(vec)) if len(vec) else [])
+
+            ddl = returns
+        udf.__name__ = kernel.__name__  # the name plans show
+        return F.pandas_udf(udf, ddl)
+
+    return wrap
+
+
+def _collect_queries(e: DataFrame, seeds: Column | None = None):
+    """Collect the N_QUERIES query vectors (MODEL-state-sized, like the
+    k-means centroids) as a matrix whose row i is q_id i. Given a
+    ``seeds`` predicate, the same job also fetches the seed vectors:
+    returns (qmat, seed ids ascending, seed matrix).
 
     Returns None for an EMPTY corpus (the routine empty-input case —
-    callers build an empty result with the right schema); raises only
-    when a non-empty corpus is missing its query ids, which would
-    otherwise surface as silently-wrong scores."""
+    callers build an empty result with the right schema); raises when a
+    non-empty corpus is missing its query ids or has no seed, which
+    would otherwise surface as silently-wrong scores."""
+    is_seed = F.lit(False) if seeds is None else seeds
     rows = sorted(
-        e.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "vec").collect(),
+        e.filter((F.col("vec_id") < N_QUERIES) | is_seed)
+        .select("vec_id", "vec", is_seed.alias("seed"))
+        .collect(),
         key=lambda r: r.vec_id,
     )
-    if not rows and e.isEmpty():
+    qrows = [r for r in rows if r.vec_id < N_QUERIES]
+    if not qrows and e.isEmpty():
         return None
-    if [r.vec_id for r in rows] != list(range(N_QUERIES)):
+    if [r.vec_id for r in qrows] != list(range(N_QUERIES)):
         raise ValueError(
             f"query set must be vec_ids 0..{N_QUERIES - 1}, got "
-            f"{[r.vec_id for r in rows]}"
+            f"{[r.vec_id for r in qrows]}"
         )
-    qmat = np.array([list(r.vec) for r in rows], dtype=np.float64)
-    return qmat, np.sqrt(_fold_sq(qmat))
+    if seeds is None:
+        return _matrix(qrows)
+    srows = [r for r in rows if r.seed]
+    if not srows:
+        raise ValueError(
+            f"no seed vector ({seeds}) in a non-empty corpus — widen the "
+            "seed predicate or train real centroids"
+        )
+    ids = np.array([r.vec_id for r in srows], dtype=np.int64)
+    return _matrix(qrows), ids, _matrix(srows)
+
+
+def _query_pairs(e: DataFrame, qmat: np.ndarray) -> DataFrame:
+    """(q_id, vec_id, cos): every row's ROUND(,6) cosine against every
+    query over the first ``qmat.shape[1]`` dims, self pairs dropped.
+
+    The query matrix is closed over by one Arrow kernel that scores a
+    batch against ALL queries at once; the corpus never joins — each
+    row emits N_QUERIES (q_pos, cos) pairs via posexplode, and only
+    those 24-byte triples reach a rank window. q_pos == q_id because
+    the query set is exactly vec_ids 0..2 (asserted in
+    ``_collect_queries``)."""
+    dim = qmat.shape[1]
+
+    @_batch_udf("array<double>")
+    def cos_all(x):
+        return _cosines(x[:, :dim], qmat)
+
+    scored = e.select(
+        "vec_id", F.posexplode(cos_all("vec")).alias("q_pos", "cos_raw")
+    )
+    return scored.filter(F.col("vec_id") != F.col("q_pos")).select(
+        F.col("q_pos").cast("long").alias("q_id"),
+        "vec_id",
+        F.round(F.col("cos_raw"), 6).alias("cos"),
+    )
+
+
+def _top_per_query(
+    pairs: DataFrame, k: int, score: str = "cos", ascending: bool = False
+) -> DataFrame:
+    """The first ``k`` rows of each q_id by ``score`` (descending, or
+    ascending for a distance), ties to the lower vec_id, ranked in
+    ``rk`` — the rank window Catalyst rewrites to WindowGroupLimit."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = W.partitionBy("q_id").orderBy(order, F.col("vec_id").asc())
+    return pairs.withColumn("rk", F.row_number().over(w).cast("long")).filter(
+        F.col("rk") <= k
+    )
 
 
 def _dot(a, b):
@@ -103,48 +217,18 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scoring is the Arrow/NumPy kernel pattern proven on k-means (the
     memory-flagged 15x interpreted-HOF trap): the query matrix is
     MODEL STATE — collected once (3 x 64 doubles, like centroids) and
-    closed over by a scalar Pandas UDF that scores each Arrow batch
-    against ALL queries at once. The corpus never joins: each row emits
-    N_QUERIES (q_pos, cos) pairs via posexplode, and only those
-    24-byte triples reach the top-k window. Accumulation uses the
-    ascending-dim fold (`_fold_dot`) so cosines stay bit-identical to
-    the JVM-HOF formulation and the DuckDB oracle.
+    scored against each Arrow batch by ``_query_pairs``. Accumulation
+    uses the ascending-dim fold (`_fold_dot`) so cosines stay
+    bit-identical to the JVM-HOF formulation and the DuckDB oracle.
     """
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "vec", _as_double(F.col("embedding"))
-    )
-    q = _collect_queries(e)
-    if q is None:  # empty corpus -> empty result, right schema
+    e = load_embeddings(spark, sf_dir)
+    qmat = _collect_queries(e)
+    if qmat is None:  # empty corpus -> empty result, right schema
         return spark.createDataFrame(
             [], "q_id long, vec_id long, cos double, rk long"
         )
-    qmat, qn = q
-
-    @F.pandas_udf("array<double>")
-    def cos_all(vec: pd.Series) -> pd.Series:
-        if len(vec) == 0:
-            return pd.Series([], dtype=object)
-        x = np.vstack(vec.to_numpy()).astype(np.float64)
-        nx = np.sqrt(_fold_sq(x))
-        cos = _fold_dot(x, qmat) / (nx[:, None] * qn[None, :])
-        return pd.Series(list(cos))
-
-    scored = e.select(
-        "vec_id", F.posexplode(cos_all("vec")).alias("q_pos", "cos_raw")
-    )
-    # q_pos == q_id because the query set is exactly vec_ids 0..2
-    # (asserted in _collect_queries).
-    pairs = scored.filter(F.col("vec_id") != F.col("q_pos"))
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        pairs.select(
-            F.col("q_pos").cast("long").alias("q_id"),
-            "vec_id",
-            F.round(F.col("cos_raw"), 6).alias("cos"),
-        )
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "vec_id", "cos", "rk")
+    return _top_per_query(_query_pairs(e, qmat), TOP_K).select(
+        "q_id", "vec_id", "cos", "rk"
     )
 
 
@@ -158,7 +242,7 @@ def sim_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     = sin(p * 1000 + i) — reproducible across runs without RNG state.
 
     One Arrow/NumPy pass computes BOTH the 12 plane dots (bucket bits)
-    and the exact cosine against every query (same `_fold_dot` order as
+    and the exact cosine against every query (`_cosines`, as in
     `sim_cosine_topk`): previously each plane was a separate interpreted
     JVM-HOF fold — 12 k x dim folds per row, the measured-15x pattern.
     The bucket join then carries only (vec_id, bucket, 3 cosines); the
@@ -168,15 +252,12 @@ def sim_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     since round 4 the whole op is DuckDB-oracle-checked (the oracle
     replays the sin() hyperplanes).
     """
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "vec", _as_double(F.col("embedding"))
-    )
-    q = _collect_queries(e)
-    if q is None:  # empty corpus -> empty result, right schema
+    e = load_embeddings(spark, sf_dir)
+    qmat = _collect_queries(e)
+    if qmat is None:  # empty corpus -> empty result, right schema
         return spark.createDataFrame(
             [], "q_id long, vec_id long, cos double, rk long, bucket long"
         )
-    qmat, qn = q
     pmat = np.array(
         [
             [math.sin(float(p * 1000 + i)) for i in range(64)]
@@ -186,20 +267,10 @@ def sim_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pow2 = (1 << np.arange(_N_PLANES)).astype(np.int64)
 
-    @F.pandas_udf("bucket long, cos_all array<double>")
-    def score(vec: pd.Series) -> pd.DataFrame:
-        if len(vec) == 0:
-            return pd.DataFrame(
-                {
-                    "bucket": pd.Series([], dtype="int64"),
-                    "cos_all": pd.Series([], dtype=object),
-                }
-            )
-        x = np.vstack(vec.to_numpy()).astype(np.float64)
+    @_batch_udf({"bucket": "long", "cos_all": "array<double>"})
+    def score(x):
         bucket = ((_fold_dot(x, pmat) >= 0.0) * pow2[None, :]).sum(axis=1)
-        nx = np.sqrt(_fold_sq(x))
-        cos = _fold_dot(x, qmat) / (nx[:, None] * qn[None, :])
-        return pd.DataFrame({"bucket": bucket, "cos_all": list(cos)})
+        return {"bucket": bucket, "cos_all": _cosines(x, qmat)}
 
     bucketed = e.withColumn("s", score("vec")).select(
         "vec_id",
@@ -214,12 +285,8 @@ def sim_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("vec_id") != F.col("q_id"))
     # element_at is 1-based; q_id is the 0-based row index of qmat.
     cos = F.element_at(F.col("cos_all"), (F.col("q_id") + 1).cast("int"))
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        cands.withColumn("cos", F.round(cos, 6))
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "vec_id", "cos", "rk", "bucket")
+    return _top_per_query(cands.withColumn("cos", F.round(cos, 6)), TOP_K).select(
+        "q_id", "vec_id", "cos", "rk", "bucket"
     )
 
 
@@ -237,9 +304,7 @@ def sim_pairwise_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_PANEL_ID_CAP``): statistics demos need a fixed budget, not a
     corpus-proportional pair explosion.
     """
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "vec", _as_double(F.col("embedding"))
-    )
+    e = load_embeddings(spark, sf_dir)
     a = e.select(
         F.col("vec_id").alias("a_id"), F.col("vec").alias("a_vec"),
         F.col("label").alias("a_label"),
@@ -269,9 +334,7 @@ def emb_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     lambdas — the preprocessing step before any cosine/IVF indexing
     (normalized corpus => cosine == dot product, which halves the
     per-pair work in every downstream similarity op)."""
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "vec", _as_double(F.col("embedding"))
-    )
+    e = load_embeddings(spark, sf_dir)
     nrm = F.greatest(_norm(F.col("vec")), F.lit(1e-12))
     unit = F.transform(F.col("vec"), lambda x: x / nrm)
     return e.select(
@@ -292,9 +355,7 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     differs across engines; floor(+0.5) is bit-identical everywhere.
     The quantized vector is emitted as a CSV string — hash-stable in the
     oracle compare, and exactly what a compact serving index stores."""
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "vec", _as_double(F.col("embedding"))
-    )
+    e = load_embeddings(spark, sf_dir)
     maxabs = F.array_max(F.transform(F.col("vec"), F.abs))
     scale = F.greatest(maxabs, F.lit(1e-12)) / F.lit(127.0)
     qvec = F.transform(
@@ -335,48 +396,20 @@ def retrieval_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: q_id, rk (selection order 1..5), vec_id, mmr (score at
     selection, rounded 6).
     """
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "vec", _as_double(F.col("embedding"))
-    )
-    q = _collect_queries(e)
-    if q is None:  # empty corpus -> empty result, right schema
+    e = load_embeddings(spark, sf_dir)
+    qmat = _collect_queries(e)
+    if qmat is None:  # empty corpus -> empty result, right schema
         return spark.createDataFrame(
             [], "q_id long, rk long, vec_id long, mmr double"
         )
-    qmat, qn = q
-
-    @F.pandas_udf("array<double>")
-    def cos_all(vec: pd.Series) -> pd.Series:
-        if len(vec) == 0:
-            return pd.Series([], dtype=object)
-        x = np.vstack(vec.to_numpy()).astype(np.float64)
-        nx = np.sqrt(_fold_sq(x))
-        cos = _fold_dot(x, qmat) / (nx[:, None] * qn[None, :])
-        return pd.Series(list(cos))
-
-    scored = e.select(
-        "vec_id", F.posexplode(cos_all("vec")).alias("q_pos", "cos_raw")
-    )
-    w = W.partitionBy("q_id").orderBy(
-        F.col("rel").desc(), F.col("vec_id").asc()
-    )
-    cand = (
-        scored.filter(F.col("vec_id") != F.col("q_pos"))
-        .select(
-            F.col("q_pos").cast("long").alias("q_id"),
-            "vec_id",
-            F.round(F.col("cos_raw"), 6).alias("rel"),
-        )
-        .withColumn("crk", F.row_number().over(w))
-        .filter(F.col("crk") <= _MMR_CAND)
-    )
+    cand = _top_per_query(_query_pairs(e, qmat), _MMR_CAND)
     # candidate vectors ride back on a broadcast join (corpus scanned
     # once, nothing corpus-sized shuffles); <= 3 * _MMR_CAND rows reach
     # the driver
     cv = (
         F.broadcast(cand)
         .join(e.select("vec_id", "vec"), "vec_id")
-        .select("q_id", "vec_id", "rel", "vec")
+        .select("q_id", "vec_id", F.col("cos").alias("rel"), "vec")
         .collect()
     )
     byq: dict[int, list] = {}
@@ -394,12 +427,9 @@ def _mmr_greedy(q_id: int, cand_rows) -> list[tuple]:
     """Driver-side greedy MMR over one query's model-sized candidate
     list of (vec_id, rel, vec) rows. Split out so the planted-twin
     behavioral test can drive it with a synthetic near-duplicate."""
-    from hive_2_spark.llm.advanced import _round6_half_away
-
     rows = sorted(cand_rows, key=lambda r: (-r.rel, r.vec_id))
-    V = np.array([list(r.vec) for r in rows], dtype=np.float64)
-    nv = np.sqrt(_fold_sq(V))
-    S = _round6_half_away(_fold_dot(V, V) / (nv[:, None] * nv[None, :]))
+    V = _matrix(rows)
+    S = _round6_half_away(_cosines(V, V))
     rel = [float(r.rel) for r in rows]
     ids = [int(r.vec_id) for r in rows]
     selected: list[int] = []
@@ -454,11 +484,7 @@ def sim_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (query, passage, query-vector) map-side; the rank window runs
     over passage-count rows per query (WindowGroupLimit).
     """
-    from pyspark.sql.window import Window
-
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "vec", _as_double(F.col("embedding"))
-    )
+    e = load_embeddings(spark, sf_dir)
     maxabs = F.array_max(F.transform(F.col("vec"), F.abs))
     scale = F.greatest(maxabs, F.lit(1e-12)) / F.lit(127.0)
     qints = F.transform(
@@ -511,7 +537,7 @@ def sim_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     msum = best.groupBy("q_doc", "d_doc").agg(
         F.sum("best_cm").alias("maxsim_micro")
     )
-    w = Window.partitionBy("q_doc").orderBy(
+    w = W.partitionBy("q_doc").orderBy(
         F.col("maxsim_micro").desc(), F.col("d_doc").asc()
     )
     return (
@@ -551,73 +577,21 @@ def sim_mrl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: q_id, vec_id, cos (full-dim), rk — sim_cosine_topk's shape.
     """
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "vec", _as_double(F.col("embedding"))
-    )
-    q = _collect_queries(e)
-    if q is None:  # empty corpus -> empty result, right schema
+    e = load_embeddings(spark, sf_dir)
+    qmat = _collect_queries(e)
+    if qmat is None:  # empty corpus -> empty result, right schema
         return spark.createDataFrame(
             [], "q_id long, vec_id long, cos double, rk long"
         )
-    qmat, _ = q
-    qpre = qmat[:, :_MRL_DIM]
-    qpre_n = np.sqrt(_fold_sq(qpre))
-    qfull_n = np.sqrt(_fold_sq(qmat))
-
-    @F.pandas_udf("array<double>")
-    def cos_prefix(vec: pd.Series) -> pd.Series:
-        if len(vec) == 0:
-            return pd.Series([], dtype=object)
-        x = np.vstack(vec.to_numpy()).astype(np.float64)[:, :_MRL_DIM]
-        nx = np.sqrt(_fold_sq(x))
-        cos = _fold_dot(x, qpre) / (nx[:, None] * qpre_n[None, :])
-        return pd.Series(list(cos))
-
-    @F.pandas_udf("array<double>")
-    def cos_full(vec: pd.Series) -> pd.Series:
-        if len(vec) == 0:
-            return pd.Series([], dtype=object)
-        x = np.vstack(vec.to_numpy()).astype(np.float64)
-        nx = np.sqrt(_fold_sq(x))
-        cos = _fold_dot(x, qmat) / (nx[:, None] * qfull_n[None, :])
-        return pd.Series(list(cos))
-
-    coarse = (
-        e.select("vec_id", F.posexplode(cos_prefix("vec")).alias(
-            "q_pos", "ccos_raw"))
-        .filter(F.col("vec_id") != F.col("q_pos"))
-        .select(
-            F.col("q_pos").cast("long").alias("q_id"), "vec_id",
-            F.round("ccos_raw", 6).alias("ccos"),
-        )
-    )
-    cw = W.partitionBy("q_id").orderBy(
-        F.col("ccos").desc(), F.col("vec_id").asc()
-    )
-    cand = (
-        coarse.withColumn("crk", F.row_number().over(cw))
-        .filter(F.col("crk") <= _MRL_CAND)
-        .select("q_id", "vec_id")
-    )
+    cand = _top_per_query(
+        _query_pairs(e, qmat[:, :_MRL_DIM]), _MRL_CAND
+    ).select("q_id", "vec_id")
     fine_rows = e.join(
         cand.select("vec_id").distinct(), "vec_id", "left_semi"
     )
-    fine = (
-        fine_rows.select(
-            "vec_id", F.posexplode(cos_full("vec")).alias("q_pos", "cos_raw")
-        )
-        .select(
-            F.col("q_pos").cast("long").alias("q_id"), "vec_id",
-            F.round("cos_raw", 6).alias("cos"),
-        )
-        .join(cand, ["q_id", "vec_id"])  # keep candidate pairs only
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        fine.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "vec_id", "cos", "rk")
-    )
+    # keep candidate pairs only
+    fine = _query_pairs(fine_rows, qmat).join(cand, ["q_id", "vec_id"])
+    return _top_per_query(fine, TOP_K).select("q_id", "vec_id", "cos", "rk")
 
 
 QUERIES = {
@@ -631,17 +605,31 @@ QUERIES = {
     "retrieval_mmr": retrieval_mmr,
 }
 
+# DuckDB twins of ``_vectors``, of ``_cosines`` and of the query set.
+_DK_VEC = "list_transform({c}, x -> CAST(x AS DOUBLE))"
+_DK_EMB = (
+    "e AS (SELECT vec_id, label, "
+    f"{_DK_VEC.format(c='embedding')} AS vec FROM embeddings)"
+)
+_DK_QUERIES = (
+    f"q AS (SELECT vec_id AS q_id, vec AS q_vec FROM e "
+    f"WHERE vec_id < {N_QUERIES})"
+)
+
+
+def _dk_cos(a: str, b: str) -> str:
+    norm = "SQRT(list_dot_product({0}, {0}))"
+    return f"list_dot_product({a}, {b}) / ({norm.format(a)} * {norm.format(b)})"
+
 
 def _mmr_oracle() -> str:
     """Full SQL unroll of the greedy MMR selection (built by loop so
     the step count stays tied to _MMR_K)."""
-    cos = _dk_cos("e.vec", "q.q_vec")
     ctes = [
-        "e AS (SELECT vec_id, "
-        f"{_DK_VEC.format(c='embedding')} AS vec FROM embeddings)",
-        "q AS (SELECT vec_id AS q_id, vec AS q_vec FROM e WHERE vec_id < 3)",
+        _DK_EMB,
+        _DK_QUERIES,
         "pairs AS (SELECT e.vec_id, q.q_id, "
-        f"ROUND({cos}, 6) AS rel, e.vec "
+        f"ROUND({_dk_cos('e.vec', 'q.q_vec')}, 6) AS rel, e.vec "
         "FROM e CROSS JOIN q WHERE e.vec_id <> q.q_id)",
         "cand AS (SELECT q_id, vec_id, rel, vec FROM ("
         "SELECT q_id, vec_id, rel, vec, ROW_NUMBER() OVER ("
@@ -686,25 +674,13 @@ def _mmr_oracle() -> str:
     )
     return "WITH " + ", ".join(ctes) + " " + finals
 
-_DK_VEC = "list_transform({c}, x -> CAST(x AS DOUBLE))"
-_DK_DOT = "list_dot_product({a}, {b})"
-
-
-def _dk_cos(a: str, b: str) -> str:
-    return (
-        f"{_DK_DOT.format(a=a, b=b)} / "
-        f"(SQRT({_DK_DOT.format(a=a, b=a)}) * SQRT({_DK_DOT.format(a=b, b=b)}))"
-    )
-
 
 ORACLES = {
     # same int8 quantization recipe, exact integer dot/norm folds
     # (order-free — integer addition commutes), same micro-unit floor,
     # exact BIGINT MaxSim sums, same (score desc, d_doc) tie-break
     "sim_maxsim_topk": (
-        "WITH e AS (SELECT vec_id, "
-        "list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec "
-        "FROM embeddings), "
+        f"WITH {_DK_EMB}, "
         "s AS (SELECT vec_id, vec, "
         "GREATEST(list_max(list_transform(vec, x -> ABS(x))), 1e-12) "
         "/ 127.0 AS scale FROM e), "
@@ -742,8 +718,7 @@ ORACLES = {
     # ~1e-15 of zero (P ~ 1e-9 across the corpus); same class as the
     # k-means d2 note in llm/clustering.py.
     "sim_cosine_lsh": (
-        "WITH e AS (SELECT vec_id, "
-        f"{_DK_VEC.format(c='embedding')} AS vec FROM embeddings), "
+        f"WITH {_DK_EMB}, "
         "b AS (SELECT vec_id, vec, CAST(list_sum(list_transform("
         "  range(0, 12), p -> CASE WHEN list_sum(list_transform("
         "    range(0, 64), i -> vec[CAST(i + 1 AS INT)]"
@@ -764,9 +739,7 @@ ORACLES = {
     # coarse pass = the SAME rounded-cosine recipe over list_slice'd
     # 32-dim prefixes; candidate cut AND final ranks replayed exactly
     "sim_mrl_topk": (
-        "WITH e AS (SELECT vec_id, "
-        f"{_DK_VEC.format(c='embedding')} AS vec FROM embeddings), "
-        "q AS (SELECT vec_id AS q_id, vec AS q_vec FROM e WHERE vec_id < 3), "
+        f"WITH {_DK_EMB}, {_DK_QUERIES}, "
         "coarse AS (SELECT e.vec_id, q.q_id, ROUND("
         + _dk_cos(
             f"list_slice(e.vec, 1, {_MRL_DIM})",
@@ -788,9 +761,7 @@ ORACLES = {
         "WHERE rk <= 5"
     ),
     "sim_cosine_topk": (
-        "WITH e AS (SELECT vec_id, "
-        f"{_DK_VEC.format(c='embedding')} AS vec FROM embeddings), "
-        "q AS (SELECT vec_id AS q_id, vec AS q_vec FROM e WHERE vec_id < 3), "
+        f"WITH {_DK_EMB}, {_DK_QUERIES}, "
         "pairs AS (SELECT e.vec_id, q.q_id, "
         f"ROUND({_dk_cos('e.vec', 'q.q_vec')}, 6) AS cos "
         "FROM e CROSS JOIN q WHERE e.vec_id != q.q_id), "
@@ -801,17 +772,16 @@ ORACLES = {
         "FROM ranked WHERE rk <= 5"
     ),
     "sim_pairwise_label": (
-        "WITH e AS (SELECT vec_id, label, "
-        f"{_DK_VEC.format(c='embedding')} AS vec FROM embeddings "
-        "WHERE vec_id % 7 = 0 AND vec_id < 14000) "
+        f"WITH {_DK_EMB} "
         "SELECT a.label = b.label AS same, COUNT(*) AS n_pairs, "
         f"ROUND(AVG({_dk_cos('a.vec', 'b.vec')}), 6) AS mean_cos "
         "FROM e a CROSS JOIN e b WHERE a.vec_id < b.vec_id "
+        "AND a.vec_id % 7 = 0 AND a.vec_id < 14000 "
+        "AND b.vec_id % 7 = 0 AND b.vec_id < 14000 "
         "GROUP BY 1"
     ),
     "emb_normalize": (
-        "WITH e AS (SELECT vec_id, label, "
-        f"{_DK_VEC.format(c='embedding')} AS vec FROM embeddings), "
+        f"WITH {_DK_EMB}, "
         "n AS (SELECT vec_id, label, vec, "
         "GREATEST(sqrt(list_dot_product(vec, vec)), 1e-12) AS nrm FROM e) "
         "SELECT vec_id, CAST(label AS BIGINT) AS label, "
@@ -821,8 +791,7 @@ ORACLES = {
         "FROM n"
     ),
     "emb_quantize_int8": (
-        "WITH e AS (SELECT vec_id, "
-        f"{_DK_VEC.format(c='embedding')} AS vec FROM embeddings), "
+        f"WITH {_DK_EMB}, "
         "s AS (SELECT vec_id, vec, "
         "GREATEST(list_max(list_transform(vec, x -> abs(x))), 1e-12) / 127.0 "
         "AS scale FROM e) "

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
-from hive_2_spark.llm.dedup import _DK_NORM
+from hive_2_spark.llm.dedup import _DK_NORM, _NORM
 
 # stopword marker sets per language for the n-gram/stopword heuristic
 LANG_MARKERS = {
@@ -123,14 +123,7 @@ def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content fingerprint: md5 of the normalized text (lowercase,
     punctuation stripped, whitespace collapsed)."""
     d = load_table(spark, sf_dir, "documents")
-    normalized = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9\s]", ""),
-            r"\s+",
-            " ",
-        )
-    )
-    return d.select("doc_id", F.md5(normalized).alias("fp"))
+    return d.select("doc_id", F.md5(_NORM(F.col("text"))).alias("fp"))
 
 
 def fingerprint_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -147,16 +140,7 @@ def fingerprint_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     M = 1_000_000_007
     d = load_table(spark, sf_dir, "documents")
-    words = F.split(
-        F.trim(
-            F.regexp_replace(
-                F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9\s]", ""),
-                r"\s+",
-                " ",
-            )
-        ),
-        " ",
-    )
+    words = F.split(_NORM(F.col("text")), " ")
 
     def word_hash(w):
         return F.pmod(
@@ -358,13 +342,6 @@ def token_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BPE_MERGES = 10  # learned merge-table depth (fixed unroll, both engines)
 
-# the shared corpus normalizer (lower, strip non-alnum, collapse runs)
-_BPE_NORM = lambda c: F.trim(  # noqa: E731 — mirrors llm.dedup._NORM
-    F.regexp_replace(
-        F.regexp_replace(F.lower(c), r"[^a-z0-9\s]", ""), r"\s+", " "
-    )
-)
-
 
 def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE merge-pair learning (Sennrich ACL'16) — the tokenizer-
@@ -416,7 +393,7 @@ def _bpe_learn(
     so the two faces cannot drift."""
     d = load_table(spark, sf_dir, "documents")
     words = d.select(
-        F.explode(F.split(_BPE_NORM(F.col("text")), " ")).alias("word")
+        F.explode(F.split(_NORM(F.col("text")), " ")).alias("word")
     ).filter(F.col("word") != "")
     vocab = (
         words.groupBy("word")
@@ -513,7 +490,7 @@ def text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.explode(F.split(_BPE_NORM(F.col("text")), " ")).alias("word"),
+        F.explode(F.split(_NORM(F.col("text")), " ")).alias("word"),
     ).filter(F.col("word") != "")
     return (
         toks.join(wtok, "word")

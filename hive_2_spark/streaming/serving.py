@@ -29,9 +29,8 @@ from hive_2_spark.llm.clustering import (
     _final_assignment,
     _recenter,
     _seeds,
-    _vectors,
 )
-from hive_2_spark.llm.similarity import _as_double
+from hive_2_spark.llm.similarity import _vectors, load_embeddings
 
 
 def stream_cluster_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,11 +56,9 @@ def stream_cluster_monitor_builder(
 ) -> DataFrame:
     """Streaming face: fit on the static table at plan build, score the
     stream with the same Arrow kernel, aggregate in complete mode."""
-    e_static = _vectors(spark, sf_dir)
+    e_static = load_embeddings(spark, sf_dir)
     trained = _recenter(_assign(e_static, _seeds(e_static)))
-    stream = _read_stream_embeddings(spark, sf_dir).select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("vec")
-    )
+    stream = _vectors(_read_stream_embeddings(spark, sf_dir))
     scored = _assign(stream, trained)
     return scored.groupBy(
         F.col("cluster").cast("bigint").alias("cluster")

@@ -72,9 +72,9 @@ def test_converged_unrolls_dominate_observed_rounds(spark):
     from hive_2_spark.llm.clustering import (
         _CONVERGE_CAP,
         _seeds,
-        _vectors,
         kmeans_converged,
     )
+    from hive_2_spark.llm.similarity import load_embeddings
 
     from tests.conftest import SF_DIR_MID
 
@@ -84,6 +84,6 @@ def test_converged_unrolls_dominate_observed_rounds(spark):
     # size (sf0.01 took 9 rounds, sf0.1 took 30 — the original cap of
     # 25 was sized on sf0.01 alone and raised at sf0.1), so the gate
     # runs where the pressure is.
-    e = _vectors(spark, SF_DIR_MID)
+    e = load_embeddings(spark, SF_DIR_MID)
     _, rounds = kmeans_converged(e, _seeds(e))
     assert rounds * 2 <= _CONVERGE_CAP, (rounds, _CONVERGE_CAP)

@@ -22,7 +22,7 @@ def test_ivf_recall_vs_brute_force(spark):
     recalls = [
         len(exact[q] & approx.get(q, set())) / len(exact[q]) for q in exact
     ]
-    # 2-probe IVF over 10 lists: expect to recover >= 40% of exact top-5
+    # 3-probe IVF over 32 lists: expect to recover >= 40% of exact top-5
     # on average (the structural guarantee; typically much higher)
     assert sum(recalls) / len(recalls) >= 0.4, recalls
 
@@ -75,24 +75,24 @@ def test_pq_recovers_planted_twins(spark):
     re-ranked. sim_pq_topk's DuckDB oracle separately proves the
     encode/LUT/ADC pipeline is computed exactly as specified.)"""
     import numpy as np
-    from pyspark.sql import functions as F
 
     import hive_2_spark.llm.advanced as A
-    from hive_2_spark.catalog import load_table
-    from hive_2_spark.llm.similarity import _fold_dot, _fold_sq
+    from hive_2_spark.llm.similarity import (
+        _fold_dot,
+        _fold_sq,
+        _round6_half_away,
+        load_embeddings,
+    )
 
     tw = A.embeddings_with_twins(spark, SF_DIR).collect()
     ids = np.array([r.vec_id for r in tw])
     X = np.array([list(r.vec) for r in tw], dtype=np.float64)
-    e = load_table(spark, SF_DIR, "embeddings").withColumn(
-        "vec", A._as_double(F.col("embedding"))
-    )
-    _c_ids, cmat, _cn = A.ivf_centroids(e)
+    _c_ids, cmat = A.ivf_centroids(load_embeddings(spark, SF_DIR))
     books = [cmat[:, s * 8:(s + 1) * 8] for s in range(A._PQ_SUB)]
 
     def subd2(xs, s):
         aa, ab, bb = _fold_sq(xs), _fold_dot(xs, books[s]), _fold_sq(books[s])
-        return A._round6_half_away(aa[:, None] - 2.0 * ab + bb[None, :])
+        return _round6_half_away(aa[:, None] - 2.0 * ab + bb[None, :])
 
     codes = np.zeros((X.shape[0], A._PQ_SUB), dtype=int)
     for s in range(A._PQ_SUB):

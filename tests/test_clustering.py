@@ -139,11 +139,8 @@ def test_entropy_matches_python(spark):
 def test_kmeans_converged_blobs_and_fixture(spark):
     from pyspark.sql import functions as F2
 
-    from hive_2_spark.llm.clustering import (
-        _seeds,
-        _vectors,
-        kmeans_converged,
-    )
+    from hive_2_spark.llm.clustering import _seeds, kmeans_converged
+    from hive_2_spark.llm.similarity import load_embeddings
 
     # planted blobs: fixpoint must recover the exact partition
     e = _blob_df(spark)
@@ -155,7 +152,7 @@ def test_kmeans_converged_blobs_and_fixture(spark):
     for r in assign.collect():
         assert r.cluster == (r.vec_id // 20) * 20
     # real fixture: converges under the cap, assignments are total
-    ef = _vectors(spark, SF_DIR)
+    ef = load_embeddings(spark, SF_DIR)
     af, rf = kmeans_converged(ef, _seeds(ef))
     assert af.count() == ef.count()
     assert 1 <= rf <= 25

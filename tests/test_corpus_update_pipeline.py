@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from examples.continuous_corpus_update import (  # noqa: E402
-    _vectors,
     corpus_docs,
     run_batch_update,
     run_streamed_update,
@@ -26,6 +25,7 @@ from examples.continuous_corpus_update import (  # noqa: E402
 from hive_2_spark.catalog import load_table  # noqa: E402
 from hive_2_spark.llm.advanced import ivf_invert  # noqa: E402
 from hive_2_spark.llm.dedup import classify_against_corpus  # noqa: E402
+from hive_2_spark.llm.similarity import load_embeddings  # noqa: E402
 from tests.conftest import SF_DIR  # noqa: E402
 
 
@@ -93,7 +93,7 @@ def test_incremental_index_refresh_equals_full_rebuild(spark, states):
     _nearest_centroid_rows; this pins it."""
     sdir, _, cents = states
     final_ids = _doc_ids(spark, sdir)
-    final_vecs = _vectors(spark, SF_DIR).filter(
+    final_vecs = load_embeddings(spark, SF_DIR).filter(
         F.col("vec_id").isin([i for i in final_ids if i < 10_000_000])
     )
     rebuilt = {

@@ -1,6 +1,7 @@
-"""Each relation the DuckDB oracles share has one SQL definition, held
-next to its Spark twin; every other oracle composes it. A second copy
-can drift from the first without any fixture showing it."""
+"""Each shared definition has one home: an oracle relation or SQL
+kernel, held next to its Spark twin, a Spark expression, or a NumPy
+kernel. Every other user composes or imports it. A second copy can
+drift from the first without any fixture showing it."""
 
 from __future__ import annotations
 
@@ -32,6 +33,12 @@ _DEFINITIONS = {
     "ORDER BY c DESC, lbl ASC": "core/graph.py",
     # ``_dk_walks_start``
     "PARTITION BY src ORDER BY dst ASC": "core/graph.py",
+    # ``_dk_cos`` beside ``_cosines``
+    "SQRT(list_dot_product(": "llm/similarity.py",
+    # ``_batch_udf``: the one Arrow batch -> matrix conversion
+    "np.vstack(vec.to_numpy())": "llm/similarity.py",
+    # ``_NORM``'s Spark-side regex
+    'r"[^a-z0-9\\s]"': "llm/dedup.py",
 }
 
 

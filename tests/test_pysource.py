@@ -880,8 +880,12 @@ spark = (SparkSession.builder.master("local[2]")
          .config("spark.ui.enabled", "false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 from hive_2_spark import registry
+# one key per way a worker used to import this package: data source
+# classes, an Arrow UDF kernel's helpers, a helper that imported inside
+# the task, and a mapInPandas function reaching a sibling module
+arrow_keys = ("sim_cosine_topk", "sim_ivf_topk", "media_features")
 for key, build in sorted(registry.all_queries().items()):
-    if "python_datasource" in key:
+    if "python_datasource" in key or key in arrow_keys:
         print(key, build(spark, {sf!r}).count(), flush=True)
 spark.stop()
 """
@@ -890,8 +894,8 @@ spark.stop()
 def test_python_datasource_keys_run_from_another_directory(tmp_path):
     """A Spark application that puts this repository on sys.path but
     runs from another directory: its Python workers cannot import this
-    package, so every source and sink class must reach them without an
-    import by module name."""
+    package, so every source and sink class and every UDF kernel must
+    reach them without an import by module name."""
     import os
     import subprocess
     import sys
@@ -911,10 +915,13 @@ def test_python_datasource_keys_run_from_another_directory(tmp_path):
     assert proc.returncode == 0, proc.stderr[-3000:]
     ran = [line.split()[0] for line in proc.stdout.splitlines()]
     assert ran == [
+        "media_features",
         "read_python_datasource",
         "read_python_datasource_changes",
         "read_python_datasource_compacted",
         "read_python_datasource_pushdown",
         "read_python_datasource_timetravel",
         "roundtrip_python_datasource",
+        "sim_cosine_topk",
+        "sim_ivf_topk",
     ], proc.stdout

@@ -4,7 +4,7 @@
 # Usage: python tools/driver_sim.py [--json OUT.json]  — the JSON report
 # mirrors the driver's CORRECTNESS_r{N}.json shape (per-key status and
 # wall_sec). A key that raises counts as BAD with its error recorded; the
-# sweep carries on with the next key.
+# sweep carries on with the next key. Exits 1 when any key is BAD.
 import json
 import secrets
 import subprocess
@@ -93,3 +93,4 @@ if _json_out:
                    "wall_sec": round(time.time() - _t0, 1),
                    "keys": report}, f, indent=1)
     print("wrote", _json_out)
+sys.exit(1 if bad else 0)

@@ -1,3 +1,5 @@
+# Hash-compares every oracle key against DuckDB at sf0.1 (tuned local[16]
+# session). Usage: python tools/parity_sf01.py — exits 1 when any key is BAD.
 import sys
 from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -24,3 +26,4 @@ for key in sorted(o):
         bad += 1
         print(key, "MISMATCH:", "; ".join(p[:2]))
 print("BAD:", bad)
+sys.exit(1 if bad else 0)
