@@ -152,7 +152,7 @@ def run_streamed_update(spark: SparkSession, sf_dir: str, workdir: str):
         )
 
     q = (
-        read_stream_table(spark, sf_dir, "documents", "cupd")
+        read_stream_table(spark, sf_dir, "documents")
         .writeStream.foreachBatch(on_batch)
         .option(
             "checkpointLocation", os.path.join(workdir, "ckpt")

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -47,24 +48,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Resolve a driver table in ``sf_dir`` to a lazy DataFrame."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    if name == "events":
-        return _load_events(spark, sf_dir)
-    return spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    return read_under_rule(spark, name, lambda: spark.read.parquet(path))
 
 
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Load events with ``ts`` normalized to TimestampType (epoch micros,
-    naive values interpreted as UTC) under ANY SparkSession/timezone.
+def read_under_rule(
+    spark: SparkSession, name: str, read: Callable[[], DataFrame]
+) -> DataFrame:
+    """Run ``read()``, a batch or streaming parquet read of table
+    ``name``, under that table's load rule — the one definition both
+    :func:`load_table` and ``streaming._source.read_stream_table`` use.
 
-    The generator's physical encoding of ``ts`` has varied across rounds:
-    parquet TIMESTAMP(NANOS) (which Spark's vectorized reader rejects —
-    read as raw nanos via ``nanosAsLong`` and divide) and naive
-    TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ). Branch on what the footer
-    actually says so either vintage of testdata works unchanged."""
+    Only ``events`` has a rule: ``ts`` normalized to TimestampType
+    (epoch micros, naive values interpreted as UTC) under ANY
+    SparkSession/timezone. The generator's physical encoding of ``ts``
+    has varied across rounds: parquet TIMESTAMP(NANOS) (which Spark's
+    vectorized reader rejects — read as raw nanos via ``nanosAsLong``
+    and divide) and naive TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ).
+    Branch on what the footer actually says so either vintage of
+    testdata works unchanged."""
+    if name != "events":
+        return read()
     from pyspark.sql import functions as F
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, "events"))
+    df = read()
     return df.withColumn("ts", _normalize_ts(df.schema["ts"].dataType, F))
 
 

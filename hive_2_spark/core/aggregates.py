@@ -1079,31 +1079,28 @@ QUERIES = {
     "agg_quantile_shard_merge": agg_quantile_shard_merge,
 }
 
+def _dk_hex_int(hexpr: str, n: int) -> str:
+    """First ``n`` (at most 15) hex chars of ``hexpr`` as a BIGINT — the
+    one DuckDB hex decoder, the twin of F.conv(F.substring(h, 1, n), 16,
+    10): DuckDB has no conv(), but casts a '0x'-prefixed string."""
+    return f"CAST(('0x' || substr({hexpr}, 1, {n})) AS BIGINT)"
+
+
 def _dk_cms_bucket(jexpr: str, kexpr: str) -> str:
     """First 2 md5 hex chars of 'j:k' as an int 0..255 (DuckDB side of
-    agg_countmin_portable's hash — mirrors F.conv(F.substring(md5,1,2))
-    via the same strpos nibble trick the HLL oracle uses)."""
-    h = f"md5({jexpr} || ':' || {kexpr})"
-    return (
-        f"(16 * (strpos('0123456789abcdef', substr({h}, 1, 1)) - 1)"
-        f" + (strpos('0123456789abcdef', substr({h}, 2, 1)) - 1))"
-    )
+    agg_countmin_portable's hash — mirrors F.conv(F.substring(md5,1,2)))."""
+    return _dk_hex_int(f"md5({jexpr} || ':' || {kexpr})", 2)
 
 
-def _dk_hex_int(hexpr: str, n: int) -> str:
-    """First ``n`` hex chars of ``hexpr`` as a BIGINT (DuckDB side of
-    F.conv(F.substring(h, 1, n), 16, 10) — same strpos nibble trick as
-    :func:`_dk_cms_bucket`, generalized to n nibbles)."""
-    terms = [
-        f"{16 ** (n - i)} * (strpos('0123456789abcdef',"
-        f" substr({hexpr}, {i}, 1)) - 1)"
-        for i in range(1, n + 1)
-    ]
-    return "CAST((" + " + ".join(terms) + ") AS BIGINT)"
-
+# agg_hll_portable's first nonzero nibble after the 2-nibble bucket
+_HLL_NIBBLE = _dk_hex_int(
+    "substr(substr(h, 3, 14), "
+    "length(regexp_extract(substr(h, 3, 14), '^(0*)', 1)) + 1)",
+    1,
+)
 
 ORACLES = {
-    # nibble->int via strpos on the hex alphabet (DuckDB has no conv);
+    # nibble->int via _dk_hex_int (DuckDB has no conv);
     # the shifted-weight sum is HUGEINT like the Spark decimal(38,0);
     # the single double division uses the same interpolated literals
     "agg_hll_portable": f"""
@@ -1113,23 +1110,13 @@ WITH o AS (
   FROM orders
 ), keyed AS (
   SELECT shard, h,
-         16 * (strpos('0123456789abcdef', substr(h, 1, 1)) - 1)
-           + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) AS bucket,
+         {_dk_hex_int("h", 2)} AS bucket,
          CASE WHEN length(regexp_extract(substr(h, 3, 14), '^(0*)', 1)) = 14
               THEN 57
               ELSE 4 * length(regexp_extract(substr(h, 3, 14), '^(0*)', 1))
-                   + (CASE WHEN strpos('0123456789abcdef',
-                            substr(substr(h, 3, 14),
-                              length(regexp_extract(substr(h, 3, 14),
-                                     '^(0*)', 1)) + 1, 1)) - 1 >= 8 THEN 0
-                           WHEN strpos('0123456789abcdef',
-                            substr(substr(h, 3, 14),
-                              length(regexp_extract(substr(h, 3, 14),
-                                     '^(0*)', 1)) + 1, 1)) - 1 >= 4 THEN 1
-                           WHEN strpos('0123456789abcdef',
-                            substr(substr(h, 3, 14),
-                              length(regexp_extract(substr(h, 3, 14),
-                                     '^(0*)', 1)) + 1, 1)) - 1 >= 2 THEN 2
+                   + (CASE WHEN {_HLL_NIBBLE} >= 8 THEN 0
+                           WHEN {_HLL_NIBBLE} >= 4 THEN 1
+                           WHEN {_HLL_NIBBLE} >= 2 THEN 2
                            ELSE 3 END) + 1
          END AS rho
   FROM o
@@ -1174,7 +1161,7 @@ SELECT e.shard,
 FROM est e JOIN exacts x ON e.shard = x.shard
 """,
     # pure integer arithmetic end-to-end (counts + min), identical md5
-    # bucket math via the strpos nibble trick (DuckDB has no conv)
+    # bucket math via _dk_hex_int (DuckDB has no conv)
     "agg_countmin_portable": f"""
 WITH li AS (
   SELECT CAST(EXTRACT(year FROM l_shipdate) AS VARCHAR) AS shard,
@@ -1214,7 +1201,7 @@ SELECT e.shard, CAST(e.k AS BIGINT) AS probe_key,
 FROM est e LEFT JOIN exacts x ON e.shard = x.shard AND e.k = x.k
 """,
     # pure integer arithmetic end-to-end (rank-window k-min, MAX, one
-    # integer division per estimate); 12-nibble strpos hex decode
+    # integer division per estimate); 12-nibble _dk_hex_int decode
     # because DuckDB has no conv()
     "agg_sample_quantile_portable": f"""
 WITH rows AS (

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
+from hive_2_spark.core.aggregates import _dk_hex_int
 from hive_2_spark.core.fixpoint import fixpoint
 
 _DAMPING = 0.85
@@ -1660,8 +1661,6 @@ def _dk_uniform_step(k: int) -> str:
     """Walk step ``k`` of ``graph_random_walks``: the CTE ``w<k>``
     (start, prev, cur), each walk moved to neighbor number
     md5(start:k:cur) % deg + 1."""
-    from hive_2_spark.core.aggregates import _dk_hex_int
-
     h = _dk_hex_int(
         "md5(CAST(w.start AS VARCHAR) || "
         f"':{k}:' || CAST(w.cur AS VARCHAR))",
@@ -1718,8 +1717,6 @@ def _node2vec_sql() -> str:
     """Replays every biased hop: same adjacency numbering, same
     integer weights, same md5(start:k:prev:cur) % total-weight draw,
     same first-cum-exceeding-the-draw pick."""
-    from hive_2_spark.core.aggregates import _dk_hex_int
-
     steps = []
     for k in range(2, _N2V_STEPS + 1):
         hk = _dk_hex_int(

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
+from hive_2_spark.core.aggregates import _dk_hex_int
 from hive_2_spark.core.io import _scratch
 
 
@@ -377,8 +378,6 @@ def _rendezvous_sql() -> str:
     """Replays both shard layouts: per-(doc, shard) md5 weights over a
     range() lateral, argmax with the SAME (h desc, s desc) tiebreak as
     the Spark greatest-struct, then the two movement censuses."""
-    from hive_2_spark.core.aggregates import _dk_hex_int
-
     n = _RV_N
     h = _dk_hex_int(
         "md5(CAST(doc_id AS VARCHAR) || ':' || CAST(t.s AS VARCHAR))", 12

@@ -270,24 +270,15 @@ _MAD_K = 0.6745  # Phi^-1(0.75): scales MAD to sigma-equivalents
 _MAD_CUT = 3.5   # Iglewicz–Hoaglin modified-z threshold
 
 
-def ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust outliers: modified z-score 0.6745*(v − median)/MAD ≥ 3.5
-    per event_type — the median/MAD twin of :func:`ts_anomaly_zscore`
-    for when the mean/stddev are themselves polluted by the outliers.
-
-    Three passes, none fact-shuffled: (1) per-type exact median (hash
-    agg; per-type state is a sort within the aggregate — with a
-    handful of types this is the textbook case for `percentile`; at
-    extreme cardinality you'd swap in the cent-histogram trick from
-    `agg_weighted_median`), (2) broadcast medians back, aggregate
-    |v − med| to the per-type MAD, (3) broadcast both, flag in one
-    codegen pass. The filter compares UNROUNDED modified z on both
-    engines; output rounds only. Types whose MAD is 0 (>50% identical
-    values) are excluded on both sides rather than dividing by zero.
+def _mad_model(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The median/MAD model of ``e``'s values per event_type: the
+    (event_type, med) and (event_type, mad) frames :func:`_mad_flags`
+    scores against. Per-type exact medians (hash agg; per-type state is
+    a sort within the aggregate — with a handful of types this is the
+    textbook case for `percentile`; at extreme cardinality you'd swap in
+    the cent-histogram trick from `agg_weighted_median`), then the
+    medians broadcast back and |v − med| aggregated to the per-type MAD.
     """
-    e = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value"
-    )
     med = e.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("med")
     )
@@ -297,6 +288,15 @@ def ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     mad = dev.groupBy("event_type").agg(
         F.expr("percentile(adev, 0.5)").alias("mad")
     )
+    return med, mad
+
+
+def _mad_flags(e: DataFrame, med: DataFrame, mad: DataFrame) -> DataFrame:
+    """Rows of ``e`` (batch or stream) whose modified z under the model
+    is ≥ ``_MAD_CUT``: both model frames broadcast, one codegen pass.
+    The filter compares UNROUNDED modified z on both engines; output
+    rounds only. Types whose MAD is 0 (>50% identical values) are
+    excluded on both sides rather than dividing by zero."""
     z = _MAD_K * (F.col("value") - F.col("med")) / F.col("mad")
     # FLOOR(x*1e4+0.5)/1e4, not ROUND: the doubles are bit-identical
     # across engines (exact interpolated percentiles), but DuckDB's
@@ -315,6 +315,18 @@ def ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.floor(z * 10000.0 + 0.5) / 10000.0).alias("mz"),
         )
     )
+
+
+def ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Robust outliers: modified z-score 0.6745*(v − median)/MAD ≥ 3.5
+    per event_type — the median/MAD twin of :func:`ts_anomaly_zscore`
+    for when the mean/stddev are themselves polluted by the outliers.
+    Three passes, none fact-shuffled: the two of :func:`_mad_model`,
+    then :func:`_mad_flags` over the same table."""
+    e = load_table(spark, sf_dir, "events").select(
+        "event_id", "event_type", "value"
+    )
+    return _mad_flags(e, *_mad_model(e))
 
 
 def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,8 +28,10 @@ from hive_2_spark import catalog
 from hive_2_spark.catalog import load_table
 
 
+# Row-at-a-time: API demo only. No type hints: pyspark infers a UDF's
+# eval type from them and warns at import when ``str -> str`` fits none.
 @F.udf(T.StringType())
-def _py_title_case(s: str) -> str:  # row-at-a-time: API demo only
+def _py_title_case(s):
     return None if s is None else s.title()
 
 

@@ -142,13 +142,18 @@ def _recenter(assign: DataFrame) -> DataFrame:
     )
 
 
+def _trained_centroids(e: DataFrame) -> DataFrame:
+    """The model: seeds moved by ``_ITERATIONS - 1`` Lloyd rounds, so
+    assigning against them is round ``_ITERATIONS``. (c_id, c_vec)."""
+    cents = _seeds(e)
+    for _ in range(_ITERATIONS - 1):
+        cents = _recenter(_assign(e, cents))
+    return cents
+
+
 def _final_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_embeddings(spark, sf_dir)
-    cents = _seeds(e)
-    assign = _assign(e, cents)
-    for _ in range(_ITERATIONS - 1):
-        assign = _assign(e, _recenter(assign))
-    return assign
+    return _assign(e, _trained_centroids(e))
 
 
 # Safety cap; raises rather than return unconverged. Sized from

@@ -47,9 +47,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hive_2_spark.catalog import load_table
+from hive_2_spark.core.aggregates import _dk_hex_int
 
 _EMAIL_RE = r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"
-_HEX = "0123456789abcdef"
 
 
 def _with_injected_pii(d: DataFrame) -> DataFrame:
@@ -688,14 +688,10 @@ QUERIES = {
 
 _MIX_VALUES = ", ".join(f"('{k}', {v})" for k, v in _MIX_PCT.items())
 
-# DuckDB twin of _split_bucket: the strpos fold over the first 4 md5 hex
-# chars of the doc_id's decimal string (the sample_temperature hex-int
-# idiom) — exact integers, no float anywhere.
+# DuckDB twin of _split_bucket: the first 4 md5 hex chars of the
+# doc_id's decimal string as an exact integer.
 _SPLIT_SQL_BUCKET = (
-    "(CAST(list_sum(list_transform(generate_series(1, 4), "
-    "i -> (strpos('0123456789abcdef', "
-    "substr(substr(md5(CAST({c} AS VARCHAR)), 1, 4), CAST(i AS INT), 1)) "
-    f"- 1) * 16.0 ** (4 - i))) AS BIGINT) % {_SPLIT_MOD})"
+    f"({_dk_hex_int('md5(CAST({c} AS VARCHAR))', 4)} % {_SPLIT_MOD})"
 )
 
 
@@ -863,10 +859,9 @@ FROM ranked r JOIN quota q USING (lang)
 WHERE r.sel_rank <= q.quota
 """,
     # Thresholds replay the 1/sqrt(p) derivation (correctly-rounded IEEE
-    # ops — bit-identical to Spark); the md5-prefix integer is parsed by
-    # positional hex arithmetic (DuckDB cannot cast hex strings/blobs to
-    # ints). 16.0 ** k is exact in double for k <= 4.
-    "sample_temperature": """
+    # ops — bit-identical to Spark); the md5-prefix integer is the
+    # exact _dk_hex_int decode.
+    "sample_temperature": f"""
 WITH c AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
 r AS (
   SELECT lang, n,
@@ -881,11 +876,7 @@ s AS (
 ),
 h AS (
   SELECT d.lang, s.th,
-         CAST(list_sum(list_transform(generate_series(1, 5),
-              i -> (strpos('0123456789abcdef',
-                           substr(substr(md5(d.text), 1, 5),
-                                  CAST(i AS INT), 1)) - 1)
-                   * 16.0 ** (5 - i))) AS BIGINT) AS hi
+         {_dk_hex_int("md5(d.text)", 5)} AS hi
   FROM documents d JOIN s USING (lang)
 )
 SELECT lang, th, COUNT(*) AS n_docs,

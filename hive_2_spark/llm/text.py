@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
+from hive_2_spark.core.aggregates import _dk_hex_int
 from hive_2_spark.llm.dedup import _DK_NORM, _NORM
 
 # stopword marker sets per language for the n-gram/stopword heuristic
@@ -858,7 +859,7 @@ GROUP BY 1, 2
     "fingerprint_rolling": (
         "SELECT doc_id, list_reduce(list_transform("
         f"string_split({_DK_NORM.format(c='text')}, ' '), "
-        "w -> CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) "
+        f"w -> {_dk_hex_int('md5(w)', 15)} "
         "% 1000000007), "
         "(acc, x) -> (acc * 31 + x) % 1000000007) AS rfp FROM documents"
     ),

@@ -1,8 +1,10 @@
-"""Shared file-stream source plumbing.
+"""The one stream reader: ``read_stream_table`` is the readStream twin
+of ``catalog.load_table``, so a streaming operator's stream face is its
+batch transform applied to this reader's output.
 
 FileStreamSource requires a DIRECTORY; the fixtures are single parquet
-files, so each is exposed through a symlinked temp dir (never mutating
-testdata). The dir name must be
+files, so each is exposed through a symlinked temp dir named after the
+table (never mutating testdata). The dir name must be
 
 * deterministic per fixture — checkpointed queries resume against the
   same source path across restarts; and
@@ -20,16 +22,16 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hive_2_spark.catalog import table_path
+from hive_2_spark.catalog import read_under_rule, table_path
 
 
-def _source_dir(prefix: str, sf_dir: str) -> str:
+def _source_dir(table: str, sf_dir: str) -> str:
     real = os.path.realpath(sf_dir.rstrip("/"))
     digest = hashlib.sha1(real.encode()).hexdigest()[:12]
     uid = os.getuid() if hasattr(os, "getuid") else 0
     tag = os.path.basename(real)
     return os.path.join(
-        tempfile.gettempdir(), f"hive2spark_{prefix}_{tag}_{digest}_u{uid}"
+        tempfile.gettempdir(), f"hive2spark_{table}_{tag}_{digest}_u{uid}"
     )
 
 
@@ -60,11 +62,15 @@ def _link_fixture(src_dir: str, name: str, target: str) -> None:
                 raise
 
 
-def read_stream_table(
-    spark: SparkSession, sf_dir: str, table: str, prefix: str
-) -> DataFrame:
-    """readStream over a single-file parquet fixture table."""
-    static = spark.read.parquet(table_path(sf_dir, table))
-    src_dir = _source_dir(prefix, sf_dir)
-    _link_fixture(src_dir, f"{table}.parquet", table_path(sf_dir, table))
-    return spark.readStream.schema(static.schema).parquet(src_dir)
+def read_stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """readStream over a single-file parquet fixture table, under the
+    same load rule as ``catalog.load_table`` (events: normalized ts)."""
+    path = table_path(sf_dir, table)
+    src_dir = _source_dir(table, sf_dir)
+    _link_fixture(src_dir, f"{table}.parquet", path)
+    return read_under_rule(
+        spark,
+        table,
+        lambda: spark.readStream.schema(spark.read.parquet(path).schema)
+        .parquet(src_dir),
+    )

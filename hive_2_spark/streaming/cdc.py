@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
+from hive_2_spark.streaming._source import read_stream_table
 
 
 def _latest_per_user(df: DataFrame) -> DataFrame:
@@ -193,8 +194,6 @@ def run_upsert_stream_versioned(
     (size ``keep_back`` to the slowest expected reader), and an
     unflipped snapshot is simply garbage-collected, so the retried batch
     re-merges against the last PUBLISHED version. Single-writer."""
-    from hive_2_spark.streaming.windows import _read_stream_events
-
     os.makedirs(root, exist_ok=True)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -217,7 +216,7 @@ def run_upsert_stream_versioned(
         _prune_versions(root, keep_back)  # keep current + keep_back for readers
 
     q = (
-        _read_stream_events(spark, sf_dir)
+        read_stream_table(spark, sf_dir, "events")
         .writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)

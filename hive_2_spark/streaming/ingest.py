@@ -4,16 +4,15 @@ arrive as a stream, each micro-batch is gated by the same
 blocklist-word census the batch pipeline applies, and only survivors
 flow on (to dedup/indexing downstream).
 
-Both faces, like every streaming op here: ``stream_doc_gate`` is the
-DuckDB-oracle-checkable batch face; ``stream_doc_gate_builder`` runs
-the IDENTICAL column transform over ``readStream`` (stateless
-filter+project, so it is append-mode with no watermark or state), and
-the two are value-equivalence-tested in tests/test_streaming.py.
+One transform, two reads, as in ``streaming.windows``: ``_gate`` is
+the operator; ``stream_doc_gate`` applies it to ``load_table`` (the
+DuckDB-oracle-checked batch face) and ``stream_doc_gate_builder`` to
+``read_stream_table`` (stateless filter+project, so append mode with no
+watermark or state). tests/test_streaming.py compares the two on every
+column.
 
 Scale: the gate is per-row codegen string/array work — zero shuffle,
-zero streaming state; throughput is bounded by source read speed. The
-shared transform lives in ONE function so the faces cannot drift
-(the `sessionized` lesson from round 1's advice).
+zero streaming state; throughput is bounded by source read speed.
 """
 
 from __future__ import annotations
@@ -23,6 +22,8 @@ from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
 from hive_2_spark.llm.quality import _BLOCK_PM_MAX, _BLOCK_SQL_LIST, _BLOCK_WORDS
+from hive_2_spark.streaming._source import read_stream_table
+from hive_2_spark.streaming.windows import WATERMARK_S
 
 
 def _gate(d: DataFrame) -> DataFrame:
@@ -46,26 +47,14 @@ def _gate(d: DataFrame) -> DataFrame:
 
 
 def stream_doc_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch face: the gated (surviving) documents."""
     return _gate(load_table(spark, sf_dir, "documents"))
 
 
-def _read_stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the documents parquet (collision-free symlinked
-    dir — see ``streaming._source``)."""
-    from hive_2_spark.streaming._source import read_stream_table
-
-    return read_stream_table(spark, sf_dir, "documents", "doc")
-
-
 def stream_doc_gate_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming face: same transform over readStream — stateless, so
-    append mode with no watermark/state; each micro-batch gates
-    independently."""
-    return _gate(_read_stream_documents(spark, sf_dir))
+    return _gate(read_stream_table(spark, sf_dir, "documents"))
 
 
-_WM_US = 10 * 60 * 1_000_000  # 10-minute watermark, microseconds
+_WM_US = WATERMARK_S * 1_000_000  # the stream faces' watermark, microseconds
 
 
 def stream_lateness_report(spark: SparkSession, sf_dir: str) -> DataFrame:

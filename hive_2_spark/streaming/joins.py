@@ -1,6 +1,10 @@
 """Streaming joins (SURVEY.md §2B op 42 extension): stream-static and
-watermarked stream-stream interval joins — both faces (batch-equivalent
-query for the oracle, readStream plan for the smoke test).
+watermarked stream-stream interval joins.
+
+One transform, two reads, as in ``streaming.windows``: each join is one
+function of the events frame; the registry key applies it to
+``load_table`` (the oracle-checked batch face) and the ``*_builder`` to
+``read_stream_table`` (the readStream plan the tests compare with it).
 
 Scale notes: a stream-static join broadcasts the static dim per
 micro-batch (no stream state). A stream-stream interval join keeps both
@@ -15,7 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
-from hive_2_spark.streaming.windows import _read_stream_events
+from hive_2_spark.streaming._source import read_stream_table
+from hive_2_spark.streaming.windows import _watermarked
 
 INTERVAL_S = 3600  # clicks within the hour preceding a purchase
 
@@ -31,91 +36,45 @@ def _user_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------- stream-static join
-def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch face: events enriched with the static user dimension."""
-    e = load_table(spark, sf_dir, "events")
-    return e.join(F.broadcast(_user_dim(spark, sf_dir)), on="user_id", how="inner").select(
+def _enriched(e: DataFrame, dim: DataFrame) -> DataFrame:
+    """Events enriched with the static user dimension."""
+    return e.join(F.broadcast(dim), on="user_id", how="inner").select(
         "event_id", "user_id", "event_type", "user_name", "segment"
     )
 
 
+def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _enriched(load_table(spark, sf_dir, "events"), _user_dim(spark, sf_dir))
+
+
 def stream_static_join_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming face: the same enrichment as a readStream plan."""
-    events = _read_stream_events(spark, sf_dir)
-    return events.join(
-        F.broadcast(_user_dim(spark, sf_dir)), on="user_id", how="inner"
-    ).select("event_id", "user_id", "event_type", "user_name", "segment")
+    return _enriched(
+        read_stream_table(spark, sf_dir, "events"), _user_dim(spark, sf_dir)
+    )
 
 
 # ---------------------------------------------- stream-stream interval join
-def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch face: purchase x click pairs for the same user with the
-    click in the preceding hour (inclusive bounds, equi-key + interval)."""
-    e = load_table(spark, sf_dir, "events")
-    p = e.filter(F.col("event_type") == "purchase").select(
+def _interval_pairs(e: DataFrame, how: str) -> DataFrame:
+    """Purchase x click pairs for the same user with the click in the
+    ``INTERVAL_S`` preceding the purchase (inclusive bounds, equi-key +
+    interval). ``how="left"`` keeps every purchase, with NULLs when no
+    click qualifies — the conversion-attribution shape where unmatched
+    purchases matter as much as matched ones.
+
+    Both sides come from one read, each under the stream faces'
+    watermark over its own event times, so a stream's join state is
+    bounded by watermark + interval. On a stream the LEFT join buffers
+    each purchase until the watermark passes its horizon, THEN emits the
+    NULL row if no click arrived — so on a bounded input, tail-of-stream
+    unmatched rows are withheld (the watermark never advances past the
+    final batch). That is watermark semantics, not a bug; the batch face
+    is the oracle for the complete answer."""
+    p = _watermarked(e.filter(F.col("event_type") == "purchase")).select(
         F.col("event_id").alias("p_id"),
         F.col("user_id"),
         F.col("ts").alias("p_ts"),
     )
-    c = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("c_id"),
-        F.col("user_id"),
-        F.col("ts").alias("c_ts"),
-    )
-    cond = (
-        (c.c_ts <= p.p_ts)
-        & (c.c_ts >= p.p_ts - F.expr(f"INTERVAL {INTERVAL_S} SECONDS"))
-    )
-    return p.join(c, on=[p.user_id == c.user_id, cond], how="inner").select(
-        "p_id", p.user_id.alias("user_id"), "p_ts", "c_id", "c_ts"
-    )
-
-
-def stream_interval_join_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming face: watermarked stream-stream join (state bounded by
-    watermark + interval)."""
-    p = (
-        _read_stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    c = (
-        _read_stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("c_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    return p.join(
-        c,
-        F.expr(
-            "user_id = c_user_id AND "
-            "c_ts <= p_ts AND c_ts >= p_ts - INTERVAL 1 HOUR"
-        ),
-        "inner",
-    ).select("p_id", "user_id", "p_ts", "c_id", "c_ts")
-
-
-# -------------------------------------- LEFT OUTER stream-stream join
-def stream_interval_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch face: every purchase, with its preceding-hour clicks or
-    NULLs — the conversion-attribution shape where unmatched purchases
-    matter as much as matched ones."""
-    e = load_table(spark, sf_dir, "events")
-    p = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"),
-        F.col("user_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    c = e.filter(F.col("event_type") == "click").select(
+    c = _watermarked(e.filter(F.col("event_type") == "click")).select(
         F.col("event_id").alias("c_id"),
         F.col("user_id").alias("c_user_id"),
         F.col("ts").alias("c_ts"),
@@ -125,47 +84,25 @@ def stream_interval_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (c.c_ts <= p.p_ts)
         & (c.c_ts >= p.p_ts - F.expr(f"INTERVAL {INTERVAL_S} SECONDS"))
     )
-    return p.join(c, cond, "left").select(
-        "p_id", "user_id", "p_ts", "c_id", "c_ts"
-    )
+    return p.join(c, cond, how).select("p_id", "user_id", "p_ts", "c_id", "c_ts")
 
 
-def stream_interval_join_left_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming face: watermarked LEFT OUTER stream-stream join. Spark
-    buffers each purchase in state until the watermark passes its join
-    horizon, THEN emits the NULL row if no click arrived — so on a
-    bounded input, tail-of-stream unmatched rows are withheld (the
-    watermark never advances past the final batch). That is watermark
-    semantics, not a bug; the batch face above is the oracle for the
-    complete answer."""
-    p = (
-        _read_stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 minutes")
-    )
-    c = (
-        _read_stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("c_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "10 minutes")
-    )
-    return p.join(
-        c,
-        F.expr(
-            "user_id = c_user_id AND "
-            "c_ts <= p_ts AND c_ts >= p_ts - INTERVAL 1 HOUR"
-        ),
-        "leftOuter",
-    ).select("p_id", "user_id", "p_ts", "c_id", "c_ts")
+def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _interval_pairs(load_table(spark, sf_dir, "events"), "inner")
+
+
+def stream_interval_join_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _interval_pairs(read_stream_table(spark, sf_dir, "events"), "inner")
+
+
+def stream_interval_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _interval_pairs(load_table(spark, sf_dir, "events"), "left")
+
+
+def stream_interval_join_left_builder(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    return _interval_pairs(read_stream_table(spark, sf_dir, "events"), "left")
 
 
 QUERIES = {

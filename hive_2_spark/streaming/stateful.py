@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import functions as F
 
+from hive_2_spark.streaming._source import read_stream_table
+
 OUTPUT_SCHEMA = "user_id long, total_spend double, n_events long"
 STATE_SCHEMA = "total_spend double, n_events long"
 
@@ -46,9 +48,7 @@ def _update_spend(
 
 def running_spend_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming plan: purchases folded into per-user state each batch."""
-    from hive_2_spark.streaming.windows import _read_stream_events
-
-    events = _read_stream_events(spark, sf_dir)
+    events = read_stream_table(spark, sf_dir, "events")
     return (
         events.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")
@@ -127,9 +127,7 @@ def ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the oracle-verified semantics; tests assert the streaming run
     emits identical rows (update mode, last emit per key wins).
     """
-    from hive_2_spark.streaming.windows import _read_stream_events
-
-    events = _read_stream_events(spark, sf_dir)
+    events = read_stream_table(spark, sf_dir, "events")
     return (
         events.select("user_id", "ts", "event_id", "value")
         .groupBy("user_id")
@@ -195,9 +193,7 @@ def chain_census_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     only, mirroring the batch plan's single exchange. The batch face
     is the oracle-verified semantics; tests assert the streaming run
     emits identical rows."""
-    from hive_2_spark.streaming.windows import _read_stream_events
-
-    events = _read_stream_events(spark, sf_dir)
+    events = read_stream_table(spark, sf_dir, "events")
     return (
         events.select(
             "user_id",
@@ -281,9 +277,7 @@ def running_spend_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transformWithStateInPandas needs the google.protobuf package "
             "for its streaming state runner; pip install protobuf"
         )
-    from hive_2_spark.streaming.windows import _read_stream_events
-
-    events = _read_stream_events(spark, sf_dir)
+    events = read_stream_table(spark, sf_dir, "events")
     return (
         events.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")

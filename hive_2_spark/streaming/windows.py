@@ -1,14 +1,19 @@
 """Streaming operators over the `events` table (SURVEY.md §2B op 42).
 
-Two faces per operator:
+One transform, two reads: each operator is one function ``f(df)``,
+watermark included. Its registry key is ``f(load_table(...))``, the
+DuckDB-oracle-checked batch face; its ``*_builder`` is
+``f(read_stream_table(...))``, a real Structured Streaming plan that
+tests/test_streaming.py runs to a memory sink and compares with the
+batch face on every column. A stream is an unbounded table, so the
+faces cannot drift; on a batch frame Spark drops the watermark.
 
-1. **Batch-equivalent queries** (this module's QUERIES/ORACLES) — the
-   same windowing semantics computed over the static table so the driver
-   can hash-match against DuckDB. Event-time semantics are identical; a
-   stream is just an unbounded version of the same relation.
-2. **Real Structured Streaming builders** (``stream_*_builder``) —
-   ``readStream`` plans with watermarks, used by tests/test_streaming.py
-   with a memory sink and ``processAllAvailable()``.
+Two operators have no stream twin of their own: ``stream_session``
+keeps the lag/cumsum island plan the oracle replays (its native
+``session_window`` twin is ``win_session_native``, whose stream face is
+``stream_session_builder``), and ``stream_dedup_builder`` dedups on
+``event_id`` — Structured Streaming cannot keep the first event per key
+in ts order, so it is not a face of ``stream_dedup``.
 
 Scale notes: tumbling/sliding aggregation state is bounded by
 (windows x keys); the watermark bounds it in event time — state for
@@ -23,19 +28,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from hive_2_spark.catalog import _normalize_ts, load_table
+from hive_2_spark.catalog import load_table
 from hive_2_spark.core.events import _DK_SESSIONS, sessionized
 from hive_2_spark.streaming._source import read_stream_table
 
-GAP_SECONDS = 30 * 60  # session gap: 30 minutes (streaming session_window)
+WATERMARK_S = 10 * 60  # event-time watermark of every stream face
+
+
+def _watermarked(e: DataFrame) -> DataFrame:
+    """``e`` under the stream faces' event-time watermark (a no-op on a
+    batch frame)."""
+    return e.withWatermark("ts", f"{WATERMARK_S} seconds")
 
 
 # ------------------------------------------------------------- tumbling
-def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _tumbling(e: DataFrame) -> DataFrame:
     """5-minute tumbling window: count + sum(value) per event_type."""
-    e = load_table(spark, sf_dir, "events")
     return (
-        e.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
+        _watermarked(e)
+        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 2).alias("sum_value"),
@@ -49,15 +60,31 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _tumbling(load_table(spark, sf_dir, "events"))
+
+
+def stream_tumbling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _tumbling(read_stream_table(spark, sf_dir, "events"))
+
+
 # -------------------------------------------------------------- sliding
-def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _sliding(e: DataFrame) -> DataFrame:
     """10-minute window sliding every 5 minutes (each event in 2 windows)."""
-    e = load_table(spark, sf_dir, "events")
     return (
-        e.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
+        _watermarked(e)
+        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "n")
     )
+
+
+def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _sliding(load_table(spark, sf_dir, "events"))
+
+
+def stream_sliding_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _sliding(read_stream_table(spark, sf_dir, "events"))
 
 
 # -------------------------------------------------------------- session
@@ -77,9 +104,9 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def win_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark's NATIVE batch ``session_window`` aggregation (30-min gap)
-    — the engine-builtin face of the lag/cumsum island pattern, with a
+def _native_sessions(e: DataFrame) -> DataFrame:
+    """Spark's NATIVE ``session_window`` aggregation (30-min gap) — the
+    engine-builtin face of the lag/cumsum island pattern, with a
     DuckDB oracle proving the two formulations agree cell-for-cell.
 
     Boundary semantics, verified empirically against Spark 4.x: an
@@ -91,9 +118,9 @@ def win_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange + in-partition merge, the same shape Structured
     Streaming runs incrementally with state eviction.
     """
-    e = load_table(spark, sf_dir, "events")
     return (
-        e.groupBy(
+        _watermarked(e)
+        .groupBy(
             "user_id", F.session_window("ts", "30 minutes").alias("sw")
         )
         .agg(
@@ -110,6 +137,14 @@ def win_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def win_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _native_sessions(load_table(spark, sf_dir, "events"))
+
+
+def stream_session_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _native_sessions(read_stream_table(spark, sf_dir, "events"))
+
+
 # ------------------------------------------------------- stateful dedup
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful dedup, batch face: first event per (user_id, event_type)."""
@@ -124,57 +159,13 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------------------- real stream plans
-def _read_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet (nanos ts handled as in catalog).
-
-    FileStreamSource requires a DIRECTORY; the fixture is a single file,
-    so it is exposed through a symlinked temp dir (no testdata mutation).
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = read_stream_table(spark, sf_dir, "events", "events")
-    # same ts normalization as the batch path (nanos-long vs naive-micros)
-    return stream.withColumn("ts", _normalize_ts(stream.schema["ts"].dataType, F))
-
-
-def stream_tumbling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked tumbling-window aggregation as a streaming plan."""
-    return (
-        _read_stream_events(spark, sf_dir)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "5 minutes"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-    )
-
-
-def stream_session_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native session_window (30-min gap) streaming aggregation."""
-    return (
-        _read_stream_events(spark, sf_dir)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("sw.start", "sw.end", "user_id", "n_events")
-    )
-
-
 def stream_dedup_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked stateful dedup on event_id."""
-    return (
-        _read_stream_events(spark, sf_dir)
-        .withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-
-
-def stream_sliding_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked sliding-window (10 min / 5 min) count per type."""
-    return (
-        _read_stream_events(spark, sf_dir)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "10 minutes", "5 minutes"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    """Watermarked stateful dedup on ``event_id`` — a reference stream
+    operator, not a face of ``stream_dedup``: Structured Streaming cannot
+    keep the first event per (user_id, event_type) in ts order."""
+    return _watermarked(
+        read_stream_table(spark, sf_dir, "events")
+    ).dropDuplicatesWithinWatermark(["event_id"])
 
 
 def run_foreach_batch_to_parquet(

@@ -1,8 +1,8 @@
-"""`catalog._load_events` must normalize EVERY ts encoding the driver's
-generator has shipped — TIMESTAMP(NANOS) in round 1, naive
-TIMESTAMP(MICROS) in round 2 — to the same TimestampType column with
-epoch = naive-value-as-UTC. Regression guard for the next fixture
-regeneration."""
+"""The events load rule (``catalog.read_under_rule``) must normalize
+EVERY ts encoding the fixture generator has shipped — TIMESTAMP(NANOS)
+in round 1, naive TIMESTAMP(MICROS) in round 2 — to the same
+TimestampType column with epoch = naive-value-as-UTC. Regression guard
+for the next fixture regeneration."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from hive_2_spark.catalog import _load_events
+from hive_2_spark.catalog import load_table
 from pyspark.sql.types import TimestampType
 
 _TS = [
@@ -49,7 +49,7 @@ def test_load_events_normalizes_all_encodings(spark, tmp_path, encoding):
     else:
         arr = pa.array(_TS, pa.timestamp("us"))
     _write_events(d, arr)
-    df = _load_events(spark, d)
+    df = load_table(spark, d, "events")
     assert isinstance(df.schema["ts"].dataType, TimestampType)
     got = sorted(r["ts"] for r in df.select("ts").collect())
     # UTC session (conftest) -> collected naive datetimes equal the
@@ -77,7 +77,7 @@ def test_load_events_epoch_is_session_timezone_independent(
     def epochs() -> list[int]:
         return sorted(
             r["e"]
-            for r in _load_events(spark, d)
+            for r in load_table(spark, d, "events")
             .select(F.unix_micros("ts").alias("e"))
             .collect()
         )

@@ -5,6 +5,8 @@ drift from the first without any fixture showing it."""
 
 from __future__ import annotations
 
+import subprocess
+import sys
 from pathlib import Path
 
 import pytest
@@ -63,3 +65,31 @@ def test_no_second_neardup_pair_sql():
     """The near-dup pair copy that lacked the mega-block leg is gone:
     its users compose the dedup_ngram_jaccard oracle."""
     assert not [n for n, t in _sources().items() if "_DK_PAIRS" in t]
+
+
+# a phrase -> the only modules allowed to hold it (empty: none may)
+_CONFINED = {
+    # the one stream reader, and the version-log tail's custom format
+    "spark.readStream": {"streaming/_source.py", "core/pysource.py"},
+    # the events load rule
+    "nanosAsLong": {"catalog.py"},
+    # the strpos nibble fold ``_dk_hex_int``'s native cast replaced
+    "strpos('0123456789abcdef'": set(),
+}
+
+
+@pytest.mark.parametrize("phrase", sorted(_CONFINED))
+def test_phrase_confined_to_its_home(phrase):
+    holders = {name for name, text in _sources().items() if phrase in text}
+    assert holders <= _CONFINED[phrase]
+
+
+def test_registry_import_raises_no_user_warning():
+    """Building the registry warns nothing, so a warning at import
+    always means something new (a UDF's type hints, say)."""
+    code = "import hive_2_spark.registry as r; r.all_queries()"
+    subprocess.run(
+        [sys.executable, "-W", "error::UserWarning", "-c", code],
+        cwd=PKG.parent,
+        check=True,
+    )

@@ -11,14 +11,14 @@ def test_same_basename_different_paths_do_not_collide(tmp_path):
     b = tmp_path / "b" / "sf0.01"
     a.mkdir(parents=True)
     b.mkdir(parents=True)
-    da, db = _source_dir("doc", str(a)), _source_dir("doc", str(b))
+    da, db = _source_dir("documents", str(a)), _source_dir("documents", str(b))
     assert da != db
     # deterministic for checkpoint resume
-    assert da == _source_dir("doc", str(a))
+    assert da == _source_dir("documents", str(a))
 
 
 def test_dir_embeds_uid_and_prefix(tmp_path):
-    d = _source_dir("emb", str(tmp_path))
+    d = _source_dir("embeddings", str(tmp_path))
     uid = os.getuid()
     assert f"_u{uid}" in os.path.basename(d)
-    assert os.path.basename(d).startswith("hive2spark_emb_")
+    assert os.path.basename(d).startswith("hive2spark_embeddings_")

@@ -8,6 +8,8 @@ import os
 
 import pytest
 
+from hive_2_spark.catalog import load_table
+from hive_2_spark.streaming import ingest, joins as sj, serving as sv
 from hive_2_spark.streaming import windows as sw
 from tests.conftest import SF_DIR
 
@@ -129,119 +131,55 @@ def test_stream_sliding_runs_and_matches_batch(spark):
     n = _run_to_memory(
         spark, sw.stream_sliding_builder(spark, SF_DIR), "t_slide", "complete"
     )
-    # batch equivalent counts windows only (not per-type) — compare the
-    # distinct window count instead
+    # both faces count per window: one row per distinct window start
     batch_windows = sw.stream_sliding(spark, SF_DIR).count()
     stream_windows = spark.sql(
-        "SELECT COUNT(DISTINCT window) FROM t_slide"
+        "SELECT COUNT(DISTINCT window_start) FROM t_slide"
     ).collect()[0][0]
-    assert stream_windows == batch_windows > 0
+    assert n == stream_windows == batch_windows > 0
 
 
-# --- value-level stream/batch equivalence (VERDICT r1 #9) -------------
-# Each *_builder streaming plan, executed as bounded micro-batches, must
-# produce EXACTLY the rows its batch face computes — not just the same
-# count. Each case maps both faces onto a canonical column set first
-# (the faces expose different rollup columns by design).
+# --- value-level stream/batch equivalence ------------------------------
+# Each stream face is its batch face's transform over a readStream, so
+# run as bounded micro-batches it must produce EXACTLY the batch face's
+# rows, on every column. (batch face, stream face, output mode):
 
 _EQUIV_CASES = {
-    "tumbling": {
-        "builder": lambda s: sw.stream_tumbling_builder(s, SF_DIR),
-        "mode": "complete",
-        "stream_sql": (
-            "SELECT window.start AS ws, event_type, n, sum_value FROM {t}"
-        ),
-        "batch": lambda s: sw.stream_tumbling(s, SF_DIR).selectExpr(
-            "window_start AS ws", "event_type", "n", "sum_value"
-        ),
-    },
-    "sliding": {
-        "builder": lambda s: sw.stream_sliding_builder(s, SF_DIR),
-        "mode": "complete",
-        # batch face counts per window only; aggregate types away
-        "stream_sql": (
-            "SELECT window.start AS ws, CAST(SUM(n) AS BIGINT) AS n "
-            "FROM {t} GROUP BY 1"
-        ),
-        "batch": lambda s: sw.stream_sliding(s, SF_DIR).selectExpr(
-            "window_start AS ws", "CAST(n AS BIGINT) AS n"
-        ),
-    },
-    "session": {
-        "builder": lambda s: sw.stream_session_builder(s, SF_DIR),
-        "mode": "complete",
-        # native session_window start == island min(ts); end is start+gap
-        # padded, so compare (user, start, n_events)
-        "stream_sql": "SELECT user_id, start AS ss, n_events FROM {t}",
-        "batch": lambda s: sw.stream_session(s, SF_DIR).selectExpr(
-            "user_id", "session_start AS ss", "CAST(n_events AS BIGINT) AS n_events"
-        ),
-    },
-    "cluster_monitor": {
-        "builder": lambda s: __import__(
-            "hive_2_spark.streaming.serving", fromlist=["serving"]
-        ).stream_cluster_monitor_builder(s, SF_DIR),
-        "mode": "complete",
-        "stream_sql": "SELECT cluster, n, avg_d2 FROM {t}",
-        "batch": lambda s: __import__(
-            "hive_2_spark.streaming.serving", fromlist=["serving"]
-        ).stream_cluster_monitor(s, SF_DIR),
-    },
-    "doc_gate": {
-        "builder": lambda s: __import__(
-            "hive_2_spark.streaming.ingest", fromlist=["ingest"]
-        ).stream_doc_gate_builder(s, SF_DIR),
-        "mode": "append",  # stateless filter+project: append, no state
-        "stream_sql": (
-            "SELECT doc_id, source, n_tokens, n_blocked, blocked_pm FROM {t}"
-        ),
-        "batch": lambda s: __import__(
-            "hive_2_spark.streaming.ingest", fromlist=["ingest"]
-        ).stream_doc_gate(s, SF_DIR),
-    },
-    "anomaly_monitor": {
-        "builder": lambda s: __import__(
-            "hive_2_spark.streaming.serving", fromlist=["serving"]
-        ).stream_anomaly_monitor_builder(s, SF_DIR),
-        "mode": "complete",
-        "stream_sql": "SELECT event_type, n_anomalies, max_abs_mz FROM {t}",
-        "batch": lambda s: __import__(
-            "hive_2_spark.streaming.serving", fromlist=["serving"]
-        ).stream_anomaly_monitor(s, SF_DIR),
-    },
-    "dedup": {
-        "builder": lambda s: sw.stream_dedup_builder(s, SF_DIR),
-        "mode": "append",
-        # watermark dedup on unique event_id == the raw event_id set
-        "stream_sql": "SELECT event_id, user_id, event_type FROM {t}",
-        "batch": lambda s: __import__("hive_2_spark.catalog", fromlist=["load_table"])
-        .load_table(s, SF_DIR, "events")
-        .select("event_id", "user_id", "event_type"),
-    },
+    "tumbling": (sw.stream_tumbling, sw.stream_tumbling_builder, "complete"),
+    "sliding": (sw.stream_sliding, sw.stream_sliding_builder, "complete"),
+    "session": (sw.win_session_native, sw.stream_session_builder, "complete"),
+    "static_join": (
+        sj.stream_static_join, sj.stream_static_join_builder, "append"
+    ),
+    # the fixture fits one micro-batch: no pair straddles the watermark
+    "interval_join": (
+        sj.stream_interval_join, sj.stream_interval_join_builder, "append"
+    ),
+    "cluster_monitor": (
+        sv.stream_cluster_monitor, sv.stream_cluster_monitor_builder, "complete"
+    ),
+    "anomaly_monitor": (
+        sv.stream_anomaly_monitor, sv.stream_anomaly_monitor_builder, "complete"
+    ),
+    # stateless filter+project: append, no state
+    "doc_gate": (ingest.stream_doc_gate, ingest.stream_doc_gate_builder, "append"),
+    # watermark dedup on the unique event_id keeps every event
+    "dedup": (
+        lambda s, d: load_table(s, d, "events"), sw.stream_dedup_builder, "append"
+    ),
 }
 
 
 @pytest.mark.parametrize("case", sorted(_EQUIV_CASES))
 def test_stream_face_equals_batch_face_valuewise(spark, case):
-    spec = _EQUIV_CASES[case]
+    batch_face, stream_face, mode = _EQUIV_CASES[case]
     name = f"t_equiv_{case}"
-    q = (
-        spec["builder"](spark)
-        .writeStream.outputMode(spec["mode"])
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    stream_rows = sorted(
-        tuple(r) for r in spark.sql(spec["stream_sql"].format(t=name)).collect()
-    )
-    batch_rows = sorted(tuple(r) for r in spec["batch"](spark).collect())
+    _run_to_memory(spark, stream_face(spark, SF_DIR), name, mode)
+    stream, batch = spark.table(name), batch_face(spark, SF_DIR)
+    assert stream.columns == batch.columns
+    stream_rows = sorted(map(tuple, stream.collect()), key=repr)
     assert len(stream_rows) > 0
-    assert stream_rows == batch_rows
+    assert stream_rows == sorted(map(tuple, batch.collect()), key=repr)
 
 
 def test_foreach_batch_parquet_sink(spark, tmp_path):
@@ -256,36 +194,11 @@ def test_foreach_batch_parquet_sink(spark, tmp_path):
     assert spark.read.parquet(out).count() == before
 
 
-def test_stream_static_join(spark):
-    from hive_2_spark.streaming import joins as sj
-
-    n = _run_to_memory(
-        spark, sj.stream_static_join_builder(spark, SF_DIR), "t_ssj", "append"
-    )
-    assert n == sj.stream_static_join(spark, SF_DIR).count() > 0
-
-
-def test_stream_stream_interval_join(spark):
-    """Watermarked stream-stream join emits exactly the batch pair set
-    (fixture fits one micro-batch, so no pairs straddle the watermark)."""
-    from hive_2_spark.streaming import joins as sj
-
-    n = _run_to_memory(
-        spark,
-        sj.stream_interval_join_builder(spark, SF_DIR),
-        "t_ssij",
-        "append",
-    )
-    assert n == sj.stream_interval_join(spark, SF_DIR).count() > 0
-
-
 def test_stream_left_outer_interval_join(spark):
     """Watermarked LEFT OUTER stream-stream join: emits every matched
     pair; unmatched purchases are bounded by the batch face's NULL rows
     (tail-of-stream unmatched rows are withheld until the watermark
     passes — correct watermark semantics on bounded input)."""
-    from hive_2_spark.streaming import joins as sj
-
     n = _run_to_memory(
         spark,
         sj.stream_interval_join_left_builder(spark, SF_DIR),
@@ -381,17 +294,16 @@ def test_stream_embeddings_link_replaces_stale_nonsymlink(spark):
     silently streamed instead of the fixture (round-3 advice: the old
     lexists-only guard skipped relinking over a non-symlink)."""
     from hive_2_spark.catalog import table_path
-    from hive_2_spark.streaming import serving as sv
-    from hive_2_spark.streaming._source import _source_dir
+    from hive_2_spark.streaming._source import _source_dir, read_stream_table
 
-    src_dir = _source_dir("emb", SF_DIR)
+    src_dir = _source_dir("embeddings", SF_DIR)
     os.makedirs(src_dir, exist_ok=True)
     link = os.path.join(src_dir, "embeddings.parquet")
     if os.path.lexists(link):
         os.remove(link)
     with open(link, "w") as f:
         f.write("stale non-symlink")
-    sv._read_stream_embeddings(spark, SF_DIR)
+    read_stream_table(spark, SF_DIR, "embeddings")
     assert os.path.islink(link)
     assert os.readlink(link) == table_path(SF_DIR, "embeddings")
 
