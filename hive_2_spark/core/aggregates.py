@@ -20,6 +20,11 @@ from pyspark.sql import functions as F
 
 from hive_2_spark import catalog
 from hive_2_spark.catalog import load_table
+from hive_2_spark.core.windows import (
+    _dk_nearest_rank,
+    bucketed_running_sum,
+    nearest_rank,
+)
 
 
 def agg_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -269,85 +274,57 @@ def agg_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT quantity-weighted median price per return flag — by
-    bounded-key histogram, not a per-group row sort.
-
-    The naive plan (cumsum window over rows within each flag) sorts
-    every row of a 3-key-partitioned table — three hot partitions at
-    100 TB. Instead: (1) bucket price to CENTS (prices carry two
-    decimals, so cent buckets are exact, not approximate) and aggregate
-    weight per (flag, cent) — the only corpus-sized exchange, partial-
-    aggregated map-side; (2) cumsum over the CENT table, whose size is
-    bounded by the price DOMAIN (~100k cents), not the data; (3) the
-    weighted median is the first cent whose cumulative weight reaches
-    half the total. Quantities are whole numbers in doubles, so every
-    sum/comparison is exact — no rounding boundary exists."""
-    from pyspark.sql.window import Window
-
+def _flag_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem as (l_returnflag, cent, l_quantity): prices carry two
+    decimals, so integer cents are exact buckets, not approximate."""
     li = load_table(spark, sf_dir, "lineitem")
     cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("bigint")
-    hist = (
-        li.select(
-            "l_returnflag", cents.alias("cent"), F.col("l_quantity").alias("w")
-        )
-        .groupBy("l_returnflag", "cent")
-        .agg(F.sum("w").alias("bucket_w"))
+    return li.select("l_returnflag", cents.alias("cent"), "l_quantity")
+
+
+_DK_FLAG_CENTS = (
+    "(SELECT l_returnflag, "
+    "CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS cent, "
+    "l_quantity FROM lineitem)"
+)
+_WQ_PICKS = {"c25": 25, "c50": 50, "c75": 75}
+
+
+def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT quantity-weighted median price per return flag — the
+    :func:`nearest_rank` cent histogram, not a per-group row sort (the
+    naive cumsum window over rows sorts every row of a 3-key-partitioned
+    table — three hot partitions at 100 TB). Quantities are whole
+    numbers in doubles, so every sum/comparison is exact — no rounding
+    boundary exists."""
+    q = nearest_rank(
+        _flag_cents(spark, sf_dir), ["l_returnflag"], "cent", "l_quantity",
+        {"c50": 50},
     )
-    wflag = Window.partitionBy("l_returnflag")
-    wcum = wflag.orderBy("cent").rowsBetween(Window.unboundedPreceding, 0)
-    ranked = hist.withColumn("cum_w", F.sum("bucket_w").over(wcum)).withColumn(
-        "total_w", F.sum("bucket_w").over(wflag)
-    )
-    med = ranked.filter(F.col("cum_w") * 2 >= F.col("total_w")).groupBy(
-        "l_returnflag"
-    ).agg(F.min("cent").alias("med_cent"))
-    return med.select(
+    return q.select(
         "l_returnflag",
-        (F.col("med_cent").cast("double") / 100.0).alias("weighted_median_price"),
+        (F.col("c50").cast("double") / 100.0).alias("weighted_median_price"),
     )
 
 
 def agg_weighted_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact quantity-weighted p25/p50/p75 price per return flag — the
-    same bounded-key cent-histogram shape as `agg_weighted_median`
-    (one corpus-sized exchange, domain-bounded prefix sums), with three
-    thresholds read off one cumulative pass: quantile q = first cent
-    whose cumulative weight reaches q of the total (cum_w * 4 >= total,
-    * 2 >= total, * 4 >= 3 * total — all exact integer-valued double
-    comparisons)."""
-    from pyspark.sql.window import Window
+    `agg_weighted_median` histogram with three picks read off one
+    :func:`nearest_rank` cumulative pass."""
+    q = nearest_rank(
+        _flag_cents(spark, sf_dir), ["l_returnflag"], "cent", "l_quantity",
+        _WQ_PICKS,
+    )
+    return q.select(
+        "l_returnflag",
+        *[
+            (F.col(c).cast("double") / 100.0).alias(f"p{p}_price")
+            for c, p in _WQ_PICKS.items()
+        ],
+    )
 
-    li = load_table(spark, sf_dir, "lineitem")
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("bigint")
-    hist = (
-        li.select(
-            "l_returnflag", cents.alias("cent"), F.col("l_quantity").alias("w")
-        )
-        .groupBy("l_returnflag", "cent")
-        .agg(F.sum("w").alias("bucket_w"))
-    )
-    wflag = Window.partitionBy("l_returnflag")
-    wcum = wflag.orderBy("cent").rowsBetween(Window.unboundedPreceding, 0)
-    ranked = hist.withColumn("cum_w", F.sum("bucket_w").over(wcum)).withColumn(
-        "total_w", F.sum("bucket_w").over(wflag)
-    )
-    def _q(cond):
-        return F.min(F.when(cond, F.col("cent")))
-    return (
-        ranked.groupBy("l_returnflag")
-        .agg(
-            _q(F.col("cum_w") * 4 >= F.col("total_w")).alias("c25"),
-            _q(F.col("cum_w") * 2 >= F.col("total_w")).alias("c50"),
-            _q(F.col("cum_w") * 4 >= F.col("total_w") * 3).alias("c75"),
-        )
-        .select(
-            "l_returnflag",
-            (F.col("c25").cast("double") / 100.0).alias("p25_price"),
-            (F.col("c50").cast("double") / 100.0).alias("p50_price"),
-            (F.col("c75").cast("double") / 100.0).alias("p75_price"),
-        )
-    )
+
+_WS_PICKS = {"lo": 5, "hi": 95}
 
 
 def agg_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -358,21 +335,16 @@ def agg_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     `agg_weighted_median`): a handful of mega-orders should not drag
     the per-priority spend baseline.
 
-    Same bounded-key cent-histogram discipline as
-    `agg_weighted_quartiles`: ONE corpus-sized exchange builds the
-    (priority, cent) histogram; the p05/p95 edges are nearest-rank
-    picks off the domain-bounded cumulative pass with ALL-INTEGER
-    thresholds (ceil(q*n) spelled (q*n + 99) DIV 100 — no float
+    ONE corpus-sized exchange builds the (priority, cent) histogram;
+    the p05/p95 edges are :func:`nearest_rank` picks off it (no float
     boundary can flip a rank); the edges broadcast back onto the
-    histogram (5-row dim side) and both means are exact-integer
-    cent sums in decimal(38,0) divided ONCE at the end (CAST DOUBLE /
-    CAST DOUBLE, ROUND 4 — bit-identical across engines).
+    histogram (5-row dim side) and both means are exact-integer cent
+    sums in decimal(38,0) divided ONCE at the end (CAST DOUBLE / CAST
+    DOUBLE, ROUND 4 — bit-identical across engines).
 
     Output per priority: n_orders, p05, p95, winsorized_mean,
     trimmed_mean.
     """
-    from pyspark.sql.window import Window
-
     o = load_table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
     hist = (
@@ -382,26 +354,7 @@ def agg_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("prio", "cent")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    wp = Window.partitionBy("prio")
-    wcum = wp.orderBy("cent").rowsBetween(Window.unboundedPreceding, 0)
-    ranked = hist.withColumn("cum", F.sum("cnt").over(wcum)).withColumn(
-        "n", F.sum("cnt").over(wp)
-    )
-    edges = ranked.groupBy("prio").agg(
-        F.max("n").alias("n"),
-        F.min(
-            F.when(
-                F.col("cum") >= F.expr("(5 * n + 99) DIV 100"),
-                F.col("cent"),
-            )
-        ).alias("lo"),
-        F.min(
-            F.when(
-                F.col("cum") >= F.expr("(95 * n + 99) DIV 100"),
-                F.col("cent"),
-            )
-        ).alias("hi"),
-    )
+    edges = nearest_rank(hist, ["prio"], "cent", "cnt", _WS_PICKS)
     j = hist.join(F.broadcast(edges), "prio")
     clamped = F.least(F.greatest(F.col("cent"), F.col("lo")), F.col("hi"))
     kept = (F.col("cent") >= F.col("lo")) & (F.col("cent") <= F.col("hi"))
@@ -439,6 +392,9 @@ def agg_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_QSM_PICKS = {"p25": 25, "p50": 50, "p75": 75}
+
+
 def agg_quantile_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT distributed quantiles from MERGEABLE shard states — the
     portable counterpart of the HLL `agg_sketch_merge` key (this one
@@ -454,8 +410,6 @@ def agg_quantile_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact; this is how you get exact corpus-wide percentiles at 100 TB
     without ever sorting rows or funneling them to one partition.
     Output: one row per month shard + an 'ALL' row from the merge."""
-    from pyspark.sql.window import Window
-
     o = load_table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
     hist = (
@@ -472,31 +426,16 @@ def agg_quantile_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("shard", F.lit("ALL"))
         .select("shard", "cent", "bucket_n")
     )
-    both = hist.unionByName(merged)
-    wshard = Window.partitionBy("shard")
-    wcum = wshard.orderBy("cent").rowsBetween(Window.unboundedPreceding, 0)
-    ranked = both.withColumn("cum_n", F.sum("bucket_n").over(wcum)).withColumn(
-        "total_n", F.sum("bucket_n").over(wshard)
+    q = nearest_rank(
+        hist.unionByName(merged), ["shard"], "cent", "bucket_n", _QSM_PICKS
     )
-
-    def _q(cond):
-        return F.min(F.when(cond, F.col("cent")))
-
-    return (
-        ranked.groupBy("shard")
-        .agg(
-            F.max("total_n").cast("bigint").alias("n"),
-            _q(F.col("cum_n") * 4 >= F.col("total_n")).alias("c25"),
-            _q(F.col("cum_n") * 2 >= F.col("total_n")).alias("c50"),
-            _q(F.col("cum_n") * 4 >= F.col("total_n") * 3).alias("c75"),
-        )
-        .select(
-            "shard",
-            "n",
-            (F.col("c25").cast("double") / 100.0).alias("p25"),
-            (F.col("c50").cast("double") / 100.0).alias("p50"),
-            (F.col("c75").cast("double") / 100.0).alias("p75"),
-        )
+    return q.select(
+        "shard",
+        F.col("n").cast("bigint").alias("n"),
+        *[
+            (F.col(c).cast("double") / 100.0).alias(c)
+            for c in _QSM_PICKS
+        ],
     )
 
 
@@ -760,21 +699,19 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     gini = (2*S2 - (n+1)*S1) / (n*S1) with per-customer totals x_i
     sorted ascending, i = 1..n, S1 = sum(x_i), S2 = sum(i * x_i).
 
-    The global rank i comes from the `win_global_rank` two-phase plan
-    (per-band local row_number + band-count prefix offsets), never a
-    single-partition global window: band id = total_cents DIV 10^7
-    ($100k bands — bounded by the per-customer revenue DOMAIN (orders
-    per customer x price cap), not by customer count, so the offsets
-    table stays tiny while customers scale to billions). All money in
-    integer cents and the rank products accumulated in decimal(38,0)
-    (i ~ 1e9 customers x cents ~ 1e9 overflows bigint at 100 TB scale),
-    so S1/S2/n are exact in both engines; the single final division is
-    correctly-rounded IEEE — bit-identical — and rounded to 6.
+    The global rank i is the running count of
+    :func:`bucketed_running_sum`, never a single-partition global
+    window: band id = total_cents DIV 10^7 ($100k bands — bounded by
+    the per-customer revenue DOMAIN (orders per customer x price cap),
+    not by customer count, so the offsets table stays tiny while
+    customers scale to billions). All money in integer cents and the
+    rank products accumulated in decimal(38,0) (i ~ 1e9 customers x
+    cents ~ 1e9 overflows bigint at 100 TB scale), so S1/S2/n are exact
+    in both engines; the single final division is correctly-rounded
+    IEEE — bit-identical — and rounded to 6.
 
     Output: one row — n_customers, total_cents, gini.
     """
-    from pyspark.sql.window import Window
-
     o = load_table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
     per_cust = (
@@ -783,22 +720,9 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("cent").alias("x"))
         .withColumn("bid", F.expr("x DIV 10000000"))
     )
-    wloc = Window.partitionBy("bid").orderBy(
-        F.col("x").asc(), F.col("o_custkey").asc()
-    )
-    local = per_cust.withColumn("local_rn", F.row_number().over(wloc))
-    counts = per_cust.groupBy("bid").agg(F.count(F.lit(1)).alias("bn"))
-    woff = Window.orderBy(F.col("bid").asc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offs = counts.select(
-        "bid",
-        F.coalesce(F.sum("bn").over(woff), F.lit(0))
-        .cast("bigint")
-        .alias("off"),
-    )
-    ranked = local.join(F.broadcast(offs), "bid").select(
-        "x", (F.col("off") + F.col("local_rn")).alias("i")
+    order = [F.col("x").asc(), F.col("o_custkey").asc()]
+    ranked = bucketed_running_sum(per_cust, F.lit(1), order, "bid").select(
+        "x", F.col("run").alias("i")
     )
     sums = ranked.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -944,6 +868,7 @@ def agg_kmv_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQ_K = 512  # bottom-k sample size per shard
+_SQ_PICKS = {"p50_cents": 50, "p90_cents": 90, "p99_cents": 99}
 
 
 def _sq_sample(
@@ -1005,12 +930,11 @@ def agg_sample_quantile_portable(
 
     Everything is exact integers: cents = floor(price*100 + 0.5),
     48-bit md5 priorities with (okey, lineno) collision tiebreak, and
-    the type-1 quantile rule value-at-rank ceil(q*n) = (n*q100 + 99)
-    DIV 100 over the (cents, pri, okey, lineno)-sorted sample — both
-    engines replay the selection and the pick bit-for-bit. Accuracy vs
-    the exact CDF is gated in tests/test_sketches.py (the estimated
-    p50/p90 must land within +-6 rank points of their target, the
-    k=512 two-sigma band).
+    the type-1 quantile rule of :func:`nearest_rank` over the sample's
+    cents — both engines replay the selection and the pick bit-for-bit.
+    Accuracy vs the exact CDF is gated in tests/test_sketches.py (the
+    estimated p50/p90 must land within +-6 rank points of their target,
+    the k=512 two-sigma band).
 
     Output: (shard, n_sample, p50_cents, p90_cents, p99_cents), one
     row per ship-year plus the merged 'ALL' row.
@@ -1026,28 +950,11 @@ def agg_sample_quantile_portable(
             F.lit("ALL").alias("shard"), "pri", "okey", "lineno", "cents"
         )
     )
-    s = shard_s.unionByName(all_s)
-    w_val = Window.partitionBy("shard").orderBy(
-        "cents", "pri", "okey", "lineno"
+    q = nearest_rank(
+        shard_s.unionByName(all_s), ["shard"], "cents", F.lit(1), _SQ_PICKS
     )
-    w_n = Window.partitionBy("shard")
-    v = s.withColumn("vr", F.row_number().over(w_val)).withColumn(
-        "n", F.count(F.lit(1)).over(w_n)
-    )
-
-    def pick(q100: int, name: str):
-        return F.max(
-            F.when(
-                F.col("vr") == F.expr(f"(n * {q100} + 99) DIV 100"),
-                F.col("cents"),
-            )
-        ).alias(name)
-
-    return v.groupBy("shard").agg(
-        F.max("n").cast("bigint").alias("n_sample"),
-        pick(50, "p50_cents"),
-        pick(90, "p90_cents"),
-        pick(99, "p99_cents"),
+    return q.select(
+        "shard", F.col("n").cast("bigint").alias("n_sample"), *_SQ_PICKS
     )
 
 
@@ -1226,19 +1133,9 @@ WITH rows AS (
   WHERE rn <= {_SQ_K}
 ), s AS (
   SELECT * FROM shard_s UNION ALL SELECT * FROM all_s
-), v AS (
-  SELECT shard, cents,
-         ROW_NUMBER() OVER (
-           PARTITION BY shard ORDER BY cents, pri, okey, lineno) AS vr,
-         COUNT(*) OVER (PARTITION BY shard) AS n
-  FROM s
 )
-SELECT shard,
-       CAST(MAX(n) AS BIGINT) AS n_sample,
-       MAX(CASE WHEN vr = (n * 50 + 99) // 100 THEN cents END) AS p50_cents,
-       MAX(CASE WHEN vr = (n * 90 + 99) // 100 THEN cents END) AS p90_cents,
-       MAX(CASE WHEN vr = (n * 99 + 99) // 100 THEN cents END) AS p99_cents
-FROM v GROUP BY shard
+SELECT shard, CAST(n AS BIGINT) AS n_sample, {", ".join(_SQ_PICKS)}
+FROM ({_dk_nearest_rank("s", ["shard"], "cents", "1", _SQ_PICKS)})
 """,
     "agg_kmv_portable": f"""
 WITH m AS (
@@ -1310,7 +1207,7 @@ SELECT n AS n_customers,
              / (CAST(n AS DOUBLE) * CAST(s1 AS DOUBLE)), 6) AS gini
 FROM s
 """,
-    "agg_quantile_shard_merge": """
+    "agg_quantile_shard_merge": f"""
 WITH hist AS (
   SELECT strftime(o_orderdate, '%Y-%m') AS shard,
          CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cent,
@@ -1322,43 +1219,20 @@ u AS (
   UNION ALL
   SELECT 'ALL' AS shard, cent, SUM(bucket_n) AS bucket_n
   FROM hist GROUP BY cent
-),
-r AS (
-  SELECT shard, cent,
-         SUM(bucket_n) OVER (PARTITION BY shard ORDER BY cent
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_n,
-         SUM(bucket_n) OVER (PARTITION BY shard) AS total_n
-  FROM u
 )
-SELECT shard, CAST(MAX(total_n) AS BIGINT) AS n,
-       CAST(MIN(CASE WHEN cum_n * 4 >= total_n THEN cent END) AS DOUBLE)
-         / 100.0 AS p25,
-       CAST(MIN(CASE WHEN cum_n * 2 >= total_n THEN cent END) AS DOUBLE)
-         / 100.0 AS p50,
-       CAST(MIN(CASE WHEN cum_n * 4 >= total_n * 3 THEN cent END) AS DOUBLE)
-         / 100.0 AS p75
-FROM r GROUP BY shard
+SELECT shard, CAST(n AS BIGINT) AS n,
+       {", ".join(f"CAST({c} AS DOUBLE) / 100.0 AS {c}" for c in _QSM_PICKS)}
+FROM ({_dk_nearest_rank("u", ["shard"], "cent", "bucket_n", _QSM_PICKS)})
 """,
     # same histogram/edges/integer-threshold shape as the Spark plan;
     # HUGEINT sums mirror decimal(38,0), one CAST-DOUBLE division
-    "agg_winsorized_stats": """
+    "agg_winsorized_stats": f"""
 WITH h AS (
   SELECT o_orderpriority AS prio,
          CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cent,
          COUNT(*) AS cnt
   FROM orders GROUP BY 1, 2
-), r AS (
-  SELECT prio, cent, cnt,
-         SUM(cnt) OVER (PARTITION BY prio ORDER BY cent
-                        ROWS UNBOUNDED PRECEDING) AS cum,
-         SUM(cnt) OVER (PARTITION BY prio) AS n
-  FROM h
-), e AS (
-  SELECT prio, MAX(n) AS n,
-         MIN(CASE WHEN cum >= (5 * n + 99) // 100 THEN cent END) AS lo,
-         MIN(CASE WHEN cum >= (95 * n + 99) // 100 THEN cent END) AS hi
-  FROM r GROUP BY prio
-)
+), e AS ({_dk_nearest_rank("h", ["prio"], "cent", "cnt", _WS_PICKS)})
 SELECT prio AS o_orderpriority,
        CAST(MAX(e.n) AS BIGINT) AS n_orders,
        CAST(MAX(e.lo) AS DOUBLE) / 100.0 AS p05,
@@ -1374,48 +1248,27 @@ SELECT prio AS o_orderpriority,
          AS trimmed_mean
 FROM h JOIN e USING (prio) GROUP BY prio
 """,
-    "agg_weighted_quartiles": """
-WITH hist AS (
-  SELECT l_returnflag,
-         CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS cent,
-         SUM(l_quantity) AS bucket_w
-  FROM lineitem GROUP BY 1, 2
-),
-r AS (
-  SELECT l_returnflag, cent,
-         SUM(bucket_w) OVER (PARTITION BY l_returnflag ORDER BY cent
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_w,
-         SUM(bucket_w) OVER (PARTITION BY l_returnflag) AS total_w
-  FROM hist
-)
-SELECT l_returnflag,
-       CAST(MIN(CASE WHEN cum_w * 4 >= total_w THEN cent END) AS DOUBLE)
-         / 100.0 AS p25_price,
-       CAST(MIN(CASE WHEN cum_w * 2 >= total_w THEN cent END) AS DOUBLE)
-         / 100.0 AS p50_price,
-       CAST(MIN(CASE WHEN cum_w * 4 >= total_w * 3 THEN cent END) AS DOUBLE)
-         / 100.0 AS p75_price
-FROM r GROUP BY l_returnflag
-""",
-    "agg_weighted_median": """
-WITH hist AS (
-  SELECT l_returnflag,
-         CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS cent,
-         SUM(l_quantity) AS bucket_w
-  FROM lineitem GROUP BY 1, 2
-),
-r AS (
-  SELECT l_returnflag, cent,
-         SUM(bucket_w) OVER (PARTITION BY l_returnflag ORDER BY cent
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_w,
-         SUM(bucket_w) OVER (PARTITION BY l_returnflag) AS total_w
-  FROM hist
-)
-SELECT l_returnflag,
-       CAST(MIN(cent) AS DOUBLE) / 100.0 AS weighted_median_price
-FROM r WHERE cum_w * 2 >= total_w
-GROUP BY l_returnflag
-""",
+    "agg_weighted_quartiles": (
+        "SELECT l_returnflag, "
+        + ", ".join(
+            f"CAST({c} AS DOUBLE) / 100.0 AS p{p}_price"
+            for c, p in _WQ_PICKS.items()
+        )
+        + " FROM ("
+        + _dk_nearest_rank(
+            _DK_FLAG_CENTS, ["l_returnflag"], "cent", "l_quantity", _WQ_PICKS
+        )
+        + ")"
+    ),
+    "agg_weighted_median": (
+        "SELECT l_returnflag, "
+        "CAST(c50 AS DOUBLE) / 100.0 AS weighted_median_price FROM ("
+        + _dk_nearest_rank(
+            _DK_FLAG_CENTS, ["l_returnflag"], "cent", "l_quantity",
+            {"c50": 50},
+        )
+        + ")"
+    ),
     "agg_argmax": (
         "SELECT c_mktsegment, "
         "(max(struct_pack(b := c_acctbal, k := c_custkey))).k AS top_cust, "

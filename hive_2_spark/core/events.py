@@ -37,6 +37,11 @@ from pyspark.sql.window import Window
 
 from hive_2_spark import catalog
 from hive_2_spark.catalog import load_table
+from hive_2_spark.core.windows import (
+    _dk_nearest_rank,
+    bucketed_running_sum,
+    nearest_rank,
+)
 
 GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
 WEEK_US = 7 * 24 * 3600 * 1_000_000
@@ -559,8 +564,8 @@ def event_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     -1 one microsecond AFTER its last (inclusive interval). Because
     ends sort before starts at an equal instant, the running maximum is
     reached only at post-instant values, so collapsing boundaries to a
-    per-instant NET delta loses nothing. The global running sum is the
-    `win_global_cumsum` two-phase plan keyed by calendar hour (the
+    per-instant NET delta loses nothing. The global running sum is
+    :func:`bucketed_running_sum` keyed by calendar hour (the
     data-derived range id): per-hour local cumsums run in parallel; the
     hour-totals window is calendar-bounded. Per-row peak candidate is
     GREATEST(cum, cum - net) — the second term is the hour's carry-in
@@ -584,28 +589,12 @@ def event_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("d").alias("net"))
         .withColumn("hour", F.expr(f"us DIV {HOUR_US}"))
     )
-    wloc = (
-        Window.partitionBy("hour")
-        .orderBy("us")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = net.withColumn("lcum", F.sum("net").over(wloc))
-    hsum = net.groupBy("hour").agg(F.sum("net").alias("hnet"))
-    woff = Window.orderBy("hour").rowsBetween(Window.unboundedPreceding, -1)
-    offs = hsum.select(
-        "hour", F.coalesce(F.sum("hnet").over(woff), F.lit(0)).alias("off")
-    )
     return (
-        local.join(F.broadcast(offs), "hour")
+        bucketed_running_sum(net, "net", ["us"], "hour")
         .groupBy("hour")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_points"),
-            F.max(
-                F.greatest(
-                    F.col("off") + F.col("lcum"),
-                    F.col("off") + F.col("lcum") - F.col("net"),
-                )
-            )
+            F.max(F.greatest(F.col("run"), F.col("run") - F.col("net")))
             .cast("bigint")
             .alias("peak_concurrent"),
         )
@@ -1091,6 +1080,9 @@ _TTC_EDGES = (  # funnel edges: (label, source type, destination type)
 )
 
 
+_TTC_PICKS = {"p50_s": 50, "p90_s": 90, "max_s": 100}
+
+
 def event_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-to-convert percentiles per funnel edge — the LATENCY face
     of the funnel family (counts: `event_funnel`/`_windowed`; this:
@@ -1099,22 +1091,16 @@ def event_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribution's timing twin), summarized as exact nearest-rank
     p50/p90 + max seconds per edge.
 
-    Exactness without a global sort (the cent-histogram discipline on
-    the TIME domain): gaps quantize to integer seconds
+    Exactness without a global sort: gaps quantize to integer seconds
     (``DIV 1_000_000`` over epoch-micros — integer division, no float
-    boundary), the (edge, gap_s) HISTOGRAM aggregates with map-side
-    partials, and nearest-rank selection is the smallest gap whose
-    running count reaches ``ceil(q*n/100)`` (= ``(q*n+99) DIV 100``,
-    all-integer thresholds). The cumulative window partitions by edge
-    but runs over histogram CELLS — bounded by the distinct gap
-    seconds (the time domain), not the user count, the same argument
-    that sizes the weighted-median histogram.
+    boundary), and :func:`nearest_rank` picks p50/p90 — and max_s as
+    p = 100 — off the (edge, gap_s) histogram, whose cells the distinct
+    gap seconds (the time domain) bound, not the user count.
 
     Scale: one user-keyed exchange builds the per-user first-event
     pivot (conditional MIN over one scan); the histogram exchange
-    carries (3 edges x distinct seconds) cells; the 3-row threshold
-    frame broadcasts back. Nothing user-sized crosses a second
-    shuffle.
+    carries (3 edges x distinct seconds) cells. Nothing user-sized
+    crosses a second shuffle.
 
     Output: (edge, n_users, p50_s, p90_s, max_s).
     """
@@ -1148,42 +1134,15 @@ def event_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         for label, src, dst in _TTC_EDGES
     ]
     gaps = legs[0].unionByName(legs[1]).unionByName(legs[2])
-    hist = gaps.groupBy("edge", "gap_s").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    cumw = (
-        Window.partitionBy("edge")
-        .orderBy("gap_s")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = hist.withColumn("cum", F.sum("c").over(cumw))
-    th = (
-        hist.groupBy("edge")
-        .agg(F.sum("c").alias("n"))
-        .select(
-            "edge",
-            "n",
-            F.expr("(50 * n + 99) DIV 100").alias("k50"),
-            F.expr("(90 * n + 99) DIV 100").alias("k90"),
-        )
-    )
-    return (
-        cum.join(F.broadcast(th), "edge")
-        .groupBy("edge")
-        .agg(
-            F.max("n").cast("bigint").alias("n_users"),
-            F.min(F.when(F.col("cum") >= F.col("k50"), F.col("gap_s")))
-            .cast("bigint")
-            .alias("p50_s"),
-            F.min(F.when(F.col("cum") >= F.col("k90"), F.col("gap_s")))
-            .cast("bigint")
-            .alias("p90_s"),
-            F.max("gap_s").cast("bigint").alias("max_s"),
-        )
+    q = nearest_rank(gaps, ["edge"], "gap_s", F.lit(1), _TTC_PICKS)
+    return q.select(
+        "edge",
+        F.col("n").cast("bigint").alias("n_users"),
+        *[F.col(c).cast("bigint").alias(c) for c in _TTC_PICKS],
     )
 
 
-_TTC_ORACLE = """
+_TTC_ORACLE = f"""
 WITH firsts AS (
   SELECT user_id,
          MIN(CASE WHEN event_type = 'view' THEN epoch_us(ts) END) AS t_view,
@@ -1206,26 +1165,10 @@ WITH firsts AS (
   SELECT 'view->purchase', (t_purchase - t_view) // 1000000
   FROM firsts WHERE t_view IS NOT NULL AND t_purchase IS NOT NULL
     AND t_purchase >= t_view
-), hist AS (
-  SELECT edge, gap_s, COUNT(*) AS c FROM gaps GROUP BY edge, gap_s
-), cum AS (
-  SELECT edge, gap_s, c,
-         SUM(c) OVER (PARTITION BY edge ORDER BY gap_s
-                      ROWS UNBOUNDED PRECEDING) AS cum
-  FROM hist
-), th AS (
-  SELECT edge, SUM(c) AS n,
-         (50 * SUM(c) + 99) // 100 AS k50,
-         (90 * SUM(c) + 99) // 100 AS k90
-  FROM hist GROUP BY edge
-)
-SELECT cum.edge,
-       CAST(MAX(n) AS BIGINT) AS n_users,
-       CAST(MIN(CASE WHEN cum >= k50 THEN gap_s END) AS BIGINT) AS p50_s,
-       CAST(MIN(CASE WHEN cum >= k90 THEN gap_s END) AS BIGINT) AS p90_s,
-       CAST(MAX(gap_s) AS BIGINT) AS max_s
-FROM cum JOIN th ON cum.edge = th.edge
-GROUP BY cum.edge
+), q AS ({_dk_nearest_rank("gaps", ["edge"], "gap_s", "1", _TTC_PICKS)})
+SELECT edge, CAST(n AS BIGINT) AS n_users,
+       {", ".join(f"CAST({c} AS BIGINT) AS {c}" for c in _TTC_PICKS)}
+FROM q
 """
 
 

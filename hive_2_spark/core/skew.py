@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
+from hive_2_spark.core.windows import _dk_nearest_rank, nearest_rank
 
 N_SALTS = 8
 
@@ -76,11 +77,12 @@ _SKEW_RELS = [
 ]
 
 
+_SKEW_PICKS = {"p50": 50, "p90": 90, "p99": 99}
+
+
 def _skew_metrics(df: DataFrame, key: str, label: str) -> DataFrame:
     """One diagnosis row for a (table, key) pair — all INTEGER outputs
     so no float boundary exists on either engine."""
-    from pyspark.sql.window import Window
-
     counts = df.groupBy(F.col(key).alias("k")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -97,24 +99,9 @@ def _skew_metrics(df: DataFrame, key: str, label: str) -> DataFrame:
         (-F.col("m.negk")).alias("hot_key"),
     )
     # count-of-counts histogram: the domain is per-key multiplicities
-    # (dozens of distinct values), so the global cumsum window is
-    # metadata-sized — the same two-phase trick as agg_weighted_median
-    coc = counts.groupBy("cnt").agg(F.count(F.lit(1)).alias("nk"))
-    w = Window.orderBy("cnt").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = coc.withColumn("cum", F.sum("nk").over(w))
-    pcts = cum.crossJoin(F.broadcast(stats.select("n_keys"))).agg(
-        *[
-            F.min(
-                F.when(
-                    F.col("cum") * 100 >= F.col("n_keys") * p,
-                    F.col("cnt"),
-                )
-            ).alias(f"p{p}")
-            for p in (50, 90, 99)
-        ]
-    )
+    # (dozens of distinct values), so nearest_rank's global cumulative
+    # window is metadata-sized
+    pcts = nearest_rank(counts, [], "cnt", F.lit(1), _SKEW_PICKS).drop("n")
     return stats.crossJoin(F.broadcast(pcts)).select(
         F.lit(label).alias("rel"),
         F.col("n_keys").cast("bigint").alias("n_keys"),
@@ -158,37 +145,20 @@ QUERIES = {
 
 
 def _dk_skew(label: str, table: str, key: str) -> str:
+    counts = f"(SELECT {key} AS k, COUNT(*) AS cnt FROM {table} GROUP BY 1)"
     return f"""
 SELECT '{label}' AS rel,
        CAST(s.n_keys AS BIGINT) AS n_keys,
        CAST(s.n_rows AS BIGINT) AS n_rows,
        CAST(s.max_c AS BIGINT) AS max_per_key,
-       CAST((SELECT MIN(cnt) FROM (
-          SELECT cnt, SUM(nk) OVER (ORDER BY cnt) AS cum FROM (
-            SELECT cnt, COUNT(*) AS nk FROM (
-              SELECT {key} AS k, COUNT(*) AS cnt FROM {table} GROUP BY 1
-            ) GROUP BY 1))
-          WHERE cum * 100 >= s.n_keys * 50) AS BIGINT) AS p50,
-       CAST((SELECT MIN(cnt) FROM (
-          SELECT cnt, SUM(nk) OVER (ORDER BY cnt) AS cum FROM (
-            SELECT cnt, COUNT(*) AS nk FROM (
-              SELECT {key} AS k, COUNT(*) AS cnt FROM {table} GROUP BY 1
-            ) GROUP BY 1))
-          WHERE cum * 100 >= s.n_keys * 90) AS BIGINT) AS p90,
-       CAST((SELECT MIN(cnt) FROM (
-          SELECT cnt, SUM(nk) OVER (ORDER BY cnt) AS cum FROM (
-            SELECT cnt, COUNT(*) AS nk FROM (
-              SELECT {key} AS k, COUNT(*) AS cnt FROM {table} GROUP BY 1
-            ) GROUP BY 1))
-          WHERE cum * 100 >= s.n_keys * 99) AS BIGINT) AS p99,
-       CAST((SELECT MIN(k) FROM (
-              SELECT {key} AS k, COUNT(*) AS cnt FROM {table} GROUP BY 1
-            ) WHERE cnt = s.max_c) AS BIGINT) AS hot_key,
+       {", ".join(f"CAST(q.{c} AS BIGINT) AS {c}" for c in _SKEW_PICKS)},
+       CAST((SELECT MIN(k) FROM {counts} WHERE cnt = s.max_c) AS BIGINT)
+         AS hot_key,
        CAST(s.max_c * s.n_keys * 100 // s.n_rows AS BIGINT) AS skew_x100
 FROM (
   SELECT COUNT(*) AS n_keys, SUM(cnt) AS n_rows, MAX(cnt) AS max_c
-  FROM (SELECT {key} AS k, COUNT(*) AS cnt FROM {table} GROUP BY 1)
-) s
+  FROM {counts}
+) s, ({_dk_nearest_rank(counts, [], "cnt", "1", _SKEW_PICKS)}) q
 """
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
+from hive_2_spark.core.windows import _dk_nearest_rank, nearest_rank
 
 BUCKET = "30 minutes"
 BUCKET_S = 1800
@@ -177,6 +178,9 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_IQR_PICKS = {"q1c": 25, "q3c": 75}
+
+
 def ts_anomaly_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TUKEY-FENCE (IQR) outlier census over the hourly series — the
     third member of the anomaly triad (z-score: parametric on points;
@@ -186,11 +190,10 @@ def ts_anomaly_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution — the box-plot rule a metrics dashboard draws.
 
     ALL-INTEGER exactness: hourly sums are exact cents; q1/q3 are
-    nearest-rank picks (ceil(q*n/100) spelled (q*n + 99) DIV 100 — the
-    `agg_winsorized_stats` discipline), and the fences are
-    CROSS-MULTIPLIED (x < q1 - 1.5*IQR  <=>  2x < 5*q1 - 3*q3) so no
-    fractional fence value ever materializes — no float boundary can
-    flip a flag on either engine. Dollars divide once in the output.
+    :func:`nearest_rank` picks, and the fences are CROSS-MULTIPLIED
+    (x < q1 - 1.5*IQR  <=>  2x < 5*q1 - 3*q3) so no fractional fence
+    value ever materializes — no float boundary can flip a flag on
+    either engine. Dollars divide once in the output.
 
     Scale: the fact table collapses to the calendar-bounded hourly
     series first; the rank window and census ride per-type partitions
@@ -199,29 +202,11 @@ def ts_anomaly_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output per event_type: n_pts, q1, q3, n_low, n_high.
     """
-    from pyspark.sql.window import Window
-
     e = load_table(spark, sf_dir, "events")
     hourly = e.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("h")
     ).agg(F.round(F.sum("value") * 100).cast("bigint").alias("x"))
-    wp = Window.partitionBy("event_type")
-    ranked = hourly.withColumn(
-        "rk", F.row_number().over(wp.orderBy("x"))
-    ).withColumn("n", F.count(F.lit(1)).over(wp))
-    qs = ranked.groupBy("event_type").agg(
-        F.max("n").alias("n"),
-        F.min(
-            F.when(
-                F.col("rk") == F.expr("(25 * n + 99) DIV 100"), F.col("x")
-            )
-        ).alias("q1c"),
-        F.min(
-            F.when(
-                F.col("rk") == F.expr("(75 * n + 99) DIV 100"), F.col("x")
-            )
-        ).alias("q3c"),
-    )
+    qs = nearest_rank(hourly, ["event_type"], "x", F.lit(1), _IQR_PICKS)
     j = hourly.join(F.broadcast(qs), "event_type")
     low = (2 * F.col("x") < 5 * F.col("q1c") - 3 * F.col("q3c"))
     high = (2 * F.col("x") > 5 * F.col("q3c") - 3 * F.col("q1c"))
@@ -276,8 +261,9 @@ def _mad_model(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     scores against. Per-type exact medians (hash agg; per-type state is
     a sort within the aggregate — with a handful of types this is the
     textbook case for `percentile`; at extreme cardinality you'd swap in
-    the cent-histogram trick from `agg_weighted_median`), then the
+    the cent histogram of `core.windows.nearest_rank`), then the
     medians broadcast back and |v − med| aggregated to the per-type MAD.
+    :data:`_DK_MAD_FLAGS` is the DuckDB twin of both functions.
     """
     med = e.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("med")
@@ -315,6 +301,24 @@ def _mad_flags(e: DataFrame, med: DataFrame, mad: DataFrame) -> DataFrame:
             (F.floor(z * 10000.0 + 0.5) / 10000.0).alias("mz"),
         )
     )
+
+
+# quantile_cont interpolates like Spark's exact `percentile`; the
+# modified-z filter compares unrounded doubles on both engines
+_DK_MAD_FLAGS = f"""med AS (
+  SELECT event_type, quantile_cont(value, 0.5) AS med
+  FROM events GROUP BY event_type
+), mad AS (
+  SELECT e.event_type, quantile_cont(abs(e.value - m.med), 0.5) AS mad
+  FROM events e JOIN med m USING (event_type) GROUP BY e.event_type
+), flagged AS (
+  SELECT e.event_id, e.event_type, e.value,
+         FLOOR({_MAD_K} * (e.value - m.med) / d.mad * 10000.0 + 0.5)
+           / 10000.0 AS mz
+  FROM events e JOIN med m USING (event_type) JOIN mad d USING (event_type)
+  WHERE d.mad > 0
+    AND abs({_MAD_K} * (e.value - m.med) / d.mad) >= {_MAD_CUT}
+)"""
 
 
 def ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1361,22 +1365,12 @@ ORACLES = {
     # fold's second field sees the already-updated first field.
     # same observed-hourly cents, nearest-rank integer thresholds, and
     # cross-multiplied fences as the Spark plan
-    "ts_anomaly_iqr": """
+    "ts_anomaly_iqr": f"""
 WITH hourly AS (
   SELECT event_type, date_trunc('hour', ts) AS h,
          CAST(ROUND(SUM(value) * 100) AS BIGINT) AS x
   FROM events GROUP BY 1, 2
-), r AS (
-  SELECT event_type, x,
-         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY x) AS rk,
-         COUNT(*) OVER (PARTITION BY event_type) AS n
-  FROM hourly
-), q AS (
-  SELECT event_type, MAX(n) AS n,
-         MIN(CASE WHEN rk = (25 * n + 99) // 100 THEN x END) AS q1c,
-         MIN(CASE WHEN rk = (75 * n + 99) // 100 THEN x END) AS q3c
-  FROM r GROUP BY event_type
-)
+), q AS ({_dk_nearest_rank("hourly", ["event_type"], "x", "1", _IQR_PICKS)})
 SELECT h.event_type,
        CAST(MAX(q.n) AS BIGINT) AS n_pts,
        CAST(MAX(q.q1c) AS DOUBLE) / 100.0 AS q1,
@@ -1556,23 +1550,7 @@ FROM per_lag p JOIN denom d USING (event_type)
         "ROUND(list_reduce(vals, (acc, x) -> 0.3 * x + 0.7 * acc), 4) "
         "AS ewma FROM s"
     ),
-    # quantile_cont interpolates like Spark's exact `percentile`; the
-    # modified-z filter compares unrounded doubles on both engines
-    "ts_anomaly_mad": f"""
-WITH med AS (
-  SELECT event_type, quantile_cont(value, 0.5) AS med
-  FROM events GROUP BY event_type
-), mad AS (
-  SELECT e.event_type, quantile_cont(abs(e.value - m.med), 0.5) AS mad
-  FROM events e JOIN med m USING (event_type) GROUP BY e.event_type
-)
-SELECT e.event_id, e.event_type, e.value,
-       FLOOR({_MAD_K} * (e.value - m.med) / d.mad * 10000.0 + 0.5)
-         / 10000.0 AS mz
-FROM events e JOIN med m USING (event_type) JOIN mad d USING (event_type)
-WHERE d.mad > 0
-  AND abs({_MAD_K} * (e.value - m.med) / d.mad) >= {_MAD_CUT}
-""",
+    "ts_anomaly_mad": f"WITH {_DK_MAD_FLAGS} SELECT * FROM flagged",
     # exact integer cent sums (order-independent); divisions and the
     # FLOOR rounding are expression-identical to the Spark side
     "ts_seasonal_decompose": """

@@ -7,9 +7,15 @@ tiebreaker so row_number/lag/frames are deterministic across engines.
 Scale notes: a window = one shuffle on partitionBy keys + an in-partition
 sort. Partition keys here (custkey, mktsegment, suppkey) have enough
 cardinality to spread; a window with no partitionBy (global sort) is the
-anti-pattern at 100 TB and none is used. Running sums accumulate in frame
-order (deterministic left-assoc), so they are bit-exact across engines —
-no rounding needed.
+anti-pattern at 100 TB and none runs over data-sized input. Running sums
+accumulate in frame order (deterministic left-assoc), so they are
+bit-exact across engines — no rounding needed.
+
+The order-dependent aggregates of every module compose two primitives
+held here: :func:`nearest_rank` (exact quantiles off a domain-bounded
+histogram; DuckDB twin :func:`_dk_nearest_rank`) and
+:func:`bucketed_running_sum` (global or per-group running sums from
+bucket-local windows plus prefix offsets over the bucket totals).
 """
 
 from __future__ import annotations
@@ -271,30 +277,116 @@ def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def win_global_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GLOBAL running total over all orders — without the naive plan's
-    single-partition window.
+def bucketed_running_sum(
+    df: DataFrame, value, order, bucket: str, part=()
+) -> DataFrame:
+    """``df`` plus column ``run``: the running sum of ``value`` along
+    ``order`` within each ``part`` group — without the naive
+    ``SUM() OVER (PARTITION BY part ORDER BY order)`` plan, which moves
+    each whole group (the whole table, when ``part`` is empty) into ONE
+    partition: the classic global-cumsum bottleneck.
 
-    ``SUM() OVER (ORDER BY ...)`` with no PARTITION BY forces Spark to
-    move the whole table into ONE partition — the classic global-cumsum
-    bottleneck (fine at 15k rows, fatal at 100 TB). Two-phase instead,
-    with a DATA-DERIVED range id (calendar month of the sort key):
+    ``bucket`` names a DATA-DERIVED range id that must not decrease
+    along ``order`` (calendar month, price band, hash prefix). Phase 1:
+    local running sums inside each (part, bucket) — windows partitioned
+    by the bucket run in parallel. Phase 2: the bucket totals get
+    EXCLUSIVE prefix offsets from a window over the bucket table, whose
+    size the bucket DOMAIN bounds, never the data. Phase 3: the offsets
+    broadcast back; run = offset + local. A running count is the sum
+    of ``F.lit(1)``, i.e. a global row_number when ``order`` is total.
 
-    1. per-month local cumsum — windows PARTITIONED by month run in
-       parallel across the cluster;
-    2. per-month totals (calendar-sized: one row per month, ~84 for
-       TPC-H's 7 years) get EXCLUSIVE prefix offsets via a window over
-       that tiny table — its single-partition sort is bounded by the
-       calendar, never by the data;
-    3. broadcast-join offsets back: global running = local + offset.
-
-    The range id must come from the DATA, not the partitioner:
+    The range id must come from the data, not the partitioner:
     ``repartitionByRange`` + ``spark_partition_id`` re-samples
     boundaries per job, so two actions over the same plan can disagree
-    on row->partition assignment (measured: ~0.5%% value drift). A
-    month id is reproducible everywhere; for keys with no natural
-    bucketing column, materialize the range stage (persist/
-    localCheckpoint) before branching.
+    on row->partition assignment (measured: ~0.5% value drift).
+    """
+    part = list(part)
+    inside = (
+        W.partitionBy(*part, bucket)
+        .orderBy(*order)
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    before = (
+        W.partitionBy(*part)
+        .orderBy(bucket)
+        .rowsBetween(W.unboundedPreceding, -1)
+    )
+    local = df.withColumn("_local", F.sum(value).over(inside))
+    offs = (
+        df.groupBy(*part, bucket)
+        .agg(F.sum(value).alias("_total"))
+        .select(
+            *part,
+            bucket,
+            F.coalesce(F.sum("_total").over(before), F.lit(0)).alias("_off"),
+        )
+    )
+    return (
+        local.join(F.broadcast(offs), [*part, bucket])
+        .withColumn("run", F.col("_off") + F.col("_local"))
+        .drop("_local", "_off")
+    )
+
+
+def nearest_rank(df: DataFrame, by, value: str, weight, pcts) -> DataFrame:
+    """Exact weighted nearest-rank quantiles of ``value`` per ``by``
+    group, without a per-group row sort: ``weight`` sums into one
+    histogram cell per (group, value) — the only data-sized exchange,
+    partial-aggregated map-side — and one cumulative pass runs over the
+    cells, whose count the value DOMAIN (cents, seconds, multiplicities)
+    bounds, not the row count.
+
+    One row per group: ``by``, ``n`` (the group's total weight) and one
+    column per ``{name: p}`` of ``pcts`` — the smallest ``value`` whose
+    cumulative weight ``cum`` satisfies ``cum * 100 >= n * p``. That is
+    the value at rank ceil(p*n/100) (type-1 quantile); ``p = 100`` is the
+    maximum. Whole-number weights keep every comparison exact integer
+    math, so no float boundary can flip a pick. `_dk_nearest_rank` is
+    the DuckDB twin.
+    """
+    by = list(by)
+    group = W.partitionBy(*by)
+    upto = group.orderBy(value).rowsBetween(W.unboundedPreceding, W.currentRow)
+    cells = df.groupBy(*by, value).agg(F.sum(weight).alias("_w"))
+    ranked = cells.withColumn("_cum", F.sum("_w").over(upto)).withColumn(
+        "n", F.sum("_w").over(group)
+    )
+    return ranked.groupBy(*by).agg(
+        F.max("n").alias("n"),
+        *[
+            F.min(
+                F.when(F.col("_cum") * 100 >= F.col("n") * p, F.col(value))
+            ).alias(name)
+            for name, p in pcts.items()
+        ],
+    )
+
+
+def _dk_nearest_rank(rows_sql: str, by, value: str, weight: str, pcts) -> str:
+    """DuckDB text of :func:`nearest_rank` over the relation
+    ``rows_sql`` (a table/CTE name or a parenthesised query)."""
+    keys = "".join(f"{k}, " for k in by)
+    group = f"PARTITION BY {', '.join(by)} " if by else ""
+    picks = "".join(
+        f", MIN(CASE WHEN cum * 100 >= n * {p} THEN {value} END) AS {name}"
+        for name, p in pcts.items()
+    )
+    return (
+        f"SELECT {keys}MAX(n) AS n{picks} FROM ("
+        f"SELECT {keys}{value}, SUM(w) OVER ({group}ORDER BY {value} "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum, "
+        f"SUM(w) OVER ({group.rstrip()}) AS n FROM ("
+        f"SELECT {keys}{value}, SUM({weight}) AS w FROM {rows_sql} "
+        f"GROUP BY {keys}{value}))"
+        + (f" GROUP BY {', '.join(by)}" if by else "")
+    )
+
+
+def win_global_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GLOBAL running total over all orders by (date, key) — the
+    :func:`bucketed_running_sum` plan with a calendar-month range id
+    (~84 months for TPC-H's 7 years bound the offsets window), never
+    the single-partition ``SUM() OVER (ORDER BY ...)``.
 
     Money math in DECIMAL end-to-end: two-phase regrouping of doubles
     would drift in the last ULP vs the oracle's sequential fold;
@@ -308,66 +400,33 @@ def win_global_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(12,2)").alias("price"),
         (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("bid"),
     )
-    wloc = (
-        W.partitionBy("bid")
-        .orderBy(F.col("o_orderdate").asc(), F.col("o_orderkey").asc())
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    local = o.withColumn("local", F.sum("price").over(wloc))
-    totals = o.groupBy("bid").agg(F.sum("price").alias("bsum"))
-    woff = (
-        W.orderBy(F.col("bid").asc())
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    offs = totals.select(
-        "bid", F.coalesce(F.sum("bsum").over(woff), F.lit(0)).alias("off")
-    )
-    return (
-        local.join(F.broadcast(offs), "bid")
-        .select(
-            "o_orderkey",
-            (F.col("local") + F.col("off"))
-            .cast("decimal(18,2)")
-            .cast("double")
-            .alias("running_total"),
-        )
+    order = [F.col("o_orderdate").asc(), F.col("o_orderkey").asc()]
+    return bucketed_running_sum(o, "price", order, "bid").select(
+        "o_orderkey",
+        F.col("run")
+        .cast("decimal(18,2)")
+        .cast("double")
+        .alias("running_total"),
     )
 
 
 def win_global_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GLOBAL row_number over all orders by (price, key) — the ranking
-    twin of `win_global_cumsum`, again without the single-partition
-    window the naive ``ROW_NUMBER() OVER (ORDER BY ...)`` plan needs.
-
-    Range id = floor(price / 1000) — domain-bounded (~600 bands at
-    TPC-H prices), data-derived, reproducible. Phase 1: per-band local
-    row_number (parallel windows). Phase 2: per-band counts get
-    EXCLUSIVE prefix sums over the band table (bounded by the price
-    DOMAIN, not the data). Phase 3: broadcast-join the offsets back;
-    global rank = offset + local rank. Pure integer math — no float
-    boundary can flip a rank; the (price, o_orderkey) order is total."""
+    """GLOBAL row_number over all orders by (price, key) — the running
+    count of :func:`bucketed_running_sum` with range id floor(price /
+    1000) (~600 bands at TPC-H prices: bounded by the price DOMAIN, not
+    the data), never the single-partition ``ROW_NUMBER() OVER (ORDER BY
+    ...)``. Pure integer math — no float boundary can flip a rank; the
+    (price, o_orderkey) order is total."""
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_totalprice",
         F.floor(F.col("o_totalprice") / 1000.0).cast("bigint").alias("bid"),
     )
-    wloc = W.partitionBy("bid").orderBy(
-        F.col("o_totalprice").asc(), F.col("o_orderkey").asc()
-    )
-    local = o.withColumn("local_rn", F.row_number().over(wloc))
-    counts = o.groupBy("bid").agg(F.count(F.lit(1)).alias("n"))
-    woff = W.orderBy(F.col("bid").asc()).rowsBetween(W.unboundedPreceding, -1)
-    offs = counts.select(
-        "bid",
-        F.coalesce(F.sum("n").over(woff), F.lit(0)).cast("bigint").alias("off"),
-    )
-    return (
-        local.join(F.broadcast(offs), "bid")
-        .select(
-            "o_orderkey",
-            "o_totalprice",
-            (F.col("off") + F.col("local_rn")).cast("bigint").alias("global_rn"),
-        )
+    order = [F.col("o_totalprice").asc(), F.col("o_orderkey").asc()]
+    return bucketed_running_sum(o, F.lit(1), order, "bid").select(
+        "o_orderkey",
+        "o_totalprice",
+        F.col("run").cast("bigint").alias("global_rn"),
     )
 
 

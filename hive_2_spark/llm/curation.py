@@ -48,6 +48,7 @@ from pyspark.sql.window import Window
 
 from hive_2_spark.catalog import load_table
 from hive_2_spark.core.aggregates import _dk_hex_int
+from hive_2_spark.core.windows import bucketed_running_sum
 
 _EMAIL_RE = r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"
 
@@ -363,16 +364,13 @@ def curation_mixture_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     targets left-join the counts rather than silently dropping the
     absent language from the MIN.
 
-    Scale: per-lang selection ranks are computed with the bucketed
-    prefix trick from ``win_global_rank`` — rank within (lang, 2-hex
-    md5 bucket) plus metadata-sized exclusive prefix offsets — NOT a
-    per-lang global sort (5 corpus-sized hot partitions at 100 TB, the
+    Scale: per-lang selection ranks are the running count of
+    ``bucketed_running_sum`` over 2-hex md5 buckets — NOT a per-lang
+    global sort (5 corpus-sized hot partitions at 100 TB, the
     single-partition-window trap). Per-lang counts and the global
     budget are scalar state broadcast back onto the scan. The oracle
     is the naive single-window plan this must equal.
     """
-    from pyspark.sql.window import Window
-
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.md5(F.col("doc_id").cast("string")).alias("h")
     )
@@ -390,25 +388,11 @@ def curation_mixture_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         caps.crossJoin(F.broadcast(budget))
         .select("lang", F.expr("pct * budget div 100").alias("quota"))
     )
-    # bucketed per-lang rank: bucket-local row_number + prefix offsets
+    # per-lang selection rank: a running count bucketed by md5 prefix
     b = d.withColumn("bk", F.substring("h", 1, 2))
-    bcounts = b.groupBy("lang", "bk").agg(F.count(F.lit(1)).alias("bn"))
-    woff = (
-        Window.partitionBy("lang")
-        .orderBy("bk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = bcounts.withColumn(
-        "off", F.coalesce(F.sum("bn").over(woff), F.lit(0))
-    ).select("lang", "bk", "off")
-    wrank = Window.partitionBy("lang", "bk").orderBy("h", "doc_id")
-    ranked = (
-        b.withColumn("rk", F.row_number().over(wrank))
-        .join(F.broadcast(offsets), ["lang", "bk"])
-        .select(
-            "doc_id", "lang", (F.col("off") + F.col("rk")).alias("sel_rank")
-        )
-    )
+    ranked = bucketed_running_sum(
+        b, F.lit(1), ["h", "doc_id"], "bk", part=["lang"]
+    ).select("doc_id", "lang", F.col("run").alias("sel_rank"))
     return (
         ranked.join(F.broadcast(quota), "lang")
         .filter(F.col("sel_rank") <= F.col("quota"))
@@ -429,15 +413,12 @@ def curation_repeat_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic (token counts, DIV) — no float quota boundary.
 
     The partial-epoch cutoff needs a per-source cumulative token sum;
-    that runs as the `win_global_rank` bucketed two-phase plan (local
-    cumsum within (source, 2-hex md5 bucket) + metadata-sized prefix
-    offsets), never a per-source global window — at 100 TB a single
-    source is itself petabytes.
+    that is ``bucketed_running_sum`` over 2-hex md5 buckets, never a
+    per-source global window — at 100 TB a single source is itself
+    petabytes.
 
     Output: doc_id, source, n_toks, n_epochs.
     """
-    from pyspark.sql.window import Window
-
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
@@ -450,25 +431,9 @@ def curation_repeat_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.expr("t_s DIV 2").alias("r_s")
     )
     b = d.withColumn("bk", F.substring("h", 1, 2))
-    bsums = b.groupBy("source", "bk").agg(F.sum("n_toks").alias("bt"))
-    woff = (
-        Window.partitionBy("source")
-        .orderBy("bk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = bsums.withColumn(
-        "off", F.coalesce(F.sum("bt").over(woff), F.lit(0))
-    ).select("source", "bk", "off")
-    wloc = (
-        Window.partitionBy("source", "bk")
-        .orderBy("h", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = (
-        b.withColumn("lcum", F.sum("n_toks").over(wloc))
-        .join(F.broadcast(offsets), ["source", "bk"])
-        .withColumn("cum_toks", F.col("off") + F.col("lcum"))
-    )
+    cum = bucketed_running_sum(
+        b, "n_toks", ["h", "doc_id"], "bk", part=["source"]
+    ).withColumnRenamed("run", "cum_toks")
     return (
         cum.join(F.broadcast(rem), "source")
         .select(

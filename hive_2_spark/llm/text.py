@@ -245,8 +245,9 @@ def token_pack_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
        sum — state bounded by the salt width, thousands of parallel
        partitions instead of one per lang;
     2. per-(lang, salt) pack counts (metadata-sized: one row per salt)
-       prefix-summed per lang into pack-id offsets — the
-       win_global_cumsum two-phase trick;
+       prefix-summed per lang into pack-id offsets — the offset step
+       of ``core.windows.bucketed_running_sum``, but over pack counts,
+       not over the token sums the local window runs;
     3. offset + local index = a pack id unique within the lang, then
        the same (lang, pack_id) rollup as token_pack.
 

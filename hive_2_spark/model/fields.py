@@ -73,8 +73,13 @@ class Field:
         pattern, shared by all scalar fields).
         """
         if _php_falsy(value):
-            return None if self.null else self.coerce(self.default)
+            return self.unset_value()
         return self.coerce(value)
+
+    def unset_value(self) -> Any:
+        """The value of a field nobody set: NULL when nullable, else the
+        coerced ``default``."""
+        return None if self.null else self.coerce(self.default)
 
     def coerce(self, value: Any) -> Any:
         raise NotImplementedError

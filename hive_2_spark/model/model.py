@@ -141,7 +141,7 @@ class Model:
             if name in self._data:
                 return self._data[name]
         field = meta.fields[name]
-        return None if field.null else field.coerce(field.default)
+        return field.unset_value()
 
     def __delattr__(self, name: str) -> None:
         """Reset one field to value(default) (model.php:343-364)."""
@@ -177,13 +177,9 @@ class Model:
         cond = self.query_conditions()
         if cond is not None:
             df = df.filter(cond)
-        if meta.sorting:
-            df = df.orderBy(
-                *[
-                    F.col(c).desc() if d.lower() == "desc" else F.col(c).asc()
-                    for c, d in meta.sorting.items()
-                ]
-            )
+        order = _sort_order(meta.sorting)
+        if order:
+            df = df.orderBy(*order)
         return df
 
     def query_conditions(self) -> Column | None:
@@ -252,7 +248,7 @@ class Model:
             if name in rec:
                 full[name] = rec[name]
             else:
-                full[name] = None if field.null else field.coerce(field.default)
+                full[name] = field.unset_value()
         self._hydrate(full)
         return self
 
@@ -337,15 +333,9 @@ class Model:
     def select_list(self, key: str, value: str) -> dict[Any, Any]:
         """DISTINCT key->value dict, model-sorted (model.php:1038-1083)."""
         df = self.df().select(key, value).distinct()
-        meta = self._meta
-        if meta.sorting:
-            order = [
-                F.col(c).desc() if d.lower() == "desc" else F.col(c).asc()
-                for c, d in meta.sorting.items()
-                if c in (key, value)
-            ]
-            if order:
-                df = df.orderBy(*order)
+        order = _sort_order(self._meta.sorting, (key, value))
+        if order:
+            df = df.orderBy(*order)
         return {r[0]: r[1] for r in df.collect()}
 
     # ------------------------------------------------------------- export
@@ -357,7 +347,7 @@ class Model:
             elif name in self._data:
                 out[name] = self._data[name]
             else:
-                out[name] = None if field.null else field.coerce(field.default)
+                out[name] = field.unset_value()
         return out
 
     def as_json(self) -> str:
@@ -365,6 +355,16 @@ class Model:
 
     def __str__(self) -> str:  # __toString (model.php:470-473)
         return self.as_json()
+
+
+def _sort_order(sorting: dict[str, str], only=None) -> list[Column]:
+    """``meta.sorting`` as orderBy columns, restricted to ``only`` when
+    given."""
+    return [
+        F.col(c).desc() if d.lower() == "desc" else F.col(c).asc()
+        for c, d in sorting.items()
+        if only is None or c in only
+    ]
 
 
 def _model_iter(

@@ -234,7 +234,7 @@ class ParquetStore:
                 elif name in r:
                     rec[name] = field.value(r[name])
                 else:
-                    rec[name] = None if field.null else field.coerce(field.default)
+                    rec[name] = field.unset_value()
             normalized.append(rec)
 
         ids: list[int | None] = [None] * len(normalized)

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_2_spark.catalog import load_table
-from hive_2_spark.core.timeseries import _MAD_CUT, _MAD_K, _mad_flags, _mad_model
+from hive_2_spark.core.timeseries import _DK_MAD_FLAGS, _mad_flags, _mad_model
 from hive_2_spark.llm.clustering import _KMEANS_CTE, _assign, _trained_centroids
 from hive_2_spark.llm.similarity import _vectors, load_embeddings
 from hive_2_spark.streaming._source import read_stream_table
@@ -93,23 +93,9 @@ ORACLES = {
         "SELECT CAST(cluster AS BIGINT) AS cluster, COUNT(*) AS n, "
         "ROUND(AVG(d2), 4) AS avg_d2 FROM a2 GROUP BY 1"
     ),
-    "stream_anomaly_monitor": f"""
-WITH med AS (
-  SELECT event_type, quantile_cont(value, 0.5) AS med
-  FROM events GROUP BY event_type
-), mad AS (
-  SELECT e.event_type, quantile_cont(abs(e.value - m.med), 0.5) AS mad
-  FROM events e JOIN med m USING (event_type) GROUP BY e.event_type
-), a AS (
-  SELECT e.event_type,
-         FLOOR({_MAD_K} * (e.value - m.med) / d.mad * 10000.0 + 0.5)
-           / 10000.0 AS mz
-  FROM events e JOIN med m USING (event_type) JOIN mad d USING (event_type)
-  WHERE d.mad > 0
-    AND abs({_MAD_K} * (e.value - m.med) / d.mad) >= {_MAD_CUT}
-)
-SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_anomalies,
-       MAX(ABS(mz)) AS max_abs_mz
-FROM a GROUP BY event_type
-""",
+    "stream_anomaly_monitor": (
+        f"WITH {_DK_MAD_FLAGS} "
+        "SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_anomalies, "
+        "MAX(ABS(mz)) AS max_abs_mz FROM flagged GROUP BY event_type"
+    ),
 }

@@ -5,6 +5,8 @@ drift from the first without any fixture showing it."""
 
 from __future__ import annotations
 
+import ast
+import re
 import subprocess
 import sys
 from pathlib import Path
@@ -41,6 +43,10 @@ _DEFINITIONS = {
     "np.vstack(vec.to_numpy())": "llm/similarity.py",
     # ``_NORM``'s Spark-side regex
     'r"[^a-z0-9\\s]"': "llm/dedup.py",
+    # the order-statistic primitives every quantile and running sum use
+    "def nearest_rank(": "core/windows.py",
+    "def _dk_nearest_rank(": "core/windows.py",
+    "def bucketed_running_sum(": "core/windows.py",
 }
 
 
@@ -75,6 +81,12 @@ _CONFINED = {
     "nanosAsLong": {"catalog.py"},
     # the strpos nibble fold ``_dk_hex_int``'s native cast replaced
     "strpos('0123456789abcdef'": set(),
+    # nearest-rank picks: ``nearest_rank`` / ``_dk_nearest_rank`` alone
+    "* 100 >= ": {"core/windows.py"},
+    "+ 99) DIV 100": {"core/windows.py"},
+    "+ 99) // 100": {"core/windows.py"},
+    "* 2 >= total": {"core/windows.py"},
+    "* 4 >= total": {"core/windows.py"},
 }
 
 
@@ -82,6 +94,36 @@ _CONFINED = {
 def test_phrase_confined_to_its_home(phrase):
     holders = {name for name, text in _sources().items() if phrase in text}
     assert holders <= _CONFINED[phrase]
+
+
+# functions that window over all preceding rows for something other
+# than a prefix offset over bucket totals -> what they carry
+_PRECEDING_NOT_OFFSETS = {
+    "token_pack_salted": "offsets of pack counts, not of the summed value",
+    "ts_interpolate": "the last observed value",
+    "_chain_census": "running maxima of event times",
+    "stream_lateness_report": "the running high-water mark",
+}
+_PRECEDING = re.compile(r"rowsBetween\(\s*\w+\.unboundedPreceding,\s*-1\s*\)")
+
+
+def test_prefix_offsets_only_in_bucketed_running_sum():
+    """Every exclusive-prefix window outside ``core/windows.py`` (where
+    ``bucketed_running_sum`` holds the one offset plan) is listed above
+    with what it carries."""
+    found = set()
+    for name, text in _sources().items():
+        if name == "core/windows.py":
+            continue
+        funcs = [
+            (f.lineno, f.end_lineno, f.name)
+            for f in ast.walk(ast.parse(text))
+            if isinstance(f, ast.FunctionDef)
+        ]
+        for m in _PRECEDING.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            found.add(max(f for f in funcs if f[0] <= line <= f[1])[2])
+    assert found == set(_PRECEDING_NOT_OFFSETS)
 
 
 def test_registry_import_raises_no_user_warning():

@@ -178,50 +178,6 @@ def test_hits_pure_python_exact_integer_replay(spark):
     assert got_auth == sorted(exp_auth)
 
 
-def test_winsorized_stats_planted_truth(spark, tmp_path):
-    """Planted orders with one extreme outlier per priority: the
-    winsorized mean clips it to the p95 edge, the trimmed mean drops
-    it — both recovered exactly (nearest-rank edges on a known
-    20-value series)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from hive_2_spark.core.aggregates import agg_winsorized_stats
-    from tests.conftest import SF_DIR
-
-    schema = pq.read_schema(os.path.join(SF_DIR, "orders.parquet"))
-    # 19 orders at 10.00..190.00 plus one 10,000.00 outlier
-    prices = [float(10 * i) for i in range(1, 20)] + [10_000.0]
-    n = len(prices)
-    cols: dict = {}
-    for f in schema:
-        if f.name == "o_totalprice":
-            cols[f.name] = pa.array(prices, f.type)
-        elif f.name == "o_orderpriority":
-            cols[f.name] = pa.array(["1-URGENT"] * n, f.type)
-        elif f.name == "o_orderkey":
-            cols[f.name] = pa.array(list(range(n)), f.type)
-        else:
-            cols[f.name] = pa.array(
-                [None] * n, f.type
-            )
-    d = str(tmp_path / "sf_w")
-    os.makedirs(d)
-    pq.write_table(pa.table(cols), os.path.join(d, "orders.parquet"))
-    r = agg_winsorized_stats(spark, d).collect()[0]
-    # nearest-rank: k05 = ceil(1) = 1 -> p05 = 10.00;
-    # k95 = ceil(19) = 19 -> p95 = 190.00
-    assert r["n_orders"] == 20 and r["p05"] == 10.0 and r["p95"] == 190.0
-    # winsorized: outlier clipped to 190 -> mean = (sum(10..190)+190)/20
-    assert r["winsorized_mean"] == round(
-        (sum(range(10, 200, 10)) + 190) / 20, 4
-    )
-    # trimmed: drop nothing below 10, drop the 10k -> mean of 10..190
-    assert r["trimmed_mean"] == round(sum(range(10, 200, 10)) / 19, 4)
-
-
 def test_family_split_has_zero_leakage_and_doc_split_does_not(spark):
     """The FIX claim, audited: re-classify every near-dup pair under
     the family-keyed assignment — zero cross-split pairs BY
@@ -318,43 +274,6 @@ def test_ppr_localizes_mass_and_pure_python_replay(spark):
     import statistics
 
     assert rank[seed] > 10 * statistics.median(rank.values())
-
-
-def test_iqr_anomaly_planted_fences(spark, tmp_path):
-    """Planted hourly series with known quartiles and one extreme
-    hour each side: the integer nearest-rank quartiles and the
-    cross-multiplied Tukey fences must flag exactly those hours."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from datetime import datetime, timedelta
-
-    from hive_2_spark.core.timeseries import ts_anomaly_iqr
-
-    schema = pq.read_schema(os.path.join(SF_DIR, "events.parquet"))
-    # 20 hourly values 10..200, plus a 10,000 spike and a -9,000 dip
-    vals = [float(10 * i) for i in range(1, 21)] + [10_000.0, -9_000.0]
-    base = datetime(2024, 2, 1)
-    cols = {
-        "event_id": list(range(len(vals))),
-        "ts": [base + timedelta(hours=i) for i in range(len(vals))],
-        "user_id": [1] * len(vals),
-        "event_type": ["click"] * len(vals),
-        "value": vals,
-        "props": ["{}"] * len(vals),
-    }
-    tbl = pa.table({f.name: pa.array(cols[f.name], f.type) for f in schema})
-    d = str(tmp_path / "sf_iqr")
-    os.makedirs(d)
-    pq.write_table(tbl, os.path.join(d, "events.parquet"))
-    r = {x["event_type"]: x for x in ts_anomaly_iqr(spark, d).collect()}
-    c = r["click"]
-    # n = 22: q1 rank = ceil(550/100) = 6, q3 rank = ceil(1650/100) = 17
-    # sorted series: -9000, 10..200, 10000 -> rank 6 = 50, rank 17 = 160
-    assert c["n_pts"] == 22 and c["q1"] == 50.0 and c["q3"] == 160.0
-    # fences: [50 - 165, 160 + 165] = [-115, 325] -> one each side
-    assert c["n_low"] == 1 and c["n_high"] == 1
 
 
 def test_pattern_alternation_planted_sequences(spark):

@@ -312,48 +312,6 @@ def test_scc_tarjan_ground_truth(spark):
     assert sum(n for _, n in got) == len(nodes)
 
 
-def test_time_to_convert_pure_python_replay(spark):
-    """Replay the funnel-latency percentiles in pure Python: per-user
-    first events from the raw parquet, integer-second gaps, textbook
-    nearest-rank selection on the SORTED gap list — must equal the
-    histogram-cumulative selection the Spark plan uses."""
-    import duckdb
-
-    from hive_2_spark.core.events import event_time_to_convert
-
-    con = duckdb.connect()
-    rows = con.execute(
-        "SELECT user_id, "
-        "MIN(CASE WHEN event_type='view' THEN epoch_us(ts) END), "
-        "MIN(CASE WHEN event_type='click' THEN epoch_us(ts) END), "
-        "MIN(CASE WHEN event_type='purchase' THEN epoch_us(ts) END) "
-        f"FROM '{SF_DIR}/events.parquet' "
-        "WHERE event_type IN ('view','click','purchase') "
-        "GROUP BY user_id"
-    ).fetchall()
-    edges = {
-        "view->click": (1, 2), "click->purchase": (2, 3),
-        "view->purchase": (1, 3),
-    }
-    expect = {}
-    for edge, (si, di) in edges.items():
-        gaps = sorted(
-            (r[di] - r[si]) // 1_000_000
-            for r in rows
-            if r[si] is not None and r[di] is not None and r[di] >= r[si]
-        )
-        if not gaps:
-            continue
-        n = len(gaps)
-        k50, k90 = (50 * n + 99) // 100, (90 * n + 99) // 100
-        expect[edge] = (n, gaps[k50 - 1], gaps[k90 - 1], gaps[-1])
-    got = {
-        r["edge"]: (r["n_users"], r["p50_s"], r["p90_s"], r["max_s"])
-        for r in event_time_to_convert(spark, SF_DIR).collect()
-    }
-    assert got == expect
-
-
 def test_schema_evolution_null_semantics(spark, tmp_path):
     """The merged read must surface the added column as NULL on old-
     generation rows and populated on new ones — not drop the column,

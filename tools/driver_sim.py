@@ -1,10 +1,12 @@
 # Simulates the driver: fresh process, its own SparkSession, calls the
 # public contract (entry / queries / oracle_sql) and hash-compares vs DuckDB
-# at sf0.01 (the real t2 scale).
-# Usage: python tools/driver_sim.py [--json OUT.json]  — the JSON report
-# mirrors the driver's CORRECTNESS_r{N}.json shape (per-key status and
-# wall_sec). A key that raises counts as BAD with its error recorded; the
-# sweep carries on with the next key. Exits 1 when any key is BAD.
+# at sf0.01 (the real t2 scale) or at any other fixture directory.
+# Usage: python tools/driver_sim.py [--sf-dir DIR] [--json OUT.json]
+# DIR defaults to /root/testdata/sf0.01; --sf-dir /root/testdata/sf0.1 is
+# the larger sweep. The JSON report mirrors the driver's
+# CORRECTNESS_r{N}.json shape (per-key status and wall_sec). A key that
+# raises counts as BAD with its error recorded; the sweep carries on with
+# the next key. Exits 1 when any key is BAD.
 import json
 import secrets
 import subprocess
@@ -17,6 +19,9 @@ sys.path.insert(0, str(REPO))
 _json_out = None
 if "--json" in sys.argv:
     _json_out = sys.argv[sys.argv.index("--json") + 1]
+SF_DIR = "/root/testdata/sf0.01"
+if "--sf-dir" in sys.argv:
+    SF_DIR = sys.argv[sys.argv.index("--sf-dir") + 1]
 # Freshness stamp: every emitted artifact carries the commit it was run
 # against, a wall-clock timestamp, and a random nonce so two runs are never
 # byte-identical (guards against stale-copy artifacts).
@@ -42,7 +47,7 @@ print("entry first row:", rows[0])
 q, o = e.queries(), e.oracle_sql()
 print("queries:", len(q), "oracles:", len(o))
 from hive_2_spark.parity import compare, duckdb_connect
-con = duckdb_connect("/root/testdata/sf0.01")
+con = duckdb_connect(SF_DIR)
 bad = 0
 report = {}
 
@@ -53,14 +58,14 @@ def check(key: str) -> dict:
         # Mirror the driver's canonicalizer, not just count(): it collects
         # to pandas and sort_values over ALL columns, which crashes on
         # list/dict/ndarray cells (the CORRECTNESS_r03 media_features err).
-        out = q[key](spark, "/root/testdata/sf0.01").toPandas()
+        out = q[key](spark, SF_DIR).toPandas()
         try:
             out.sort_values(list(out.columns))
         except Exception as exc:  # unhashable column type etc.
             return {"check": "rows_only", "rows": len(out), "ok": False,
                     "problems": [f"canon: {type(exc).__name__}: {exc}"]}
         return {"check": "rows_only", "rows": len(out), "ok": True}
-    problems = compare(q[key](spark, "/root/testdata/sf0.01"), con, o[key])
+    problems = compare(q[key](spark, SF_DIR), con, o[key])
     return {"check": "oracle_hash", "ok": not problems, "problems": problems}
 
 
@@ -88,7 +93,7 @@ for key in sorted(q):
 print("BAD:", bad)
 if _json_out:
     with open(_json_out, "w") as f:
-        json.dump({"sf": 0.01, "n_queries": len(q), "n_oracles": len(o),
+        json.dump({"sf_dir": SF_DIR, "n_queries": len(q), "n_oracles": len(o),
                    "n_bad": bad, "stamp": _stamp,
                    "wall_sec": round(time.time() - _t0, 1),
                    "keys": report}, f, indent=1)
