@@ -34,9 +34,11 @@ _stamp = {
 }
 _t0 = time.time()
 from pyspark.sql import SparkSession
+# 8g heap: the default 1g runs out of memory at sf0.1 (dedup_minhash_lsh)
 spark = (SparkSession.builder.master("local[8]")
          .config("spark.sql.session.timeZone", "UTC")
          .config("spark.ui.enabled", "false")
+         .config("spark.driver.memory", "8g")
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as e
